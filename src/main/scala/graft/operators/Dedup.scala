@@ -694,7 +694,12 @@ object Dedup {
 
   /** J4 — exact word-n-gram Jaccard similarity over pairs blocked by
     * `blockCol` (a metadata key or an LSH bucket from J2/J3 — never an
-    * unblocked cross join). */
+    * unblocked cross join). The split + shingle-hash kernel is the
+    * CPU-bound part, and fused into the scan stage it runs as many
+    * tasks as the scan has splits — ONE for a single-row-group file —
+    * so the three used columns are repartitioned across the cluster
+    * first (the langIdCore posture); the pair mining after it is
+    * partition-independent. */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String, blockCol: String,
       n: Int = 3, minJaccard: Double = 0.1): DataFrame = {
@@ -708,11 +713,13 @@ object Dedup {
     // true near-dup mass). Shingles hash to longs via xxhash64
     // (collision p≈|shingles|²/2⁶⁴ — negligible).
     val s = df
-      .where(size(split(col(textCol), " ")) >= n)
+      .select(col(idCol).as("doc_id"), col(blockCol).as("block"), col(textCol).as("__text"))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism) // CPU-bound kernel: don't inherit the scan's few partitions
+      .where(size(split(col("__text"), " ")) >= n)
       .select(
-        col(idCol).as("doc_id"), col(blockCol).as("block"),
+        col("doc_id"), col("block"),
         graft.functions.HashFunctions
-          .shingle_hashes(split(col(textCol), " "), n).as("sh"))
+          .shingle_hashes(split(col("__text"), " "), n).as("sh"))
       .withColumn("n_sh", size(col("sh")))
     ngramJaccardFromShingles(s, minJaccard).orderBy("id_a", "id_b")
   }
@@ -736,8 +743,14 @@ object Dedup {
     // exactness forbids a bucket cap here — the capped production paths
     // for boilerplate-heavy corpora are minhash/simhash (J2/J3), this
     // operator is the exact verifier run behind them.
+    // explode_outer, not explode: every caller's `sh` is non-empty (docs
+    // of >= n tokens), so both emit the same rows, but a plain explode
+    // makes the optimizer infer `size(sh) > 0 AND isnotnull(sh)` and push
+    // it below the projection that computes `sh` — re-running the
+    // shingle kernel in the scan stage, under the repartition that
+    // spreads it
     val ex = s.select(
-      col("doc_id"), col("block"), col("n_sh"), explode(col("sh")).as("shingle"))
+      col("doc_id"), col("block"), col("n_sh"), explode_outer(col("sh")).as("shingle"))
     ex.groupBy(col("block"), col("shingle"))
       .agg(sort_array(collect_list(struct(col("doc_id"), col("n_sh")))).as("m"))
       .where(size(col("m")) > 1)

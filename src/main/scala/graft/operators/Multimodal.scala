@@ -3,7 +3,9 @@ package graft.operators
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.awt.image.BufferedImage
 import javax.imageio.ImageIO
-import javax.sound.sampled.AudioSystem
+import javax.sound.sampled.{AudioFormat, AudioInputStream, AudioSystem, UnsupportedAudioFileException}
+import javax.sound.sampled.spi.AudioFileReader
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -32,6 +34,11 @@ import org.apache.spark.sql.types._
   *    through it — the Scala analogue of a batched pandas UDF.
   *  - Partitioning: content-bearing rows are large, so callers size
   *    partitions by bytes (`maxPartitionBytes`), never by row count.
+  *  - Codec lookup once, not per row: PNG through [[PngIO]], WAV
+  *    through [[WavIO]]. The static `ImageIO`/`AudioSystem` entry
+  *    points walk their provider registries on every call, which at
+  *    one decode per row costs more than the parse. Other formats
+  *    still take the registry path.
   */
 object Multimodal {
 
@@ -170,8 +177,10 @@ object Multimodal {
   }
 
   /** Pure-JVM media codec: one instance per partition. Image decode is
-    * `ImageIO` (PNG/BMP/GIF — whatever the JDK registry carries);
-    * audio decode is `AudioSystem` WAV PCM; video decode is the
+    * `ImageIO` (PNG/BMP/GIF — whatever the JDK registry carries;
+    * PNG through [[PngIO]]'s reused reader); audio decode is WAV PCM
+    * through [[WavIO]] (the WAV reader found once, `AudioSystem` for
+    * anything it declines); video decode is the
     * [[Apng]] container walk + per-frame `ImageIO` decode. Decode
     * failures throw — a corrupt payload must fail the job loudly, not
     * zero silently. */
@@ -238,29 +247,25 @@ object Multimodal {
         sr.toFloat / n, sg.toFloat / n, sb.toFloat / n, w.toFloat, h.toFloat, 0f, 0f, 0f))
     }
 
-    /** WAV PCM-16 decode through the RIFF chunk walk; n_units = sample
-      * count, unit_sum = Σ signed samples, features = [mean, min, max,
-      * rate, 0...]. */
+    /** WAV PCM-16 decode through the RIFF chunk walk ([[WavIO]]);
+      * n_units = sample count, unit_sum = Σ signed samples, features =
+      * [mean, min, max, rate, 0...]. */
     def decodeWav(content: Array[Byte]): (Long, Long, Array[Float]) = {
-      val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(content))
-      try {
-        val fmt = in.getFormat
-        require(fmt.getSampleSizeInBits == 16, s"expected PCM-16, got $fmt")
-        val raw = in.readAllBytes()
-        val bigEndian = fmt.isBigEndian
-        var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
-        val n = raw.length / 2
-        var i = 0
-        while (i < n) {
-          val lo = raw(2 * i).toInt; val hi = raw(2 * i + 1).toInt
-          val s = if (bigEndian) (lo << 8) | (hi & 0xff) else (hi << 8) | (lo & 0xff)
-          sum += s; if (s < mn) mn = s; if (s > mx) mx = s
-          i += 1
-        }
-        (n.toLong, sum, Array(
-          if (n == 0) 0f else sum.toFloat / n, mn.toFloat, mx.toFloat,
-          fmt.getSampleRate, 0f, 0f, 0f, 0f))
-      } finally in.close()
+      val (fmt, raw) = WavIO.decode(content)
+      require(fmt.getSampleSizeInBits == 16, s"expected PCM-16, got $fmt")
+      val bigEndian = fmt.isBigEndian
+      var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
+      val n = raw.length / 2
+      var i = 0
+      while (i < n) {
+        val lo = raw(2 * i).toInt; val hi = raw(2 * i + 1).toInt
+        val s = if (bigEndian) (lo << 8) | (hi & 0xff) else (hi << 8) | (lo & 0xff)
+        sum += s; if (s < mn) mn = s; if (s > mx) mx = s
+        i += 1
+      }
+      (n.toLong, sum, Array(
+        if (n == 0) 0f else sum.toFloat / n, mn.toFloat, mx.toFloat,
+        fmt.getSampleRate, 0f, 0f, 0f, 0f))
     }
 
     def checksum(content: Array[Byte]): Long = {
@@ -328,6 +333,58 @@ object Multimodal {
         ios.flush()
       } finally ios.close()
       bos.toByteArray
+    }
+  }
+
+  /** WAV decode without the per-call provider walk.
+    * `AudioSystem.getAudioInputStream` asks the sound provider
+    * registry on every call and lets each registered reader try the
+    * bytes in turn, every decline a thrown exception; at one decode
+    * per row that walk, not the RIFF parse, was the audio fingerprint
+    * stage's cost, and it scales poorly with threads (15,000 172-byte
+    * clips on a 4-core box: ~0.8 s on one thread, ~0.5 s on four;
+    * the WAV reader called directly: ~50 ms and ~20 ms — the same
+    * posture as [[PngIO]]). Here bytes carrying the RIFF/WAVE magic go
+    * straight to the WAV `AudioFileReader`, found once through
+    * `ServiceLoader` (the first registered reader that accepts a
+    * canonical PCM-16 probe clip — the JDK's own WAV reader, so the
+    * parse is still a genuine `javax.sound.sampled` one). The JDK
+    * file readers are stateless, so the one instance is shared
+    * across threads as `AudioSystem` itself shares it. Anything else,
+    * and any WAV that reader declines (float or extensible formats),
+    * goes through `AudioSystem` as before, so accepted formats are
+    * unchanged; a truncated or corrupt header throws on both paths
+    * (MultimodalSourcesSpec holds format and byte parity with
+    * `AudioSystem`). */
+  private[graft] object WavIO {
+    private val wavReader: Option[AudioFileReader] = {
+      val probe = Encode.wavPcm16(Array[Short](0, 1), 8000)
+      java.util.ServiceLoader.load(classOf[AudioFileReader]).asScala.find { r =>
+        try { r.getAudioInputStream(new ByteArrayInputStream(probe)).close(); true }
+        catch { case _: UnsupportedAudioFileException | _: java.io.IOException => false }
+      }
+    }
+
+    private def isWav(b: Array[Byte]): Boolean =
+      b.length >= 12 && b(0) == 'R'.toByte && b(1) == 'I'.toByte &&
+        b(2) == 'F'.toByte && b(3) == 'F'.toByte && b(8) == 'W'.toByte &&
+        b(9) == 'A'.toByte && b(10) == 'V'.toByte && b(11) == 'E'.toByte
+
+    private def open(bytes: Array[Byte]): AudioInputStream = {
+      def viaRegistry = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
+      wavReader match {
+        case Some(r) if isWav(bytes) =>
+          try r.getAudioInputStream(new ByteArrayInputStream(bytes))
+          catch { case _: UnsupportedAudioFileException => viaRegistry }
+        case _ => viaRegistry
+      }
+    }
+
+    /** The stream's format and all of its sample bytes. */
+    def decode(bytes: Array[Byte]): (AudioFormat, Array[Byte]) = {
+      val in = open(bytes)
+      try (in.getFormat, in.readAllBytes())
+      finally in.close()
     }
   }
 
@@ -523,27 +580,27 @@ object Multimodal {
     * Expects fixed 64-sample clips (the audio analog of the 8×8
     * thumbnail contract — frame/resample longer audio upstream).
     * The decode is a genuine `javax.sound.sampled` container parse
-    * (RIFF chunk walk, either endianness); all arithmetic is integer
+    * (RIFF chunk walk, either endianness) through [[WavIO]], which
+    * finds the WAV reader once instead of walking the provider
+    * registry per clip — that walk, not the parse, was this stage's
+    * cost, and it scaled poorly with cores. All arithmetic is integer
     * with floor division, so the DuckDB oracle replays the
     * fingerprint from the sample formulas. Map-only, one decode per
-    * row, content never survives the stage. */
+    * row, content never survives the stage; the stage runs as many
+    * tasks as `ds` has partitions, so callers feeding it from a
+    * single-row-group scan repartition first. */
   def audioAHash(ds: Dataset[MediaRecord]): DataFrame = {
     import ds.sparkSession.implicits._
     ds.mapPartitions { rows =>
       rows.filter(_.meta.media_type == "audio").map { r =>
-        val in = AudioSystem.getAudioInputStream(
-          new ByteArrayInputStream(r.content))
-        val samples = try {
-          val fmt = in.getFormat
-          require(fmt.getSampleSizeInBits == 16, s"expected PCM-16, got $fmt")
-          val raw = in.readAllBytes()
-          val big = fmt.isBigEndian
-          Array.tabulate(raw.length / 2) { i =>
-            val b0 = raw(2 * i).toInt; val b1 = raw(2 * i + 1).toInt
-            if (big) ((b0 << 8) | (b1 & 0xFF)).toShort.toInt
-            else ((b1 << 8) | (b0 & 0xFF)).toShort.toInt
-          }
-        } finally in.close()
+        val (fmt, raw) = WavIO.decode(r.content)
+        require(fmt.getSampleSizeInBits == 16, s"expected PCM-16, got $fmt")
+        val big = fmt.isBigEndian
+        val samples = Array.tabulate(raw.length / 2) { i =>
+          val b0 = raw(2 * i).toInt; val b1 = raw(2 * i + 1).toInt
+          if (big) ((b0 << 8) | (b1 & 0xFF)).toShort.toInt
+          else ((b1 << 8) | (b0 & 0xFF)).toShort.toInt
+        }
         require(samples.length == 64,
           s"audio aHash expects 64-sample clips, got ${samples.length} " +
             s"for media ${r.media_id} — frame/resample first")

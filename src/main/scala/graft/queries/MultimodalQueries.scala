@@ -119,6 +119,7 @@ object MultimodalQueries {
       import s.implicits._
       val docs = Tables.documents(s, dir)
         .select(col("doc_id").cast("long")).as[Long]
+        .repartition(s.sparkContext.defaultParallelism) // CPU-bound synth + decode: don't inherit the scan's few partitions
       val mediaRows = docs.mapPartitions { ids =>
         val md = java.security.MessageDigest.getInstance("MD5")
         ids.flatMap { id =>

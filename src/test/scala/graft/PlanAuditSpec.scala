@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 
 /** SURVEY.md §7.1 as executable regressions: the plan-shape claims
   * (pushdown, pruning, broadcast, shuffle counts) are asserted against
@@ -22,7 +23,7 @@ class PlanAuditSpec extends SparkSpec {
     def walk(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       // stage boundaries report no children; descend into their plans
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+      case q: QueryStageExec =>
         q +: walk(q.plan)
       case o => o +: o.children.flatMap(walk)
     }
@@ -143,9 +144,59 @@ class PlanAuditSpec extends SparkSpec {
 
   test("span dedup keeps partial aggregation and no pairwise join") {
     val plan = executed(SparkEntry.queries("q_span_dedup")(spark, dir))
-    val aggs = plan.map(_.toString).filter(_.contains("HashAggregate"))
-    assert(aggs.exists(_.contains("partial_"))) // map-side combine of repeats
-    assert(!plan.exists(p => p.nodeName.contains("Join"))) // regroup, not self-join
+    val shown = plan.map(_.simpleString(100)).mkString("\n")
+    assert(shown.contains("partial_")) // map-side combine of repeats
+    // the dup decision keys on the 128-bit window hashes, never the span text
+    assert(shown.contains("key=[__h1") && "keys?=\\[span".r.findFirstIn(shown).isEmpty,
+      "dup decision must key on window hashes, not span strings")
+    assert(!plan.exists(_.nodeName.toLowerCase.contains("nestedloop")))
+    assert(!plan.exists(_.nodeName.toLowerCase.contains("cartesian")))
+    // the only join re-derives span text for survivors: one equi-join
+    // of the survivor set with the corpus tokens, so the window-hash
+    // rows never reach a join. Which side is built is the planner's
+    // size call (at this scale it broadcasts the one-row-group corpus)
+    val joins = plan.collect { case j: BaseJoinExec => j }
+    assert(joins.size <= 1, s"expected at most one join, got ${joins.map(_.nodeName)}")
+    joins.foreach { j =>
+      assert(j.leftKeys.nonEmpty, s"survivor join must be an equi-join, got ${j.nodeName}")
+      val sides = Seq(j.left, j.right).map(_.output.map(_.name))
+      assert(sides.exists(_.contains("n_docs")), s"one side must be the survivor set, got $sides")
+      assert(!sides.flatten.exists(Set("__h1", "__h2", "__pos")),
+        s"window-hash rows must not reach the join, got $sides")
+    }
+  }
+
+  /** The exchanges whose output `p`'s stage reads. */
+  private def feedingExchanges(p: SparkPlan): Seq[SparkPlan] = p.children.flatMap {
+    case q: QueryStageExec => Seq(q.plan)
+    case e: ShuffleExchangeLike => Seq(e)
+    case c => feedingExchanges(c)
+  }
+
+  /** Every kernel node reads a round-robin exchange of
+    * `defaultParallelism` partitions, so the kernel stage runs that many
+    * tasks instead of the single-row-group scan's one split. */
+  private def assertKernelSpread(query: String)(isKernel: SparkPlan => Boolean): Unit = {
+    val plan = executed(SparkEntry.queries(query)(spark, dir))
+    val par = spark.sparkContext.defaultParallelism
+    val kernels = plan.filter(isKernel)
+    assert(kernels.nonEmpty, s"$query: kernel node not found")
+    kernels.foreach { k =>
+      val feeds = feedingExchanges(k)
+      assert(feeds.nonEmpty && feeds.forall(_.outputPartitioning == RoundRobinPartitioning(par)),
+        s"$query: ${k.nodeName} must read a RoundRobinPartitioning($par) exchange, " +
+          s"got ${feeds.map(_.outputPartitioning)}")
+      assert(k.outputPartitioning.numPartitions == par,
+        s"$query: ${k.nodeName} stage runs ${k.outputPartitioning.numPartitions} tasks, not $par")
+    }
+  }
+
+  test("audio fingerprint decodes on every core, not on the scan's one split") {
+    assertKernelSpread("q_audio_fingerprint")(_.nodeName == "MapPartitions")
+  }
+
+  test("ngram jaccard shingles on every core, not on the scan's one split") {
+    assertKernelSpread("q_ngram_jaccard")(_.simpleString(100).contains("shingle_hashes("))
   }
 
   test("ngram top-k is TakeOrdered, not a global window over the corpus") {
