@@ -80,22 +80,22 @@ object Bpe {
     // arithmetic and the same binary-string tie-break. Vocabularies
     // beyond the bound (open-domain 100 TB corpora) take the
     // distributed loop below, unchanged.
-    // ONE word-table build serves both the vocab-bound probe and (when
-    // the probe overflows) the first distributed merge round; the
-    // persisted reference is held in its own val so the final
-    // unpersist targets the cached plan itself, not a merge-derived
-    // child (unpersist on a derived plan is a no-op and would pin the
-    // word table for the app lifetime).
-    val base = wordTable(df, textCol).persist(StorageLevel.MEMORY_AND_DISK)
+    // The vocab-bound probe IS the fast path's collect: one bounded
+    // collect pulls at most `localVocabBound + 1` words (the extra row
+    // tells "fits" from "overflows"), so the driver never holds more
+    // than that and nothing is persisted when the vocabulary fits.
+    // Only an overflowing probe persists the word table for the
+    // distributed rounds; that persisted reference is held in its own
+    // val so the final unpersist targets the cached plan itself, not a
+    // merge-derived child (unpersist on a derived plan is a no-op and
+    // would pin the word table for the app lifetime).
     if (localVocabBound > 0) {
-      if (base.count() <= localVocabBound) {
-        try {
-          val words = base.select(col("w"), col("freq")).collect()
-            .map(r => (r.getString(0), r.getLong(1)))
-          return trainLocal(words, merges)
-        } finally base.unpersist()
-      }
+      val words = wordTable(df, textCol).select(col("w"), col("freq"))
+        .limit(localVocabBound + 1).collect()
+      if (words.length <= localVocabBound)
+        return trainLocal(words.map(r => (r.getString(0), r.getLong(1))), merges)
     }
+    val base = wordTable(df, textCol).persist(StorageLevel.MEMORY_AND_DISK)
     var cur: DataFrame = base
     val out = ListBuffer.empty[Merge]
     var t = 1

@@ -9,12 +9,14 @@ import graft.operators._
 object CoreQueries {
 
   /** Classic dim-join aggregation used as the flagship entry:
-    * revenue per nation (auto-broadcast dims, one shuffle on n_name). */
+    * revenue per nation (auto-broadcast dims, one shuffle on n_name),
+    * run through [[Aggregations.databaseAggregator]] — the operator
+    * the `q_database_aggregator` gate is named for. */
   def revenueByNation(spark: SparkSession, dir: String): DataFrame = {
-    Seq("lineitem", "supplier", "nation").foreach { t =>
+    Seq("supplier", "nation").foreach { t =>
       Tables(spark, dir, t).createOrReplaceTempView(t)
     }
-    spark.sql("""
+    Aggregations.databaseAggregator(Tables.lineitem(spark, dir), "lineitem", """
       SELECT n_name,
              CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
              COUNT(*) AS n_items

@@ -101,6 +101,30 @@ class BpeSpec extends SparkSpec {
     assert(local.size == 6)
   }
 
+  test("a vocabulary of exactly localVocabBound words takes the fast path; one more word the distributed loop; both learn the same merges") {
+    val docs = Seq(
+      (1L, "low low low low low lower lower newest newest newest"),
+      (2L, "newest newest newest widest widest widest aaa abb bbb"),
+    ).toDF("doc_id", "text")
+    val v = corpusFreqs(docs.as[(Long, String)].collect().toSeq).size
+    val sc = spark.sparkContext
+    def trainCounted(bound: Int): (Seq[Bpe.Merge], Int) = {
+      val before = sc.getPersistentRDDs.keySet
+      var merges = Seq.empty[Bpe.Merge]
+      val jobs = jobsDuring {
+        merges = Bpe.train(docs, "text", merges = 6, localVocabBound = bound)
+      }
+      assert(sc.getPersistentRDDs.keySet == before, s"bound=$bound left RDDs persisted")
+      (merges, jobs)
+    }
+    val (fast, fastJobs) = trainCounted(v)
+    val (dist, distJobs) = trainCounted(v - 1)
+    // every distributed merge round is its own collect job
+    assert(fastJobs < 6 && distJobs >= 6, s"fast=$fastJobs dist=$distJobs jobs")
+    assert(fast == dist)
+    assert(fast.size == 6)
+  }
+
   test("repeated symbols merge left-to-right, and merged symbols can't be split-matched") {
     // 'aaa' under merge (a,a) must become [aa, a], never [a, aa] or [aaa];
     // 'abb' under merge (a,b) must become [ab, b], and a following (b,b)

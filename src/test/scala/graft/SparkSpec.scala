@@ -1,5 +1,8 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,6 +13,37 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Spark jobs started while `body` runs. The listener bus delivers
+    * job starts in submission order, so the jobs between two marker
+    * jobs are exactly the ones `body` submitted. */
+  protected def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized {
+        seen += Option(e.properties).map(_.getProperty("spark.job.description")).orNull
+      }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("job-count-begin")
+      body
+      marker("job-count-end")
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (seen.synchronized(!seen.contains("job-count-end"))) {
+        assert(System.nanoTime() < deadline, "listener never saw the end marker")
+        Thread.sleep(10)
+      }
+    } finally sc.removeSparkListener(listener)
+    seen.synchronized {
+      seen.indexOf("job-count-end") - seen.indexOf("job-count-begin") - 1
+    }
+  }
 }
 
 object SparkSpec {
