@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+import Verify.q
 
 /** Driver-run benchmark: JSON result line(s), per-query seconds.
   *
@@ -26,15 +27,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = SparkEntry.selected()
+    val spark = SparkEntry.session("graft-bench")
     // Calibration micro-benchmark: a fixed, SF-independent workload
     // (hash-agg over a generated range — no IO) timed the same
     // min-of-N way. Cross-round absolute seconds have repeatedly moved
@@ -78,16 +73,15 @@ object Bench {
       }
       times.min
     }
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Short queries get extra warm runs: min-of-3 on a ~2 s query
     // still swings ±30% with sandbox noise (three rounds of r7–r9
     // cross-window drift traced to exactly this), so rows whose min is
     // under `extraBelowSec` after the base runs take min-of-5.
     val extraRuns = sys.env.getOrElse("SPARK_GRAFT_EXTRA_RUNS", "5").toInt
     val extraBelowSec = 3.0
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    // a query that threw on any run → its last failure message
+    val failed = mutable.Map.empty[String, String]
+    val results = queries.map { case (name, fn) =>
       def timeOnce(): Double = {
         spark.catalog.clearCache()
         System.gc() // drain accumulated broadcasts/codegen garbage so
@@ -98,7 +92,12 @@ object Bench {
         // (see SURVEY §7.1 measurement pitfall).
         val ok = try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true
-        } catch { case _: Throwable => false }
+        } catch { case e: Throwable =>
+          val msg = Option(e.getMessage).getOrElse(e.toString).take(500)
+          if (failed.put(name, msg).isEmpty)
+            System.err.println(s"[bench] $name failed: $msg")
+          false
+        }
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       }
       var times = (1 to runs).map(_ => timeOnce())
@@ -132,7 +131,7 @@ object Bench {
     }
     def fmt(v: Double): String = f"$v%.2f"
     def jmap(qs: Seq[(String, Double)]): String =
-      qs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+      qs.map { case (k, v) => q(k) + ":" + fmt(v) }.mkString("{", ",", "}")
     // failed queries report -1.0 as their per-query marker; clamp them
     // to 0 in the totals so a failure can't shrink the reported sum
     val total = results.map(r => math.max(r._2, 0.0)).sum
@@ -152,6 +151,8 @@ object Bench {
       s""""queries_med":${jmap(results.map(r => (r._1, r._3)))},""" +
       s""""queries_norm":${jmap(results.map(r =>
         (r._1, if (r._3 >= 0 && calib > 0) r._3 / calib else -1.0)))},""" +
+      s""""failed":${failed.toSeq.sorted.map { case (k, v) => q(k) + ":" + q(v) }
+        .mkString("{", ",", "}")},""" +
       s""""sf":"$sfDir"}"""
     println(fullLine)
     // The driver's committed BENCH_r{N}.json harvests a tail-capped
@@ -163,7 +164,7 @@ object Bench {
     // map, and a 2-query filtered run overwriting it destroys that
     // artifact (it happened in round 12).
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (only.isDefined) "BENCH_FILTERED.json" else "BENCH_FULL.json")
+      if (sys.env.contains("SPARK_GRAFT_ONLY")) "BENCH_FILTERED.json" else "BENCH_FULL.json")
     try {
       val w = new java.io.PrintWriter(outFile, "UTF-8")
       try w.println(fullLine) finally w.close()

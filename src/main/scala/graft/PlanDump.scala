@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for a set of declared queries — the
   * optimization rounds' plan-evidence generator (plans/rNN/). For
   * queries whose gate runs eager phases internally (training loops,
@@ -13,29 +11,20 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = SparkEntry.selected()
+    val spark = SparkEntry.session("graft-plandump")
     new java.io.File(outDir).mkdirs()
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
-          println(s"[plandump] $name ok")
-        } catch { case e: Throwable =>
-          println(s"[plandump] $name failed: ${e.getMessage}")
-        }
+    queries.foreach { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
+        println(s"[plandump] $name ok")
+      } catch { case e: Throwable =>
+        println(s"[plandump] $name failed: ${e.getMessage}")
       }
+    }
     spark.stop()
   }
 }

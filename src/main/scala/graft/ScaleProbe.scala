@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** ENGINE-ONLY endurance sweep for scales the DuckDB oracle cannot
@@ -18,14 +17,7 @@ object ScaleProbe {
     val sfDir = args(0)
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-scaleprobe")
     import spark.implicits._
 
     var failures = 0
@@ -39,12 +31,9 @@ object ScaleProbe {
             s"FAILED: ${e.getMessage.take(300)}"
           }
         val sec = (System.nanoTime() - t0) / 1e9
-        // detail may be an exception message — escape JSON-breaking
-        // characters and collapse newlines so the SCALE.md-committed
-        // line stays one valid JSON object
-        val safe = detail.replace("\\", "\\\\").replace("\"", "\\\"")
-          .replaceAll("\\s+", " ")
-        println(f"""{"probe":"$name","sec":$sec%.1f,"detail":"$safe"}""")
+        // detail may be an exception message — escape it so the
+        // SCALE.md-committed line stays one valid JSON object
+        println(f"""{"probe":"$name","sec":$sec%.1f,"detail":${Verify.q(detail)}}""")
       }
 
     def docs = Tables.documents(spark, sfDir)

@@ -33,4 +33,29 @@ object SparkEntry {
       ClassObjectQueries.oracles ++ MultimodalQueries.oracles ++ CurationQueries.oracles ++
       PipelineQueries.oracles ++ RetrievalQueries.oracles ++ BpeQueries.oracles ++
       GraphQueries.oracles
+
+  /** The session every driver main runs on: the shipped [[GraftSession]]
+    * on `local[n]` with n shuffle partitions, n = `SPARK_GRAFT_CPUS` or
+    * this machine's core count. */
+  def session(appName: String): SparkSession = {
+    val n = sys.env.get("SPARK_GRAFT_CPUS").fold(
+      Runtime.getRuntime.availableProcessors)(_.toInt)
+    val spark = GraftSession.create(s"local[$n]", appName, Some(n))
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** `queries` sorted by name, cut to `only` (comma-separated names,
+    * `SPARK_GRAFT_ONLY` by default) when set. A name that is not a query
+    * throws: a typo must not quietly run zero queries. */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val names = only.map(_.split(",").toSet)
+    val unknown = names.fold(Set.empty[String])(_ -- all.keySet)
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    all.toSeq.sortBy(_._1).filter { case (name, _) => names.forall(_(name)) }
+  }
 }

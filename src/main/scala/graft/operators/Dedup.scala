@@ -23,9 +23,6 @@ import org.apache.spark.sql.types.DoubleType
   */
 object Dedup {
 
-  private def timed[A](label: => String)(f: => A): A =
-    graft.Prof.timed(label)(f)
-
   /** Word n-gram shingles of a text column. Assumes ≥ n tokens; callers
     * filter shorter docs out (`size(split(text,' ')) >= n`) so the
     * DuckDB oracle can mirror the same predicate. */
@@ -1122,11 +1119,11 @@ object Dedup {
       }
       true
     }
-    val rdd = timed(s"$label toRdd")(sorted.queryExecution.toRdd).map(_.copy())
+    val rdd = graft.Prof.timed(s"$label toRdd")(sorted.queryExecution.toRdd).map(_.copy())
     rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ONE action: counting the per-partition distinct keys pulls every
     // row through the persist, so this job IS the materialization
-    val counts = timed(s"$label count")(rdd.mapPartitions { it =>
+    val counts = graft.Prof.timed(s"$label count")(rdd.mapPartitions { it =>
       var cnt = 0L
       var prev: InternalRow = null
       while (it.hasNext) {
@@ -1135,7 +1132,7 @@ object Dedup {
       }
       Iterator.single(cnt)
     }.collect())
-    timed(s"$label clean")(
+    graft.Prof.timed(s"$label clean")(
       org.apache.spark.graft.ShuffleBridge.cleanAllShuffles(rdd))
     val offsets = counts.scanLeft(0L)(_ + _)
     val ranked = rdd.mapPartitionsWithIndex { (pid, it) =>
@@ -1221,9 +1218,9 @@ object Dedup {
     * consumption — the connectedComponents posture). */
   private def pinFrame(df: DataFrame, label: String = "pin"): PinnedFrame = {
     val schema = df.schema
-    val rdd = timed(s"$label toRdd")(df.queryExecution.toRdd).map(_.copy())
+    val rdd = graft.Prof.timed(s"$label toRdd")(df.queryExecution.toRdd).map(_.copy())
     rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    timed(s"$label count")(rdd.count())
+    graft.Prof.timed(s"$label count")(rdd.count())
     // the round's SHUFFLE files exist only to recompute the blocks
     // just pinned — release them NOW, deterministically (ContextCleaner
     // reclaims only on a driver GC; nine rounds of ~270M-row exchanges
@@ -1232,7 +1229,7 @@ object Dedup {
     // shuffle, leaving the 3-4 exchanges beneath each round alive). A
     // lost pinned block recomputes through ordinary lineage recovery —
     // stage retry re-creates missing shuffle files.
-    timed(s"$label clean")(
+    graft.Prof.timed(s"$label clean")(
       org.apache.spark.graft.ShuffleBridge.cleanAllShuffles(rdd))
     new PinnedFrame(
       org.apache.spark.sql.graft.ColumnBridge
@@ -1263,7 +1260,7 @@ object Dedup {
       .toDF("doc_id", "pos", "tok")
       .select(col("doc_id"), col("pos").cast("long").as("pos"), col("tok"))
       .persist()
-    val stats = timed("ladder stats")(
+    val stats = graft.Prof.timed("ladder stats")(
       base.agg(count(lit(1)), max(col("pos"))).head())
     val n = stats.getLong(0)
     val maxLen = if (stats.isNullAt(1)) 0L else stats.getLong(1) + 1L
@@ -1599,7 +1596,7 @@ object Dedup {
     // materialize BEFORE releasing what the plan still reads from:
     // the final ladder level (withLen) and the walk's final rung
     // (adjN/adjP) — every earlier level/rung already released in-loop
-    val pinned = timed("report checkpoint")(report.localCheckpoint(true))
+    val pinned = graft.Prof.timed("report checkpoint")(report.localCheckpoint(true))
     levels.last.release()
     pairs.release()
     pinned.orderBy("doc_id")

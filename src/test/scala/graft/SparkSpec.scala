@@ -48,16 +48,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // managed tables (bucketing specs) land in /tmp, not the repo
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-test-warehouse-${java.util.UUID.randomUUID()}")
-      .getOrCreate()
+    // managed tables (bucketing specs) land in /tmp, not the repo
+    System.setProperty("spark.sql.warehouse.dir",
+      s"/tmp/graft-test-warehouse-${java.util.UUID.randomUUID()}")
+    val s = GraftSession.create("local[4]", "graft-test", Some(4))
     s.sparkContext.setLogLevel("WARN")
     s
   }

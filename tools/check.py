@@ -8,7 +8,11 @@ many seconds and records it as [TIME] instead of [FAIL] — for scale
 runs (sf >= 1) where a few intentionally-unblocked O(n^2) oracles
 (e.g. the simhash all-pairs scan) outgrow the oracle engine, not ours.
 The optional fourth arg restricts the run to a comma-separated subset
-of query names (resume after a crash without redoing green rows).
+of query names (resume after a crash without redoing green rows); a
+name with no oracle is an error, not an empty run.
+
+Exits 1 when any row is [FAIL]; [TIME] and [EXHAUST] rows do not fail
+the run.
 
 DuckDB gets an explicit memory cap + spill dir (override the cap via
 DUCK_MEM, e.g. DUCK_MEM=100GB): at sf10 the unbounded default let the
@@ -34,7 +38,7 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 def main(sf_dir: str, out_dir: str, timeout_s: float = 0.0,
-         only: set | None = None) -> None:
+         only: set | None = None) -> int:
     con = duckdb.connect()
     con.execute(f"SET memory_limit='{os.environ.get('DUCK_MEM', '60GB')}'")
     con.execute("SET temp_directory='/tmp/duck_spill'")
@@ -47,6 +51,9 @@ def main(sf_dir: str, out_dir: str, timeout_s: float = 0.0,
     n_exhaust = 0
     EXHAUST = re.compile(r"Out of Memory Error|No space left on device")
     if only:
+        unknown = only - oracles.keys()
+        if unknown:
+            sys.exit(f"unknown query names: {', '.join(sorted(unknown))}")
         oracles = {k: v for k, v in oracles.items() if k in only}
     for name, sql in sorted(oracles.items()):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
@@ -105,8 +112,10 @@ def main(sf_dir: str, out_dir: str, timeout_s: float = 0.0,
     timed = f" ({n_timed} oracle-timeout)" if n_timed else ""
     exh = f" ({n_exhaust} oracle-exhaust)" if n_exhaust else ""
     print(f"{n_ok}/{len(oracles)} ok{timed}{exh}")
+    return len(oracles) - n_ok - n_timed - n_exhaust
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2],
-         float(sys.argv[3]) if len(sys.argv) > 3 else 0.0,
-         set(sys.argv[4].split(",")) if len(sys.argv) > 4 else None)
+    n_fail = main(sys.argv[1], sys.argv[2],
+                  float(sys.argv[3]) if len(sys.argv) > 3 else 0.0,
+                  set(sys.argv[4].split(",")) if len(sys.argv) > 4 else None)
+    sys.exit(1 if n_fail else 0)
