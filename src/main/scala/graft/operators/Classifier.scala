@@ -228,8 +228,7 @@ object Classifier {
   }
 
   /** Fit-only entry: the (sorted langs, aligned weights) pair for
-    * offline training → online serving (feed [[langBestExpr]] /
-    * [[graft.streaming.StreamOps.langIdStream]]). */
+    * offline training → online serving (feed [[langIdServe]]). */
   def langIdFit(
       df: DataFrame, idCol: String, textCol: String, langCol: String,
       trainPred: Column, buckets: Int = 1024, epochs: Int = 8,
@@ -342,6 +341,15 @@ object Classifier {
       best.getField("m").as("margin"))
   }
 
+  /** [[langBestExpr]] over a text column's [[charGramBuckets]] — the
+    * one serve column for [[langIdFit]]'s weights, on a batch frame
+    * (the spec compiler's `lang_id_learned` step) or an unbounded
+    * stream alike. */
+  def langIdServe(
+      textCol: Column, langs: Seq[String], weights: Seq[Array[Long]],
+      buckets: Int, gramN: Int = 3): Column =
+    langBestExpr(charGramBuckets(textCol, buckets, gramN), langs, weights)
+
   /** Fit on ALL documents (seed = `labelPred` rows), then score and
     * cut the WILD side (`NOT labelPred`): `(id, margin, score, kept)`
     * per candidate, `kept = p >= 0.5`, ordered by id. The gate shape:
@@ -350,13 +358,23 @@ object Classifier {
       df: DataFrame, idCol: String, textCol: String, labelPred: Column,
       buckets: Int = 64, epochs: Int = 4): DataFrame = {
     val w = fit(df, idCol, textCol, labelPred, buckets, epochs)
-    val m = scoreExpr(col(textCol), w, buckets).as("margin")
-    df.where(!labelPred)
-      .select(col(idCol), m)
+    score(df.where(!labelPred), idCol, textCol, w, buckets).orderBy(idCol)
+  }
+
+  /** The serving half of [[trainAndScore]]: `(id, margin, score,
+    * kept)` per row under FITTED weights, without the presentation
+    * sort — so the same function scores a batch frame or an unbounded
+    * stream (train offline, serve online; stateless append mode). */
+  def score(
+      df: DataFrame, idCol: String, textCol: String,
+      weights: Array[Long], buckets: Int): DataFrame = {
+    require(weights.length == buckets + 1,
+      s"classifier score: need ${buckets + 1} weights (incl. bias), " +
+        s"got ${weights.length}")
+    df.select(col(idCol), scoreExpr(col(textCol), weights, buckets).as("margin"))
       .select(
         col(idCol), col("margin"),
         probS(col("margin")).as("score"),
         (probS(col("margin")) * lit(2L) >= lit(S)).as("kept"))
-      .orderBy(idCol)
   }
 }

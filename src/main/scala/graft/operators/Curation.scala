@@ -50,7 +50,11 @@ object Curation {
     * (an interpreted lambda per token) plus two sort-based
     * multiplicity passes. [[repetitionSignalsHof]] keeps that column
     * algebra as the bit-equal reference (CurationSpec). */
-  def repetitionSignals(df: DataFrame, idCols: Seq[String], textCol: String): DataFrame = {
+  def repetitionSignals(df: DataFrame, idCols: Seq[String], textCol: String): DataFrame =
+    repetitionSignalsUnordered(df, idCols, textCol).orderBy(idCols.map(col): _*)
+
+  private def repetitionSignalsUnordered(
+      df: DataFrame, idCols: Seq[String], textCol: String): DataFrame = {
     val st = col("__st")
     val n = st.getField("n_words")
     df.withColumn("__st",
@@ -63,7 +67,6 @@ object Curation {
           when(n >= 2, st.getField("top_bigram").cast("double") / (n - 1))
             .as("top_bigram_share"),
           (st.getField("char_sum").cast("double") / n).as("mean_word_len")): _*)
-      .orderBy(idCols.map(col): _*)
   }
 
   /** The composed column-algebra form of [[repetitionSignals]] — the
@@ -489,6 +492,14 @@ object Curation {
   def qualityFilter(
       df: DataFrame, idCol: String, textCol: String,
       minWords: Int, minDistinctFrac: Double, maxTopShare: Double): DataFrame =
+    qualityFilterUnordered(df, idCol, textCol, minWords, minDistinctFrac, maxTopShare)
+      .orderBy(col(idCol))
+
+  /** [[qualityFilter]] without the presentation sort — the form an
+    * unbounded stream can run (stateless per row, append mode). */
+  def qualityFilterUnordered(
+      df: DataFrame, idCol: String, textCol: String,
+      minWords: Int, minDistinctFrac: Double, maxTopShare: Double): DataFrame =
     // Filter FIRST through the single-pass GopherKeep expression, then
     // project the signals for survivors only. Filtering on the signal
     // COLUMNS pushes the substituted predicate below the project, and
@@ -496,22 +507,17 @@ object Curation {
     // per row (3.4× at sf1). This shape runs exactly one stats pass
     // per row plus one per survivor, same rows (GopherKeep compares
     // with the identical IEEE fraction arithmetic).
-    repetitionSignals(
-        df.where(org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.functions.GopherKeep(
-            org.apache.spark.sql.graft.ColumnBridge.expression(
-              split(col(textCol), " ")),
-            minWords, minDistinctFrac, maxTopShare))),
+    repetitionSignalsUnordered(
+        qualityKeep(df, textCol, minWords, minDistinctFrac, maxTopShare),
         Seq(idCol), textCol)
       .select(col(idCol), col("n_words"), col("distinct_word_frac"),
         col("top_word_share"))
-      .orderBy(col(idCol))
 
   /** [[qualityFilter]]'s KEEP decision applied to the corpus rows
     * themselves (all columns intact) — the form a config-driven
     * curation pipeline chains between other steps. Map-only, one
     * codegen'd stats pass per row (the same fused `GopherKeep`
-    * predicate as the gate and the streaming twin). */
+    * predicate as the gate). */
   def qualityKeep(
       df: DataFrame, textCol: String,
       minWords: Int, minDistinctFrac: Double, maxTopShare: Double): DataFrame =

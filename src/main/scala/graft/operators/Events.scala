@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Event-time operators (SURVEY.md §2 I): tumbling-window aggregation
-  * and gap-based sessionization. Batch forms here; the streaming
-  * variants (same semantics on an unbounded source) live in
+  * and gap-based sessionization. Batch forms here; the stateful
+  * streaming variants (same semantics on an unbounded source) live in
   * [[graft.streaming.StreamOps]].
   *
   * Sessionization is the one genuinely order-dependent operator in the
@@ -16,11 +16,12 @@ import org.apache.spark.sql.functions._
   */
 object Events {
 
-  /** Tumbling-window aggregation SHARED by the batch spec compiler and
-    * the streaming twin ([[graft.streaming.StreamOps.windowedAggregate]]
-    * = withWatermark + this): `window(ts, dur)` grouping with an event
-    * count plus caller aggregates. Batch/stream parity holds by this
-    * being literally the same code on both paths. */
+  /** Tumbling-window aggregation SHARED by batch and stream: on a
+    * stream, pass `df.withWatermark(ts, delay)` so window state stays
+    * bounded (the spec compiler's streaming `window_agg` does exactly
+    * that): `window(ts, dur)` grouping with an event count plus caller
+    * aggregates. Batch/stream parity holds by this being literally the
+    * same code on both paths. */
   def tumblingWindowAggregate(
       df: DataFrame, tsCol: String, keyCol: String,
       windowDur: String, aggs: Seq[Column]): DataFrame =

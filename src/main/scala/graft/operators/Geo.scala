@@ -261,20 +261,14 @@ object Geo {
       .orderBy(featureKey, "cell_x", "cell_y")
   }
 
-  /** P6 — point-in-RING-SET containment join: [[pointInPolygon]] with
-    * hole/multipolygon semantics. Candidates come from the same grid
-    * equi-join blocking (feature bbox cells × point cells — a hash
-    * join at any feature count, never a nested loop), then the exact
-    * multi-ring even-odd test on the point's own coordinates decides.
-    * Points never shuffle; the ring-set dim broadcasts. */
   /** The containment-tagging stage of [[pointInRingSet]], exposed so
-    * the STREAMING twin ([[graft.streaming.StreamOps.geoTagStream]])
-    * shares it verbatim: every operation is stateless per point row
-    * (cell key, broadcast dim join, exact ring test), which is
-    * exactly what a stream-static join needs. Emits the point rows
-    * (minus blocking keys) with their containing `featureKey`; a
-    * point inside k overlapping features emits k rows. */
-  private[graft] def tagPointsInRingSet(
+    * a STREAM of points runs it unchanged (streaming geofence
+    * tagging): every operation is stateless per point row (cell key,
+    * broadcast dim join, exact ring test), which is exactly what a
+    * stream-static join needs. Emits the point rows (minus blocking
+    * keys) with their containing `featureKey`; a point inside k
+    * overlapping features emits k rows. */
+  def tagPointsInRingSet(
       points: DataFrame, rings: DataFrame,
       lonCol: String, latCol: String, featureKey: String,
       xsCol: String, ysCol: String, cellDeg: Double): DataFrame = {
@@ -293,6 +287,12 @@ object Geo {
       .drop("cx", "cy", "xss", "yss", "xmin", "xmax", "ymin", "ymax")
   }
 
+  /** P6 — point-in-RING-SET containment join: [[pointInPolygon]] with
+    * hole/multipolygon semantics. Candidates come from the same grid
+    * equi-join blocking (feature bbox cells × point cells — a hash
+    * join at any feature count, never a nested loop), then the exact
+    * multi-ring even-odd test on the point's own coordinates decides.
+    * Points never shuffle; the ring-set dim broadcasts. */
   def pointInRingSet(
       points: DataFrame, rings: DataFrame,
       lonCol: String, latCol: String, featureKey: String,

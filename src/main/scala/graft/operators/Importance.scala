@@ -102,11 +102,17 @@ object Importance {
       .groupBy(col(idCol), col("bucket")).agg(count(lit(1)).as("f"))
       .join(broadcast(ratios), "bucket")
       .groupBy(col(idCol)).agg(sum(col("f") * col("q")).as("weight"))
-    val u = conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
-      .cast("long")
     weights.select(col(idCol), col("weight"),
-        when(col("weight") >= cap, lit(true))
-          .otherwise(u * lit(cap) < col("weight") * lit(1L << 32)).as("kept"))
+        kept(col(idCol), col("weight"), cap).as("kept"))
       .orderBy(col(idCol))
+  }
+
+  /** The keep decision of [[resample]] and of the streaming tagger
+    * ([[graft.streaming.StreamOps.importanceTagStream]]): `weight ≥
+    * cap`, or `u·cap < weight·2³²` with `u = md5-prefix(id)`. */
+  private[graft] def kept(id: Column, weight: Column, cap: Long): Column = {
+    val u = conv(substring(md5(id.cast("string")), 1, 8), 16, 10).cast("long")
+    when(weight >= cap, lit(true))
+      .otherwise(u * lit(cap) < weight * lit(1L << 32))
   }
 }

@@ -99,7 +99,7 @@ object Pipeline {
     * reason rather than just listing the allowed vocabulary. Their
     * incremental twins live in [[graft.streaming.StreamOps]]
     * (rollingIngestStream / minhashCandidateStream /
-    * incrementalDedupStream / spanScrubStream). */
+    * spanScrubStream). */
   private val corpusAggOps: Set[String] =
     Set("minhash_dedup", "span_scrub", "decontaminate", "bpe_count",
       "longest_dup", "suffix_array")
@@ -375,12 +375,11 @@ object Pipeline {
               s"pipeline '${spec.entity}': step '${st.name}' — 'window_agg' " +
                 "aggregates the stream and must be the LAST step (steps " +
                 "after an aggregation would need a different output mode)")
-            graft.streaming.StreamOps.windowedAggregate(
-              in, reqStr(st.params, "ts", s"step '${st.name}'"),
-              reqStr(st.params, "key", s"step '${st.name}'"),
-              reqStr(st.params, "window", s"step '${st.name}'"),
-              reqStr(st.params, "watermark", s"step '${st.name}'"),
-              windowAggValueAggs(st))
+            // the batch branch (Events.tumblingWindowAggregate) on the
+            // watermarked stream: window state stays bounded
+            val tag = s"step '${st.name}'"
+            applyOp(st, in.withWatermark(reqStr(st.params, "ts", tag),
+              reqStr(st.params, "watermark", tag)), ctx)
           }
           else if (st.op == "url_filter") applyUrlFilterStream(st, in, ctx)
           else applyOp(st, in, ctx)
@@ -592,17 +591,15 @@ object Pipeline {
         // literals). Trains on the `train` predicate rows against the
         // `lang` label column, annotates EVERY row with lang_pred.
         val textC = reqStr(st.params, "text", tag)
+        val buckets = st.params.getOrElse("buckets", 1024).toString.toInt
         val (langs, ws) = graft.operators.Classifier.langIdFit(
           in, reqStr(st.params, "id", tag), textC,
           reqStr(st.params, "lang", tag),
           expr(reqStr(st.params, "train", tag)),
-          buckets = st.params.getOrElse("buckets", 1024).toString.toInt,
+          buckets = buckets,
           epochs = st.params.getOrElse("epochs", 8).toString.toInt)
-        val buckets = st.params.getOrElse("buckets", 1024).toString.toInt
-        val best = graft.operators.Classifier.langBestExpr(
-          graft.operators.Classifier.charGramBuckets(col(textC), buckets, 3),
-          langs, ws)
-        in.withColumn("lang_pred", best.getField("lang_pred"))
+        in.withColumn("lang_pred", graft.operators.Classifier
+          .langIdServe(col(textC), langs, ws, buckets).getField("lang_pred"))
       case "pagerank" =>
         // S1: the step input IS the edge list
         graft.operators.Graph.pageRank(

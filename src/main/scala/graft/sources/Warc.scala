@@ -99,10 +99,10 @@ object Warc {
     * directory — each micro-batch picks up newly landed `.warc.gz`
     * files (the file source tracks seen files; nothing is rescanned),
     * parses them through the SAME per-task record walk as the batch
-    * reader, and emits response rows ready for the stateless
-    * extraction twins ([[graft.streaming.StreamOps.htmlExtractStream]]
-    * and friends). Map-only append mode: no watermark, no state — the
-    * crawl lake's front door at any arrival rate. `maxFilesPerTrigger`
+    * reader, and emits response rows that the stateless batch
+    * extraction operators ([[graft.operators.Html.htmlExtract]] and
+    * friends) run on unchanged. Map-only append mode: no watermark, no
+    * state — the crawl lake's front door at any arrival rate. `maxFilesPerTrigger`
     * bounds a micro-batch (a CommonCrawl-sized file is ~1 GB; the
     * default 16 keeps a batch under one executor-wave on a small
     * cluster — size to your executor count). */

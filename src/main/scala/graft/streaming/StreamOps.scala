@@ -1,62 +1,37 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-import graft.operators.Num
+import java.time.Duration
 
-/** Structured-Streaming variants of the event-time operators
-  * (SURVEY.md §2 I3). Each transform takes a DataFrame/Dataset and
-  * returns one, so the same code runs on `spark.read` (batch backfill)
-  * and `spark.readStream` (live) — the Spark-native replacement for
-  * the reference's one-shot import→transform pipeline runs.
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode,
+  StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
+
+/** Structured-Streaming operators (SURVEY.md §2 I3) — the
+  * Spark-native replacement for the reference's one-shot
+  * import→transform pipeline runs.
+  *
+  * The rule: a stateless batch operator runs on a stream unchanged
+  * (e.g. `Html.htmlExtract`, `Geo.tagPointsInRingSet`,
+  * `Classifier.score`, `quant_nearest_cell`), so batch/stream parity
+  * holds because both sides run the same function; a batch operator
+  * that ends in a presentation sort has an `…Unordered` form, since
+  * append streams cannot sort. This object holds only the twins that
+  * need a watermark, a state store or `foreachBatch`, plus two
+  * fitted-literal servers whose batch form is a join or an
+  * aggregation: [[urlFlagStream]]'s rule-list fold and
+  * [[importanceTagStream]]'s ratio-map fold.
   */
 object StreamOps {
 
-  /** Streaming point-in-ring-set tagging (geofence enrichment): each
-    * streaming point row joins the STATIC ring-set dimension through
-    * the same cell blocking + exact multi-ring even-odd test as the
-    * batch [[graft.operators.Geo.pointInRingSet]] — shared code, so
-    * stream and batch agree row-for-row (StreamingSpec parity). Every
-    * step is stateless per row (cell key, broadcast stream-static
-    * join, codegen'd crossing test): append-mode, no watermark, no
-    * state store — the shape that holds at any stream rate. */
-  def geoTagStream(
-      points: DataFrame, rings: DataFrame,
-      lonCol: String, latCol: String, featureKey: String,
-      xsCol: String, ysCol: String, cellDeg: Double = 5.0): DataFrame =
-    graft.operators.Geo.tagPointsInRingSet(
-      points, rings, lonCol, latCol, featureKey, xsCol, ysCol, cellDeg)
-
-  /** Streaming semantic-cluster tagging: each streaming embedding row
-    * is assigned its fixed-point k-means cell by the same codegen'd
-    * expression as the batch path
-    * ([[graft.functions.QuantNearestCell]]), against a codebook FIT
-    * OFFLINE with [[graft.operators.Clustering.kmeansCodebook]] — the
-    * train-offline / serve-online split. Map-only and stateless: the
-    * codebook rides into every task as a referenced `long[][]`
-    * (append-mode, no watermark, no state store, no join) — the shape
-    * that holds at any stream rate. Batch/stream parity is
-    * spec-asserted (shared expression ⇒ row-for-row identical). */
-  def clusterTagStream(
-      df: DataFrame, vecCol: String,
-      codebook: Array[Array[Long]],
-      scale: Double = graft.operators.Clustering.DefaultScale): DataFrame =
-    df.withColumn("cell",
-      graft.functions.GraftFunctions.quant_nearest_cell(col(vecCol), codebook, scale))
-
-  /** Streaming DSIR importance tagging: score an unbounded document
-    * stream against an OFFLINE-FITTED bucket-ratio table (the
-    * [[graft.operators.Importance.resample]] fit — train offline,
-    * serve online, the I9 pattern). The ≤4096-row ratio table folds
-    * into a literal map, so the per-doc weight
-    * `Σ_gram q(bucket(gram))` is ONE in-row fold over the gram array —
-    * no explode, no per-doc aggregation state, no join: stateless
-    * append mode at any stream rate. Grams hashing to buckets unseen
-    * in the fit score `defaultQ` (the add-half-smoothed empty-bucket
-    * ratio — in-fit replays never hit it). The keep decision is the
-    * batch operator's exact integer arithmetic verbatim; batch/stream
-    * parity is spec-asserted. */
+  /** Streaming DSIR importance tagging against an OFFLINE-FITTED
+    * bucket-ratio table (the [[graft.operators.Importance.resample]]
+    * fit). The ≤4096-row table folds into a literal map, so the
+    * per-doc weight `Σ_gram q(bucket(gram))` is ONE in-row fold over
+    * the batch path's fused bigram buckets (`ngram_buckets`): no
+    * explode, no state, no join. Buckets unseen in the fit score
+    * `defaultQ`. The keep decision is the batch operator's own
+    * expression ([[graft.operators.Importance.kept]]). */
   def importanceTagStream(
       docs: DataFrame, idCol: String, textCol: String,
       ratios: Map[Int, Long], defaultQ: Long, cap: Long,
@@ -69,129 +44,14 @@ object StreamOps {
       if (ratios.isEmpty) map()
       else map(ratios.toSeq.sortBy(_._1)
         .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
-    val toks = split(col(textCol), " ")
-    val grams = graft.functions.HashFunctions.string_ngrams(toks, 2)
-    val w = aggregate(grams, lit(0L), (acc, g) =>
-      acc + coalesce(
-        element_at(rmap, graft.operators.Importance.hashedBucket(g, buckets)),
-        lit(defaultQ)))
-    val u = conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
-      .cast("long")
-    docs.where(size(toks) >= 2)
+    val w = aggregate(
+      graft.functions.CharGramBuckets.ngram_buckets(col(textCol), buckets, 2),
+      lit(0L), (acc, b) => acc + coalesce(element_at(rmap, b), lit(defaultQ)))
+    docs.where(size(split(col(textCol), " ")) >= 2)
       .select(col(idCol), w.as("weight"))
       .select(col(idCol), col("weight"),
-        when(col("weight") >= cap, lit(true))
-          .otherwise(u * lit(cap) < col("weight") * lit(1L << 32)).as("kept"))
+        graft.operators.Importance.kept(col(idCol), col("weight"), cap).as("kept"))
   }
-
-  /** Streaming learned-quality scorer: the Q18 classifier's FITTED
-    * integer weights served on an unbounded document stream through
-    * the SAME stateless scoring expression as the batch operator
-    * ([[graft.operators.Classifier.scoreExpr]] — tokenize, md5-bucket,
-    * distinct, one in-row fold against the weight-array literal: no
-    * explode, no join, no state store, append mode at any rate).
-    * Train offline, serve online — the I12 pattern applied to the
-    * learned filter; batch/stream parity holds by shared expression
-    * and is spec-asserted. */
-  def qualityClassifierStream(
-      docs: DataFrame, idCol: String, textCol: String,
-      weights: Array[Long], buckets: Int): DataFrame = {
-    require(weights.length == buckets + 1,
-      s"qualityClassifierStream: need ${buckets + 1} weights (incl. bias), " +
-        s"got ${weights.length}")
-    val m = graft.operators.Classifier.scoreExpr(col(textCol), weights, buckets)
-    val p = graft.operators.Classifier.probS(col("margin"))
-    docs.select(col(idCol), m.as("margin"))
-      .select(col(idCol), col("margin"), p.as("score"),
-        (p * lit(2L) >= lit(graft.operators.Classifier.S)).as("kept"))
-  }
-
-  /** Streaming learned language ID: the L18 one-vs-rest classifier's
-    * FITTED integer weights served on an unbounded stream — char-gram
-    * buckets projected ONCE per row, then the SAME argmax expression
-    * as the batch server ([[graft.operators.Classifier.langBestExpr]]).
-    * Train offline, serve online (the I12/I13 fitted-literal posture);
-    * stateless append mode, batch/stream parity spec-asserted. */
-  def langIdStream(
-      docs: DataFrame, idCol: String, textCol: String,
-      langs: Seq[String], weights: Seq[Array[Long]],
-      buckets: Int, gramN: Int = 3): DataFrame = {
-    val c = graft.operators.Classifier
-    docs
-      .select(col(idCol),
-        c.charGramBuckets(col(textCol), buckets, gramN).as("__barr"))
-      .select(col(idCol), c.langBestExpr(col("__barr"), langs, weights).as("__b"))
-      .select(col(idCol),
-        col("__b.lang_pred").as("lang_pred"), col("__b.margin").as("margin"))
-  }
-
-  /** Streaming HTML → text extraction: the L9 WET stage applied to a
-    * live crawl stream through the SAME pure column algebra as the
-    * batch operator ([[graft.operators.Html.htmlExtract]] — regexes,
-    * entity chain, integer link-density cut). Stateless map-only
-    * append mode (no watermark, no state store, no join), so raw HTML
-    * never lands in the lake — only extracted text plus extraction
-    * stats. Batch/stream parity is spec-asserted (shared code ⇒
-    * row-for-row identical). */
-  def htmlExtractStream(
-      docs: DataFrame, idCol: String, htmlCol: String,
-      minWords: Int = 3): DataFrame =
-    graft.operators.Html.htmlExtract(docs, idCol, htmlCol, minWords)
-
-  /** Streaming curation scrub: PII redaction + quality signals over
-    * an unbounded document stream, via the SAME pure column
-    * expressions as the batch operators
-    * ([[graft.operators.Curation.piiScrub]] regexes,
-    * [[graft.functions.RepetitionStats]]) — stateless per row
-    * (append-mode, no watermark, no state store, no join): the
-    * live-ingest hygiene pass in front of a training-data lake, at
-    * any stream rate. Batch/stream parity is spec-asserted (shared
-    * code ⇒ row-for-row identical). */
-  def curationScrubStream(
-      docs: DataFrame, idCol: String, textCol: String,
-      patterns: Seq[(String, String, String)]): DataFrame = {
-    val scrubbed = graft.operators.Curation.piiScrubUnordered(
-      docs, idCol, textCol, patterns)
-    scrubbed.withColumn("n_words",
-      graft.functions.HashFunctions.repetition_stats(
-        split(col("scrubbed"), " ")).getField("n_words"))
-  }
-
-  /** Streaming Gopher quality gate: the Q15 keep decision applied to
-    * an unbounded document stream through the SAME single-pass
-    * codegen'd predicate as the batch operator
-    * ([[graft.functions.GopherKeep]] — one stats pass per row, no
-    * regex, no state). Stateless append-mode filter: survivors flow
-    * through with their signal columns, at any stream rate.
-    * Batch/stream parity is spec-asserted (shared expression ⇒
-    * row-for-row identical keep decisions). */
-  def qualityFilterStream(
-      docs: DataFrame, idCol: String, textCol: String,
-      minWords: Int, minDistinctFrac: Double, maxTopShare: Double): DataFrame = {
-    val st = graft.functions.HashFunctions.repetition_stats(
-      split(col(textCol), " "))
-    val n = st.getField("n_words")
-    docs
-      .where(org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.GopherKeep(
-          org.apache.spark.sql.graft.ColumnBridge.expression(
-            split(col(textCol), " ")),
-          minWords, minDistinctFrac, maxTopShare)))
-      .select(col(idCol),
-        n.as("n_words"),
-        (st.getField("n_distinct").cast("double") / n).as("distinct_word_frac"),
-        (st.getField("top_word").cast("double") / n).as("top_word_share"))
-  }
-
-  /** Watermarked tumbling-window aggregation: late events beyond
-    * `watermarkDur` are dropped and window state is bounded — the
-    * property that keeps an unbounded 100 TB/day stream in fixed
-    * executor memory. */
-  def windowedAggregate(
-      df: DataFrame, tsCol: String, keyCol: String,
-      windowDur: String, watermarkDur: String, aggs: Seq[Column]): DataFrame =
-    graft.operators.Events.tumblingWindowAggregate(
-      df.withWatermark(tsCol, watermarkDur), tsCol, keyCol, windowDur, aggs)
 
   case class UserEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
   case class UserAgg(user_id: Long, n_events: Long, value_sum: Double)
@@ -212,13 +72,6 @@ object StreamOps {
           next
       }
   }
-
-  /** Streaming windowed event counts with an exact decimal value sum —
-    * the wiring used by the StreamingSpec and any readStream caller. */
-  def eventCounts(df: DataFrame): DataFrame =
-    windowedAggregate(
-      df, "ts", "event_type", "1 hour", "10 minutes",
-      Seq(Num.dsum(col("value")).as("value_sum")))
 
   /** Stream-stream interval join: enrich an event stream with a state
     * stream's rows whose timestamp falls within `[eventTs −
@@ -252,105 +105,80 @@ object StreamOps {
     df.withWatermark(tsCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
 
-  /** [[runningUserAgg]] on the Spark 4 arbitrary-state v2 API
-    * (`transformWithState` + `StatefulProcessor` + typed `ValueState`):
-    * the current recommended custom-state primitive — state is
-    * per-key, schema'd, TTL-able, and backed by the RocksDB state
-    * store (`spark.sql.streaming.stateStore.providerClass` must be the
-    * RocksDB provider), which keeps hot state off-heap and incremental
-    * snapshots cheap on unbounded streams. */
-  class RunningAggProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, UserEvent, UserAgg] {
-    @transient private var state: org.apache.spark.sql.streaming.ValueState[UserAgg] = _
+  /** `ttl` bounds every state variable; None keeps state until cleared. */
+  private def ttlConfig(ttl: Option[Duration]): TTLConfig =
+    ttl.map(new TTLConfig(_)).getOrElse(TTLConfig.NONE)
 
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      state = getHandle.getValueState[UserAgg](
-        "agg", org.apache.spark.sql.Encoders.product[UserAgg],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[UserEvent],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[UserAgg] = {
-      val prev = if (state.exists()) state.get() else UserAgg(key, 0L, 0.0)
-      val next = rows.foldLeft(prev) { (a, e) =>
-        UserAgg(key, a.n_events + 1L, a.value_sum + e.value)
-      }
-      state.update(next)
-      Iterator.single(next)
-    }
-  }
-
-  def runningUserAggTws(ds: Dataset[UserEvent]): Dataset[UserAgg] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(
-        new RunningAggProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Update())
-  }
+  /** `transformWithState` in append mode. A TTL is only legal under
+    * ProcessingTime (Spark throws at query start otherwise). */
+  private def appendWithState[K, I, O: Encoder](
+      grouped: KeyValueGroupedDataset[K, I],
+      processor: StatefulProcessor[K, I, O],
+      ttl: Option[Duration]): Dataset[O] =
+    grouped.transformWithState(processor,
+      if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None(),
+      OutputMode.Append())
 
   case class MinhashCandidate(id_a: Long, id_b: Long, band: Int)
+  case class HammingPair(id_a: Long, id_b: Long, hamming: Int)
 
-  /** Per-(band, bucket) membership state for the streaming minhash
-    * dedup: each arriving doc pairs with every member already in its
-    * bucket, then joins the bucket. `maxBucket` mirrors the batch
-    * miner's over-cap DROP as a tombstone: the arrival that would
-    * exceed the cap kills the bucket — its state clears to one
-    * boolean, the current micro-batch's pairs for it are suppressed,
-    * and it stays permanently quiet (so a boilerplate mega-bucket
-    * costs O(1) per arrival forever after). Within one micro-batch
-    * this is EXACTLY the batch semantics; across batches, pairs a
-    * previous batch already emitted cannot be retracted in append
-    * mode — the one documented divergence (those pairs carry exact
-    * verified distances, so consumers lose no precision; they see a
-    * prefix the batch miner would have dropped for skew, not for
-    * wrongness). Re-delivered ids are ignored (idempotent under
-    * at-least-once). */
-  class MinhashBucketProcessor(maxBucket: Int, ttl: Option[java.time.Duration])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        (Int, Long), (Int, Long, Long), MinhashCandidate] {
-    @transient private var members: org.apache.spark.sql.streaming.ListState[Long] = _
-    @transient private var dead: org.apache.spark.sql.streaming.ValueState[Boolean] = _
+  /** Per-bucket state of the streaming near-dup miners
+    * ([[minhashCandidateStream]], [[fingerprintPairStream]]), keyed by
+    * (band or chunk, bucket). Each arriving row becomes a member `M`
+    * that meets every member already in its bucket through the
+    * caller's pair rule `pair(key, earlier, arrival)` (None emits
+    * nothing), then joins the bucket. Re-delivered ids are ignored.
+    *
+    * `maxBucket` mirrors the batch miner's over-cap DROP as a
+    * tombstone: the arrival that would exceed the cap kills the bucket
+    * — its state clears to one `dead` flag and the current
+    * micro-batch's pairs for it are suppressed, so a boilerplate
+    * mega-bucket costs O(1) per arrival while the flag lives. Without
+    * `ttl` the flag never expires and the bucket stays quiet for good.
+    * With `ttl` set the flag carries the same TTL as the member list:
+    * once it expires the bucket starts again from empty, so it can
+    * pair and tombstone anew. Within one micro-batch this is EXACTLY
+    * the batch semantics; across batches, pairs a previous batch
+    * already emitted cannot be retracted in append mode — the one
+    * documented divergence (those pairs passed the exact pair rule, so
+    * consumers lose no precision; they see a prefix the batch miner
+    * would have dropped for skew, not for wrongness). */
+  class BucketPairProcessor[I, M, P](
+      maxBucket: Int, ttl: Option[Duration], memberEncoder: Encoder[M],
+      member: I => M, id: M => Long, pair: ((Int, Long), M, M) => Option[P])
+      extends StatefulProcessor[(Int, Long), I, P] {
+    @transient private var members: ListState[M] = _
+    @transient private var dead: ValueState[Boolean] = _
 
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val ttlConf = ttl.map(d => new org.apache.spark.sql.streaming.TTLConfig(d))
-        .getOrElse(org.apache.spark.sql.streaming.TTLConfig.NONE)
-      members = getHandle.getListState[Long](
-        "members", org.apache.spark.sql.Encoders.scalaLong, ttlConf)
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      members = getHandle.getListState[M]("members", memberEncoder, ttlConfig(ttl))
       dead = getHandle.getValueState[Boolean](
-        "dead", org.apache.spark.sql.Encoders.scalaBoolean, ttlConf)
+        "dead", Encoders.scalaBoolean, ttlConfig(ttl))
     }
 
     override def handleInputRows(
-        key: (Int, Long), rows: Iterator[(Int, Long, Long)],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[MinhashCandidate] = {
+        key: (Int, Long), rows: Iterator[I], timers: TimerValues): Iterator[P] = {
       if (dead.exists()) Iterator.empty
       else {
-        val current = scala.collection.mutable.ArrayBuffer.empty[Long]
+        val current = scala.collection.mutable.ArrayBuffer.empty[M]
         val it = members.get()
         while (it.hasNext) current += it.next()
-        val out = Seq.newBuilder[MinhashCandidate]
+        val out = Seq.newBuilder[P]
         var alive = true
-        rows.foreach { case (band, _, id) =>
-          if (alive && !current.contains(id)) {
+        rows.map(member).foreach { m =>
+          if (alive && !current.exists(c => id(c) == id(m))) {
             if (current.size >= maxBucket) {
               alive = false
               dead.update(true)
               members.clear()
               out.clear()
               org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                s"skew cap: minhash bucket $key exceeded maxBucket=$maxBucket — " +
-                  "tombstoned (no further candidate pairs from this bucket)")
+                s"skew cap: bucket $key exceeded maxBucket=$maxBucket — " +
+                  "tombstoned (no further pairs from this bucket)")
             } else {
-              current.foreach { m =>
-                out += MinhashCandidate(math.min(m, id), math.max(m, id), band)
-              }
-              current += id
-              members.appendValue(id)
+              current.foreach(c => out ++= pair(key, c, m))
+              current += m
+              members.appendValue(m)
             }
           }
         }
@@ -375,62 +203,34 @@ object StreamOps {
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
       maxBucket: Int = 1000,
-      ttl: Option[java.time.Duration] = None): Dataset[MinhashCandidate] = {
+      ttl: Option[Duration] = None): Dataset[MinhashCandidate] = {
     import df.sparkSession.implicits._
     val banded = graft.operators.Dedup.bandedBuckets(
       graft.operators.Dedup.signatureFrame(df, idCol, textCol, shingleN, numHashes),
       numHashes, bands)
-    banded.select(col("band"), col("bucket"), col("doc_id"))
-      .as[(Int, Long, Long)]
-      .groupByKey(r => (r._1, r._2))
-      .transformWithState(
-        new MinhashBucketProcessor(maxBucket, ttl),
-        if (ttl.isDefined) org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-        else org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+    appendWithState(
+      banded.select(col("band"), col("bucket"), col("doc_id"))
+        .as[(Int, Long, Long)]
+        .groupByKey(r => (r._1, r._2)),
+      new BucketPairProcessor[(Int, Long, Long), Long, MinhashCandidate](
+        maxBucket, ttl, Encoders.scalaLong, _._3, identity,
+        (key, a, b) => Some(MinhashCandidate(math.min(a, b), math.max(a, b), key._1))),
+      ttl)
   }
 
-  /** J14 twin — rolling-ingest dedup served online: every micro-batch
-    * is one arriving shard, probed against the PERSISTED minhash index
-    * ([[graft.operators.Dedup.minhashIndexWrite]]) by the batch
-    * operator itself through `foreachBatch` — a micro-batch IS a
-    * bounded shard, so the exact-verify joins and the best-match fold
-    * run as plain batch plans and stream/batch parity holds by
-    * construction (spec-asserted). Per-batch cost ∝ batch + the
-    * candidate sliver of the index; the corpus is never rescanned and
-    * NO state store is involved — the index artifact is the state,
-    * shared by every executor, refreshable between batches by
-    * rewriting the artifact (e.g. folding accepted novel docs in).
-    * `onFlagged` receives each batch's flagged rows
-    * `(doc_id, match_id, jaccard)` with its batch id. */
   /** I16 — streaming URL compliance: the L14/L16 verdicts on an
-    * unbounded URL stream (live crawl-frontier filtering). The rule
-    * list folds into a LITERAL struct array at stream build (the
-    * I12/I13 fitted-literal posture — train/compile offline, serve
-    * online), with RFC 9309 wildcard patterns compiled ONCE rules-side
-    * by the SAME [[graft.operators.Html.robotsPatternRegex]] column
-    * expression the batch matcher uses: each row normalizes its URL
-    * and folds the array in-row — no join, no state store, stateless
-    * append mode, so batch/stream parity holds by shared semantics
-    * (spec-asserted). Verdict mode mirrors the batch operator: a rule
-    * frame WITHOUT an `allow` column is a blocklist (min-rule_id
-    * attribution), one WITH it runs the §2.2.2 longest-match argmax
-    * (Allow wins an exact-length tie) as the same struct-max fold.
-    * Bounded by construction: a rule list past the literal bound must
-    * use the batch suffix-explode join instead — loudly enforced,
-    * never silently truncated. */
-  def urlFilterStream(
-      df: DataFrame, idCol: String, urlCol: String,
-      rules: DataFrame, maxRules: Int = 10000): DataFrame =
-    urlFlagStream(df, idCol, urlCol, rules, maxRules)
-      .select(col(idCol), col("canon"), col("blocked"), col("rule_id"))
-
-  /** [[urlFilterStream]] keeping the INPUT row: every original column
-    * plus (canon, blocked, rule_id) — the compliance verdict as an
-    * annotation, so a streaming pipeline can DROP blocked rows while
-    * the rest of the row flows on (the spec-compiled `url_filter`
-    * drop mode). Input columns named canon/blocked/rule_id would
-    * collide — rejected loudly. */
+    * unbounded URL stream, as an annotation on the INPUT row (every
+    * original column plus canon, blocked, rule_id), so a pipeline can
+    * drop blocked rows or select the verdict columns. The rule list
+    * folds into a LITERAL struct array at stream build, with RFC 9309
+    * wildcard patterns compiled ONCE rules-side by the SAME
+    * [[graft.operators.Html.robotsPatternRegex]] expression as the
+    * batch matcher; each row folds the array in-row — no join, no
+    * state (spec-asserted parity with [[graft.operators.Html.urlFilter]]).
+    * A rule frame WITHOUT an `allow` column is a blocklist (min-rule_id
+    * attribution); one WITH it runs the §2.2.2 longest-match argmax
+    * (Allow wins an exact-length tie). A rule list past the literal
+    * bound must use the batch join instead — loudly enforced. */
   def urlFlagStream(
       df: DataFrame, idCol: String, urlCol: String,
       rules: DataFrame, maxRules: Int = 10000): DataFrame = {
@@ -460,7 +260,7 @@ object StreamOps {
         coalesce(normPp, lit("")).as("pp"))
       .limit(maxRules + 1).collect()
     require(collected.length <= maxRules,
-      s"urlFilterStream: rule list exceeds the $maxRules literal bound — " +
+      s"urlFlagStream: rule list exceeds the $maxRules literal bound — " +
         "use the batch Html.urlFilter join for unbounded lists")
     val ruleSeq = collected.toSeq.map(r =>
       (r.getLong(0), r.getString(1), Option(r.getString(2)).getOrElse(""),
@@ -506,83 +306,6 @@ object StreamOps {
     out.drop("__h", "__p", "__b")
   }
 
-  case class HammingPair(id_a: Long, id_b: Long, hamming: Int)
-
-  /** Per-bucket state for [[fingerprintPairStream]]: fingerprints of
-    * current members; a new arrival pairs against every member within
-    * `maxHamming` (exact popcount at emission — unlike the minhash
-    * twin, a hamming bucket key is a LOSSY pigeonhole, so the
-    * filter must run before anything is emitted). `maxBucket` mirrors
-    * the batch miner's over-cap DROP as a tombstone (see
-    * [[MinhashBucketProcessor]]): the arrival that would exceed the
-    * cap kills the bucket — state clears, the current micro-batch's
-    * pairs for it are suppressed (exact batch parity when the bucket
-    * goes hot within one batch), and it stays permanently quiet.
-    * Pairs emitted by EARLIER batches cannot be retracted in append
-    * mode — the one documented divergence; they carry exact verified
-    * hamming, so precision is unaffected. Re-delivered ids are
-    * ignored (idempotent under at-least-once). */
-  class HammingBucketProcessor(
-      maxHamming: Int, maxBucket: Int, ttl: Option[java.time.Duration])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        (Int, Long), (Int, Long, Long, Long, Long), HammingPair] {
-    @transient private var members:
-      org.apache.spark.sql.streaming.ListState[(Long, Long, Long)] = _
-    @transient private var dead: org.apache.spark.sql.streaming.ValueState[Boolean] = _
-
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val ttlConf = ttl.map(d => new org.apache.spark.sql.streaming.TTLConfig(d))
-        .getOrElse(org.apache.spark.sql.streaming.TTLConfig.NONE)
-      members = getHandle.getListState[(Long, Long, Long)](
-        "members",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong),
-        ttlConf)
-      dead = getHandle.getValueState[Boolean](
-        "dead", org.apache.spark.sql.Encoders.scalaBoolean, ttlConf)
-    }
-
-    override def handleInputRows(
-        key: (Int, Long), rows: Iterator[(Int, Long, Long, Long, Long)],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[HammingPair] = {
-      if (dead.exists()) Iterator.empty
-      else {
-        val current = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-        val it = members.get()
-        while (it.hasNext) current += it.next()
-        val out = Seq.newBuilder[HammingPair]
-        var alive = true
-        rows.foreach { case (_, _, id, hi, lo) =>
-          if (alive && !current.exists(_._1 == id)) {
-            if (current.size >= maxBucket) {
-              alive = false
-              dead.update(true)
-              members.clear()
-              out.clear()
-              org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                s"skew cap: hamming bucket $key exceeded maxBucket=$maxBucket — " +
-                  "tombstoned (no further pairs from this bucket)")
-            } else {
-              current.foreach { case (mid, mhi, mlo) =>
-                val ham = java.lang.Long.bitCount(mhi ^ hi) +
-                  java.lang.Long.bitCount(mlo ^ lo)
-                if (ham <= maxHamming)
-                  out += HammingPair(math.min(mid, id), math.max(mid, id), ham)
-              }
-              current += ((id, hi, lo))
-              members.appendValue((id, hi, lo))
-            }
-          }
-        }
-        if (alive) out.result().iterator else Iterator.empty
-      }
-    }
-  }
-
   /** I13 — streaming media-fingerprint near-dup pairs: the unbounded
     * twin of [[graft.operators.Dedup.mineHammingPairs]] for the M2/M3
     * image/audio fingerprints, sharing [[graft.operators.Dedup
@@ -592,68 +315,54 @@ object StreamOps {
     * [[graft.operators.Multimodal.imageAHash]]/[[graft.operators
     * .Multimodal.audioAHash]] (stateless mapPartitions chains onto a
     * streaming Dataset). A pair surfaces the moment the second member
-    * of a pigeonhole bucket arrives; exact hamming is enforced at
-    * emission (a chunk bucket is lossy — the batch miner filters after
+    * of a pigeonhole bucket arrives; exact hamming is the pair rule
+    * (a chunk bucket is lossy — the batch miner filters after
     * expansion, a stream must filter before it emits). With `ttl` set,
     * membership expires after the horizon, so state stays bounded on
     * an unbounded ingest. Pairs may repeat across chunks/batches —
     * consumers `dropDuplicates(id_a, id_b)` (the J8 contract). */
   def fingerprintPairStream(
       fp: DataFrame, maxHamming: Int = 3, maxBucket: Int = 1000,
-      ttl: Option[java.time.Duration] = None): Dataset[HammingPair] = {
+      ttl: Option[Duration] = None): Dataset[HammingPair] = {
     import fp.sparkSession.implicits._
-    graft.operators.Dedup.hammingChunks(fp)
-      .select(col("chunk"), col("ckey"), col("doc_id"), col("hi"), col("lo"))
-      .as[(Int, Long, Long, Long, Long)]
-      .groupByKey(r => (r._1, r._2))
-      .transformWithState(
-        new HammingBucketProcessor(maxHamming, maxBucket, ttl),
-        // a non-None TTLConfig is only legal under ProcessingTime —
-        // Spark's validateTTLConfig throws at query start otherwise
-        if (ttl.isDefined) org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-        else org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+    appendWithState(
+      graft.operators.Dedup.hammingChunks(fp)
+        .select(col("chunk"), col("ckey"), col("doc_id"), col("hi"), col("lo"))
+        .as[(Int, Long, Long, Long, Long)]
+        .groupByKey(r => (r._1, r._2)),
+      new BucketPairProcessor[(Int, Long, Long, Long, Long), (Long, Long, Long), HammingPair](
+        maxBucket, ttl,
+        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong),
+        r => (r._3, r._4, r._5), _._1,
+        { case (_, (a, ahi, alo), (b, bhi, blo)) =>
+          val ham = java.lang.Long.bitCount(ahi ^ bhi) + java.lang.Long.bitCount(alo ^ blo)
+          if (ham <= maxHamming) Some(HammingPair(math.min(a, b), math.max(a, b), ham))
+          else None
+        }),
+      ttl)
   }
 
-  def incrementalDedupStream(
-      shards: DataFrame, idCol: String, textCol: String, indexPath: String,
-      onFlagged: (DataFrame, Long) => Unit,
-      shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      maxBucket: Int = 1000, minJaccard: Double = 0.5)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val probe = (batch: DataFrame, batchId: Long) =>
-      onFlagged(
-        graft.operators.Dedup.dedupShardAgainstIndex(
-          batch, idCol, textCol, indexPath, shingleN, numHashes, bands,
-          maxBucket, minJaccard),
-        batchId)
-    shards.writeStream.foreachBatch(probe).start()
-  }
-
-  /** J14b twin — the FULL rolling-ingest loop online: each micro-batch
-    * probes the persisted index, hands its flagged rows to
-    * `onFlagged`, and APPENDS its novel (unflagged) docs to the index
-    * via [[graft.operators.Dedup.minhashIndexAppend]], so the NEXT
-    * micro-batch dedups against them too — the batch
-    * probe→keep-novel→append loop (the q_dedup_rolling gate) verbatim,
+  /** J14b twin — the rolling-ingest loop online: each micro-batch is
+    * one shard, probed against the PERSISTED minhash index by the
+    * batch operator itself
+    * ([[graft.operators.Dedup.dedupShardAgainstIndex]]) through
+    * `foreachBatch`, so stream/batch parity holds by construction and
+    * the index artifact is the only state. The batch's flagged rows
+    * `(doc_id, match_id, jaccard)` go to `onFlagged` with its batch id;
+    * then its novel docs are APPENDED to the index
+    * ([[graft.operators.Dedup.minhashIndexAppend]]) so the next
+    * micro-batch dedups against them too — the q_dedup_rolling loop,
     * one iteration per micro-batch. The flagged frame is checkpointed
-    * (∝ batch) before the append so the probe never re-runs against
-    * the already-mutated artifact; parity with per-shard batch rounds
-    * is spec-asserted, including a cross-batch match against a
-    * batch-1 novel doc. Delivery contract (standard foreachBatch): a
-    * retried micro-batch may re-invoke `onFlagged` (use `batchId` for
-    * an idempotent sink) and may re-append its novel docs —
-    * duplicates only OVER-drop (inflated occupancy is conservative,
-    * never a wrong match) and [[graft.operators.Dedup
-    * .minhashIndexCompact]], the periodic maintenance job as segments
-    * accumulate, collapses them back to the cleanly built index
-    * (spec-asserted). */
+    * before the append so the probe never re-runs against the mutated
+    * index. A retried micro-batch may re-invoke `onFlagged` (use
+    * `batchId` for an idempotent sink) and re-append its novel docs;
+    * duplicates only over-drop, and
+    * [[graft.operators.Dedup.minhashIndexCompact]] folds them away. */
   def rollingIngestStream(
       shards: DataFrame, idCol: String, textCol: String, indexPath: String,
       onFlagged: (DataFrame, Long) => Unit,
       shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      maxBucket: Int = 1000, minJaccard: Double = 0.5)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      maxBucket: Int = 1000, minJaccard: Double = 0.5): StreamingQuery = {
     val step = (batch: DataFrame, batchId: Long) => {
       val flagged = graft.operators.Dedup.dedupShardAgainstIndex(
           batch, idCol, textCol, indexPath, shingleN, numHashes, bands,
@@ -683,26 +392,18 @@ object StreamOps {
     * online-dedup approximation, with the batch pass as completeness
     * backstop (the J8 contract). With `ttl` set, first-seen state
     * expires after the horizon, bounding state on unbounded ingest. */
-  class SpanFirstSeenProcessor(ttl: Option[java.time.Duration])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long, Int), SpanDecision] {
-    @transient private var seen:
-      org.apache.spark.sql.streaming.ValueState[(Long, Int)] = _
+  class SpanFirstSeenProcessor(ttl: Option[Duration])
+      extends StatefulProcessor[Long, (Long, Long, Int), SpanDecision] {
+    @transient private var seen: ValueState[(Long, Int)] = _
 
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       seen = getHandle.getValueState[(Long, Int)](
-        "first",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaInt),
-        ttl.map(d => new org.apache.spark.sql.streaming.TTLConfig(d))
-          .getOrElse(org.apache.spark.sql.streaming.TTLConfig.NONE))
+        "first", Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt),
+        ttlConfig(ttl))
 
     override def handleInputRows(
         key: Long, rows: Iterator[(Long, Long, Int)],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[SpanDecision] = {
+        timers: TimerValues): Iterator[SpanDecision] = {
       val occ = rows.map { case (_, d, p) => (d, p) }.toArray.sorted
       val out = Seq.newBuilder[SpanDecision]
       if (seen.exists()) {
@@ -734,23 +435,21 @@ object StreamOps {
     * windows arrive together, so the rebuild never splits a doc). */
   def spanScrubStream(
       df: DataFrame, idCol: String, textCol: String, spanLen: Int,
-      ttl: Option[java.time.Duration] = None): Dataset[SpanDecision] = {
+      ttl: Option[Duration] = None): Dataset[SpanDecision] = {
     import df.sparkSession.implicits._
     require(spanLen >= 1, "spanScrubStream: spanLen must be >= 1")
     val toks = split(col(textCol), " ")
-    df.where(size(toks) >= spanLen)
-      .select(
-        col(idCol).cast("long").as("doc_id"),
-        posexplode(graft.functions.HashFunctions.string_ngrams(toks, spanLen)))
-      .toDF("doc_id", "pos", "span")
-      .select(xxhash64(col("span")).as("h"), col("doc_id"), col("pos").cast("int"))
-      .as[(Long, Long, Int)]
-      .groupByKey(_._1)
-      .transformWithState(
-        new SpanFirstSeenProcessor(ttl),
-        if (ttl.isDefined) org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-        else org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+    appendWithState(
+      df.where(size(toks) >= spanLen)
+        .select(
+          col(idCol).cast("long").as("doc_id"),
+          posexplode(graft.functions.HashFunctions.string_ngrams(toks, spanLen)))
+        .toDF("doc_id", "pos", "span")
+        .select(xxhash64(col("span")).as("h"), col("doc_id"), col("pos").cast("int"))
+        .as[(Long, Long, Int)]
+        .groupByKey(_._1),
+      new SpanFirstSeenProcessor(ttl),
+      ttl)
   }
 
   /** Apply a micro-batch's [[SpanDecision]]s to its documents: expand
@@ -770,8 +469,7 @@ object StreamOps {
     graft.operators.Dedup.spanCoverRebuild(base, cover)
   }
 
-  case class SessionState(
-      start: Long, last: Long, n: Long, sum: Double)
+  case class SessionState(start: Long, last: Long, n: Long, sum: Double)
   case class Session(
       user_id: Long, session_start: java.sql.Timestamp,
       session_end: java.sql.Timestamp, n_events: Long, value_sum: Double)
@@ -791,7 +489,7 @@ object StreamOps {
     ds.withWatermark("ts", watermarkDelay)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, Session](
-        org.apache.spark.sql.streaming.OutputMode.Append,
+        OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout) {
         (user: Long, events: Iterator[UserEvent], state: GroupState[SessionState]) =>
           def toSession(s: SessionState) = Session(

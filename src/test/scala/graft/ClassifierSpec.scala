@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.Classifier
-import graft.streaming.StreamOps
 
 /** Q18 learned quality classifier vs a plain-Scala reference of the
   * SAME integer training loop (md5 buckets, hard sigmoid, floorDiv
@@ -93,7 +92,7 @@ class ClassifierSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getBoolean(3))).toSet
     val input = MemoryStream[(Long, String)](spark)
-    val scored = StreamOps.qualityClassifierStream(
+    val scored = Classifier.score(
       input.toDF.toDF("doc_id", "text"), "doc_id", "text", w, B)
     val q = scored.writeStream.format("memory").queryName("clf_out")
       .outputMode("append").start()
@@ -195,8 +194,9 @@ class ClassifierSpec extends SparkSpec {
       buckets = 1024, epochs = 8)
       .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3))).toSet
     val input = MemoryStream[(Long, String)](spark)
-    val scored = StreamOps.langIdStream(
-      input.toDF.toDF("doc_id", "text"), "doc_id", "text", langs, ws, 1024)
+    val best = Classifier.langIdServe(col("text"), langs, ws, 1024)
+    val scored = input.toDF.toDF("doc_id", "text").select(col("doc_id"),
+      best.getField("lang_pred").as("lang_pred"), best.getField("margin").as("margin"))
     assert(scored.isStreaming)
     val q = scored.writeStream.format("memory").queryName("lang_out")
       .outputMode("append").start()
@@ -211,7 +211,7 @@ class ClassifierSpec extends SparkSpec {
 
   test("weight-vector shape is validated loudly") {
     val ex = intercept[IllegalArgumentException] {
-      StreamOps.qualityClassifierStream(
+      Classifier.score(
         df.select("doc_id", "text"), "doc_id", "text", Array(0L, 1L), B)
     }
     assert(ex.getMessage.contains("weights"))

@@ -112,9 +112,11 @@ class IncrementalDedupSpec extends SparkSpec {
         .collect()
     ).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(expected.map(_._1) == Set(1L, 2L, 4L))
+    // shard 1 is all duplicates, so the rolling append adds nothing
+    // shard 2 could match: each micro-batch is exactly one batch probe
     val got = scala.collection.mutable.Set[(Long, Long, Double)]()
     val input = MemoryStream[(Long, String)](spark)
-    val q = graft.streaming.StreamOps.incrementalDedupStream(
+    val q = graft.streaming.StreamOps.rollingIngestStream(
       input.toDF.toDF("doc_id", "text"), "doc_id", "text", idx,
       (flagged, _) => got.synchronized {
         got ++= flagged.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -136,7 +138,7 @@ class IncrementalDedupSpec extends SparkSpec {
     graft.operators.Dedup.minhashIndexWrite(corpus, "doc_id", "text", idx)
     val got = scala.collection.mutable.Set[(Long, Long, Long)]() // (batch, doc, match)
     val input = MemoryStream[(Long, String)](spark)
-    val q = graft.streaming.StreamOps.incrementalDedupStream(
+    val q = graft.streaming.StreamOps.rollingIngestStream(
       input.toDF.toDF("doc_id", "text"), "doc_id", "text", idx,
       (flagged, batchId) => got.synchronized {
         got ++= flagged.collect().map(r => (batchId, r.getLong(0), r.getLong(1)))

@@ -14,6 +14,14 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** Runs `body` with the session conf `k` set to `v`, then restores
+    * the previous value (or unsets it). */
+  protected def withConf[T](k: String, v: String)(body: => T): T = {
+    val old = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
   /** Spark jobs started while `body` runs. The listener bus delivers
     * job starts in submission order, so the jobs between two marker
     * jobs are exactly the ones `body` submitted. */

@@ -11,6 +11,9 @@ class StreamDedupSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
+  private val stateStore = "spark.sql.streaming.stateStore.providerClass"
+  private val rocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   test("dropDuplicatesWithinWatermark collapses re-delivered keys") {
     val input = MemoryStream[(String, Timestamp, Double)](spark)
@@ -57,188 +60,132 @@ class StreamDedupSpec extends SparkSpec {
   }
 
   test("streaming minhash-bucket dedup matches batch candidates across micro-batches") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text").as[(Long, String)].collect()
     val batchPairs = graft.operators.Dedup
       .minhashCandidates(Tables.documents(spark, "/root/testdata/sf0.001"), "doc_id", "text")
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(batchPairs.nonEmpty)
-    val input = MemoryStream[(Long, String)](spark)
-    val q = StreamOps.minhashCandidateStream(
-        input.toDF.toDF("doc_id", "text"), "doc_id", "text")
-      .writeStream.format("memory").queryName("mh_out")
-      .outputMode("append").start()
-    try {
-      val (first, second) = docs.splitAt(docs.length / 2)
-      input.addData(first.toSeq)
-      q.processAllAvailable()
-      input.addData(second.toSeq) // cross-batch pairs need surviving state
-      q.processAllAvailable()
-      val streamPairs = spark.table("mh_out")
-        .select("id_a", "id_b").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(streamPairs == batchPairs)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(stateStore, rocksDb) {
+      val input = MemoryStream[(Long, String)](spark)
+      val q = StreamOps.minhashCandidateStream(
+          input.toDF.toDF("doc_id", "text"), "doc_id", "text")
+        .writeStream.format("memory").queryName("mh_out")
+        .outputMode("append").start()
+      try {
+        val (first, second) = docs.splitAt(docs.length / 2)
+        input.addData(first.toSeq)
+        q.processAllAvailable()
+        input.addData(second.toSeq) // cross-batch pairs need surviving state
+        q.processAllAvailable()
+        val streamPairs = spark.table("mh_out")
+          .select("id_a", "id_b").distinct()
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(streamPairs == batchPairs)
+      } finally q.stop()
     }
   }
 
   test("streaming fingerprint dedup matches the batch hamming miner across batches") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // synthetic audio fingerprints: triples (base, exact copy, near
-    // variant) per id — the M3 planted structure, fingerprints
-    // computed through the REAL WAV codec path
-    val media = (0L until 40L).flatMap { id =>
-      val base = Array.tabulate(64) { j =>
-        val t = (id * 2654435761L + j * 40503L) % 16777216L
-        (t * t / 4096 % 4096 - 2048).toShort
+    withConf(stateStore, rocksDb) {
+      // synthetic audio fingerprints: triples (base, exact copy, near
+      // variant) per id — the M3 planted structure, fingerprints
+      // computed through the REAL WAV codec path
+      val media = (0L until 40L).flatMap { id =>
+        val base = Array.tabulate(64) { j =>
+          val t = (id * 2654435761L + j * 40503L) % 16777216L
+          (t * t / 4096 % 4096 - 2048).toShort
+        }
+        val tweaked = base.clone()
+        tweaked(0) = (tweaked(0) + (if (tweaked(0) > 1791) -256 else 256)).toShort
+        val meta = graft.operators.Multimodal.MediaMeta("audio", 0, 0, 8L)
+        Seq(
+          graft.operators.Multimodal.MediaRecord(id * 4, meta,
+            graft.operators.Multimodal.Encode.wavPcm16(base, 8000)),
+          graft.operators.Multimodal.MediaRecord(id * 4 + 1, meta,
+            graft.operators.Multimodal.Encode.wavPcm16(base, 8000)),
+          graft.operators.Multimodal.MediaRecord(id * 4 + 2, meta,
+            graft.operators.Multimodal.Encode.wavPcm16(tweaked, 8000)))
       }
-      val tweaked = base.clone()
-      tweaked(0) = (tweaked(0) + (if (tweaked(0) > 1791) -256 else 256)).toShort
-      val meta = graft.operators.Multimodal.MediaMeta("audio", 0, 0, 8L)
-      Seq(
-        graft.operators.Multimodal.MediaRecord(id * 4, meta,
-          graft.operators.Multimodal.Encode.wavPcm16(base, 8000)),
-        graft.operators.Multimodal.MediaRecord(id * 4 + 1, meta,
-          graft.operators.Multimodal.Encode.wavPcm16(base, 8000)),
-        graft.operators.Multimodal.MediaRecord(id * 4 + 2, meta,
-          graft.operators.Multimodal.Encode.wavPcm16(tweaked, 8000)))
-    }
-    val fpBatch = graft.operators.Multimodal.audioAHash(media.toDS())
-    val batchPairs = graft.operators.Dedup
-      .mineHammingPairs(fpBatch, maxHamming = 3, maxBucket = 1000)
-      .select("id_a", "id_b", "hamming")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(batchPairs.nonEmpty)
-    val input = MemoryStream[(Long, Long, Long)](spark)
-    val q = StreamOps.fingerprintPairStream(
-        input.toDF.toDF("doc_id", "hi", "lo"))
-      .writeStream.format("memory").queryName("fp_out")
-      .outputMode("append").start()
-    try {
-      val fps = fpBatch.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val (first, second) = fps.splitAt(fps.length / 2)
-      input.addData(first.toSeq)
-      q.processAllAvailable()
-      input.addData(second.toSeq) // cross-batch pairs need surviving state
-      q.processAllAvailable()
-      val streamPairs = spark.table("fp_out")
-        .select("id_a", "id_b", "hamming").distinct()
+      val fpBatch = graft.operators.Multimodal.audioAHash(media.toDS())
+      val batchPairs = graft.operators.Dedup
+        .mineHammingPairs(fpBatch, maxHamming = 3, maxBucket = 1000)
+        .select("id_a", "id_b", "hamming")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(streamPairs == batchPairs)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+      assert(batchPairs.nonEmpty)
+      val input = MemoryStream[(Long, Long, Long)](spark)
+      val q = StreamOps.fingerprintPairStream(
+          input.toDF.toDF("doc_id", "hi", "lo"))
+        .writeStream.format("memory").queryName("fp_out")
+        .outputMode("append").start()
+      try {
+        val fps = fpBatch.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        val (first, second) = fps.splitAt(fps.length / 2)
+        input.addData(first.toSeq)
+        q.processAllAvailable()
+        input.addData(second.toSeq) // cross-batch pairs need surviving state
+        q.processAllAvailable()
+        val streamPairs = spark.table("fp_out")
+          .select("id_a", "id_b", "hamming").distinct()
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+        assert(streamPairs == batchPairs)
+      } finally q.stop()
     }
   }
 
   test("streaming span scrub matches batch J12 on a one-batch replay") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val docsDf = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
-    val spanLen = 8
-    val batchOut = graft.operators.Dedup
-      .spanScrub(docsDf, "doc_id", "text", spanLen)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(batchOut.values.exists(_.nonEmpty))
-    val input = MemoryStream[(Long, String)](spark)
-    val q = StreamOps.spanScrubStream(
-        input.toDF.toDF("doc_id", "text"), "doc_id", "text", spanLen)
-      .writeStream.format("memory").queryName("span_out")
-      .outputMode("append").start()
-    try {
-      // ONE micro-batch = the whole corpus: within a batch the
-      // processor replays the batch operator's (doc,pos)-min
-      // first-occurrence and minDocs>=2 semantics exactly
-      input.addData(docsDf.as[(Long, String)].collect().toSeq)
-      q.processAllAvailable()
-      val rebuilt = StreamOps.applySpanDecisions(
-          docsDf, "doc_id", "text", spark.table("span_out"), spanLen)
+    withConf(stateStore, rocksDb) {
+      val spanLen = 8
+      val batchOut = graft.operators.Dedup
+        .spanScrub(docsDf, "doc_id", "text", spanLen)
         .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      // docs shorter than spanLen emit no decisions and rebuild
-      // verbatim; compare the full maps
-      assert(rebuilt.keySet == batchOut.keySet)
-      val diff = rebuilt.keySet.filter(k => rebuilt(k) != batchOut(k))
-      assert(diff.isEmpty, s"streamed scrub diverges on docs $diff")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+      assert(batchOut.values.exists(_.nonEmpty))
+      val input = MemoryStream[(Long, String)](spark)
+      val q = StreamOps.spanScrubStream(
+          input.toDF.toDF("doc_id", "text"), "doc_id", "text", spanLen)
+        .writeStream.format("memory").queryName("span_out")
+        .outputMode("append").start()
+      try {
+        // ONE micro-batch = the whole corpus: within a batch the
+        // processor replays the batch operator's (doc,pos)-min
+        // first-occurrence and minDocs>=2 semantics exactly
+        input.addData(docsDf.as[(Long, String)].collect().toSeq)
+        q.processAllAvailable()
+        val rebuilt = StreamOps.applySpanDecisions(
+            docsDf, "doc_id", "text", spark.table("span_out"), spanLen)
+          .collect().map(r => (r.getLong(0), r.getString(1))).toMap
+        // docs shorter than spanLen emit no decisions and rebuild
+        // verbatim; compare the full maps
+        assert(rebuilt.keySet == batchOut.keySet)
+        val diff = rebuilt.keySet.filter(k => rebuilt(k) != batchOut(k))
+        assert(diff.isEmpty, s"streamed scrub diverges on docs $diff")
+      } finally q.stop()
     }
   }
 
   test("streaming span scrub state survives micro-batches (later dup scrubs)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[(Long, String)](spark)
-    val q = StreamOps.spanScrubStream(
-        input.toDF.toDF("doc_id", "text"), "doc_id", "text", spanLen = 5)
-      .writeStream.format("memory").queryName("span_out2")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        (1L, "a b c d e x y z"),
-        (2L, "p q r s a b c d e"))
-      q.processAllAvailable()
-      input.addData((3L, "a b c d e m n o p")) // dup of a batch-1 span
-      q.processAllAvailable()
-      val dec = spark.table("span_out2")
-        .collect().map(r => ((r.getLong(0), r.getInt(1)), r.getBoolean(2))).toMap
-      assert(dec((1L, 0)) === true)   // corpus-wide first occurrence kept
-      assert(dec((2L, 4)) === false)  // same-batch dup scrubbed
-      assert(dec((3L, 0)) === false)  // CROSS-batch dup scrubbed (state survived)
-      assert(dec((3L, 1)) === true)   // unseen span kept
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("transformWithState keeps running per-user aggregates (RocksDB store)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[StreamOps.UserEvent](spark)
-    val q = StreamOps.runningUserAggTws(input.toDS())
-      .writeStream.format("memory").queryName("tws_out")
-      .outputMode("update").start()
-    try {
-      input.addData(
-        StreamOps.UserEvent(1L, ts("2024-01-01 10:00:00"), 2.0),
-        StreamOps.UserEvent(1L, ts("2024-01-01 10:01:00"), 3.0))
-      q.processAllAvailable()
-      input.addData(StreamOps.UserEvent(1L, ts("2024-01-01 10:02:00"), 5.0))
-      q.processAllAvailable()
-      val last = spark.table("tws_out").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .maxBy(_._2)
-      assert(last == ((1L, 3L, 10.0))) // state survived across micro-batches
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withConf(stateStore, rocksDb) {
+      val input = MemoryStream[(Long, String)](spark)
+      val q = StreamOps.spanScrubStream(
+          input.toDF.toDF("doc_id", "text"), "doc_id", "text", spanLen = 5)
+        .writeStream.format("memory").queryName("span_out2")
+        .outputMode("append").start()
+      try {
+        input.addData(
+          (1L, "a b c d e x y z"),
+          (2L, "p q r s a b c d e"))
+        q.processAllAvailable()
+        input.addData((3L, "a b c d e m n o p")) // dup of a batch-1 span
+        q.processAllAvailable()
+        val dec = spark.table("span_out2")
+          .collect().map(r => ((r.getLong(0), r.getInt(1)), r.getBoolean(2))).toMap
+        assert(dec((1L, 0)) === true)   // corpus-wide first occurrence kept
+        assert(dec((2L, 4)) === false)  // same-batch dup scrubbed
+        assert(dec((3L, 0)) === false)  // CROSS-batch dup scrubbed (state survived)
+        assert(dec((3L, 1)) === true)   // unseen span kept
+      } finally q.stop()
     }
   }
 
@@ -281,18 +228,8 @@ class StreamDedupSpec extends SparkSpec {
     }
   }
 
-  private def withRocksDb[T](body: => T): T = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("fingerprint stream with a TTL starts and emits (ProcessingTime mode)") {
-    withRocksDb {
+    withConf(stateStore, rocksDb) {
       // regression: a TTLConfig under TimeMode.None throws at query
       // start — ttl=Some must select ProcessingTime. In that mode
       // Spark keeps scheduling micro-batches to service TTL state
@@ -324,7 +261,7 @@ class StreamDedupSpec extends SparkSpec {
   }
 
   test("over-cap fingerprint bucket tombstones: batch parity in-batch, quiet after") {
-    withRocksDb {
+    withConf(stateStore, rocksDb) {
       val mk = (id: Long) => (id, 7L, 7L) // identical fingerprints → one bucket set
       // same-batch over-cap: the whole bucket arrives at once → the
       // batch miner's DROP exactly (zero pairs)
@@ -366,7 +303,7 @@ class StreamDedupSpec extends SparkSpec {
   }
 
   test("over-cap minhash bucket tombstones identically") {
-    withRocksDb {
+    withConf(stateStore, rocksDb) {
       // one shared text → every doc lands in the same 16 buckets
       val mk = (id: Long) => (id, "the same shared text body for every doc")
       val input = MemoryStream[(Long, String)](spark)

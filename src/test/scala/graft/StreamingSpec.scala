@@ -1,23 +1,32 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, size, split}
 import graft.streaming.StreamOps
 import graft.streaming.StreamOps.UserEvent
 
-/** SURVEY.md §2 I3 — Structured Streaming variants driven through
-  * MemoryStream: the same transforms a production caller would attach
-  * to `readStream` (kafka/files), exercised incrementally.
+/** SURVEY.md §2 I3 — Structured Streaming driven through MemoryStream:
+  * the same transforms a production caller would attach to
+  * `readStream` (kafka/files), exercised incrementally. Each stateless
+  * parity test runs the batch operator itself on the stream and
+  * compares with the batch operator on a static frame.
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** Watermarked hourly event counts with an exact decimal value sum. */
+  private def eventCounts(df: DataFrame): DataFrame =
+    graft.operators.Events.tumblingWindowAggregate(
+      df.withWatermark("ts", "10 minutes"), "ts", "event_type", "1 hour",
+      Seq(graft.operators.Num.dsum(col("value")).as("value_sum")))
+
   test("windowed aggregate over a stream accumulates per hour window") {
     val input = MemoryStream[(Timestamp, String, Double)](spark)
-    val agg = StreamOps.eventCounts(
-      input.toDF.toDF("ts", "event_type", "value"))
+    val agg = eventCounts(input.toDF.toDF("ts", "event_type", "value"))
     val q = agg.writeStream.format("memory").queryName("win_counts")
       .outputMode("update").start()
     try {
@@ -37,7 +46,7 @@ class StreamingSpec extends SparkSpec {
 
   test("watermark drops events later than the threshold") {
     val input = MemoryStream[(Timestamp, String, Double)](spark)
-    val agg = StreamOps.eventCounts(input.toDF.toDF("ts", "event_type", "value"))
+    val agg = eventCounts(input.toDF.toDF("ts", "event_type", "value"))
     val q = agg.writeStream.format("memory").queryName("win_wm")
       .outputMode("update").start()
     try {
@@ -114,7 +123,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming cluster tagging matches the batch k-means assignment row-for-row") {
     // codebook fit OFFLINE on the batch corpus; the stream then tags
-    // each embedding with the same codegen'd assignment expression
+    // each embedding with the codegen'd assignment expression the
+    // batch clustering operators use
     val corpus = (0 until 40).map { i =>
       val c = if (i % 2 == 0) 1.0f else -1.0f
       (i.toLong, Array(c + (i % 5) * 0.01f, -c))
@@ -123,8 +133,9 @@ class StreamingSpec extends SparkSpec {
     val cb = graft.operators.Clustering.kmeansCodebook(
       batchDf, "vec_id", "embedding", stride = 3, iters = 1)
     val input = MemoryStream[(Long, Array[Float])](spark)
-    val tagged = StreamOps.clusterTagStream(
-      input.toDF.toDF("vec_id", "embedding"), "embedding", cb)
+    val tagged = input.toDF.toDF("vec_id", "embedding")
+      .withColumn("cell", graft.functions.GraftFunctions.quant_nearest_cell(
+        col("embedding"), cb, graft.operators.Clustering.DefaultScale))
     val q = tagged.writeStream.format("memory").queryName("cluster_tags")
       .outputMode("append").start()
     try {
@@ -134,7 +145,10 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("cluster_tags").select("vec_id", "cell")
         .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-      val batch = StreamOps.clusterTagStream(batchDf, "embedding", cb)
+      // the batch operator fits its own codebook and assigns every row
+      // (frac = 1 keeps each cell whole)
+      val batch = graft.operators.Clustering.clusterSample(
+          batchDf, "vec_id", "embedding", stride = 3, iters = 1, frac = 1.0)
         .select("vec_id", "cell")
         .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
       assert(got == batch)
@@ -162,9 +176,9 @@ class StreamingSpec extends SparkSpec {
       (4L, 33.2, 3.3),  // twoParts part 2
       (5L, 50.0, 50.0)) // nowhere
     val input = MemoryStream[(Long, Double, Double)](spark)
-    val tagged = StreamOps.geoTagStream(
+    val tagged = graft.operators.Geo.tagPointsInRingSet(
       input.toDF.toDF("pt_id", "lon", "lat"), rings,
-      "lon", "lat", "feature_key", "xs", "ys")
+      "lon", "lat", "feature_key", "xs", "ys", cellDeg = 5.0)
     val q = tagged.writeStream.format("memory").queryName("geo_tags")
       .outputMode("append").start()
     try {
@@ -191,7 +205,7 @@ class StreamingSpec extends SparkSpec {
       (3L, Array.fill(50)("same").mkString(" ")),               // dominated
       (4L, ((1 to 30).map(i => s"u$i") ++ Seq("x", "x")).mkString(" ")))
     val input = MemoryStream[(Long, String)](spark)
-    val filtered = StreamOps.qualityFilterStream(
+    val filtered = graft.operators.Curation.qualityFilterUnordered(
       input.toDF.toDF("doc_id", "text"), "doc_id", "text",
       minWords = 20, minDistinctFrac = 0.3, maxTopShare = 0.2)
     val q = filtered.writeStream.format("memory").queryName("qfilter_out")
@@ -221,7 +235,7 @@ class StreamingSpec extends SparkSpec {
       (2L, "<p>first block of words here</p><script>var x = \"</p>\";</script>" +
         "<p>Tom &amp; Jerry say 1 &lt; 2 today</p>"))
     val input = MemoryStream[(Long, String)](spark)
-    val extracted = StreamOps.htmlExtractStream(
+    val extracted = graft.operators.Html.htmlExtract(
       input.toDF.toDF("doc_id", "html"), "doc_id", "html")
     val q = extracted.writeStream.format("memory").queryName("html_out")
       .outputMode("append").start()
@@ -285,9 +299,12 @@ class StreamingSpec extends SparkSpec {
       (1L, "mail a@b.com from 10.0.0.1 says hi"),
       (2L, "clean text only"),
       (3L, "double c@d.org e@f.net"))
+    // the caller projects its word count next to the scrub
+    def withWords(df: DataFrame) =
+      df.withColumn("n_words", size(split(col("scrubbed"), " ")))
     val input = MemoryStream[(Long, String)](spark)
-    val scrubbed = StreamOps.curationScrubStream(
-      input.toDF.toDF("doc_id", "text"), "doc_id", "text", pats)
+    val scrubbed = withWords(graft.operators.Curation.piiScrubUnordered(
+      input.toDF.toDF("doc_id", "text"), "doc_id", "text", pats))
     val q = scrubbed.writeStream.format("memory").queryName("scrub_out")
       .outputMode("append").start()
     try {
@@ -299,8 +316,8 @@ class StreamingSpec extends SparkSpec {
         .select("doc_id", "n_emails", "n_ips", "scrubbed", "n_words")
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
           r.getString(3), r.getInt(4))).toSet
-      val batch = StreamOps.curationScrubStream(
-        docs.toDF("doc_id", "text"), "doc_id", "text", pats)
+      val batch = withWords(graft.operators.Curation.piiScrub(
+          docs.toDF("doc_id", "text"), "doc_id", "text", pats))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
           r.getString(3), r.getInt(4))).toSet
       assert(got == batch)
@@ -323,8 +340,9 @@ class StreamingSpec extends SparkSpec {
         if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](spark)
-    val q = StreamOps.urlFilterStream(
+    val q = StreamOps.urlFlagStream(
         input.toDF.toDF("id", "url"), "id", "url", rules)
+      .select("id", "canon", "blocked", "rule_id")
       .writeStream.format("memory").queryName("uf_out")
       .outputMode("append").start()
     try {
@@ -368,8 +386,9 @@ class StreamingSpec extends SparkSpec {
         if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](spark)
-    val q = StreamOps.urlFilterStream(
+    val q = StreamOps.urlFlagStream(
         input.toDF.toDF("id", "url"), "id", "url", rules)
+      .select("id", "canon", "blocked", "rule_id")
       .writeStream.format("memory").queryName("uf_allow_out")
       .outputMode("append").start()
     try {
@@ -394,7 +413,7 @@ class StreamingSpec extends SparkSpec {
     val rules = (0L until 50L).map(i => (i, s"h$i.com", Option.empty[String]))
       .toDF("rule_id", "host_suffix", "path_prefix")
     val e = intercept[IllegalArgumentException] {
-      StreamOps.urlFilterStream(
+      StreamOps.urlFlagStream(
         Seq((1L, "https://a.com/")).toDF("id", "url"), "id", "url",
         rules, maxRules = 10)
     }

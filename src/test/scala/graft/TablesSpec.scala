@@ -19,12 +19,6 @@ class TablesSpec extends SparkSpec {
   private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
   private val binaryAsString = "spark.sql.parquet.binaryAsString"
 
-  private def withConf[T](k: String, v: String)(body: => T): T = {
-    val old = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-  }
-
   /** Writes `file` as one parquet file with the given message type and
     * no Spark schema in its footer, so inference goes through the
     * parquet-to-Spark converter and its confs. */

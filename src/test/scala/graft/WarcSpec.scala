@@ -274,7 +274,7 @@ class WarcSpec extends SparkSpec {
     land("crawl-0.warc.gz", pages.take(2))
     val stream = Warc.responseStream(spark, dir.getAbsolutePath + "/*.warc.gz")
     assert(stream.isStreaming)
-    val q = graft.streaming.StreamOps.htmlExtractStream(stream, "url", "html")
+    val q = graft.operators.Html.htmlExtract(stream, "url", "html")
       .writeStream.format("memory").queryName("warc_stream_out")
       .outputMode("append").start()
     try {
