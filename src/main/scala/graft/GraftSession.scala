@@ -2,16 +2,43 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with graft's recommended configuration: the graft
-  * SQL functions installed via `spark.sql.extensions`, UTC session
-  * time, and AQE left on (Spark 4 default) for runtime re-planning.
+/** Session factory, and the one place graft declares session config.
+  * No operator and no table reader writes session conf; each reads
+  * what this factory set, and a query plans the same whatever ran
+  * before it or beside it on the session. The settings:
+  *
+  *  - `spark.sql.extensions` = [[graft.functions.GraftExtensions]]:
+  *    the graft SQL functions and the interval-join strategy.
+  *  - `spark.sql.session.timeZone` = `UTC`: timestamp casts, windows
+  *    and the oracle's output agree on one zone.
+  *  - `spark.sql.shuffle.partitions` = `shufflePartitions`, when
+  *    given; AQE is left on (Spark 4 default) and coalesces small
+  *    shuffles at run time.
+  *  - `spark.sql.adaptive.optimizer.excludedRules` =
+  *    `AQEPropagateEmptyRelation` (replacing any list passed in by
+  *    other means): that AQE rewrite replaces everything downstream of
+  *    an empty stage with an empty relation, which deletes the
+  *    `CollectMetricsExec` of a capped miner exactly when every bucket
+  *    was capped away, so [[graft.operators.CapMetrics]]' drop metric
+  *    never arrives. The cost is that an empty stage still runs its
+  *    empty downstream operators. `CapMetrics` WARNs once on a session
+  *    without the exclusion.
+  *  - `spark.sql.legacy.parquet.nanosAsLong` = `true`: `events.ts`
+  *    has shipped as TIMESTAMP(NANOS), which Spark's parquet reader
+  *    rejects otherwise; [[Tables.events]] reads the raw nanos as a
+  *    long and divides them down. TIMESTAMP(MICROS) files read the
+  *    same either way.
   *
   * `getOrCreate` semantics apply: if a session already exists in the
-  * JVM it is returned as-is — call
+  * JVM it is returned with these runtime settings applied — call
   * [[graft.functions.GraftFunctions.register]] on it to add the SQL
   * functions imperatively.
   */
 object GraftSession {
+  /** The AQE rewrite graft sessions exclude; see the class note. */
+  private[graft] val EmptyRelationRule =
+    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+
   def create(
       master: String = "local[*]",
       appName: String = "graft",
@@ -21,6 +48,8 @@ object GraftSession {
       .appName(appName)
       .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.optimizer.excludedRules", EmptyRelationRule)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     shufflePartitions.foreach(n => b.config("spark.sql.shuffle.partitions", n.toString))
     val spark = b.getOrCreate()
     // cover the pre-existing-session path too

@@ -22,10 +22,10 @@ import org.apache.spark.sql.types.StructType
   * qualified path, the file's modification time and length (one
   * `getFileStatus`), and every `SQLConf` value the parquet schema
   * converter reads — `spark.sql.legacy.parquet.nanosAsLong`, which
-  * [[events]] sets, changes `ts`'s inferred type. A rewritten file is
-  * therefore re-inferred, never served stale. Directories are read
-  * without the memo: their status does not change when a part file is
-  * rewritten in place. The memo holds one small `StructType` per
+  * [[GraftSession]] sets, changes `ts`'s inferred type. A rewritten
+  * file is therefore re-inferred, never served stale. Directories are
+  * read without the memo: their status does not change when a part
+  * file is rewritten in place. The memo holds one small `StructType` per
   * corpus file version, so it is left unbounded.
   *
   * Every call still builds a fresh relation (new exprIds, a fresh file
@@ -71,15 +71,16 @@ object Tables {
   def nation(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "region")
   /** `events.ts` has shipped in two parquet encodings across corpus
-    * generations: TIMESTAMP(NANOS) (rejected by Spark's vectorized
-    * reader — read as raw nanos via the legacy conf and divide down) and
-    * plain TIMESTAMP(MICROS)/NTZ (read directly; cast to session-local
-    * TimestampType so downstream window/session ops see one type).
-    * Dispatch on the loaded schema so either corpus works. */
+    * generations: TIMESTAMP(NANOS) (rejected by Spark's parquet reader
+    * unless the session sets `nanosAsLong`, as [[GraftSession]] does —
+    * read as raw nanos and divide down; on any other session the read
+    * fails with Spark's own error) and plain TIMESTAMP(MICROS)/NTZ
+    * (read directly; cast to session-local TimestampType so downstream
+    * window/session ops see one type). Dispatch on the loaded schema so
+    * either corpus works. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = apply(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType =>

@@ -118,9 +118,10 @@ object CharGramBuckets {
 }
 
 /** Hashed word-N-GRAM feature buckets, one per window in order (NO
-  * distinct) — the fused twin of `transform(string_ngrams(split(text,
-  * " "), n), g => hashedBucket(g, buckets))` (the DSIR gram stream,
-  * [[graft.operators.Importance.gramStream]]; spec-held parity).
+  * distinct) — the fused form of `transform(string_ngrams(split(text,
+  * " "), n), g => conv(substring(md5(g), 1, 8), 16, 10) % buckets)`
+  * (the DSIR gram stream, [[graft.operators.Importance.gramStream]]);
+  * HashExpressionsSpec keeps that chain as its bit-equality reference.
   * Tokens are the split pieces exactly (empties kept); each gram
   * hashes the window's tokens joined by single spaces, streamed into
   * the digest without building the gram string. Texts with fewer than

@@ -20,7 +20,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * describes), and a session-registered [[QueryExecutionListener]]
   * turns any non-zero count into one WARN line at query completion.
   * Catalyst does not push filters through a `CollectMetrics` node, so
-  * the metric always sees every over-cap bucket of its run.
+  * the metric always sees every over-cap bucket of its run. It needs
+  * a session that excludes AQE's empty-relation rewrite, which
+  * [[graft.GraftSession]] declares (its scaladoc says why).
   *
   * Observation names must be unique within a query plan (two miners
   * can compose in one query), so each call site instance gets a
@@ -54,27 +56,13 @@ object CapMetrics {
         .cast("long").as("dropped_pairs"))
   }
 
-  /** AQE's `AQEPropagateEmptyRelation` replaces everything downstream
-    * of an empty stage with an `EmptyRelation` — and the physical
-    * `CollectMetricsExec` vanishes from the finalized plan, so
-    * `observedMetrics` comes back EMPTY in exactly the case this
-    * module exists for (every candidate pair capped away ⇒ empty
-    * output ⇒ empty stage). Excluding that one rewrite keeps the
-    * metric node in the executed plan; the cost is that a genuinely
-    * empty stage still runs its (empty, milliseconds) downstream ops
-    * — noise against the shuffle the miner already paid. Appended to
-    * any exclusions the session already carries. */
-  private def ensureMetricsSurviveAqe(spark: SparkSession): Unit = {
-    val rule = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
-    val key = "spark.sql.adaptive.optimizer.excludedRules"
-    val cur = spark.conf.getOption(key).getOrElse("")
-    if (!cur.contains(rule))
-      spark.conf.set(key, if (cur.isEmpty) rule else s"$cur,$rule")
-  }
-
   private def ensureListener(spark: SparkSession): Unit =
     if (registered.add(spark)) {
-      ensureMetricsSurviveAqe(spark)
+      val excluded = spark.conf.getOption("spark.sql.adaptive.optimizer.excludedRules")
+      if (!excluded.exists(_.split(",").map(_.trim).contains(graft.GraftSession.EmptyRelationRule)))
+        log.warn("this session's AQE does not exclude AQEPropagateEmptyRelation, so a " +
+          "skew-cap metric can vanish when every bucket is capped; create the session " +
+          "with graft.GraftSession.create")
       spark.listenerManager.register(new QueryExecutionListener {
         override def onSuccess(
             funcName: String, qe: QueryExecution, durationNs: Long): Unit =

@@ -134,16 +134,8 @@ object Dedup {
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
-  /** Session-wide side effect (shared by every capped miner): the
-    * first call registers the [[CapMetrics]] listener and appends
-    * `AQEPropagateEmptyRelation` to the session's excluded AQE rules —
-    * otherwise the observed drop metric vanishes exactly when every
-    * candidate is capped away (empty stage → the metrics node is
-    * rewritten out). The exclusion persists for the session's
-    * lifetime: unrelated queries lose that one AQE rewrite (an empty
-    * stage still runs its empty, milliseconds-cheap downstream ops).
-    * Documented here — at the public entry — because a library call
-    * altering session planner config must be visible to the caller. */
+  /** Reports capped buckets through [[CapMetrics]]; the drop metric
+    * needs the AQE setting [[graft.GraftSession]] declares. */
   def minhashCandidates(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -655,9 +647,8 @@ object Dedup {
       .select(col("doc_id"), col("hi"), col("lo"),
         col("cb.chunk").as("chunk"), col("cb.ckey").as("ckey"))
 
-  /** Carries the same session-wide CapMetrics side effect as
-    * [[minhashCandidates]] (AQE empty-relation rule excluded for the
-    * session so cap-drop metrics survive) — see that entry's note. */
+  /** Reports capped buckets through [[CapMetrics]], as
+    * [[minhashCandidates]] does. */
   private[graft] def mineHammingPairs(
       simDf: DataFrame, maxHamming: Int, maxBucket: Int): DataFrame = {
     val chunked = hammingChunks(simDf)
@@ -1681,19 +1672,10 @@ object Dedup {
     * check — O(1) driver data); non-convergence within `maxIter`
     * fails loudly rather than returning wrong clusters.
     *
-    * Loop parallelism is sized from the OBSERVED edge count (one count
-    * over the persisted symmetric closure — the only full pass over
-    * the caller's edge pipeline): duplicate-pair edge sets are usually
-    * a tiny fraction of the corpus, and running a 1k-edge round with
-    * the session's full shuffle-partition count makes every stage pay
-    * per-task launch overhead for empty partitions. Partitions scale
-    * linearly with edges up to the session's configured ceiling —
-    * never above it — and AQE is switched off for the loop ONLY in the
-    * coalesce regime (partitions below the ceiling), where each round
-    * is a handful of trivially small stages and AQE's per-stage
-    * re-planning is pure latency; at-scale graphs keep the session's
-    * AQE (skew splits) and pay one up-front repartition on the join
-    * key so the big edge side is exchanged once, not once per round.
+    * The loop runs under the caller's session conf and changes none
+    * of it: the symmetric edge table is partitioned once on the join
+    * key and persisted, so the big edge side is exchanged once, not
+    * once per round, and AQE sizes each round's small shuffles.
     *
     * Small-graph fast path (the same shape as Spark's own
     * size-adaptive broadcast decision): a `limit(threshold+1)` probe
@@ -1768,28 +1750,13 @@ object Dedup {
     val symRaw = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-    val symBase = symRaw
+    // Partitioned on the join key and persisted: every round's join
+    // reuses the cached partitioning and shuffles only the label frame.
+    val sym = symRaw
       .union(symRaw.select(col("src")).distinct()
         .select(col("src"), col("src").as("dst")))
+      .repartition(col("dst"))
       .persist()
-    val symCount = symBase.count()
-    val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val parts =
-      math.min(confParts.toLong, symCount / 250000L + 1L).toInt
-    val coalesced = parts < confParts
-    // Big-graph path: pre-partition the persisted edge table on the
-    // join key so every round's join reuses the cached partitioning
-    // and only shuffles the ids-only label frame. Small-graph path:
-    // narrow coalesce (no shuffle) down to `parts`.
-    val sym =
-      if (coalesced) symBase.coalesce(math.max(parts, 1))
-      else symBase.repartition(col("dst")).persist()
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    if (coalesced) {
-      spark.conf.set("spark.sql.shuffle.partitions", math.max(parts, 1))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-    }
     try {
     // No separate label-initialization pass: labels materialize for
     // the first time as round 0's output (see below). Each round's
@@ -1864,8 +1831,6 @@ object Dedup {
       counted.localCheckpoint()
       counted.count()
       changed = acc.value
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $iter changed=$changed")
       labels = org.apache.spark.sql.graft.ColumnBridge
         .internalCreateDataFrame(spark, counted, schema)
         .select("node", "component")
@@ -1873,17 +1838,10 @@ object Dedup {
     }
     require(changed == 0L,
       s"connectedComponents did not converge in $maxIter rounds")
-    // The ordering shuffle runs at the CALLER's conf (restored below);
-    // labels itself is already materialized checkpoint blocks.
+    // labels is already materialized checkpoint blocks, so the edge
+    // table can be released before the caller runs the ordering.
     labels.orderBy("node")
-    } finally {
-      if (coalesced) {
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      }
-      sym.unpersist()
-      symBase.unpersist()
-    }
+    } finally sym.unpersist()
   }
 
   /** J5 — embedding-cosine near-duplicates over pairs blocked by

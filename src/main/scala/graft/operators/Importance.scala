@@ -41,10 +41,6 @@ import org.apache.spark.sql.functions._
   */
 object Importance {
 
-  /** md5-derived feature bucket — identical in any engine with md5. */
-  def hashedBucket(gram: Column, buckets: Int): Column =
-    (conv(substring(md5(gram), 1, 8), 16, 10).cast("long") % buckets).cast("int")
-
   /** (bucket, q) quantized-ratio table from a tagged gram stream
     * (`__tgt`, `bucket` columns) — the FIT artifact; ≤ `buckets` rows,
     * reusable offline (batch resample) and online (the streaming

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.HashFunctions
 import graft.operators.Dedup
@@ -10,6 +10,10 @@ class HashExpressionsSpec extends SparkSpec {
 
   // parquet-backed so plans run through codegen, not constant folding
   private def docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(50)
+
+  /** md5-derived feature bucket — identical in any engine with md5. */
+  def hashedBucket(gram: Column, buckets: Int): Column =
+    (conv(substring(md5(gram), 1, 8), 16, 10).cast("long") % buckets).cast("int")
 
   test("native minhash_sig is bit-equal to the HOF reference formulation") {
     val sh = Dedup.shingles(col("text"), 3)
@@ -225,7 +229,7 @@ class HashExpressionsSpec extends SparkSpec {
          (b, n) <- Seq((64, 2), (1024, 3))) {
       val ref = transform(
         graft.functions.HashFunctions.string_ngrams(split(col("text"), " "), n),
-        g => graft.operators.Importance.hashedBucket(g, b))
+        g => hashedBucket(g, b))
       val got = df.select(
         graft.functions.CharGramBuckets.ngram_buckets(col("text"), b, n).as("k"),
         ref.as("ref")).collect()
