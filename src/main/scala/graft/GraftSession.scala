@@ -8,7 +8,17 @@ import org.apache.spark.sql.SparkSession
   * before it or beside it on the session. The settings:
   *
   *  - `spark.sql.extensions` = [[graft.functions.GraftExtensions]]:
-  *    the graft SQL functions and the interval-join strategy.
+  *    the graft SQL functions, the interval-join strategy and the AQE
+  *    query-stage rule [[graft.plans.SortInPlace]]. That rule replaces
+  *    a global sort's range exchange (and the exchange's sampling job)
+  *    with a one-partition coalesce when the sort's input already
+  *    reads as one partition: its path to the leaves passes only
+  *    operators that cannot multiply rows (project, filter, aggregate,
+  *    sort), and every leaf is a file scan of one split or a finished
+  *    shuffle stage that AQE's coalescing reads as one partition under
+  *    the session's `spark.sql.adaptive.coalescePartitions.*`
+  *    settings. It reads those settings and adds none; with AQE off it
+  *    never runs.
   *  - `spark.sql.session.timeZone` = `UTC`: timestamp casts, windows
   *    and the oracle's output agree on one zone.
   *  - `spark.sql.shuffle.partitions` = `shufflePartitions`, when

@@ -239,5 +239,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.entries.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
+    ext.injectQueryStagePrepRule(graft.plans.SortInPlace)
   }
 }

@@ -687,7 +687,11 @@ object Dedup {
     * tasks as the scan has splits — ONE for a single-row-group file —
     * so the three used columns are repartitioned across the cluster
     * first (the langIdCore posture); the pair mining after it is
-    * partition-independent. */
+    * partition-independent. The final `orderBy` runs in place: while
+    * AQE reads the pair aggregate's map output as one partition (as
+    * it does through sf0.1), [[graft.plans.SortInPlace]] replaces the
+    * sort's range exchange, and its sampling job, with a one-partition
+    * coalesce. */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String, blockCol: String,
       n: Int = 3, minJaccard: Double = 0.1): DataFrame = {

@@ -2,8 +2,11 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.catalyst.plans.physical.{
+  HashPartitioning, RangePartitioning, RoundRobinPartitioning}
+import org.apache.spark.sql.execution.CoalesceExec
+import org.apache.spark.sql.execution.adaptive.{
+  AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 
@@ -20,6 +23,11 @@ class PlanAuditSpec extends SparkSpec {
     // collect() (not count()) — count() wraps the plan in a NEW query
     // execution, leaving THIS one's AQE un-finalized (initial plan)
     df.collect()
+    nodes(df)
+  }
+
+  /** The nodes of `df`'s executed plan, as of its last action. */
+  private def nodes(df: DataFrame): Seq[SparkPlan] = {
     def walk(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       // stage boundaries report no children; descend into their plans
@@ -773,5 +781,104 @@ class PlanAuditSpec extends SparkSpec {
       col("doc_id"), graft.operators.Html.urlNormalize(col("url")).as("canon")))
     // the whole canon chain (pct fold, punycode expression) is row-local
     assert(shuffles(plan) == 0)
+  }
+
+  // graft.plans.SortInPlace: a global sort whose input already reads as
+  // one partition drops its range exchange and the exchange's sampling
+  // job; anywhere else the exchange stays.
+
+  private def rangeExchanges(plan: Seq[SparkPlan]): Int = plan.count {
+    case e: ShuffleExchangeLike => e.outputPartitioning.isInstanceOf[RangePartitioning]
+    case _ => false
+  }
+
+  /** A one-file, one-split parquet table of 2,000 rows. */
+  private lazy val oneSplit: String = {
+    val path = java.nio.file.Files.createTempDirectory("graft-sort-in-place")
+      .resolve("t").toString
+    spark.range(0, 2000, 1, 1).selectExpr("id", "id % 7 AS k").write.parquet(path)
+    path
+  }
+
+  test("sort in place: a sort over a one-split scan runs in one job, no range exchange") {
+    import org.apache.spark.sql.functions._
+    val df = spark.read.parquet(oneSplit).filter(col("k") =!= 3).orderBy(col("id").desc)
+    assert(spark.read.parquet(oneSplit).rdd.getNumPartitions == 1)
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    assert(jobsDuring { rows = df.collect() } == 1)
+    val plan = nodes(df)
+    assert(rangeExchanges(plan) == 0 && plan.exists(_.isInstanceOf[CoalesceExec]))
+    val ids = rows.map(_.getLong(0)).toSeq
+    assert(ids == (0L until 2000L).filter(_ % 7 != 3).reverse)
+  }
+
+  /** `SELECT g, count(*) … GROUP BY g ORDER BY g` over 4 map partitions
+    * whose aggregate stage grows with `groups`; the read of that stage
+    * (its byte size, its partition count after AQE's coalescing) and
+    * the plan, after one collect that also checks the rows. */
+  private def groupedSort(groups: Int): (Long, Int, Seq[SparkPlan]) = {
+    import org.apache.spark.sql.functions._
+    val df = spark.range(0, 4L * groups, 1, 4).select((col("id") % groups).as("g"))
+      .groupBy("g").count().orderBy("g")
+    val rows = df.collect()
+    assert(rows.map(_.getLong(0)).toSeq == (0L until groups))
+    assert(rows.forall(_.getLong(1) == 4L))
+    val plan = nodes(df)
+    val read = plan.collect {
+      case r: AQEShuffleReadExec if r.child.asInstanceOf[ShuffleQueryStageExec]
+          .shuffle.outputPartitioning.isInstanceOf[HashPartitioning] => r
+    }
+    assert(read.size == 1, plan.mkString("\n"))
+    val stage = read.head.child.asInstanceOf[ShuffleQueryStageExec]
+    (stage.mapStats.get.bytesByPartitionId.sum, read.head.partitionSpecs.size, plan)
+  }
+
+  // 96,000 and 98,000 groups sit on either side of the line at 4 map
+  // partitions: AQE packs 2,023,680 B of map output into one partition
+  // and splits 2,171,760 B in two. AQE merges a coalesced partition
+  // below minPartitionSize (1 MiB) into a neighbour, so the line lies
+  // past that setting.
+  private val underLine = 96000
+  private val overLine = 98000
+
+  test("sort in place: a sort over an aggregate just under the one-partition line") {
+    val minSize = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    val (bytes, reads, plan) = groupedSort(underLine)
+    assert(bytes > minSize && reads == 1)
+    assert(rangeExchanges(plan) == 0 && plan.exists(_.isInstanceOf[CoalesceExec]))
+    // the aggregate's map stage and the result stage; no sampling job
+    assert(jobsDuring(groupedSort(underLine)) == 2)
+  }
+
+  test("sort in place: just over the line the aggregate reads two partitions, the exchange stays") {
+    val (under, _, _) = groupedSort(underLine)
+    val (bytes, reads, plan) = groupedSort(overLine)
+    assert(bytes > under && bytes < under * 11 / 10, s"$bytes vs $under")
+    assert(reads > 1)
+    assert(rangeExchanges(plan) == 1 && !plan.exists(_.isInstanceOf[CoalesceExec]))
+  }
+
+  test("sort in place: a Generate or a join below the sort keeps the range exchange") {
+    import org.apache.spark.sql.functions._
+    val t = spark.read.parquet(oneSplit)
+    val exploded = t.select(col("id"), explode(array(col("k"), col("k") + 1)).as("e"))
+      .orderBy("id", "e")
+    val joined = t.join(broadcast(t.select(col("id"), col("k").as("k2"))), "id")
+      .orderBy("id")
+    for (df <- Seq(exploded, joined)) {
+      val plan = executed(df)
+      assert(rangeExchanges(plan) == 1 && !plan.exists(_.isInstanceOf[CoalesceExec]))
+    }
+  }
+
+  test("sort in place: with AQE off the range exchange stays") {
+    import org.apache.spark.sql.functions._
+    withConf("spark.sql.adaptive.enabled", "false") {
+      val df = spark.read.parquet(oneSplit).orderBy(col("id").desc)
+      val plan = executed(df)
+      assert(!plan.exists(_.isInstanceOf[AdaptiveSparkPlanExec]))
+      assert(rangeExchanges(plan) == 1 && !plan.exists(_.isInstanceOf[CoalesceExec]))
+    }
   }
 }
