@@ -69,19 +69,11 @@ object Dedup {
     *
     * Default path is the native codegen'd expression
     * ([[graft.functions.MinHashSignature]] — one fused primitive
-    * loop); `minhashSignatureHof` is the pure-functions formulation
-    * kept as the reference implementation (bit-equal, asserted in
-    * HashExpressionsSpec) for environments that must avoid custom
-    * expressions. */
+    * loop); the pure-functions formulation, `minhashSignatureHof`,
+    * is the test-side reference implementation (bit-equal, asserted in
+    * HashExpressionsSpec). */
   def minhashSignature(sh: Column, numHashes: Int): Column =
     graft.functions.HashFunctions.minhash_sig(sh, numHashes)
-
-  private[graft] def minhashSignatureHof(sh: Column, numHashes: Int): Column =
-    aggregate(transform(sh, s => xxhash64(s)), array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, hs) => zip_with(
-        acc,
-        transform(sequence(lit(0), lit(numHashes - 1)), h => xxhash64(hs, h)),
-        (a, b) => least(a, b)))
 
   /** J2 — MinHash + LSH candidate pairs. Signatures are split into
     * `bands` bands of numHashes/bands rows; docs sharing any band
@@ -101,7 +93,7 @@ object Dedup {
 
   /** (doc_id, sh, n_sh) distinct-shingle-hash frame — the shared
     * upstream of BOTH the minhash signature builder and the exact
-    * jaccard postings miner. Composed gates compute (and checkpoint)
+    * jaccard pair miner. Composed gates compute (and checkpoint)
     * this once so the corpus is parsed and shingled a single time. */
   private[graft] def shingleFrame(
       df: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame = {
@@ -532,26 +524,6 @@ object Dedup {
   def simhash(text: Column): Column =
     graft.functions.HashFunctions.simhash64(split(text, " "))
 
-  /** Pure-functions SimHash (bit-equal reference implementation of the
-    * native [[graft.functions.SimHash64]]; see minhashSignature). */
-  private[graft] def simhashHof(text: Column): Column = {
-    val toks = split(text, " ")
-    // One fold over the tokens (64 parities per token, elementwise
-    // vote-sum) — NOT a transform over bit ids, which would re-split
-    // the text once per bit. Token bytes hash once; per-bit parities
-    // chain a cheap long-hash (same trick as minhashSignature).
-    val votes = aggregate(transform(toks, t => xxhash64(t)), array_repeat(lit(0L), 64),
-      (acc, ht) => zip_with(
-        acc,
-        transform(sequence(lit(0), lit(63)), b =>
-          xxhash64(ht, b).bitwiseAND(lit(1L)) * lit(2L) - lit(1L)),
-        (a, v) => a + v))
-    aggregate(votes, lit(0L), (acc, v) =>
-      // shiftleft (not acc*2): the sign-bit step must wrap, and ANSI
-      // mode turns a long-multiply wrap into ARITHMETIC_OVERFLOW.
-      shiftleft(acc, 1).bitwiseOR(when(v > 0, lit(1L)).otherwise(lit(0L))))
-  }
-
   /** J3 — SimHash candidate pairs via 16-bit chunk pigeonhole: the
     * 64-bit fingerprint splits into 4 chunks, so any pair within
     * hamming distance 3 shares at least one exact chunk — bucketing by
@@ -571,10 +543,12 @@ object Dedup {
   }
 
   /** J3v — SimHash pairs over the ENGINE-PORTABLE md5 fingerprint
-    * ([[simhashMd5HiLo]]): identical mining shape and guarantees as
-    * [[simhashPairs]], but the fingerprint is bit-reproducible in any
-    * engine with an md5 primitive — this is the variant the driver's
-    * DuckDB oracle verifies end-to-end (pair list + exact hamming).
+    * ([[graft.functions.SimHashMd5]]; its pure-functions reference,
+    * `simhashMd5HiLo`, is in HashExpressionsSpec): identical mining
+    * shape and guarantees as [[simhashPairs]], but the fingerprint is
+    * bit-reproducible in any engine with an md5 primitive — this is
+    * the variant the DuckDB oracle gate verifies end-to-end (pair
+    * list + exact hamming).
     * Production pipelines keep the cheaper native xxhash fingerprint;
     * both paths share `mineHammingPairs`, so the gate exercises the
     * real mining logic. */
@@ -590,36 +564,6 @@ object Dedup {
           shiftrightunsigned(col("__s"), 32).as("hi"),
           col("__s").bitwiseAND(lit(0xFFFFFFFFL)).as("lo")),
       maxHamming, maxBucket)
-  }
-
-  /** Pure-functions md5 SimHash as two 32-bit halves (hi = bits
-    * 63..32, lo = 31..0) — the reference implementation of the native
-    * [[graft.functions.SimHashMd5]] (bit-equal, asserted in
-    * HashExpressionsSpec), kept for environments that must avoid
-    * custom expressions. One fold over the token array, one md5 per
-    * token, all shifts static. */
-  private[graft] def simhashMd5HiLo(text: Column): Column = {
-    val toks = split(text, " ")
-    // one md5 per token (hex chars 17..32 = digest bytes 8..15); the
-    // byte split reads the hex STRING so the digest is never recomputed
-    val hexes = transform(toks, t => substring(md5(t.cast("binary")), 17, 16))
-    val tokBytes = transform(hexes, h =>
-      transform(sequence(lit(0), lit(7)), j =>
-        conv(h.substr(j * 2 + lit(1), lit(2)), 16, 10).cast("int")))
-    // fold: 64 votes, bit b = bit (b%8) of byte (b/8) — ±1 per token
-    val votes = aggregate(
-      tokBytes, array_repeat(lit(0), 64),
-      (acc, tb) => zip_with(
-        acc,
-        array((0 until 64).map { b =>
-          shiftright(element_at(tb, b / 8 + 1), b % 8).bitwiseAND(lit(1)) * 2 - 1
-        }: _*),
-        (a, v) => a + v))
-    def half(lowBit: Int): Column =
-      (0 until 32).map { k =>
-        when(element_at(votes, lowBit + k + 1) > 0, lit(1L << k)).otherwise(lit(0L))
-      }.reduce(_ + _)
-    struct(half(32).as("hi"), half(0).as("lo"))
   }
 
   /** Shared pigeonhole miner over (doc_id, hi, lo) 32-bit fingerprint
@@ -703,7 +647,8 @@ object Dedup {
     // pair and was 40× slower at sf0.1; this is also the shape that
     // survives 100 TB (shuffle ∝ corpus shingle count, join output ∝
     // true near-dup mass). Shingles hash to longs via xxhash64
-    // (collision p≈|shingles|²/2⁶⁴ — negligible).
+    // (collision p≈|shingles|²/2⁶⁴ — negligible). Why the join is a
+    // shuffled hash join: see [[ngramJaccardFromShingles]].
     val s = df
       .select(col(idCol).as("doc_id"), col(blockCol).as("block"), col(textCol).as("__text"))
       .repartition(df.sparkSession.sparkContext.defaultParallelism) // CPU-bound kernel: don't inherit the scan's few partitions
@@ -716,25 +661,42 @@ object Dedup {
     ngramJaccardFromShingles(s, minJaccard).orderBy("id_a", "id_b")
   }
 
-  /** Exact-jaccard postings miner over a prepared (doc_id, block, sh,
-    * n_sh) frame, unsorted — the composition entry (see
+  /** Exact-jaccard inverted-index miner over a prepared (doc_id,
+    * block, sh, n_sh) frame, unsorted — the composition entry (see
     * [[minhashCandidatesFromSig]] for why interior sorts are skipped;
     * gates additionally share ONE checkpointed [[shingleFrame]]
     * between this and the signature builder, so the corpus text is
-    * split and hashed exactly once). */
+    * split and hashed exactly once).
+    *
+    * Pairs come from a shuffled hash self-join of the exploded
+    * (doc_id, block, n_sh, shingle) stream on (block, shingle) with
+    * `a.doc_id < b.doc_id`. Both sides are the same plan, so AQE reuses
+    * ONE exchange: the stream is shuffled once and `shingle_hashes`
+    * runs once. A `collect_list` postings form (group per shingle,
+    * expand each sorted array into pairs) spent 60% of its executor
+    * CPU at sf0.1 in the object aggregate: its sort fallback, list
+    * buffers and their serialization, whatever the fallback
+    * threshold. Against it this join cut the dedup benchmark's task
+    * CPU per warm pass by 37% (4 cores, 15 GB). A sort-merge join, or AQE's broadcast
+    * pick, of the same self-join measured no faster than the postings
+    * form; only the hash join pays.
+    *
+    * Memory bound: a shuffled hash join does not spill. Each task
+    * holds its whole partition of the exploded shingle stream as the
+    * hash table's build side, which grows linearly with the corpus's
+    * (doc, shingle) rows per shuffle partition: 18 MiB per task at
+    * sf0.1 and 80 MiB at sf1 (q_ngram_jaccard, 4 partitions). A corpus
+    * whose partition outgrows executor memory needs more shuffle
+    * partitions.
+    *
+    * Per-shingle pair mass is quadratic in posting length (one join
+    * key); exactness forbids a bucket cap here — the capped
+    * production paths for boilerplate-heavy corpora are minhash /
+    * simhash (J2/J3), this operator is the exact verifier run behind
+    * them. A doc_id that appears in two input rows never pairs with
+    * itself (strict `<`, as in the DuckDB oracle). */
   private[graft] def ngramJaccardFromShingles(
       s: DataFrame, minJaccard: Double): DataFrame = {
-    // Postings-list shape, not a self-join: group the exploded shingle
-    // stream once per (block, shingle) and emit member pairs from the
-    // sorted postings array (the minhashCandidates bucket-miner shape).
-    // The self-join form shuffled the 4-column shingle stream TWICE and
-    // computed shingle_hashes twice (no common-subplan reuse across
-    // join sides) — this exchanges it once with map-side combine on the
-    // pair counts; ~2-3× at sf1, same rows. Per-shingle pair mass is
-    // quadratic in posting length in EITHER shape (one reducer key);
-    // exactness forbids a bucket cap here — the capped production paths
-    // for boilerplate-heavy corpora are minhash/simhash (J2/J3), this
-    // operator is the exact verifier run behind them.
     // explode_outer, not explode: every caller's `sh` is non-empty (docs
     // of >= n tokens), so both emit the same rows, but a plain explode
     // makes the optimizer infer `size(sh) > 0 AND isnotnull(sh)` and push
@@ -743,15 +705,10 @@ object Dedup {
     // spreads it
     val ex = s.select(
       col("doc_id"), col("block"), col("n_sh"), explode_outer(col("sh")).as("shingle"))
-    ex.groupBy(col("block"), col("shingle"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("n_sh")))).as("m"))
-      .where(size(col("m")) > 1)
-      // flat posexplode + slice-explode pair expansion — see the
-      // minhash miner's note (nested HOF arrays measured 1.7× slower
-      // here: the postings table is where pair mass concentrates)
-      .select(posexplode(col("m")).as(Seq("__i", "a")), col("m"))
-      .select(col("a"), explode(
-        slice(col("m"), col("__i") + lit(2), size(col("m")))).as("b"))
+    ex.as("a")
+      .join(ex.as("b").hint("shuffle_hash"),
+        col("a.block") === col("b.block") && col("a.shingle") === col("b.shingle") &&
+          col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(
         count(lit(1)).as("n_common"),

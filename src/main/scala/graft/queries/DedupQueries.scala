@@ -39,7 +39,7 @@ object DedupQueries {
       val docs = Tables.documents(s, dir)
       // Both sides consume the SAME distinct-shingle arrays: checkpoint
       // the shingle frame ONCE (text parsed/hashed a single time), then
-      // the banding side and the exact postings miner read it. The
+      // the banding side and the exact pair miner read it. The
       // interior per-operator orderBys are skipped — the join destroys
       // order and the gate sorts once at the end.
       // ONE checkpoint, not two: the full-corpus signature frame is

@@ -1,10 +1,12 @@
 package graft
 
 import scala.util.Random
+import org.apache.spark.sql.functions.lit
 import graft.operators.{Curation, Dedup}
 
-/** Randomized-structure tests for the round-7 curation/dedup additions
-  * (fixed seed — deterministic): span dedup must agree with a plain
+/** Randomized-structure tests for the curation/dedup operators
+  * (fixed seed — deterministic): exact n-gram Jaccard pairs must agree
+  * with a brute-force pairwise recount, span dedup with a plain
   * Scala sliding-window recount, the PII scrubber with a direct
   * `java.util.regex` reference, and the Bloom decontamination path
   * with the exact join on random corpora — including configurations
@@ -14,6 +16,58 @@ class CurationPropertySpec extends SparkSpec {
   import spark.implicits._
 
   private val words = Array("a", "b", "c", "d", "e")
+
+  /** Brute-force exact blocked n-gram Jaccard: every same-block pair of
+    * docs with ≥ n tokens, scored from distinct word n-gram sets with
+    * the operator's arithmetic; pairs sharing no n-gram never appear. */
+  private def bruteJaccard(
+      docs: Seq[(Long, String, String)], n: Int, minJ: Double): Seq[((Long, Long), Double)] = {
+    val sets = docs.map { case (id, block, text) =>
+      (id, block, text.split(" ", -1).toSeq.sliding(n).filter(_.size == n).toSet)
+    }.filter(_._3.nonEmpty)
+    (for {
+      (a, ba, sa) <- sets; (b, bb, sb) <- sets
+      if a < b && ba == bb
+      common = (sa intersect sb).size
+      if common > 0
+      j = common.toDouble / (sa.size + sb.size - common).toDouble
+      if j >= minJ
+    } yield (a, b) -> j).sortBy(_._1)
+  }
+
+  test("ngramJaccardPairs agrees with a brute-force pairwise Jaccard on random corpora") {
+    val rnd = new Random(17)
+    // ASCII and multi-byte tokens; tiny alphabets make shared n-grams common
+    val alphabets = Seq(words, Array("é", "日本", "ü", "a", "ß"))
+    for (trial <- 1 to 6) {
+      val n = 2 + rnd.nextInt(3)
+      val alpha = alphabets(trial % 2)
+      val minJ = Seq(0.1, 0.3, 0.5)(rnd.nextInt(3))
+      val base = (0 until 12 + rnd.nextInt(12)).map { _ =>
+        rnd.nextInt(6) match {
+          case 0 => Seq.fill(n)(alpha(rnd.nextInt(alpha.length)))          // exactly n tokens
+          case 1 => Seq.fill(rnd.nextInt(n))(alpha(rnd.nextInt(alpha.length))) // shorter than n
+          case 2 => Seq.fill(3 + rnd.nextInt(4))(alpha.take(2)).flatten      // repeated n-grams
+          case _ => Seq.fill(n + rnd.nextInt(8))(alpha(rnd.nextInt(alpha.length)))
+        }
+      }.map(_.mkString(" "))
+      // identical docs: copy a few texts under fresh ids
+      val texts = base ++ Seq.fill(3)(base(rnd.nextInt(base.size)))
+      val docs = texts.zipWithIndex.map { case (t, i) =>
+        (i.toLong, Seq("x", "y", "z")(rnd.nextInt(3)), t)
+      }
+      val df = docs.toDF("doc_id", "source", "text")
+      val got = Dedup.ngramJaccardPairs(df, "doc_id", "text", "source", n, minJ)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toSeq
+      assert(got == bruteJaccard(docs, n, minJ), s"trial=$trial n=$n minJ=$minJ docs=$docs")
+      // the one-block composition q_dedup_minhash makes
+      val oneBlock = Dedup.ngramJaccardFromShingles(
+        Dedup.shingleFrame(df, "doc_id", "text", n).withColumn("block", lit(1)), minJ)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toSeq.sortBy(_._1)
+      assert(oneBlock == bruteJaccard(docs.map(d => d.copy(_2 = "")), n, minJ),
+        s"one block: trial=$trial n=$n minJ=$minJ docs=$docs")
+    }
+  }
 
   test("spanDedup agrees with a brute-force sliding-window recount on random corpora") {
     val rnd = new Random(7)

@@ -11,6 +11,65 @@ class HashExpressionsSpec extends SparkSpec {
   // parquet-backed so plans run through codegen, not constant folding
   private def docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(50)
 
+  /** Pure-functions MinHash signature (bit-equal reference implementation
+    * of the native [[graft.functions.MinHashSignature]]; see
+    * Dedup.minhashSignature). */
+  def minhashSignatureHof(sh: Column, numHashes: Int): Column =
+    aggregate(transform(sh, s => xxhash64(s)), array_repeat(lit(Long.MaxValue), numHashes),
+      (acc, hs) => zip_with(
+        acc,
+        transform(sequence(lit(0), lit(numHashes - 1)), h => xxhash64(hs, h)),
+        (a, b) => least(a, b)))
+
+  /** Pure-functions SimHash (bit-equal reference implementation of the
+    * native [[graft.functions.SimHash64]]; see Dedup.minhashSignature). */
+  def simhashHof(text: Column): Column = {
+    val toks = split(text, " ")
+    // One fold over the tokens (64 parities per token, elementwise
+    // vote-sum) — NOT a transform over bit ids, which would re-split
+    // the text once per bit. Token bytes hash once; per-bit parities
+    // chain a cheap long-hash (same trick as minhashSignature).
+    val votes = aggregate(transform(toks, t => xxhash64(t)), array_repeat(lit(0L), 64),
+      (acc, ht) => zip_with(
+        acc,
+        transform(sequence(lit(0), lit(63)), b =>
+          xxhash64(ht, b).bitwiseAND(lit(1L)) * lit(2L) - lit(1L)),
+        (a, v) => a + v))
+    aggregate(votes, lit(0L), (acc, v) =>
+      // shiftleft (not acc*2): the sign-bit step must wrap, and ANSI
+      // mode turns a long-multiply wrap into ARITHMETIC_OVERFLOW.
+      shiftleft(acc, 1).bitwiseOR(when(v > 0, lit(1L)).otherwise(lit(0L))))
+  }
+
+  /** Pure-functions md5 SimHash as two 32-bit halves (hi = bits
+    * 63..32, lo = 31..0) — the reference implementation of the native
+    * [[graft.functions.SimHashMd5]] (bit-equal, asserted below).
+    * One fold over the token array, one md5 per
+    * token, all shifts static. */
+  def simhashMd5HiLo(text: Column): Column = {
+    val toks = split(text, " ")
+    // one md5 per token (hex chars 17..32 = digest bytes 8..15); the
+    // byte split reads the hex STRING so the digest is never recomputed
+    val hexes = transform(toks, t => substring(md5(t.cast("binary")), 17, 16))
+    val tokBytes = transform(hexes, h =>
+      transform(sequence(lit(0), lit(7)), j =>
+        conv(h.substr(j * 2 + lit(1), lit(2)), 16, 10).cast("int")))
+    // fold: 64 votes, bit b = bit (b%8) of byte (b/8) — ±1 per token
+    val votes = aggregate(
+      tokBytes, array_repeat(lit(0), 64),
+      (acc, tb) => zip_with(
+        acc,
+        array((0 until 64).map { b =>
+          shiftright(element_at(tb, b / 8 + 1), b % 8).bitwiseAND(lit(1)) * 2 - 1
+        }: _*),
+        (a, v) => a + v))
+    def half(lowBit: Int): Column =
+      (0 until 32).map { k =>
+        when(element_at(votes, lowBit + k + 1) > 0, lit(1L << k)).otherwise(lit(0L))
+      }.reduce(_ + _)
+    struct(half(32).as("hi"), half(0).as("lo"))
+  }
+
   /** md5-derived feature bucket — identical in any engine with md5. */
   def hashedBucket(gram: Column, buckets: Int): Column =
     (conv(substring(md5(gram), 1, 8), 16, 10).cast("long") % buckets).cast("int")
@@ -21,7 +80,7 @@ class HashExpressionsSpec extends SparkSpec {
       .where(size(split(col("text"), " ")) >= 3)
       .select(
         HashFunctions.minhash_sig(array_distinct(sh), 64).as("native"),
-        Dedup.minhashSignatureHof(array_distinct(sh), 64).as("hof"))
+        minhashSignatureHof(array_distinct(sh), 64).as("hof"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -32,7 +91,7 @@ class HashExpressionsSpec extends SparkSpec {
   test("native simhash64 is bit-equal to the HOF reference formulation") {
     val rows = docs.select(
       Dedup.simhash(col("text")).as("native"),
-      Dedup.simhashHof(col("text")).as("hof")).collect()
+      simhashHof(col("text")).as("hof")).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
@@ -40,7 +99,7 @@ class HashExpressionsSpec extends SparkSpec {
   test("native simhash_md5 is bit-equal to the HOF hi/lo reference formulation") {
     val rows = docs.select(
       HashFunctions.simhash_md5(split(col("text"), " ")).as("native"),
-      Dedup.simhashMd5HiLo(col("text")).as("hof")).collect()
+      simhashMd5HiLo(col("text")).as("hof")).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val native = r.getLong(0)

@@ -7,8 +7,10 @@ import org.apache.spark.sql.catalyst.plans.physical.{
 import org.apache.spark.sql.execution.CoalesceExec
 import org.apache.spark.sql.execution.adaptive.{
   AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.{
+  BaseJoinExec, BroadcastHashJoinExec, ShuffledHashJoinExec}
 
 /** SURVEY.md §7.1 as executable regressions: the plan-shape claims
   * (pushdown, pruning, broadcast, shuffle counts) are asserted against
@@ -205,6 +207,28 @@ class PlanAuditSpec extends SparkSpec {
 
   test("ngram jaccard shingles on every core, not on the scan's one split") {
     assertKernelSpread("q_ngram_jaccard")(_.simpleString(100).contains("shingle_hashes("))
+  }
+
+  test("ngram jaccard pairs through one hash self-join over one shared shingle exchange") {
+    val plan = executed(SparkEntry.queries("q_ngram_jaccard")(spark, dir))
+    val shown = plan.map(_.simpleString(100)).mkString("\n")
+    // no postings arrays: no object aggregate, no collect_list
+    assert(!plan.exists(_.isInstanceOf[ObjectHashAggregateExec]), shown)
+    assert(!shown.contains("collect_list"), shown)
+    val joins = plan.collect { case j: ShuffledHashJoinExec => j }
+    assert(joins.size == 1, s"expected one ShuffledHashJoin, got ${joins.size}:\n$shown")
+    // one side reads the shingle exchange, the other a reuse of that
+    // same exchange: the stream is shuffled once
+    val feeds = feedingExchanges(joins.head)
+    assert(feeds.size == 2, shown)
+    val Seq(l, r) = feeds
+    val reuses = Seq((l, r), (r, l)).collect {
+      case (e: ShuffleExchangeLike, u: ReusedExchangeExec) if u.child eq e => u
+    }
+    assert(reuses.size == 1, s"join sides must share one exchange, got " +
+      s"${l.nodeName} / ${r.nodeName}:\n$shown")
+    // and the shingle kernel runs in one node
+    assert(plan.count(_.simpleString(100).contains("shingle_hashes(")) == 1, shown)
   }
 
   test("ngram top-k is TakeOrdered, not a global window over the corpus") {
