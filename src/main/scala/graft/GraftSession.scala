@@ -9,16 +9,21 @@ import org.apache.spark.sql.SparkSession
   *
   *  - `spark.sql.extensions` = [[graft.functions.GraftExtensions]]:
   *    the graft SQL functions, the interval-join strategy and the AQE
-  *    query-stage rule [[graft.plans.SortInPlace]]. That rule replaces
-  *    a global sort's range exchange (and the exchange's sampling job)
-  *    with a one-partition coalesce when the sort's input already
-  *    reads as one partition: its path to the leaves passes only
-  *    operators that cannot multiply rows (project, filter, aggregate,
-  *    sort), and every leaf is a file scan of one split or a finished
-  *    shuffle stage that AQE's coalescing reads as one partition under
-  *    the session's `spark.sql.adaptive.coalescePartitions.*`
-  *    settings. It reads those settings and adds none; with AQE off it
-  *    never runs.
+  *    query-stage rule [[graft.plans.InPlace]]. That rule replaces an
+  *    exchange with a one-partition coalesce when the exchange's input
+  *    already runs in one task: a global sort's range exchange (and
+  *    its sampling job), and the hash exchange between an aggregate's
+  *    partial and final halves. The input must reach one leaf through
+  *    unary operators only (under a sort, only those that cannot
+  *    multiply rows: project, filter, aggregate, sort; under a final
+  *    aggregate, also generate and `CollectMetrics`), and that leaf is
+  *    a file scan of one split, a finished shuffle stage that AQE's
+  *    coalescing reads as one partition under the session's
+  *    `spark.sql.adaptive.coalescePartitions.*` settings, or an
+  *    aggregate's coalesce the rule put in place. An aggregate keeps
+  *    its exchange in any plan with a join or another multi-child
+  *    operator. The rule reads those settings and adds none; with AQE
+  *    off it never runs.
   *  - `spark.sql.session.timeZone` = `UTC`: timestamp casts, windows
   *    and the oracle's output agree on one zone.
   *  - `spark.sql.shuffle.partitions` = `shufflePartitions`, when

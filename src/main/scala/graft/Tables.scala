@@ -4,6 +4,8 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.StructType
 
 /** Canonical access to the test corpus tables (TPC-H-ish star schema +
@@ -13,34 +15,44 @@ import org.apache.spark.sql.types.StructType
   * conveniences for wiring `SparkEntry.queries`; production users point
   * the same operators at any parquet/CSV/JSON source.
   *
-  * Schema memo: a bare `spark.read.parquet` infers the schema with a
-  * Spark job (`mergeSchemasInParallel` broadcasts the Hadoop conf and
-  * runs a one-task footer read, even for a single file), which cost a
-  * small query more than the rest of its build. So each corpus file's
-  * schema is inferred once per file version, and later reads pass it
-  * as `spark.read.schema(s).parquet(path)`. The memo key is the
-  * qualified path, the file's modification time and length (one
-  * `getFileStatus`), and every `SQLConf` value the parquet schema
-  * converter reads — `spark.sql.legacy.parquet.nanosAsLong`, which
-  * [[GraftSession]] sets, changes `ts`'s inferred type. A rewritten
-  * file is therefore re-inferred, never served stale. Directories are
-  * read without the memo: their status does not change when a part
-  * file is rewritten in place. The memo holds one small `StructType` per
+  * Resolution memo: `spark.read.parquet` resolves its data source on
+  * every call (source lookup, path globbing, an `InMemoryFileIndex`
+  * listing, Hadoop-conf copies, analysis), and a read without a schema
+  * also infers one with a Spark job (`mergeSchemasInParallel`
+  * broadcasts the Hadoop conf and runs a one-task footer read, even for
+  * a single file). Together they cost a small query more than the rest
+  * of its build. So each corpus file version is resolved once: the
+  * memo holds its inferred schema and the analyzed `LogicalRelation` of
+  * the session that resolved it.
+  *  - The key is the qualified path, the file's modification time and
+  *    length (one `getFileStatus`), and every `SQLConf` value the
+  *    parquet schema converter reads — `spark.sql.legacy.parquet.nanosAsLong`,
+  *    which [[GraftSession]] sets, changes `ts`'s inferred type. A
+  *    rewritten file is therefore resolved again, never served stale.
+  *  - A hit from the same session returns the relation with fresh
+  *    exprIds (`newInstance`), so self-joins and analysis behave as
+  *    they do for a fresh read.
+  *  - Another session resolves again from the memoized schema, with
+  *    no inference job, and its relation replaces the entry's: at most
+  *    one session stays referenced per file version.
+  * Directories are read without the memo: their status does not change
+  * when a part file is rewritten in place. The memo holds one entry per
   * corpus file version, so it is left unbounded.
   *
-  * Every call still builds a fresh relation (new exprIds, a fresh file
-  * listing), so self-joins and analysis are unchanged. A given schema
-  * goes through the same `HadoopFsRelation(dataSchema.asNullable)` path
-  * as an inferred one, so Catalyst keeps full pushdown: filters and
-  * column pruning reach the scan (verify via `df.explain("formatted")`
-  * → `PushedFilters` / `ReadSchema`).
+  * A given schema goes through the same `HadoopFsRelation(dataSchema.asNullable)`
+  * path as an inferred one, so Catalyst keeps full pushdown: filters
+  * and column pruning reach the scan (verify via
+  * `df.explain("formatted")` → `PushedFilters` / `ReadSchema`).
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val schemas = TrieMap.empty[(String, Long, Long, Seq[Boolean]), StructType]
+  private final case class Resolved(
+      schema: StructType, session: SparkSession, relation: LogicalRelation)
+
+  private val memo = TrieMap.empty[(String, Long, Long, Seq[Boolean]), Resolved]
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val p = s"$dir/$name.parquet"
@@ -54,11 +66,14 @@ object Tables {
       c.legacyParquetNanosAsLong, c.parquetFieldIdReadEnabled,
       c.parquetIgnoreVariantAnnotation,
       c.parquetReaderRespectUnknownTypeAnnotation))
-    schemas.get(key) match {
-      case Some(s) => spark.read.schema(s).parquet(p)
-      case None =>
-        val df = spark.read.parquet(p)
-        schemas.put(key, df.schema)
+    memo.get(key) match {
+      case Some(r) if r.session eq spark => ColumnBridge.ofRows(spark, r.relation.newInstance())
+      case hit =>
+        val df = hit.fold(spark.read.parquet(p))(r => spark.read.schema(r.schema).parquet(p))
+        df.queryExecution.analyzed match {
+          case rel: LogicalRelation => memo.put(key, Resolved(df.schema, spark, rel))
+          case _ =>
+        }
         df
     }
   }

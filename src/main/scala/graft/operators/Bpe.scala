@@ -1,9 +1,11 @@
 package graft.operators
 
 import scala.collection.mutable.ListBuffer
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 /** Byte-pair-encoding vocabulary induction and application (Sennrich
@@ -244,13 +246,21 @@ object Bpe {
 
   /** [[train]] wrapped as a DataFrame for gating: the merge table the
     * driver collected, re-emitted as a LocalRelation (bounded — one
-    * row per merge round, the Lloyd-codebook shape). */
+    * row per merge round, the Lloyd-codebook shape). Built from an
+    * explicit schema: a tuple `toDF` derives its encoder by reflection
+    * on every call. */
   def trainAsFrame(
       spark: SparkSession, df: DataFrame, textCol: String,
-      merges: Int): DataFrame = {
-    import spark.implicits._
-    train(df, textCol, merges)
-      .map(m => (m.round, m.lhs, m.rhs, m.merged, m.pairCount))
-      .toDF("round", "lhs", "rhs", "merged", "pair_count")
-  }
+      merges: Int): DataFrame =
+    spark.createDataFrame(
+      train(df, textCol, merges)
+        .map(m => Row(m.round, m.lhs, m.rhs, m.merged, m.pairCount)).asJava,
+      MergeSchema)
+
+  private val MergeSchema = StructType(Seq(
+    StructField("round", IntegerType, nullable = false),
+    StructField("lhs", StringType),
+    StructField("rhs", StringType),
+    StructField("merged", StringType),
+    StructField("pair_count", LongType, nullable = false)))
 }

@@ -633,9 +633,10 @@ object Dedup {
     * first (the langIdCore posture); the pair mining after it is
     * partition-independent. The final `orderBy` runs in place: while
     * AQE reads the pair aggregate's map output as one partition (as
-    * it does through sf0.1), [[graft.plans.SortInPlace]] replaces the
+    * it does through sf0.1), [[graft.plans.InPlace]] replaces the
     * sort's range exchange, and its sampling job, with a one-partition
-    * coalesce. */
+    * coalesce. The pair aggregate itself keeps its exchange: its input
+    * is the shingle self-join, not one task's output. */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String, blockCol: String,
       n: Int = 3, minJaccard: Double = 0.1): DataFrame = {

@@ -713,17 +713,4 @@ object Multimodal {
         }
       }
   }
-
-  /** Wrap any table into the media schema with a deterministic fake
-    * payload (bytes of a text column) — the lightweight adapter for
-    * schema/plumbing tests; [[syntheticMedia]] is the real-codec one. */
-  def fakeMediaFromText(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(
-      col(idCol).cast("long").as("media_id"),
-      struct(
-        element_at(array(lit("image"), lit("audio"), lit("video")),
-          (pmod(col(idCol).cast("long"), lit(3)) + 1).cast("int")).as("media_type"),
-        lit(64).as("width"), lit(64).as("height"),
-        (length(col(textCol)) * 40L).as("duration_ms")).as("meta"),
-      col(textCol).cast("binary").as("content"))
 }

@@ -104,17 +104,6 @@ object Num {
     when(count(c) > 1, sqrt(greatest((s2 - s * s / n) / (n - lit(1.0)), lit(0.0))))
   }
 
-  /** The decimal-buffer reference form of [[dstd]]'s Σx² (bit-equal,
-    * ~2× slower — kept for NumParitySpec). */
-  private[graft] def dstdDecimalRef(c: Column): Column = {
-    val n = count(c).cast(DoubleType)
-    val s = dsum(c)
-    // product of (18,4)s is (37,8) — summed as-is (exact); re-casting the
-    // product to (18,4) would round to 4dp and diverge from the oracle
-    val s2 = sum(c.cast(Exact) * c.cast(Exact)).cast(DoubleType)
-    when(count(c) > 1, sqrt(greatest((s2 - s * s / n) / (n - lit(1.0)), lit(0.0))))
-  }
-
   /** Deterministic Pearson correlation from exact sums (linear sums on
     * the [[dsum]] unscaled-long path, product sums on [[dprodSum]]'s
     * split-long path — zero per-row BigDecimal work). Degenerate
@@ -130,25 +119,6 @@ object Num {
     val sxx = dprodSum(xg, xg)
     val syy = dprodSum(yg, yg)
     val sxy = dprodSum(xg, yg)
-    when(n > 0, {
-      val cov = sxy - sx * sy / n
-      val vx = sxx - sx * sx / n
-      val vy = syy - sy * sy / n
-      when(vx > 0 && vy > 0, cov / sqrt(vx * vy))
-    })
-  }
-
-  /** The all-decimal reference form of [[dcorr]] (bit-equal, same
-    * degenerate-group guards — kept for NumParitySpec). */
-  private[graft] def dcorrDecimalRef(x: Column, y: Column): Column = {
-    val n = count(when(x.isNotNull && y.isNotNull, 1)).cast(DoubleType)
-    val xe = when(y.isNotNull, x).cast(Exact)
-    val ye = when(x.isNotNull, y).cast(Exact)
-    val sx = sum(xe).cast(DoubleType)
-    val sy = sum(ye).cast(DoubleType)
-    val sxx = sum(xe * xe).cast(DoubleType)
-    val syy = sum(ye * ye).cast(DoubleType)
-    val sxy = sum(xe * ye).cast(DoubleType)
     when(n > 0, {
       val cov = sxy - sx * sy / n
       val vx = sxx - sx * sx / n

@@ -1,7 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.Tables
 import graft.operators.{Geo, Num}
 
@@ -82,19 +85,15 @@ object GeoQueries {
     // even-odd crossing arithmetic in SQL, so every covered cell must
     // match bit-for-bit.
     "q_polygon_raster" -> { (s, dir) =>
-      import s.implicits._
-      val polys = testPolygons.toDF("poly_id", "xs", "ys")
-      Geo.rasterizePolygons(polys, "poly_id", "xs", "ys", cellDeg = 1.0)
+      Geo.rasterizePolygons(polygons(s), "poly_id", "xs", "ys", cellDeg = 1.0)
     },
     // P5 — exact point-in-polygon containment join: bbox-cell-blocked
     // hash join + exact even-odd predicate on the point coordinates;
     // the oracle replays the identical crossing arithmetic per
     // (point, polygon) pair, so membership AND aggregates must match.
     "q_polygon_join" -> { (s, dir) =>
-      import s.implicits._
-      val polys = testPolygons.toDF("poly_id", "xs", "ys")
       Geo.pointInPolygon(
-        customerPoints(s, dir), polys, "lon", "lat", "poly_id", "xs", "ys",
+        customerPoints(s, dir), polygons(s), "lon", "lat", "poly_id", "xs", "ys",
         Seq(Num.dsum(col("c_acctbal")).as("acctbal_sum")))
     },
     // P6 — GeoJSON ingestion end-to-end: parse a FeatureCollection
@@ -197,6 +196,16 @@ object GeoQueries {
     (1L, Seq(0.3, 10.7, 5.1), Seq(0.2, 1.3, 9.8)),
     (2L, Seq(-8.6, -1.2, -0.7, -7.9), Seq(-7.4, -8.1, -0.9, -1.6)),
     (3L, Seq(20.2, 28.9, 24.5, 22.1, 20.9), Seq(5.1, 5.7, 12.4, 8.3, 11.2)))
+
+  /** [[testPolygons]] as `(poly_id, xs, ys)` rows, from an explicit
+    * schema: a tuple `toDF` derives its encoder by reflection on every
+    * call. */
+  private def polygons(s: SparkSession): DataFrame = s.createDataFrame(
+    testPolygons.map { case (id, xs, ys) => Row(id, xs, ys) }.asJava,
+    StructType(Seq(
+      StructField("poly_id", LongType, nullable = false),
+      StructField("xs", ArrayType(DoubleType, containsNull = false)),
+      StructField("ys", ArrayType(DoubleType, containsNull = false)))))
 
   /** P6 fixture: feature name → polygons → OPEN rings (outer first,
     * then holes). zoneA is a quad with a rectangular hole; zoneB is a

@@ -3,6 +3,7 @@ package graft
 import java.io.ByteArrayInputStream
 import java.nio.file.Files
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem, UnsupportedAudioFileException}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Multimodal
@@ -106,9 +107,22 @@ class MultimodalSourcesSpec extends SparkSpec {
     assert(msgs(err2).exists(_.contains("acTL")))
   }
 
+  /** Wrap any table into the media schema with a deterministic fake
+    * payload (bytes of a text column) — the lightweight adapter for
+    * schema/plumbing tests; [[Multimodal.syntheticMedia]] is the real-codec one. */
+  private def fakeMediaFromText(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(
+      col(idCol).cast("long").as("media_id"),
+      struct(
+        element_at(array(lit("image"), lit("audio"), lit("video")),
+          (pmod(col(idCol).cast("long"), lit(3)) + 1).cast("int")).as("media_type"),
+        lit(64).as("width"), lit(64).as("height"),
+        (length(col(textCol)) * 40L).as("duration_ms")).as("meta"),
+      col(textCol).cast("binary").as("content"))
+
   test("fakeMediaFromText matches the declared media schema") {
     val docs = Seq((7L, "hello world")).toDF("doc_id", "text")
-    val media = Multimodal.fakeMediaFromText(docs, "doc_id", "text")
+    val media = fakeMediaFromText(docs, "doc_id", "text")
     assert(media.schema.catalogString == Multimodal.mediaSchema.catalogString) // modulo nullability
     val r = media.as[MediaRecord].head()
     assert(r.media_id == 7L && new String(r.content) == "hello world")

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import graft.operators.Num
+import graft.operators.Num.dsum
 
 /** Bit-parity proofs for the split-long fast paths in [[Num]]: the
   * per-row-BigDecimal-free `dprodSum`-based dcorr/dstd must produce
@@ -11,6 +14,39 @@ import graft.operators.Num
   */
 class NumParitySpec extends SparkSpec {
   import spark.implicits._
+
+  /** `Num`'s exact decimal type. */
+  private val Exact = DecimalType(18, 4)
+
+  /** The decimal-buffer reference form of [[Num.dstd]]'s Σx² (bit-equal,
+    * ~2× slower). */
+  private def dstdDecimalRef(c: Column): Column = {
+    val n = count(c).cast(DoubleType)
+    val s = dsum(c)
+    // product of (18,4)s is (37,8) — summed as-is (exact); re-casting the
+    // product to (18,4) would round to 4dp and diverge from the oracle
+    val s2 = sum(c.cast(Exact) * c.cast(Exact)).cast(DoubleType)
+    when(count(c) > 1, sqrt(greatest((s2 - s * s / n) / (n - lit(1.0)), lit(0.0))))
+  }
+
+  /** The all-decimal reference form of [[Num.dcorr]] (bit-equal, same
+    * degenerate-group guards). */
+  private def dcorrDecimalRef(x: Column, y: Column): Column = {
+    val n = count(when(x.isNotNull && y.isNotNull, 1)).cast(DoubleType)
+    val xe = when(y.isNotNull, x).cast(Exact)
+    val ye = when(x.isNotNull, y).cast(Exact)
+    val sx = sum(xe).cast(DoubleType)
+    val sy = sum(ye).cast(DoubleType)
+    val sxx = sum(xe * xe).cast(DoubleType)
+    val syy = sum(ye * ye).cast(DoubleType)
+    val sxy = sum(xe * ye).cast(DoubleType)
+    when(n > 0, {
+      val cov = sxy - sx * sy / n
+      val vx = sxx - sx * sx / n
+      val vy = syy - sy * sy / n
+      when(vx > 0 && vy > 0, cov / sqrt(vx * vy))
+    })
+  }
 
   private def randomFrame = {
     val rnd = new scala.util.Random(97)
@@ -34,14 +70,14 @@ class NumParitySpec extends SparkSpec {
   test("dcorr split-long path is bit-equal to the decimal-buffer reference") {
     val df = randomFrame
     val fast = bits(df.groupBy("g").agg(Num.dcorr(col("x"), col("y")).as("c")))
-    val ref = bits(df.groupBy("g").agg(Num.dcorrDecimalRef(col("x"), col("y")).as("c")))
+    val ref = bits(df.groupBy("g").agg(dcorrDecimalRef(col("x"), col("y")).as("c")))
     assert(fast == ref)
   }
 
   test("dstd split-long path is bit-equal to the decimal-buffer reference") {
     val df = randomFrame
     val fast = bits(df.groupBy("g").agg(Num.dstd(col("x")).as("s")))
-    val ref = bits(df.groupBy("g").agg(Num.dstdDecimalRef(col("x")).as("s")))
+    val ref = bits(df.groupBy("g").agg(dstdDecimalRef(col("x")).as("s")))
     assert(fast == ref)
   }
 
@@ -55,8 +91,8 @@ class NumParitySpec extends SparkSpec {
     val fast = bits(df.groupBy("g").agg(
       Num.dcorr(col("x"), col("y")).as("c"), Num.dstd(col("x")).as("s")))
     val ref = bits(df.groupBy("g").agg(
-      Num.dcorrDecimalRef(col("x"), col("y")).as("c"),
-      Num.dstdDecimalRef(col("x")).as("s")))
+      dcorrDecimalRef(col("x"), col("y")).as("c"),
+      dstdDecimalRef(col("x")).as("s")))
     assert(fast == ref)
   }
 

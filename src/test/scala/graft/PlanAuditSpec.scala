@@ -495,17 +495,22 @@ class PlanAuditSpec extends SparkSpec {
     // exchange stays ∝ matching postings, not ∝ corpus. The posting
     // frame is checkpointed inside bm25Scores (its scan job is
     // separate), so the audit runs on the posting builder itself.
-    val docs = Tables.documents(spark, dir)
-    val posting = executed(graft.operators.Retrieval.postingCounts(
+    // With AQE off the plan is the one a multi-split corpus gets; with
+    // it on, the one-split sf0.001 corpus lets graft.plans.InPlace run
+    // the posting aggregate in the scan's task, with no exchange at all.
+    def posting(): Seq[SparkPlan] = executed(graft.operators.Retrieval.postingCounts(
       graft.operators.Retrieval.hitBase(
-        docs, "doc_id", "text", Seq("vector", "stream")), "doc_id"))
+        Tables.documents(spark, dir), "doc_id", "text", Seq("vector", "stream")), "doc_id"))
     def subtree(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap(subtree)
-    assert(posting.exists(s =>
-      s.isInstanceOf[org.apache.spark.sql.execution.FilterExec] &&
-        s.toString.contains("size(") &&
-        subtree(s).exists(_.nodeName.contains("Scan"))),
-      "the query-term hit filter does not sit on the corpus scan")
-    assert(shuffles(posting) == 1, "posting build must be ONE exchange")
+    for ((aqe, exchanges) <- Seq(("false", 1), ("true", 0))) {
+      val plan = withConf("spark.sql.adaptive.enabled", aqe)(posting())
+      assert(plan.exists(s =>
+        s.isInstanceOf[org.apache.spark.sql.execution.FilterExec] &&
+          s.toString.contains("size(") &&
+          subtree(s).exists(_.nodeName.contains("Scan"))),
+        s"AQE $aqe: the query-term hit filter does not sit on the corpus scan")
+      assert(shuffles(plan) == exchanges, s"AQE $aqe: posting build must be $exchanges exchange")
+    }
     // the gate plan: df/N·avgdl sides enter as broadcasts (dfreq hash
     // join + the one-row stats nested loop); nothing ever sort-merges
     val plan = executed(SparkEntry.queries("q_bm25_topk")(spark, dir))
@@ -807,9 +812,10 @@ class PlanAuditSpec extends SparkSpec {
     assert(shuffles(plan) == 0)
   }
 
-  // graft.plans.SortInPlace: a global sort whose input already reads as
-  // one partition drops its range exchange and the exchange's sampling
-  // job; anywhere else the exchange stays.
+  // graft.plans.InPlace: a global sort whose input already reads as one
+  // partition drops its range exchange and the exchange's sampling job,
+  // and an aggregate whose partial half runs in one task drops the hash
+  // exchange between its halves; anywhere else the exchange stays.
 
   private def rangeExchanges(plan: Seq[SparkPlan]): Int = plan.count {
     case e: ShuffleExchangeLike => e.outputPartitioning.isInstanceOf[RangePartitioning]
@@ -824,7 +830,7 @@ class PlanAuditSpec extends SparkSpec {
     path
   }
 
-  test("sort in place: a sort over a one-split scan runs in one job, no range exchange") {
+  test("in place: a sort over a one-split scan runs in one job, no range exchange") {
     import org.apache.spark.sql.functions._
     val df = spark.read.parquet(oneSplit).filter(col("k") =!= 3).orderBy(col("id").desc)
     assert(spark.read.parquet(oneSplit).rdd.getNumPartitions == 1)
@@ -865,7 +871,7 @@ class PlanAuditSpec extends SparkSpec {
   private val underLine = 96000
   private val overLine = 98000
 
-  test("sort in place: a sort over an aggregate just under the one-partition line") {
+  test("in place: a sort over an aggregate just under the one-partition line") {
     val minSize = spark.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
     val (bytes, reads, plan) = groupedSort(underLine)
@@ -875,7 +881,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(jobsDuring(groupedSort(underLine)) == 2)
   }
 
-  test("sort in place: just over the line the aggregate reads two partitions, the exchange stays") {
+  test("in place: just over the line the aggregate reads two partitions, the exchange stays") {
     val (under, _, _) = groupedSort(underLine)
     val (bytes, reads, plan) = groupedSort(overLine)
     assert(bytes > under && bytes < under * 11 / 10, s"$bytes vs $under")
@@ -883,7 +889,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(rangeExchanges(plan) == 1 && !plan.exists(_.isInstanceOf[CoalesceExec]))
   }
 
-  test("sort in place: a Generate or a join below the sort keeps the range exchange") {
+  test("in place: a Generate or a join below the sort keeps the range exchange") {
     import org.apache.spark.sql.functions._
     val t = spark.read.parquet(oneSplit)
     val exploded = t.select(col("id"), explode(array(col("k"), col("k") + 1)).as("e"))
@@ -896,13 +902,83 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("sort in place: with AQE off the range exchange stays") {
+  test("in place: with AQE off the range exchange stays") {
     import org.apache.spark.sql.functions._
     withConf("spark.sql.adaptive.enabled", "false") {
       val df = spark.read.parquet(oneSplit).orderBy(col("id").desc)
       val plan = executed(df)
       assert(!plan.exists(_.isInstanceOf[AdaptiveSparkPlanExec]))
       assert(rangeExchanges(plan) == 1 && !plan.exists(_.isInstanceOf[CoalesceExec]))
+    }
+  }
+
+  private def hashExchanges(plan: Seq[SparkPlan]): Int = plan.count {
+    case e: ShuffleExchangeLike => e.outputPartitioning.isInstanceOf[HashPartitioning]
+    case _ => false
+  }
+
+  /** Rows of `df` by content, in order. */
+  private def rowsOf(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq.map {
+    case b: Array[Byte] => b.toSeq
+    case v => v
+  })
+
+  for (name <- Seq("q_dedup_exact", "q_json_extract")) {
+    test(s"in place: $name runs in one job, no shuffle exchange left") {
+      val df = SparkEntry.queries(name)(spark, dir)
+      assert(jobsDuring(df.collect()) == 1)
+      assert(shuffles(nodes(df)) == 0, nodes(df).mkString("\n"))
+      assert(nodes(df).count(_.isInstanceOf[CoalesceExec]) == 2)
+    }
+  }
+
+  test("in place: q_bpe_train's vocabulary probe runs in one job") {
+    Tables.documents(spark, dir)
+    // the probe is the only job: the merge loop runs on the driver
+    assert(jobsDuring(SparkEntry.queries("q_bpe_train")(spark, dir)) == 1)
+  }
+
+  test("in place: an aggregate over four partitions keeps its hash exchange") {
+    import org.apache.spark.sql.functions._
+    val df = spark.range(0, 2000, 1, 4).select((col("id") % 7).as("k"))
+      .groupBy("k").agg(count(lit(1)).as("n"))
+    val plan = executed(df)
+    assert(hashExchanges(plan) == 1 && !plan.exists(_.isInstanceOf[CoalesceExec]))
+    def sorted(rows: Seq[Seq[Any]]) = rows.sortBy(_.head.asInstanceOf[Long])
+    assert(sorted(rowsOf(df)) ==
+      sorted(withConf("spark.sql.adaptive.enabled", "false")(rowsOf(df))))
+  }
+
+  test("in place: an equi-join of a one-split side and a four-partition side keeps its exchanges") {
+    import org.apache.spark.sql.functions._
+    val four = spark.range(0, 2000, 1, 4).select(col("id"), (col("id") % 5).as("m"))
+    val t = spark.read.parquet(oneSplit)
+    // a bare scan, and an aggregate in place over the scan, as the one-split side
+    val scanJoin = t.join(four, "id").orderBy("id")
+    val aggJoin = t.groupBy("k").agg(count(lit(1)).as("n"))
+      .join(four.select(col("m").as("k"), col("id")), "k").orderBy("id")
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      for (df <- Seq(scanJoin, aggJoin)) {
+        val plan = executed(df)
+        assert(plan.exists(_.isInstanceOf[BaseJoinExec]))
+        assert(hashExchanges(plan) >= 2, plan.mkString("\n"))
+        assert(!plan.exists(_.isInstanceOf[CoalesceExec]))
+        val rows = rowsOf(df)
+        assert(rows.nonEmpty)
+        assert(rows == withConf("spark.sql.adaptive.enabled", "false")(rowsOf(df)))
+      }
+    }
+  }
+
+  test("in place: with AQE off an aggregate over a one-split scan keeps its exchanges") {
+    val on = rowsOf(SparkEntry.queries("q_dedup_exact")(spark, dir))
+    withConf("spark.sql.adaptive.enabled", "false") {
+      val df = SparkEntry.queries("q_dedup_exact")(spark, dir)
+      val plan = executed(df)
+      assert(!plan.exists(_.isInstanceOf[AdaptiveSparkPlanExec]))
+      assert(hashExchanges(plan) == 1 && rangeExchanges(plan) == 1)
+      assert(!plan.exists(_.isInstanceOf[CoalesceExec]))
+      assert(rowsOf(df) == on)
     }
   }
 }
