@@ -3,14 +3,15 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
+/** The query surface — see SURVEY.md §2 for the inventory.
   *
-  * Every entry is a thin wiring of a reusable operator from
-  * `graft.operators` onto the test corpus; `oracleSql` carries the
-  * DuckDB-equivalent SQL for the driver's correctness gate. Numeric
-  * aggregates go through [[graft.operators.Num]] so Spark (parallel,
-  * shuffled) and DuckDB (single-threaded) produce bit-identical
-  * doubles.
+  * Every query is one [[graft.queries.Query]] record: a thin wiring of
+  * a reusable operator from `graft.operators` onto the test corpus,
+  * plus the DuckDB-equivalent SQL of its correctness gate.
+  * `queries` and `oracleSql` are two views of the one record list, so
+  * every query has an oracle by construction. Numeric aggregates go
+  * through [[graft.operators.Num]] so Spark (parallel, shuffled) and
+  * DuckDB (single-threaded) produce bit-identical doubles.
   */
 object SparkEntry {
 
@@ -18,21 +19,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CoreQueries.revenueByNation(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries.all ++ HierarchyQueries.all ++ ExtractionQueries.all ++
-      TextQueries.all ++ DedupQueries.all ++ EventQueries.all ++
-      GeoQueries.all ++ FormatQueries.all ++ EcoQueries.all ++
-      ClassObjectQueries.all ++ MultimodalQueries.all ++ CurationQueries.all ++
-      PipelineQueries.all ++ RetrievalQueries.all ++ BpeQueries.all ++
-      GraphQueries.all ++ GraphQueries.allHits
+  /** Every query record, module by module. */
+  def records: Seq[Query] =
+    CoreQueries.queries ++ HierarchyQueries.queries ++ ExtractionQueries.queries ++
+      TextQueries.queries ++ DedupQueries.queries ++ EventQueries.queries ++
+      GeoQueries.queries ++ FormatQueries.queries ++ EcoQueries.queries ++
+      ClassObjectQueries.queries ++ MultimodalQueries.queries ++ CurationQueries.queries ++
+      PipelineQueries.queries ++ RetrievalQueries.queries ++ BpeQueries.queries ++
+      GraphQueries.queries
 
-  def oracleSql: Map[String, String] =
-    CoreQueries.oracles ++ HierarchyQueries.oracles ++ ExtractionQueries.oracles ++
-      TextQueries.oracles ++ DedupQueries.oracles ++ EventQueries.oracles ++
-      GeoQueries.oracles ++ FormatQueries.oracles ++ EcoQueries.oracles ++
-      ClassObjectQueries.oracles ++ MultimodalQueries.oracles ++ CurationQueries.oracles ++
-      PipelineQueries.oracles ++ RetrievalQueries.oracles ++ BpeQueries.oracles ++
-      GraphQueries.oracles
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    records.map(q => q.name -> q.build).toMap
+
+  def oracleSql: Map[String, String] = records.map(q => q.name -> q.oracle).toMap
 
   /** The session every driver main runs on: the shipped [[GraftSession]]
     * on `local[n]` with n shuffle partitions, n = `SPARK_GRAFT_CPUS` or

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.StructType
   * `events` / `documents` / `embeddings`).
   *
   * Every operator takes a plain `DataFrame`, so these helpers are just
-  * conveniences for wiring `SparkEntry.queries`; production users point
-  * the same operators at any parquet/CSV/JSON source.
+  * conveniences for the build functions of the [[graft.queries.Query]]
+  * records; production users point the same operators at any
+  * parquet/CSV/JSON source.
   *
   * Resolution memo: `spark.read.parquet` resolves its data source on
   * every call (source lookup, path globbing, an `InMemoryFileIndex`

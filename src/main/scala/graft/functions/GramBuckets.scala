@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `conv(substring(md5(substr(text, i, n)), 1, 8), 16, 10) % buckets`
   * over every n-code-point window, with the intercept bucket `buckets`
   * appended — BIT-IDENTICAL to the column-algebra formulation
-  * [[graft.operators.Classifier.charGramBucketsHof]] (spec-held parity;
+  * HashExpressionsSpec's `charGramBucketsHof` (spec-held parity;
   * the DuckDB oracle replays that algebra, so the VALUES are pinned).
   *
   * Why an expression: the algebra pays, per window, a UTF8String

@@ -19,8 +19,8 @@ import org.apache.spark.sql.types._
   * Here the whole ring test is one fused primitive double loop inside
   * whole-stage codegen, reading both vertex arrays in place.
   *
-  * Bit-parity contract with the HOF form (kept in
-  * `operators.Geo.rayCastCrossingsHof`, equality spec-asserted, and
+  * Bit-parity contract with the HOF form (kept as
+  * EventsGeoFormatsSpec's `rayCastCrossingsHof`, equality asserted, and
   * replayed verbatim by the DuckDB gate oracles): edges are walked in
   * vertex order with the closing edge (n−1 → 0) last, and the crossing
   * predicate evaluates `(yi > py) ≠ (yj > py) ∧ px <

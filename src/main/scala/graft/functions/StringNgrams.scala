@@ -14,9 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why an expression: the composed form —
   * `transform(sequence(0, size−n), i → concat_ws(" ", slice(toks,
   * i+1, n)))` — is a CodegenFallback lambda per gram, each allocating
-  * a `slice` copy of its window. Kept as
-  * `Curation.ngramsFromTokensHof`, the bit-equal reference for inputs
-  * with ≥ n tokens (CurationSpec).
+  * a `slice` copy of its window. Kept as CurationSpec's
+  * `ngramsFromTokensHof`, the bit-equal reference for inputs with
+  * ≥ n tokens.
   *
   * TOTAL on short inputs, unlike the HOF form: fewer than n tokens →
   * empty array (the composed `sequence(0, negative)` walks DESCENDING

@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native kernels for the URL canonicalization chain
   * ([[graft.operators.Html.urlNormalize]] / `urlResolve`) — LINE-FOR-
   * LINE transcriptions of the column algebra those functions held
-  * through round 14 (now kept as `urlNormalizeHof` / `urlResolveHof`,
-  * the bit-equal references a fuzzing parity spec pins).
+  * through round 14 (now kept as HtmlSpec's `urlNormalizeHof` /
+  * `urlResolveHof`, the bit-equal references its fuzz test pins).
   *
   * Why kernels: the algebra evaluates ~10 separate `regexp_extract`s
   * per URL — several near-identical patterns re-matching the same

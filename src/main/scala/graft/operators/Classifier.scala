@@ -75,27 +75,13 @@ object Classifier {
       graft.functions.CharGramBuckets
         .word_token_buckets(col(textCol), buckets).as("__barr"))
 
-  /** The pure-column-algebra formulation of the feature array fused in
-    * [[featureFrame]]/[[scoreExpr]] — the bit-equal reference the
-    * parity spec (and the DuckDB oracle's SQL) mirror. */
-  private[graft] def wordBucketsHof(textCol: Column, buckets: Int): Column =
-    concat(
-      array_distinct(transform(
-        split(textCol, " "), t => tokenBucket(t, buckets))),
-      array(lit(buckets)))
-
   /** Margin of one document under integer weights: Σ_{b ∈ barr} w_b —
     * the native codegen'd [[graft.functions.BucketMargin]] kernel (no
     * join, no interpreted lambda; the serve path of a 100 TB corpus is
-    * this expression). [[marginColHof]] is the pure-functions
-    * formulation kept as the bit-equal reference
-    * (HashExpressionsSpec). */
+    * this expression). HashExpressionsSpec's `marginColHof` is the
+    * pure-functions formulation kept as the bit-equal reference. */
   private def marginCol(barr: Column, w: Array[Long]): Column =
     graft.functions.HashFunctions.bucket_margin(barr, w)
-
-  private[graft] def marginColHof(barr: Column, w: Array[Long]): Column =
-    aggregate(barr, lit(0L),
-      (acc, b) => acc + element_at(typedlit(w.toSeq), b + lit(1)))
 
   /** Hard-sigmoid probability at grid scale: (clamp(m+2S,0,4S)) >> 2.
     * The clamped numerator is nonnegative, so the arithmetic shift is
@@ -182,19 +168,6 @@ object Classifier {
     coalesce( // null text carries only the intercept, like the algebra
       graft.functions.CharGramBuckets.char_gram_buckets(textCol, buckets, n),
       typedlit(Seq(buckets)))
-
-  /** The pure-column-algebra formulation of [[charGramBuckets]], kept
-    * as the bit-equal reference the parity spec (and the DuckDB
-    * oracle's SQL) mirror — the fused kernel must match it window for
-    * window, including first-occurrence distinct order. */
-  private[graft] def charGramBucketsHof(
-      textCol: Column, buckets: Int, n: Int): Column =
-    concat(
-      array_distinct(transform(
-        when(length(textCol) >= n, sequence(lit(1), length(textCol) - (n - 1)))
-          .otherwise(typedlit(Seq.empty[Int])),
-        i => tokenBucket(textCol.substr(i, lit(n)), buckets))),
-      array(lit(buckets)))
 
   /** L18 — LEARNED language identification: one-vs-rest hard-sigmoid
     * logistic units over hashed char-n-gram features (the CCNet

@@ -17,27 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** Max element multiplicity of an array — sort + longest-run, no
-    * explode, no shuffle. (An explode→groupBy would shuffle every token
-    * in the corpus; at 100 TB that is the difference between a map-only
-    * scan and a trillion-row exchange.) Default path is the native
-    * codegen'd [[graft.functions.MaxMultiplicity]]; the HOF fold below
-    * is the bit-equal reference implementation (CurationSpec). */
-  private def maxMultiplicity(arr: Column): Column =
-    graft.functions.HashFunctions.max_multiplicity(arr)
-
-  private[graft] def maxMultiplicityHof(arr: Column): Column =
-    aggregate(
-      sort_array(arr),
-      struct(lit("").as("prev"), lit(0).as("run"), lit(0).as("mx")),
-      (acc, w) => {
-        val run = when(w === acc.getField("prev"), acc.getField("run") + 1)
-          .otherwise(lit(1))
-        struct(w.as("prev"), run.as("run"),
-          greatest(acc.getField("mx"), run).as("mx"))
-      },
-      acc => acc.getField("mx"))
-
   /** Gopher-style repetition signals per document (ref quality-filter
     * analogue of `transformers/` per-entity stats; public spec: Rae et
     * al. 2021 "Scaling Language Models" table A1): distinct-word
@@ -48,8 +27,8 @@ object Curation {
     * ([[graft.functions.RepetitionStats]]); the previous composed form
     * needed four CodegenFallback higher-order functions per document
     * (an interpreted lambda per token) plus two sort-based
-    * multiplicity passes. [[repetitionSignalsHof]] keeps that column
-    * algebra as the bit-equal reference (CurationSpec). */
+    * multiplicity passes. CurationSpec keeps that column algebra as
+    * `repetitionSignalsHof`, the bit-equal reference. */
   def repetitionSignals(df: DataFrame, idCols: Seq[String], textCol: String): DataFrame =
     repetitionSignalsUnordered(df, idCols, textCol).orderBy(idCols.map(col): _*)
 
@@ -67,34 +46,6 @@ object Curation {
           when(n >= 2, st.getField("top_bigram").cast("double") / (n - 1))
             .as("top_bigram_share"),
           (st.getField("char_sum").cast("double") / n).as("mean_word_len")): _*)
-  }
-
-  /** The composed column-algebra form of [[repetitionSignals]] — the
-    * bit-equal reference implementation (HOF folds + sort-based
-    * multiplicities), kept for the parity spec. */
-  private[graft] def repetitionSignalsHof(
-      df: DataFrame, idCols: Seq[String], textCol: String): DataFrame = {
-    // Materialize the token array FIRST: lambda bodies referencing the
-    // split(...) expression re-evaluate it once per array element
-    // (lambdas don't cache subexpressions) — an O(L²) re-split per doc.
-    // Behind a bound column reference each signal is one O(L log L) pass.
-    val words = col("__words")
-    val n = size(words)
-    // bigram i = zip(words, words[2:]) — no per-element indexed lookup
-    val bigrams = zip_with(words, slice(words, lit(2), n - 1),
-      (a, b) => when(b.isNotNull, concat_ws(" ", a, b)))
-    df.withColumn("__words", split(col(textCol), " "))
-      .select(
-        idCols.map(col) ++ Seq(
-          n.as("n_words"),
-          (size(array_distinct(words)).cast("double") / n).as("distinct_word_frac"),
-          (maxMultiplicity(words).cast("double") / n).as("top_word_share"),
-          when(n >= 2,
-            maxMultiplicity(filter(bigrams, _.isNotNull)).cast("double") / (n - 1))
-            .as("top_bigram_share"),
-          (aggregate(words, lit(0L), (acc, w) => acc + length(w)).cast("double") / n)
-            .as("mean_word_len")): _*)
-      .orderBy(idCols.map(col): _*)
   }
 
   /** `%08x` md5-prefix threshold for the FRACTIONAL part of an
@@ -178,20 +129,10 @@ object Curation {
     * (engine-portable — hashed variants live in
     * [[graft.functions.HashFunctions]]). Default path is the native
     * codegen'd [[graft.functions.StringNgrams]] (one compiled pass,
-    * total on short inputs); the HOF below is the bit-equal reference
-    * for ≥ n tokens (CurationSpec). */
+    * total on short inputs); CurationSpec's `ngramsFromTokensHof` is
+    * the bit-equal reference for ≥ n tokens. */
   private def ngramsFromTokens(toks: Column, n: Int): Column =
     graft.functions.HashFunctions.string_ngrams(toks, n)
-
-  /** The composed reference form: a CodegenFallback lambda per gram,
-    * each slicing a window copy; `toks` must be a bound column, not a
-    * `split(...)` expression — a lambda body referencing an expression
-    * re-evaluates it per element (O(L²) re-split per doc). Partial on
-    * short inputs (`sequence(0, negative)` descends into a slice(0)
-    * error), so callers pre-filter `size >= n`. */
-  private[graft] def ngramsFromTokensHof(toks: Column, n: Int): Column =
-    transform(sequence(lit(0), size(toks) - n),
-      i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))
 
   /** Corpus-level top-k n-grams by frequency. explode→partial-agg
     * shuffle (map-side combine collapses the heavy hitters before the

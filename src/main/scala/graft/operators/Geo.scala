@@ -115,6 +115,12 @@ object Geo {
       .orderBy(col(zoneCol))
   }
 
+  private def rayCastCrossings(
+      px: Column, py: Column, xs: Column, ys: Column): Column =
+    graft.functions.GraftFunctions.ray_cast_crossings(
+      px.cast("double"), py.cast("double"),
+      xs.cast("array<double>"), ys.cast("array<double>"))
+
   /** P4 — polygon PRE-RASTERIZATION: arbitrary polygons (one row per
     * polygon, ring vertices as parallel `xs`/`ys` arrays) → the grid
     * cells whose CENTER lies inside, by the even-odd ray-cast rule.
@@ -136,35 +142,6 @@ object Geo {
     * edge follow that shared IEEE arithmetic — consistent, if
     * arbitrary, on degenerate inputs.
     */
-  /** The ray-cast crossing count as a composed column fold — the
-    * bit-equal REFERENCE implementation of the native codegen'd
-    * [[graft.functions.RayCastCrossings]] (equality asserted in
-    * EventsGeoFormatsSpec). The HOF `aggregate` is CodegenFallback —
-    * an interpreted lambda per edge per candidate pair — which is why
-    * the operators below default to the native expression. */
-  private[graft] def rayCastCrossingsHof(
-      px: Column, py: Column, xs: Column, ys: Column): Column = {
-    val n = size(xs)
-    aggregate(
-      sequence(lit(0), n - 1), lit(0),
-      (acc, i) => {
-        val xi = element_at(xs, i + 1)
-        val yi = element_at(ys, i + 1)
-        val xj = element_at(xs, pmod(i + 1, n) + 1)
-        val yj = element_at(ys, pmod(i + 1, n) + 1)
-        acc + when(
-          ((yi > py) =!= (yj > py)) &&
-            (px < (xj - xi) * (py - yi) / (yj - yi) + xi),
-          1).otherwise(0)
-      })
-  }
-
-  private def rayCastCrossings(
-      px: Column, py: Column, xs: Column, ys: Column): Column =
-    graft.functions.GraftFunctions.ray_cast_crossings(
-      px.cast("double"), py.cast("double"),
-      xs.cast("array<double>"), ys.cast("array<double>"))
-
   def rasterizePolygons(
       polys: DataFrame, polyKey: String, xsCol: String, ysCol: String,
       cellDeg: Double): DataFrame = {

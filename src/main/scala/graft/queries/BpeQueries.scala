@@ -1,8 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
-
 import graft.Tables
 import graft.operators.Bpe
 
@@ -19,34 +16,6 @@ import graft.operators.Bpe
 object BpeQueries {
 
   private val Merges = 8
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // L6 — learned merge table: any drift in tokenization, pair
-    // counting, tie-breaks or merge application changes some row
-    "q_bpe_train" -> { (s, dir) =>
-      Bpe.trainAsFrame(s, Tables.documents(s, dir), "text", Merges)
-    },
-    // L7 — the vocabulary applied back to the corpus: per-doc subword
-    // token counts under the learned merges (the real token-budget
-    // number a packing/mixing step consumes)
-    "q_bpe_encode" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      Bpe.encode(docs, "doc_id", "text", Bpe.train(docs, "text", Merges))
-    },
-    // L7×Q4 — token-budget packing under REAL tokenizer counts: the Q4
-    // greedy prefix-sum bins sized by the learned BPE subword counts
-    // instead of whitespace words, so shard layouts match what a
-    // trainer consumes. The oracle replays the full training chain +
-    // encode join + the Q4 window verbatim — a drift in either the
-    // merge table or the bin arithmetic moves a boundary.
-    "q_token_pack_bpe" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val counts = Bpe.encodeCounts(
-        docs, "doc_id", "text", Bpe.train(docs, "text", Merges))
-      graft.operators.Curation.packSequences(
-        docs.join(counts, Seq("doc_id")), "source", "doc_id",
-        org.apache.spark.sql.functions.col("n_tokens"), budget = 256L)
-    })
 
   /** One merge round: pair explode → weighted count → deterministic
     * top-1 → double-space replace. `sym[i] || ' ' || sym[i+1]` matches
@@ -88,8 +57,10 @@ object BpeQueries {
            FROM wf),
     ${(1 to k).map(roundCtes).mkString(",\n    ")}"""
 
-  val oracles: Map[String, String] = Map(
-    "q_bpe_train" -> s"""
+  val queries: Seq[Query] = Seq(
+    // L6 — learned merge table: any drift in tokenization, pair
+    // counting, tie-breaks or merge application changes some row
+    Query("q_bpe_train", s"""
       WITH ${trainChain(Merges)}
       SELECT round, lhs, rhs, merged, pair_count FROM (
         ${(1 to Merges).map { t =>
@@ -100,8 +71,13 @@ object BpeQueries {
                cnt AS pair_count
              FROM b$t"""
         }.mkString("\n        UNION ALL\n        ")}
-      ) ORDER BY round""",
-    "q_bpe_encode" -> s"""
+      ) ORDER BY round""", { (s, dir) =>
+      Bpe.trainAsFrame(s, Tables.documents(s, dir), "text", Merges)
+    }),
+    // L7 — the vocabulary applied back to the corpus: per-doc subword
+    // token counts under the learned merges (the real token-budget
+    // number a packing/mixing step consumes)
+    Query("q_bpe_encode", s"""
       WITH ${trainChain(Merges)},
       enc AS (SELECT w,
                 CAST(len(string_split(trim(repr, ' '), '  ')) AS INT) AS nsym
@@ -112,10 +88,17 @@ object BpeQueries {
              CAST(COUNT(*) AS BIGINT) AS n_words,
              CAST(SUM(nsym) AS BIGINT) AS n_tokens
       FROM dtok JOIN enc USING (w)
-      GROUP BY doc_id ORDER BY doc_id""",
-    // the q_bpe_encode chain for the per-doc subword counts, then the
-    // q_token_pack window recipe with those counts as sz
-    "q_token_pack_bpe" -> s"""
+      GROUP BY doc_id ORDER BY doc_id""", { (s, dir) =>
+      val docs = Tables.documents(s, dir)
+      Bpe.encode(docs, "doc_id", "text", Bpe.train(docs, "text", Merges))
+    }),
+    // L7×Q4 — token-budget packing under REAL tokenizer counts: the Q4
+    // greedy prefix-sum bins sized by the learned BPE subword counts
+    // instead of whitespace words, so shard layouts match what a
+    // trainer consumes. The oracle replays the full training chain +
+    // encode join + the Q4 window verbatim — a drift in either the
+    // merge table or the bin arithmetic moves a boundary.
+    Query("q_token_pack_bpe", s"""
       WITH ${trainChain(Merges)},
       enc AS (SELECT w,
                 CAST(len(string_split(trim(repr, ' '), '  ')) AS INT) AS nsym
@@ -127,12 +110,13 @@ object BpeQueries {
         FROM dtok JOIN enc USING (w) GROUP BY doc_id),
       d AS (
         SELECT dd.source, dd.doc_id, c.sz
-        FROM documents dd JOIN cnt c USING (doc_id)),
-      b AS (
-        SELECT source, doc_id, sz,
-               CAST(FLOOR(COALESCE(SUM(sz) OVER (PARTITION BY source ORDER BY doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 256.0) AS BIGINT) AS bin
-        FROM d)
-      SELECT source, bin, COUNT(*) AS n_docs, CAST(SUM(sz) AS BIGINT) AS tokens
-      FROM b GROUP BY source, bin ORDER BY source, bin""")
+        FROM documents dd JOIN cnt c USING (doc_id)),${OracleSql.packBins}""", { (s, dir) =>
+      val docs = Tables.documents(s, dir)
+      val counts = Bpe.encodeCounts(
+        docs, "doc_id", "text", Bpe.train(docs, "text", Merges))
+      graft.operators.Curation.packSequences(
+        docs.join(counts, Seq("doc_id")), "source", "doc_id",
+        org.apache.spark.sql.functions.col("n_tokens"), budget = 256L)
+    }),
+  )
 }

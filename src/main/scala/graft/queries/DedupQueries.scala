@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators._
@@ -13,6 +13,8 @@ import graft.operators._
   */
 object DedupQueries {
 
+  import OracleSql.shingles3
+
   /** Per-JVM uniqueness token for scratch index paths (see
     * q_ann_ivf_index): stable within a session so repeat runs hit the
     * probe-only path, unique across processes so concurrent harness
@@ -20,460 +22,6 @@ object DedupQueries {
   private lazy val runToken: String =
     java.lang.Long.toHexString(
       java.util.UUID.randomUUID().getMostSignificantBits)
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dedup_exact" -> { (s, dir) =>
-      Dedup.exactDuplicates(Tables.documents(s, dir), "doc_id", "text")
-    },
-    // J2 gate — recall + estimate-accuracy against EXACT shingle
-    // jaccard: the emitted rows are the exact near-dup pairs (jaccard
-    // ≥ 0.5, computed by the independently-oracled inverted-index
-    // shape) INNER-joined with the LSH candidate set, so a banding
-    // regression that misses a true pair deletes a row (hash fail),
-    // and a broken signature flips est_ok (observed |est−exact| max
-    // 0.036 at the verify scales; 16 bands × 4 rows ⇒ P(miss) <
-    // 0.2% per pair at j ≥ 0.8, deterministic hashes so coverage is
-    // fixed, verified complete at sf0.001/sf0.01/sf0.1 — 256/256
-    // exact pairs surfaced at the largest scale).
-    "q_dedup_minhash" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      // Both sides consume the SAME distinct-shingle arrays: checkpoint
-      // the shingle frame ONCE (text parsed/hashed a single time), then
-      // the banding side and the exact pair miner read it. The
-      // interior per-operator orderBys are skipped — the join destroys
-      // order and the gate sorts once at the end.
-      // ONE checkpoint, not two: the full-corpus signature frame is
-      // never materialized. Banding consumes signatures STREAMING off
-      // the shingle checkpoint (one fused minhash+band pass, nothing
-      // retained), and the estimate recomputes signatures only for the
-      // ids surviving the exact∩candidate intersection — a few hundred
-      // docs semi-joined off the same checkpoint — so the 0.5 KB/doc
-      // corpus-wide signature materialization the earlier shape paid
-      // (and its two corpus-sized estimate joins) is gone.
-      val shf = Dedup.shingleFrame(docs, "doc_id", "text", 3)
-        .localCheckpoint(true)
-      val sigStream = shf
-        .select(col("doc_id"), Dedup.minhashSignature(col("sh"), 64).as("sig"))
-      val cand = Dedup.minhashCandidatePairsFromSig(sigStream, 64, 16, 1000)
-      val exact = Dedup.ngramJaccardFromShingles(
-        shf.withColumn("block", lit(1)), minJaccard = 0.5)
-      // intersect ids FIRST and pin the tiny survivor set (so the
-      // id-extraction below can't re-run the whole mining pipeline)
-      val surv = exact.join(cand, Seq("id_a", "id_b")).localCheckpoint(true)
-      val survIds = surv
-        .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
-        .distinct()
-      val sigSurv = shf.join(survIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), Dedup.minhashSignature(col("sh"), 64).as("sig"))
-      Dedup.estimateJaccard(surv, sigSurv, 64)
-        .select(
-          col("id_a"), col("id_b"), col("jaccard"),
-          (abs(col("est_jaccard") - col("jaccard")) <= 0.2).cast("int").as("est_ok"))
-        .orderBy("id_a", "id_b")
-    },
-    // J3 gate — the engine-portable md5 fingerprint variant (same
-    // pigeonhole miner as the production xxhash path, shared code):
-    // DuckDB recomputes every 64-bit fingerprint bit-for-bit via
-    // md5_number_lower and enumerates ALL pairs with hamming ≤ 3, so
-    // the gate proves both fingerprint math AND the chunk-bucketing
-    // recall guarantee (a missed pair = missing row = hash fail).
-    "q_dedup_simhash" -> { (s, dir) =>
-      Dedup.simhashPairsMd5(Tables.documents(s, dir), "doc_id", "text")
-    },
-    "q_ngram_jaccard" -> { (s, dir) =>
-      Dedup.ngramJaccardPairs(
-        Tables.documents(s, dir), "doc_id", "text", "source", n = 3, minJaccard = 0.1)
-    },
-    // J14 gate — ROLLING-SHARD dedup against a PERSISTED minhash
-    // index (the production ingestion path: index cost paid once per
-    // corpus, per-shard probe cost ∝ shard, the corpus never
-    // rescanned — IncrementalDedupSpec proves the probe survives the
-    // corpus source being DELETED). Two successive shards probe the
-    // SAME build; the oracle replays both shards against the corpus
-    // with an UNBLOCKED exact inverted-gram index, so an LSH recall
-    // miss or a stale-index defect deletes a row and fails the hash
-    // (the J2/Q17 contract, applied to the index artifact).
-    "q_dedup_incremental" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val m = pmod(col("doc_id"), lit(5L))
-      val idx = s"/tmp/graft-mhidx-${java.lang.Math.abs(dir.hashCode)}"
-      // ensure, not write: the index is a persisted artifact built
-      // ONCE and amortized across probes (the production shape); a
-      // repeated run of this query re-probes the artifact instead of
-      // re-charging the one-time build — correctness is indifferent
-      // (fingerprint-guarded; a fresh build is byte-equivalent)
-      Dedup.minhashIndexEnsure(docs.where(m >= 2), "doc_id", "text", idx)
-      Dedup.dedupShardAgainstIndex(docs.where(m === 0), "doc_id", "text", idx)
-        .unionAll(
-          Dedup.dedupShardAgainstIndex(docs.where(m === 1), "doc_id", "text", idx))
-        .orderBy("doc_id")
-    },
-    // J16 gate — right-to-be-forgotten on the persisted index: build,
-    // DELETE the doc_id≡7 (mod 10) slice (tombstones — segments
-    // untouched), probe shard 0 with tombstones LIVE, compact (physical
-    // purge + tombstone clear), probe shard 1 post-compaction. Both
-    // probes sit under ONE hash against an oracle whose corpus side
-    // simply excludes the deleted docs — so a tombstone leak (deleted
-    // doc still matching), an over-delete, or a compaction that loses
-    // live rows all fail the hash.
-    "q_dedup_forget" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val m = pmod(col("doc_id"), lit(5L))
-      val idx = s"/tmp/graft-mhforget-${java.lang.Math.abs(dir.hashCode)}"
-      graft.Prof.timed("forget write")(
-        Dedup.minhashIndexWrite(docs.where(m >= 2), "doc_id", "text", idx))
-      graft.Prof.timed("forget delete")(Dedup.minhashIndexDelete(
-        docs.where(pmod(col("doc_id"), lit(10L)) === 7), "doc_id", idx))
-      // probe-0 (tombstones LIVE, pre-compaction) OVERLAPS the
-      // compaction rewrite (guide §2.6): both only READ the current
-      // tables — the rewrite lands in sibling tmp dirs — and the
-      // mutating commit (renames + tombstone clear) waits for the
-      // probe, so results are identical to the sequential lifecycle by
-      // construction (the probed files are immutable until commit).
-      // The probe's plan builds on THIS thread first: its recover()
-      // must not race the prepare's tmp write, and its eager shingle
-      // checkpoint job is part of the probe phase either way.
-      val probe0 = Dedup.dedupShardAgainstIndex(
-        docs.where(m === 0), "doc_id", "text", idx)
-      val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-      try {
-        val f0fut = pool.submit(
-          new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
-            def call(): org.apache.spark.sql.DataFrame =
-              graft.Prof.timed("forget probe0")(probe0.localCheckpoint(true))
-          })
-        val commit = graft.Prof.timed("forget compact prepare")(
-          Dedup.minhashIndexCompactPrepare(s, idx))
-        val f0 = f0fut.get()
-        graft.Prof.timed("forget compact commit")(commit())
-        f0.unionAll(
-            Dedup.dedupShardAgainstIndex(docs.where(m === 1), "doc_id", "text", idx))
-          .orderBy("doc_id")
-      } finally pool.shutdown()
-    },
-    // J14b gate — the FULL rolling-ingest loop under one hash: probe
-    // shard 0, anti-join its flagged docs to keep the novel ones,
-    // APPEND those into the index (minhashIndexAppend — the existing
-    // segments are never rewritten), then probe shard 1, which must
-    // now match both the original corpus AND shard 0's accepted docs.
-    // The oracle replays round 1 against corpus ∪ (shard-0 novel), so
-    // an append that fails to land, a stale occupancy reconcile, or an
-    // LSH recall miss in EITHER round fails the hash.
-    "q_dedup_rolling" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val m = pmod(col("doc_id"), lit(5L))
-      val idx = s"/tmp/graft-mhroll-${java.lang.Math.abs(dir.hashCode)}"
-      Dedup.minhashIndexWrite(docs.where(m >= 2), "doc_id", "text", idx)
-      val shard0 = docs.where(m === 0)
-      // flagged BEFORE the append mutates the artifact (eager)
-      val f0 = Dedup.dedupShardAgainstIndex(shard0, "doc_id", "text", idx)
-        .localCheckpoint(true)
-      Dedup.minhashIndexAppend(
-        shard0.join(f0.select("doc_id"), Seq("doc_id"), "left_anti"),
-        "doc_id", "text", idx)
-      f0.unionAll(
-          Dedup.dedupShardAgainstIndex(docs.where(m === 1), "doc_id", "text", idx))
-        .orderBy("doc_id")
-    },
-    // J17a gate — distributed prefix-doubling SUFFIX-ARRAY ranks: the
-    // oracle unrolls the same 8 doubling rounds as dense_rank CTEs, so
-    // a defect in any round's pairing/shift/re-rank (or in the
-    // distributed dense-rank building block itself) changes integer
-    // ranks and the hash fails. Early engine convergence is gated too:
-    // the engine stops when ranks go all-distinct, the oracle never
-    // does — equality holds only because all-distinct is a fixpoint.
-    "q_suffix_array" -> { (s, dir) =>
-      Dedup.suffixRanks(Tables.documents(s, dir), "doc_id", "text", rounds = 8)
-        .orderBy("doc_id", "pos")
-    },
-    // J17b gate — variable-length duplicated spans (Lee et al. 2021):
-    // maximal per-doc regions covered by cross-doc duplicated 8-token
-    // windows, with true extents and text. The oracle replays the
-    // window decision and the gaps-and-islands merge, so a defect in
-    // flagging, the break condition, or the slice rebuild changes rows.
-    "q_span_dedup_var" -> { (s, dir) =>
-      Dedup.spanDedupVar(Tables.documents(s, dir), "doc_id", "text", minLen = 8)
-    },
-    // J10 gate — substring-granularity dedup (Lee et al. 2021): every
-    // duplicated 8-token span with doc/occurrence counts; the oracle
-    // regroups the same windows directly, so a windowing or counting
-    // defect changes rows.
-    "q_span_dedup" -> { (s, dir) =>
-      Dedup.spanDedup(Tables.documents(s, dir), "doc_id", "text", spanLen = 8)
-    },
-    // J12 gate — the span-dedup APPLY: every document rewritten with
-    // non-first occurrences of cross-doc duplicated 8-token spans cut
-    // out. Row-level gate on the rebuilt text itself, so a defect in
-    // flagging, first-occurrence choice, coverage expansion, or token
-    // reassembly changes a string and the hash fails.
-    "q_span_scrub" -> { (s, dir) =>
-      Dedup.spanScrub(Tables.documents(s, dir), "doc_id", "text", spanLen = 8)
-    },
-    // J12-var gate — VARIABLE-LENGTH span scrub (the Lee et al.
-    // endpoint a pipeline ships): non-first duplicated-window coverage
-    // cut, first-occurrence coverage protected as contiguous regions.
-    // Row-level gate on the full rebuilt text, so a defect in flagging,
-    // the first-occurrence choice, the protection anti-join, or token
-    // reassembly changes a string and the hash fails.
-    "q_span_scrub_var" -> { (s, dir) =>
-      Dedup.spanScrubVar(Tables.documents(s, dir), "doc_id", "text", minLen = 8)
-    },
-    // J17c gate — per-doc longest duplicated substring from the
-    // suffix-rank ladder (rank-pair-halving LCP, equi-join adjacency).
-    // The oracle recomputes adjacency LCPs DIRECTLY on suffix token
-    // lists (an independent formulation — no halving), so a defect in
-    // any ladder level, the halving advance, the candidate max, or the
-    // deterministic source tie-break changes a row.
-    "q_longest_dup" -> { (s, dir) =>
-      Dedup.longestDuplicate(Tables.documents(s, dir), "doc_id", "text", rounds = 8)
-    },
-    "q_dedup_embedding" -> { (s, dir) =>
-      Dedup.embeddingNearDup(
-        Tables.embeddings(s, dir), "vec_id", "embedding", "label", threshold = 0.4)
-    },
-    // K6 gate — fixed-point k-means, VERBATIM: every step
-    // (√n-derived-stride init — see autoSqrtStride — quantization to
-    // the 2^20 grid, integer-L2 argmin assignment with lowest-ordinal
-    // ties, elementwise mean update with empty-cell carry-over,
-    // reassignment, exact integer inertia) replays in the oracle —
-    // all cross-row arithmetic is integer, so there is no fold-order
-    // rounding to hide behind; a defect in any stage moves points
-    // across cells or shifts a centroid coordinate and the hash fails.
-    "q_kmeans" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      Clustering.kmeans(
-        emb, "vec_id", "embedding", stride = autoSqrtStride(emb), iters = 2)
-    },
-    // K6b gate — cluster-balanced sampling: the k-means replay feeds
-    // the q_stratified_sample window recipe with cells as strata; the
-    // md5 sample order is engine-portable, so rows match verbatim.
-    "q_cluster_sample" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      Clustering.clusterSample(
-        emb, "vec_id", "embedding",
-        stride = autoSqrtStride(emb), iters = 2, frac = 0.25)
-    },
-    // J9 gate — SemDeDup (cluster-blocked embedding near-dup): the
-    // oracle replays the k-means fit, blocks pairs by the SAME cells,
-    // and recomputes cosine with the identical sequential fold — so
-    // both the clustering and the within-cell pair mining sit under
-    // one hash gate. Same pair semantics as q_dedup_embedding, with
-    // the learned cells standing in for the labels.
-    "q_semantic_dedup" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      Clustering.semanticDedup(
-        emb, "vec_id", "embedding",
-        stride = autoSqrtStride(emb), iters = 2, threshold = 0.4)
-    },
-    // J6 — cluster the union of two dedup signals (exact text hash +
-    // sorted-word fingerprint) into connected components; multi-hop
-    // components arise when a doc shares text with one doc and word-set
-    // with another.
-    "q_dedup_cluster" -> { (s, dir) =>
-      clusterDocs(Tables.documents(s, dir))
-        .select(col("node").as("doc_id"), col("component"))
-        .orderBy("doc_id")
-    },
-    // J11 gate — the cleaned corpus itself: the J6 clustering applied
-    // (non-canonical members dropped, representatives + singletons
-    // kept); a row-level gate on the SURVIVOR set, so a clustering or
-    // anti-join defect adds/removes whole documents.
-    "q_dedup_apply" -> { (s, dir) =>
-      // one cached 4-column scan feeds BOTH the edge build (doc_id,
-      // text) and the survivor anti-join (doc_id, source, n_chars) —
-      // without it the corpus is scanned twice
-      val docs = Tables.documents(s, dir)
-        .select("doc_id", "text", "source", "n_chars").persist()
-      Dedup.keepCanonical(docs, clusterDocs(docs), "doc_id")
-        .select("doc_id", "source", "n_chars")
-        .orderBy("doc_id")
-    },
-    "q_ann_cosine" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      Similarity.bruteForceTopK(
-        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding", k = 10)
-    },
-    // K8 gate — int8 scalar-quantized retrieval: ONE mergeable
-    // VecMinMax stats pass (exchange = two dim-length arrays), codes
-    // from one IEEE multiply+divide per element (float→double widening
-    // exact on both engines), then the ENTIRE search in the integer
-    // domain — squared-L2 code distances and ranks are exact, so the
-    // oracle replays
-    // the stats, the code formula, and the integer top-k verbatim; a
-    // drift in min/max merging, the clamp, or the quantizer moves a
-    // code and the hash fails.
-    "q_ann_int8" -> { (s, dir) =>
-      Similarity.int8TopK(
-        Tables.embeddings(s, dir), "vec_id", "embedding",
-        col("vec_id") < 8, k = 10)
-    },
-    // K7 gate — FILTERED ANN (metadata-constrained retrieval, the
-    // vector-DB "filtered search" pattern): the corpus predicate
-    // composes with the top-k and pushes into the parquet scan
-    // (PlanAuditSpec asserts PushedFilters), so non-matching vectors
-    // never leave the reader — at 100 TB the selectivity multiplies
-    // directly into scan cost. Exact by construction → brute-force
-    // oracle with the same WHERE.
-    "q_ann_filtered" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      Similarity.bruteForceTopK(
-        emb.where(col("label") === 3), emb.where(col("vec_id") < 8),
-        "vec_id", "embedding", k = 10)
-    },
-    // K2 gate — VERBATIM: the multi-table LSH top-k result itself is
-    // hash-compared against a DuckDB oracle that replays the ENTIRE
-    // pipeline — sign-pattern bucketing against the same plane matrix
-    // (emitted as literals from planeWeights, the single shared
-    // constant), any-table candidate union, exact cosine, rank — with
-    // identical IEEE arithmetic. The round-6 recall-flag gate was
-    // self-referential (DuckDB pinned `1`); now a defect anywhere in
-    // SignBuckets, the bucket join or the ranking changes rows.
-    // Recall vs brute force stays spec-asserted (DedupSpec).
-    "q_ann_lsh" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      Similarity.lshTopK(
-        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",
-        k = 10, nPlanes = 4, dim = 64, nTables = 16)
-    },
-    // K3 gate — the IVF result IS the exact top-k (recall 1.0,
-    // asserted by reusing the brute-force SQL oracle verbatim): the
-    // hardest possible signal — any regression in assignment, probing,
-    // ranking or degenerate-vector handling breaks the row hash.
-    // SCALE-PROOF by construction, not by tuning: the stride is
-    // derived from max(vec_id) so the codebook never exceeds nProbe
-    // cells, making the probe exhaustive — every corpus vector is in
-    // some probed cell, so the candidate set equals the full corpus at
-    // ANY verify scale (stride 97 at sf0.01 was exact only because 11
-    // cells < 8 probes held at that one scale). The production-shaped
-    // config (√N-sized codebook, partial probing) is exercised by
-    // SimilaritySpec's recall assertions instead.
-    "q_ann_ivf" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
-      val nProbe = 8
-      Similarity.ivfTopK(
-        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",
-        k = 10, centroidStride = maxId / nProbe + 1, nProbe = nProbe)
-    },
-    // K3b gate — SUB-EXHAUSTIVE probing behind the driver gate (the
-    // round-6 exhaustive-by-construction entry above proves exactness;
-    // this one puts the PARTIAL-probe code path itself under hash
-    // verification): the √n-derived stride keeps ≥ ~20 cells at every
-    // verify scale while nProbe stays 4, and the DuckDB oracle replays the whole
-    // production pipeline — stride sampling, string-ordinal codebook,
-    // L2 normalization, argmax-dot assignment (ties → lowest ordinal),
-    // nProbe nearest-cell selection, exact cosine rank — with
-    // identical IEEE arithmetic, so any probing defect changes rows.
-    "q_ann_ivf_probe" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      Similarity.ivfTopK(
-        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",
-        k = 10, centroidStride = autoSqrtStride(emb), nProbe = 4)
-    },
-    // K3c gate — the SAME sub-exhaustive pipeline probed through a
-    // PERSISTED partitionBy(cell) parquet index (write once, prune
-    // unprobed cell partitions on every batch — the index-reuse
-    // shape); identical arithmetic ⇒ the ivf-probe replay oracle
-    // gates it verbatim.
-    "q_ann_ivf_index" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      Similarity.ivfIndexedTopK(
-        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",
-        k = 10, centroidStride = autoSqrtStride(emb), nProbe = 4,
-        // per-JVM token: concurrent harness runs over the same data
-        // dir must not collide on a shared /tmp path; within one JVM
-        // repeat runs REUSE the index (probe-only — the amortized
-        // shape the operator exists for)
-        indexDir = s"/tmp/graft-ivf-index-$runToken-${java.lang.Math.abs(dir.hashCode)}")
-    },
-    // K3d gate — the IVF index LIFECYCLE (round-12 verdict ask #6): a
-    // real embedding store takes right-to-be-forgotten deletes and
-    // rolling appends, not just one build. The gate builds the K3c
-    // index fresh, tombstones every vec_id ≡ 3 (mod 17), appends a
-    // disjoint shard of shifted copies (assigned with the STORED
-    // codebook — an ingest never re-trains the coarse quantizer),
-    // COMPACTS (duplicate-collapse + physical purge + rename swap),
-    // and probes. The oracle replays the K3b pipeline semantically —
-    // full-corpus codebook (forget does not un-train centroids),
-    // appended vectors assigned under it, deleted slice excluded — so
-    // a tombstone leak, an append misassignment, or a compaction that
-    // changes verdicts moves a row. Probe-before-compact equality is
-    // spec-held (IvfLifecycleSpec).
-    "q_ann_ivf_forget" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val idx = s"/tmp/graft-ivf-forget-$runToken-${java.lang.Math.abs(dir.hashCode)}"
-      // two independent-phase overlaps (guide §2.6); the lifecycle
-      // ORDER the gate verifies is untouched — every overlapped pair
-      // is mutation-disjoint, so results match the sequential runs:
-      //  - maxId (a corpus agg feeding the appended shard's id shift)
-      //    is independent of the index BUILD — it runs alongside it;
-      //  - APPEND (reads stored codebook, appends under cells/) and
-      //    DELETE (writes tombstones/) touch disjoint artifact parts —
-      //    both strictly after build (which clears stale tombstones)
-      //    and strictly before compact.
-      val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-      try {
-        val maxIdFut = pool.submit(
-          new java.util.concurrent.Callable[Long] {
-            def call(): Long = emb.agg(max(col("vec_id"))).head.getLong(0)
-          })
-        graft.Prof.timed("ivf-forget build")(Similarity.buildIvfIndex(
-          emb, "vec_id", "embedding", autoSqrtStride(emb), idx))
-        // appended shard: ids shifted past the corpus, vectors = the
-        // first 16 corpus vectors with every component +0.25 — novel
-        // rows the probe must FIND, deterministic for the oracle
-        val maxId = maxIdFut.get()
-        val delFut = pool.submit(new java.lang.Runnable {
-          def run(): Unit = graft.Prof.timed("ivf-forget delete")(
-            Similarity.ivfIndexDelete(
-              emb.where(col("vec_id") % 17 === 3).select(col("vec_id")),
-              "vec_id", idx))
-        })
-        graft.Prof.timed("ivf-forget append")(Similarity.ivfIndexAppend(
-          emb.where(col("vec_id") < 16).select(
-            (col("vec_id") + maxId + 1).as("vec_id"),
-            transform(col("embedding"), x => x + lit(0.25f)).as("embedding")),
-          "vec_id", "embedding", idx))
-        delFut.get()
-        graft.Prof.timed("ivf-forget compact")(Similarity.ivfIndexCompact(s, idx))
-        graft.Prof.timed("ivf-forget probe")(Similarity.probeIvfIndex(
-          s, emb.where(col("vec_id") < 8), "vec_id", "embedding",
-          k = 10, nProbe = 4, indexDir = idx))
-      } finally pool.shutdown()
-    },
-    // K4 gate — product-quantization ANN, VERBATIM: the DuckDB oracle
-    // replays the whole compressed-domain pipeline — stride-sampled
-    // subspace codebook, argmin-L2 encode (ties → lowest ordinal),
-    // per-query distance tables, ordered ADC sums — with identical
-    // IEEE arithmetic, so a defect in encode, table build or scoring
-    // changes rows. The stride-1 exactness property (ADC == exact
-    // squared-L2 ranking when quantization error is zero) is
-    // spec-held in PqSpec.
-    "q_ann_pq" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      // size-derived stride: the codebook must stay O(1) as the corpus
-      // grows (a fixed stride samples ∝ n and trips the loud 256-cap —
-      // found by the sf1 scale run). floor 16 keeps sf≤0.1 output
-      // byte-identical; the oracle replays the same GREATEST/CEIL.
-      Similarity.pqTopK(
-        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",
-        k = 10, m = 8, centroidStride = autoStride(emb))
-    },
-    // K5 gate — IVF-PQ composition, VERBATIM: cells prune (stride-16
-    // coarse codebook, nProbe 4 — a strict subset at every verify
-    // scale), PQ codes score the survivors. The oracle stitches the
-    // q_ann_ivf_probe replay (assignment + probing) to the q_ann_pq
-    // replay (encode + ordered ADC sums), restricted to probed
-    // (query, cell) pairs — the full production pipeline under one
-    // hash gate.
-    "q_ann_ivfpq" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val stride = autoStride(emb) // same scale posture as q_ann_pq
-      Similarity.ivfPqTopK(
-        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",
-        k = 10, m = 8, cellStride = stride, pqStride = stride, nProbe = 4)
-    },
-  )
 
   /** Double-precision cosine with the exact evaluation order of
     * [[graft.operators.VectorOps.cosineD]] (sequential fold ≡ DuckDB
@@ -575,6 +123,17 @@ object DedupQueries {
   private lazy val kmCte: String = kmeansCteSql(kmIters)
   private val kmCb: String = s"cb$kmIters"
 
+  /** The k-means fit, then each vector's final cell under the last
+    * codebook (`asg`). */
+  private lazy val kmAssignCtes: String = s"""
+      WITH $kmCte,
+      asg AS (
+        SELECT vec_id, cell FROM (
+          SELECT e.vec_id, c.cell,
+            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+              ${qdistSql("e.qv", "c.cv")} ASC, c.cell ASC) AS r
+          FROM emb e CROSS JOIN $kmCb c) WHERE r = 1)"""
+
   /** The 8 prefix-doubling rounds unrolled as dense_rank CTEs — the
     * literal single-node replay of [[graft.operators.Dedup.suffixRanks]]
     * (the engine's early all-distinct exit is a fixpoint, so running
@@ -603,249 +162,35 @@ object DedupQueries {
       SELECT doc_id, pos, r AS srank FROM r8 ORDER BY doc_id, pos"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "q_suffix_array" -> suffixArrayOracleSql,
-    "q_span_dedup_var" -> """
-      WITH base AS (SELECT doc_id, string_split(text, ' ') AS a FROM documents),
-      occ AS (
-        SELECT doc_id, unnest(range(len(a) - 7)) AS pos,
-               unnest(list_transform(range(len(a) - 7),
-                 i -> array_to_string(a[i + 1:i + 8], ' '))) AS span
-        FROM base WHERE len(a) >= 8),
-      dup AS (
-        SELECT span FROM (SELECT span, doc_id FROM occ GROUP BY span, doc_id)
-        GROUP BY span HAVING COUNT(*) >= 2),
-      fl AS (SELECT doc_id, pos FROM occ JOIN dup USING (span)),
-      isl AS (
-        SELECT doc_id, pos,
-               CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 8
-                 THEN 1 ELSE 0 END AS brk
-        FROM fl),
-      grp AS (
-        SELECT doc_id, pos,
-               SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                 ROWS UNBOUNDED PRECEDING) AS g
-        FROM isl),
-      sp AS (
-        SELECT doc_id, MIN(pos) AS span_start,
-               MAX(pos) + 8 - MIN(pos) AS span_len
-        FROM grp GROUP BY doc_id, g)
-      SELECT s.doc_id, CAST(span_start AS BIGINT) AS span_start,
-             CAST(span_len AS BIGINT) AS span_len,
-             array_to_string(b.a[span_start + 1:span_start + span_len], ' ') AS span_text
-      FROM sp s JOIN base b USING (doc_id)
-      ORDER BY doc_id, span_start""",
-    "q_dedup_exact" -> """
-      SELECT md5(text) AS text_hash, COUNT(*) AS n_docs, MIN(doc_id) AS keep_id
-      FROM documents GROUP BY 1 ORDER BY 1""",
-    "q_dedup_cluster" -> s"""
-      WITH RECURSIVE $clusterCteSql
-      SELECT node AS doc_id, MIN(lab) AS component
-      FROM reach GROUP BY node ORDER BY doc_id""",
-    // survivors = everything except non-canonical cluster members
-    "q_dedup_apply" -> s"""
-      WITH RECURSIVE $clusterCteSql,
-      cc AS (SELECT node, MIN(lab) AS component FROM reach GROUP BY node)
-      SELECT d.doc_id, d.source, d.n_chars FROM documents d
-      WHERE d.doc_id NOT IN (SELECT node FROM cc WHERE node <> component)
-      ORDER BY d.doc_id""",
-    // brute-force recomputation of the md5 simhash (votes from
-    // md5_number_lower bits — the last 8 digest bytes little-endian,
-    // matching the Spark side's byte-reversed hex parse) and of the
-    // FULL hamming-≤3 pair list via an unblocked self-join: completeness
-    // of the Spark side's pigeonhole bucketing is verified against an
-    // oracle that cannot miss a pair.
-    "q_dedup_simhash" -> """
-      WITH t AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-      bits AS (
-        SELECT doc_id, r.b,
-               SUM(CASE WHEN (md5_number_lower(tok) >> r.b) & 1 = 1
-                        THEN 1 ELSE -1 END) AS v
-        FROM t, range(64) r(b) GROUP BY 1, 2),
-      fp AS (
-        SELECT doc_id,
-               CAST(SUM(CASE WHEN v > 0 AND b >= 32 THEN POWER(2, b - 32) ELSE 0 END) AS BIGINT) AS hi,
-               CAST(SUM(CASE WHEN v > 0 AND b < 32 THEN POWER(2, b) ELSE 0 END) AS BIGINT) AS lo
-        FROM bits GROUP BY 1),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) AS INT) AS hamming
-        FROM fp a JOIN fp b ON a.doc_id < b.doc_id)
-      SELECT id_a, id_b, hamming FROM pairs
-      WHERE hamming <= 3 ORDER BY id_a, id_b""",
-    // exact global near-dup pairs (inverted index, no block) + the
-    // estimate-accuracy flag the Spark side computes from its minhash
-    // signatures — see the q_dedup_minhash query comment.
-    "q_dedup_minhash" -> """
-      WITH s AS (
-        SELECT doc_id,
-          list_distinct(list_transform(generate_series(1, len(toks) - 2),
-            i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        WHERE len(toks) >= 3),
-      ex AS (SELECT doc_id, len(sh) AS n_sh, unnest(sh) AS gram FROM s),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common,
-               MAX(a.n_sh) AS na, MAX(b.n_sh) AS nb
-        FROM ex a JOIN ex b ON a.gram = b.gram AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
-      SELECT id_a, id_b,
-             CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE) AS jaccard,
-             CAST(1 AS INT) AS est_ok
-      FROM pairs
-      WHERE CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE) >= 0.5
-      ORDER BY id_a, id_b""",
-    // inverted-index form (same shape as the Spark plan): pairs come
-    // from matching shingles only — the naive block-cross-join +
-    // per-pair list_intersect oracle took 55 s at sf0.1
-    "q_ngram_jaccard" -> """
-      WITH s AS (
-        SELECT doc_id, source,
-          list_distinct(list_transform(generate_series(1, len(toks) - 2),
-            i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        FROM (SELECT doc_id, source, string_split(text, ' ') AS toks FROM documents)
-        WHERE len(toks) >= 3),
-      ex AS (SELECT doc_id, source, len(sh) AS n_sh, unnest(sh) AS gram FROM s),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common,
-               MAX(a.n_sh) AS na, MAX(b.n_sh) AS nb
-        FROM ex a JOIN ex b ON a.source = b.source AND a.gram = b.gram
-                           AND a.doc_id < b.doc_id
-        GROUP BY 1, 2)
-      SELECT id_a, id_b,
-             CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE) AS jaccard
-      FROM pairs
-      WHERE CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE) >= 0.1
-      ORDER BY id_a, id_b""",
-    // unblocked exact cross-join of BOTH shards vs the corpus slice —
-    // deliberately stronger than the index's banding (a recall miss
-    // fails the hash); jaccard and the (max j, min id) best-pick
-    // replay the operator's arithmetic exactly
-    "q_dedup_incremental" -> """
-      WITH g0 AS (
-        SELECT doc_id, doc_id % 5 AS m,
-          list_distinct(list_transform(generate_series(1, len(toks) - 2),
-            i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        WHERE len(toks) >= 3),
-      g AS (SELECT doc_id, m, len(sh) AS n, unnest(sh) AS gram FROM g0),
-      t AS (SELECT * FROM g WHERE m <= 1),
-      b AS (SELECT * FROM g WHERE m >= 2),
-      pairs AS (
-        SELECT t.doc_id AS doc_id, b.doc_id AS match_id,
-               COUNT(*) AS c, ANY_VALUE(t.n) AS nt, ANY_VALUE(b.n) AS nb
-        FROM t JOIN b USING (gram) GROUP BY 1, 2),
-      scored AS (
-        SELECT doc_id, match_id,
-               CAST(c AS DOUBLE) / CAST(nt + nb - c AS DOUBLE) AS jaccard
-        FROM pairs
-        WHERE CAST(c AS DOUBLE) / CAST(nt + nb - c AS DOUBLE) >= 0.5)
-      SELECT doc_id,
-             -(MAX(struct_pack(j := jaccard, nmid := -match_id)).nmid) AS match_id,
-             MAX(struct_pack(j := jaccard, nmid := -match_id)).j AS jaccard
-      FROM scored GROUP BY doc_id ORDER BY doc_id""",
-    // the q_dedup_incremental replay with the deleted slice excluded
-    // from the corpus side — deletion must be COMPLETE (a tombstone
-    // leak adds a row) and EXACT (an over-delete removes one)
-    "q_dedup_forget" -> """
-      WITH g0 AS (
-        SELECT doc_id, doc_id % 5 AS m,
-          list_distinct(list_transform(generate_series(1, len(toks) - 2),
-            i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        WHERE len(toks) >= 3),
-      g AS (SELECT doc_id, m, len(sh) AS n, unnest(sh) AS gram FROM g0),
-      t AS (SELECT * FROM g WHERE m <= 1),
-      b AS (SELECT * FROM g WHERE m >= 2 AND doc_id % 10 <> 7),
-      pairs AS (
-        SELECT t.doc_id AS doc_id, b.doc_id AS match_id,
-               COUNT(*) AS c, ANY_VALUE(t.n) AS nt, ANY_VALUE(b.n) AS nb
-        FROM t JOIN b USING (gram) GROUP BY 1, 2),
-      scored AS (
-        SELECT doc_id, match_id,
-               CAST(c AS DOUBLE) / CAST(nt + nb - c AS DOUBLE) AS jaccard
-        FROM pairs
-        WHERE CAST(c AS DOUBLE) / CAST(nt + nb - c AS DOUBLE) >= 0.5)
-      SELECT doc_id,
-             -(MAX(struct_pack(j := jaccard, nmid := -match_id)).nmid) AS match_id,
-             MAX(struct_pack(j := jaccard, nmid := -match_id)).j AS jaccard
-      FROM scored GROUP BY doc_id ORDER BY doc_id""",
-    // round-0 replay exactly as q_dedup_incremental; round 1's corpus
-    // side additionally admits shard-0 docs NOT flagged in round 0 —
-    // the accepted-and-appended set — so the append must actually land
-    "q_dedup_rolling" -> """
-      WITH g0 AS (
-        SELECT doc_id, doc_id % 5 AS m,
-          list_distinct(list_transform(generate_series(1, len(toks) - 2),
-            i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        WHERE len(toks) >= 3),
-      g AS (SELECT doc_id, m, len(sh) AS n, unnest(sh) AS gram FROM g0),
-      p0 AS (
-        SELECT t.doc_id AS doc_id, b.doc_id AS match_id,
-               COUNT(*) AS c, ANY_VALUE(t.n) AS nt, ANY_VALUE(b.n) AS nb
-        FROM (SELECT * FROM g WHERE m = 0) t
-        JOIN (SELECT * FROM g WHERE m >= 2) b USING (gram) GROUP BY 1, 2),
-      s0 AS (
-        SELECT doc_id, match_id,
-               CAST(c AS DOUBLE) / CAST(nt + nb - c AS DOUBLE) AS jaccard
-        FROM p0
-        WHERE CAST(c AS DOUBLE) / CAST(nt + nb - c AS DOUBLE) >= 0.5),
-      r0 AS (
-        SELECT doc_id,
-               -(MAX(struct_pack(j := jaccard, nmid := -match_id)).nmid) AS match_id,
-               MAX(struct_pack(j := jaccard, nmid := -match_id)).j AS jaccard
-        FROM s0 GROUP BY doc_id),
-      p1 AS (
-        SELECT t.doc_id AS doc_id, b.doc_id AS match_id,
-               COUNT(*) AS c, ANY_VALUE(t.n) AS nt, ANY_VALUE(b.n) AS nb
-        FROM (SELECT * FROM g WHERE m = 1) t
-        JOIN (SELECT * FROM g WHERE m >= 2
-                OR (m = 0 AND doc_id NOT IN (SELECT doc_id FROM r0))) b
-        USING (gram) GROUP BY 1, 2),
-      s1 AS (
-        SELECT doc_id, match_id,
-               CAST(c AS DOUBLE) / CAST(nt + nb - c AS DOUBLE) AS jaccard
-        FROM p1
-        WHERE CAST(c AS DOUBLE) / CAST(nt + nb - c AS DOUBLE) >= 0.5),
-      r1 AS (
-        SELECT doc_id,
-               -(MAX(struct_pack(j := jaccard, nmid := -match_id)).nmid) AS match_id,
-               MAX(struct_pack(j := jaccard, nmid := -match_id)).j AS jaccard
-        FROM s1 GROUP BY doc_id)
-      SELECT * FROM r0 UNION ALL SELECT * FROM r1 ORDER BY doc_id""",
-    "q_span_dedup" -> """
-      WITH w AS (
-        SELECT doc_id,
-               unnest(list_transform(range(1, len(string_split(text, ' ')) - 6),
-                 i -> array_to_string(string_split(text, ' ')[i:i + 7], ' '))) AS span
-        FROM documents WHERE len(string_split(text, ' ')) >= 8)
-      SELECT span, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-             COUNT(*) AS n_occ
-      FROM w GROUP BY span HAVING COUNT(DISTINCT doc_id) >= 2
-      ORDER BY span""",
-    "q_span_scrub" -> """
-      WITH base AS (
-        SELECT doc_id, string_split(text, ' ') AS a FROM documents),
-      occ AS (
+  /** The J12 span replay after `base`(doc_id, a): every 8-token window
+    * with its position (`occ`), windows in ≥ 2 docs (`dup`), their
+    * occurrences (`flagged`) and each window's first occurrence (`fo`).
+    * `mat` is " MATERIALIZED" or "". */
+  private def spanFirstCtes(mat: String): String = s"""
+      occ AS$mat (
         SELECT doc_id,
                unnest(range(len(a) - 7)) AS pos,
                unnest(list_transform(range(len(a) - 7),
                  i -> array_to_string(a[i + 1:i + 8], ' '))) AS span
         FROM base WHERE len(a) >= 8),
-      dup AS (
+      dup AS$mat (
         SELECT span FROM (SELECT span, doc_id FROM occ GROUP BY span, doc_id)
         GROUP BY span HAVING COUNT(*) >= 2),
-      flagged AS (SELECT o.* FROM occ o JOIN dup USING (span)),
-      fo AS (
+      flagged AS$mat (SELECT o.* FROM occ o JOIN dup USING (span)),
+      fo AS$mat (
         SELECT span, MIN(struct_pack(d := doc_id, p := pos)) AS f
-        FROM flagged GROUP BY span),
-      cover AS (
+        FROM flagged GROUP BY span)"""
+
+  /** Token positions covered by the non-first occurrences. */
+  private val nonFirstCover: String = """
         SELECT DISTINCT doc_id, tpos FROM (
           SELECT fl.doc_id, unnest(range(fl.pos, fl.pos + 8)) AS tpos
           FROM flagged fl JOIN fo USING (span)
-          WHERE NOT (fl.doc_id = fo.f.d AND fl.pos = fo.f.p))),
+          WHERE NOT (fl.doc_id = fo.f.d AND fl.pos = fo.f.p))"""
+
+  /** The scrubbed rebuild: each doc's tokens (`toks`) outside `cover`,
+    * re-joined (`kept`), with kept/removed counts. */
+  private val spanRebuildSql: String = """
       toks AS (
         SELECT doc_id, unnest(a) AS tok, unnest(range(len(a))) AS tpos
         FROM base),
@@ -861,64 +206,10 @@ object DedupQueries {
              CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept,
              CAST(len(b.a) - COALESCE(k.n_kept, 0) AS BIGINT) AS n_removed
       FROM base b LEFT JOIN kept k USING (doc_id)
-      ORDER BY doc_id""",
-    // the q_span_scrub replay plus the protection subtraction: covered
-    // positions of FIRST occurrences survive, everything else flagged
-    // is cut — see Dedup.spanScrubVar
-    "q_span_scrub_var" -> """
-      WITH base AS MATERIALIZED (
-        SELECT doc_id, string_split(text, ' ') AS a FROM documents),
-      occ AS MATERIALIZED (
-        SELECT doc_id,
-               unnest(range(len(a) - 7)) AS pos,
-               unnest(list_transform(range(len(a) - 7),
-                 i -> array_to_string(a[i + 1:i + 8], ' '))) AS span
-        FROM base WHERE len(a) >= 8),
-      dup AS MATERIALIZED (
-        SELECT span FROM (SELECT span, doc_id FROM occ GROUP BY span, doc_id)
-        GROUP BY span HAVING COUNT(*) >= 2),
-      flagged AS MATERIALIZED (SELECT o.* FROM occ o JOIN dup USING (span)),
-      fo AS MATERIALIZED (
-        SELECT span, MIN(struct_pack(d := doc_id, p := pos)) AS f
-        FROM flagged GROUP BY span),
-      prot AS MATERIALIZED (
-        SELECT DISTINCT doc_id, tpos FROM (
-          SELECT f.d AS doc_id, unnest(range(f.p, f.p + 8)) AS tpos FROM fo)),
-      cand AS MATERIALIZED (
-        SELECT DISTINCT doc_id, tpos FROM (
-          SELECT fl.doc_id, unnest(range(fl.pos, fl.pos + 8)) AS tpos
-          FROM flagged fl JOIN fo USING (span)
-          WHERE NOT (fl.doc_id = fo.f.d AND fl.pos = fo.f.p))),
-      cover AS MATERIALIZED (
-        SELECT c.doc_id, c.tpos FROM cand c LEFT JOIN prot p
-          ON p.doc_id = c.doc_id AND p.tpos = c.tpos
-        WHERE p.doc_id IS NULL),
-      toks AS (
-        SELECT doc_id, unnest(a) AS tok, unnest(range(len(a))) AS tpos
-        FROM base),
-      kept AS (
-        SELECT t.doc_id,
-               string_agg(t.tok, ' ' ORDER BY t.tpos) AS text_clean,
-               COUNT(*) AS n_kept
-        FROM toks t LEFT JOIN cover c
-          ON t.doc_id = c.doc_id AND t.tpos = c.tpos
-        WHERE c.doc_id IS NULL GROUP BY t.doc_id)
-      SELECT b.doc_id,
-             COALESCE(k.text_clean, '') AS text_clean,
-             CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept,
-             CAST(len(b.a) - COALESCE(k.n_kept, 0) AS BIGINT) AS n_removed
-      FROM base b LEFT JOIN kept k USING (doc_id)
-      ORDER BY doc_id""",
-    // independent formulation: suffixes as token LISTS, dense rank by
-    // list order (= the engine's iterated-rank order), adjacency LCP by
-    // direct elementwise prefix comparison — no rank-pair halving
-    // anywhere, so the two sides share no algorithmic structure.
-    // MATERIALIZED on every multiply-referenced CTE: rk feeds four
-    // consumers and pp2 two — inlined, the optimizer replicates the
-    // full suffix-list sort and the list-zip adjacency pipeline per
-    // reference and the replay exhausts memory at sf0.1 (the same
-    // exponential-inlining lesson as the suffix-array oracle)
-    "q_longest_dup" -> """
+      ORDER BY doc_id"""
+
+  /** The q_longest_dup oracle, shared with q_pipeline_longest_dup. */
+  private[queries] val longestDupOracle: String = """
       WITH base AS MATERIALIZED (
         SELECT doc_id, string_split(text, ' ') AS a FROM documents),
       suf AS (
@@ -988,18 +279,403 @@ object DedupQueries {
                b.a[CAST(-g.b.np + 1 AS INT):CAST(-g.b.np + g.b.l AS INT)],
                ' ') AS dup_text
       FROM agg g JOIN base b USING (doc_id)
-      ORDER BY doc_id""",
-    "q_dedup_embedding" -> s"""
+      ORDER BY doc_id"""
+
+  /** The q_span_scrub_var oracle, which q_pipeline_scrub projects. */
+  private[queries] val spanScrubVarOracle: String = s"""
+      WITH base AS MATERIALIZED (
+        SELECT doc_id, string_split(text, ' ') AS a FROM documents),${spanFirstCtes(" MATERIALIZED")},
+      prot AS MATERIALIZED (
+        SELECT DISTINCT doc_id, tpos FROM (
+          SELECT f.d AS doc_id, unnest(range(f.p, f.p + 8)) AS tpos FROM fo)),
+      cand AS MATERIALIZED ($nonFirstCover),
+      cover AS MATERIALIZED (
+        SELECT c.doc_id, c.tpos FROM cand c LEFT JOIN prot p
+          ON p.doc_id = c.doc_id AND p.tpos = c.tpos
+        WHERE p.doc_id IS NULL),$spanRebuildSql"""
+
+  /** The J14 shard replay: each doc's 3-shingles with its shard `m` =
+    * doc_id mod 5 (`g0`), unnested to one row per gram (`g`). */
+  private val shardGramCtes: String = s"""
+      WITH g0 AS (
+        SELECT doc_id, doc_id % 5 AS m,
+          $shingles3 AS sh
+        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+        WHERE len(toks) >= 3),
+      g AS (SELECT doc_id, m, len(sh) AS n, unnest(sh) AS gram FROM g0),"""
+
+  /** Shared-gram counts of a `shard` side (aliased t) against a `corpus`
+    * side (aliased b) as CTE `pairs`, and the pairs with jaccard ≥ 0.5
+    * as CTE `scored`: the unblocked exact form of the index probe. */
+  private def matchCtes(
+      pairs: String, scored: String, shard: String, corpus: String): String = s"""
+      $pairs AS (
+        SELECT t.doc_id AS doc_id, b.doc_id AS match_id,
+               COUNT(*) AS c, ANY_VALUE(t.n) AS nt, ANY_VALUE(b.n) AS nb
+        FROM $shard
+        JOIN $corpus USING (gram) GROUP BY 1, 2),
+      $scored AS (
+        SELECT doc_id, match_id,
+               CAST(c AS DOUBLE) / CAST(nt + nb - c AS DOUBLE) AS jaccard
+        FROM $pairs
+        WHERE CAST(c AS DOUBLE) / CAST(nt + nb - c AS DOUBLE) >= 0.5)"""
+
+  /** The probe's best match per doc over `scored`: max jaccard, then the
+    * min match_id. */
+  private def bestMatch(scored: String): String = s"""
+        SELECT doc_id,
+               -(MAX(struct_pack(j := jaccard, nmid := -match_id)).nmid) AS match_id,
+               MAX(struct_pack(j := jaccard, nmid := -match_id)).j AS jaccard
+        FROM $scored GROUP BY doc_id"""
+
+  val queries: Seq[Query] = Seq(
+    Query("q_dedup_exact", """
+      SELECT md5(text) AS text_hash, COUNT(*) AS n_docs, MIN(doc_id) AS keep_id
+      FROM documents GROUP BY 1 ORDER BY 1""", { (s, dir) =>
+      Dedup.exactDuplicates(Tables.documents(s, dir), "doc_id", "text")
+    }),
+    // J2 gate — recall + estimate-accuracy against EXACT shingle
+    // jaccard: the emitted rows are the exact near-dup pairs (jaccard
+    // ≥ 0.5, computed by the independently-oracled inverted-index
+    // shape) INNER-joined with the LSH candidate set, so a banding
+    // regression that misses a true pair deletes a row (hash fail),
+    // and a broken signature flips est_ok (observed |est−exact| max
+    // 0.036 at the verify scales; 16 bands × 4 rows ⇒ P(miss) <
+    // 0.2% per pair at j ≥ 0.8, deterministic hashes so coverage is
+    // fixed, verified complete at sf0.001/sf0.01/sf0.1 — 256/256
+    // exact pairs surfaced at the largest scale).
+    Query("q_dedup_minhash", s"""
+      WITH s AS (
+        SELECT doc_id,
+          $shingles3 AS sh
+        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+        WHERE len(toks) >= 3),
+      ex AS (SELECT doc_id, len(sh) AS n_sh, unnest(sh) AS gram FROM s),
+      pairs AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common,
+               MAX(a.n_sh) AS na, MAX(b.n_sh) AS nb
+        FROM ex a JOIN ex b ON a.gram = b.gram AND a.doc_id < b.doc_id
+        GROUP BY 1, 2)
+      SELECT id_a, id_b,
+             CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE) AS jaccard,
+             CAST(1 AS INT) AS est_ok
+      FROM pairs
+      WHERE CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE) >= 0.5
+      ORDER BY id_a, id_b""", { (s, dir) =>
+      val docs = Tables.documents(s, dir)
+      // Both sides consume the SAME distinct-shingle arrays: checkpoint
+      // the shingle frame ONCE (text parsed/hashed a single time), then
+      // the banding side and the exact pair miner read it. The
+      // interior per-operator orderBys are skipped — the join destroys
+      // order and the gate sorts once at the end.
+      // ONE checkpoint, not two: the full-corpus signature frame is
+      // never materialized. Banding consumes signatures STREAMING off
+      // the shingle checkpoint (one fused minhash+band pass, nothing
+      // retained), and the estimate recomputes signatures only for the
+      // ids surviving the exact∩candidate intersection — a few hundred
+      // docs semi-joined off the same checkpoint — so the 0.5 KB/doc
+      // corpus-wide signature materialization the earlier shape paid
+      // (and its two corpus-sized estimate joins) is gone.
+      val shf = Dedup.shingleFrame(docs, "doc_id", "text", 3)
+        .localCheckpoint(true)
+      val sigStream = shf
+        .select(col("doc_id"), Dedup.minhashSignature(col("sh"), 64).as("sig"))
+      val cand = Dedup.minhashCandidatePairsFromSig(sigStream, 64, 16, 1000)
+      val exact = Dedup.ngramJaccardFromShingles(
+        shf.withColumn("block", lit(1)), minJaccard = 0.5)
+      // intersect ids FIRST and pin the tiny survivor set (so the
+      // id-extraction below can't re-run the whole mining pipeline)
+      val surv = exact.join(cand, Seq("id_a", "id_b")).localCheckpoint(true)
+      val survIds = surv
+        .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
+        .distinct()
+      val sigSurv = shf.join(survIds, Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), Dedup.minhashSignature(col("sh"), 64).as("sig"))
+      Dedup.estimateJaccard(surv, sigSurv, 64)
+        .select(
+          col("id_a"), col("id_b"), col("jaccard"),
+          (abs(col("est_jaccard") - col("jaccard")) <= 0.2).cast("int").as("est_ok"))
+        .orderBy("id_a", "id_b")
+    }),
+    // J3 gate — the engine-portable md5 fingerprint variant (same
+    // pigeonhole miner as the production xxhash path, shared code):
+    // DuckDB recomputes every 64-bit fingerprint bit-for-bit via
+    // md5_number_lower and enumerates ALL pairs with hamming ≤ 3, so
+    // the gate proves both fingerprint math AND the chunk-bucketing
+    // recall guarantee (a missed pair = missing row = hash fail).
+    // brute-force recomputation of the md5 simhash (votes from
+    // md5_number_lower bits — the last 8 digest bytes little-endian,
+    // matching the Spark side's byte-reversed hex parse) and of the
+    // FULL hamming-≤3 pair list via an unblocked self-join: completeness
+    // of the Spark side's pigeonhole bucketing is verified against an
+    // oracle that cannot miss a pair.
+    Query("q_dedup_simhash", """
+      WITH t AS (
+        SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
+      bits AS (
+        SELECT doc_id, r.b,
+               SUM(CASE WHEN (md5_number_lower(tok) >> r.b) & 1 = 1
+                        THEN 1 ELSE -1 END) AS v
+        FROM t, range(64) r(b) GROUP BY 1, 2),
+      fp AS (
+        SELECT doc_id,
+               CAST(SUM(CASE WHEN v > 0 AND b >= 32 THEN POWER(2, b - 32) ELSE 0 END) AS BIGINT) AS hi,
+               CAST(SUM(CASE WHEN v > 0 AND b < 32 THEN POWER(2, b) ELSE 0 END) AS BIGINT) AS lo
+        FROM bits GROUP BY 1),
+      pairs AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) AS INT) AS hamming
+        FROM fp a JOIN fp b ON a.doc_id < b.doc_id)
+      SELECT id_a, id_b, hamming FROM pairs
+      WHERE hamming <= 3 ORDER BY id_a, id_b""", { (s, dir) =>
+      Dedup.simhashPairsMd5(Tables.documents(s, dir), "doc_id", "text")
+    }),
+    // inverted-index form (same shape as the Spark plan): pairs come
+    // from matching shingles only — the naive block-cross-join +
+    // per-pair list_intersect oracle took 55 s at sf0.1
+    Query("q_ngram_jaccard", s"""
+      WITH s AS (
+        SELECT doc_id, source,
+          $shingles3 AS sh
+        FROM (SELECT doc_id, source, string_split(text, ' ') AS toks FROM documents)
+        WHERE len(toks) >= 3),
+      ex AS (SELECT doc_id, source, len(sh) AS n_sh, unnest(sh) AS gram FROM s),
+      pairs AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_common,
+               MAX(a.n_sh) AS na, MAX(b.n_sh) AS nb
+        FROM ex a JOIN ex b ON a.source = b.source AND a.gram = b.gram
+                           AND a.doc_id < b.doc_id
+        GROUP BY 1, 2)
+      SELECT id_a, id_b,
+             CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE) AS jaccard
+      FROM pairs
+      WHERE CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE) >= 0.1
+      ORDER BY id_a, id_b""", { (s, dir) =>
+      Dedup.ngramJaccardPairs(
+        Tables.documents(s, dir), "doc_id", "text", "source", n = 3, minJaccard = 0.1)
+    }),
+    // J14 gate — ROLLING-SHARD dedup against a PERSISTED minhash
+    // index (the production ingestion path: index cost paid once per
+    // corpus, per-shard probe cost ∝ shard, the corpus never
+    // rescanned — IncrementalDedupSpec proves the probe survives the
+    // corpus source being DELETED). Two successive shards probe the
+    // SAME build; the oracle replays both shards against the corpus
+    // with an UNBLOCKED exact inverted-gram index, so an LSH recall
+    // miss or a stale-index defect deletes a row and fails the hash
+    // (the J2/Q17 contract, applied to the index artifact).
+    Query("q_dedup_incremental", s"""$shardGramCtes
+      t AS (SELECT * FROM g WHERE m <= 1),
+      b AS (SELECT * FROM g WHERE m >= 2),${matchCtes("pairs", "scored", "t", "b")}
+      ${bestMatch("scored")} ORDER BY doc_id""", { (s, dir) =>
+      val docs = Tables.documents(s, dir)
+      val m = pmod(col("doc_id"), lit(5L))
+      val idx = Query.scratchPath("mhidx", dir)
+      // ensure, not write: the index is a persisted artifact built
+      // ONCE and amortized across probes (the production shape); a
+      // repeated run of this query re-probes the artifact instead of
+      // re-charging the one-time build — correctness is indifferent
+      // (fingerprint-guarded; a fresh build is byte-equivalent)
+      Dedup.minhashIndexEnsure(docs.where(m >= 2), "doc_id", "text", idx)
+      Dedup.dedupShardAgainstIndex(docs.where(m === 0), "doc_id", "text", idx)
+        .unionAll(
+          Dedup.dedupShardAgainstIndex(docs.where(m === 1), "doc_id", "text", idx))
+        .orderBy("doc_id")
+    }),
+    // J16 gate — right-to-be-forgotten on the persisted index: build,
+    // DELETE the doc_id≡7 (mod 10) slice (tombstones — segments
+    // untouched), probe shard 0 with tombstones LIVE, compact (physical
+    // purge + tombstone clear), probe shard 1 post-compaction. Both
+    // probes sit under ONE hash against an oracle whose corpus side
+    // simply excludes the deleted docs — so a tombstone leak (deleted
+    // doc still matching), an over-delete, or a compaction that loses
+    // live rows all fail the hash.
+    Query("q_dedup_forget", s"""$shardGramCtes
+      t AS (SELECT * FROM g WHERE m <= 1),
+      b AS (SELECT * FROM g WHERE m >= 2 AND doc_id % 10 <> 7),${matchCtes("pairs", "scored", "t", "b")}
+      ${bestMatch("scored")} ORDER BY doc_id""", { (s, dir) =>
+      val docs = Tables.documents(s, dir)
+      val m = pmod(col("doc_id"), lit(5L))
+      val idx = Query.scratchPath("mhforget", dir)
+      graft.Prof.timed("forget write")(
+        Dedup.minhashIndexWrite(docs.where(m >= 2), "doc_id", "text", idx))
+      graft.Prof.timed("forget delete")(Dedup.minhashIndexDelete(
+        docs.where(pmod(col("doc_id"), lit(10L)) === 7), "doc_id", idx))
+      // probe-0 (tombstones LIVE, pre-compaction) OVERLAPS the
+      // compaction rewrite (guide §2.6): both only READ the current
+      // tables — the rewrite lands in sibling tmp dirs — and the
+      // mutating commit (renames + tombstone clear) waits for the
+      // probe, so results are identical to the sequential lifecycle by
+      // construction (the probed files are immutable until commit).
+      // The probe's plan builds on THIS thread first: its recover()
+      // must not race the prepare's tmp write, and its eager shingle
+      // checkpoint job is part of the probe phase either way.
+      val probe0 = Dedup.dedupShardAgainstIndex(
+        docs.where(m === 0), "doc_id", "text", idx)
+      val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+      try {
+        val f0fut = pool.submit(
+          new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
+            def call(): org.apache.spark.sql.DataFrame =
+              graft.Prof.timed("forget probe0")(probe0.localCheckpoint(true))
+          })
+        val commit = graft.Prof.timed("forget compact prepare")(
+          Dedup.minhashIndexCompactPrepare(s, idx))
+        val f0 = f0fut.get()
+        graft.Prof.timed("forget compact commit")(commit())
+        f0.unionAll(
+            Dedup.dedupShardAgainstIndex(docs.where(m === 1), "doc_id", "text", idx))
+          .orderBy("doc_id")
+      } finally pool.shutdown()
+    }),
+    // J14b gate — the FULL rolling-ingest loop under one hash: probe
+    // shard 0, anti-join its flagged docs to keep the novel ones,
+    // APPEND those into the index (minhashIndexAppend — the existing
+    // segments are never rewritten), then probe shard 1, which must
+    // now match both the original corpus AND shard 0's accepted docs.
+    // The oracle replays round 1 against corpus ∪ (shard-0 novel), so
+    // an append that fails to land, a stale occupancy reconcile, or an
+    // LSH recall miss in EITHER round fails the hash.
+    Query("q_dedup_rolling", s"""$shardGramCtes${matchCtes("p0", "s0",
+        "(SELECT * FROM g WHERE m = 0) t", "(SELECT * FROM g WHERE m >= 2) b")},
+      r0 AS (${bestMatch("s0")}),${matchCtes("p1", "s1", "(SELECT * FROM g WHERE m = 1) t",
+        "(SELECT * FROM g WHERE m >= 2 OR (m = 0 AND doc_id NOT IN (SELECT doc_id FROM r0))) b")},
+      r1 AS (${bestMatch("s1")})
+      SELECT * FROM r0 UNION ALL SELECT * FROM r1 ORDER BY doc_id""", { (s, dir) =>
+      val docs = Tables.documents(s, dir)
+      val m = pmod(col("doc_id"), lit(5L))
+      val idx = Query.scratchPath("mhroll", dir)
+      Dedup.minhashIndexWrite(docs.where(m >= 2), "doc_id", "text", idx)
+      val shard0 = docs.where(m === 0)
+      // flagged BEFORE the append mutates the artifact (eager)
+      val f0 = Dedup.dedupShardAgainstIndex(shard0, "doc_id", "text", idx)
+        .localCheckpoint(true)
+      Dedup.minhashIndexAppend(
+        shard0.join(f0.select("doc_id"), Seq("doc_id"), "left_anti"),
+        "doc_id", "text", idx)
+      f0.unionAll(
+          Dedup.dedupShardAgainstIndex(docs.where(m === 1), "doc_id", "text", idx))
+        .orderBy("doc_id")
+    }),
+    // J17a gate — distributed prefix-doubling SUFFIX-ARRAY ranks: the
+    // oracle unrolls the same 8 doubling rounds as dense_rank CTEs, so
+    // a defect in any round's pairing/shift/re-rank (or in the
+    // distributed dense-rank building block itself) changes integer
+    // ranks and the hash fails. Early engine convergence is gated too:
+    // the engine stops when ranks go all-distinct, the oracle never
+    // does — equality holds only because all-distinct is a fixpoint.
+    Query("q_suffix_array", suffixArrayOracleSql, { (s, dir) =>
+      Dedup.suffixRanks(Tables.documents(s, dir), "doc_id", "text", rounds = 8)
+        .orderBy("doc_id", "pos")
+    }),
+    // J17b gate — variable-length duplicated spans (Lee et al. 2021):
+    // maximal per-doc regions covered by cross-doc duplicated 8-token
+    // windows, with true extents and text. The oracle replays the
+    // window decision and the gaps-and-islands merge, so a defect in
+    // flagging, the break condition, or the slice rebuild changes rows.
+    Query("q_span_dedup_var", """
+      WITH base AS (SELECT doc_id, string_split(text, ' ') AS a FROM documents),
+      occ AS (
+        SELECT doc_id, unnest(range(len(a) - 7)) AS pos,
+               unnest(list_transform(range(len(a) - 7),
+                 i -> array_to_string(a[i + 1:i + 8], ' '))) AS span
+        FROM base WHERE len(a) >= 8),
+      dup AS (
+        SELECT span FROM (SELECT span, doc_id FROM occ GROUP BY span, doc_id)
+        GROUP BY span HAVING COUNT(*) >= 2),
+      fl AS (SELECT doc_id, pos FROM occ JOIN dup USING (span)),
+      isl AS (
+        SELECT doc_id, pos,
+               CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 8
+                 THEN 1 ELSE 0 END AS brk
+        FROM fl),
+      grp AS (
+        SELECT doc_id, pos,
+               SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos
+                 ROWS UNBOUNDED PRECEDING) AS g
+        FROM isl),
+      sp AS (
+        SELECT doc_id, MIN(pos) AS span_start,
+               MAX(pos) + 8 - MIN(pos) AS span_len
+        FROM grp GROUP BY doc_id, g)
+      SELECT s.doc_id, CAST(span_start AS BIGINT) AS span_start,
+             CAST(span_len AS BIGINT) AS span_len,
+             array_to_string(b.a[span_start + 1:span_start + span_len], ' ') AS span_text
+      FROM sp s JOIN base b USING (doc_id)
+      ORDER BY doc_id, span_start""", { (s, dir) =>
+      Dedup.spanDedupVar(Tables.documents(s, dir), "doc_id", "text", minLen = 8)
+    }),
+    // J10 gate — substring-granularity dedup (Lee et al. 2021): every
+    // duplicated 8-token span with doc/occurrence counts; the oracle
+    // regroups the same windows directly, so a windowing or counting
+    // defect changes rows.
+    Query("q_span_dedup", """
+      WITH w AS (
+        SELECT doc_id,
+               unnest(list_transform(range(1, len(string_split(text, ' ')) - 6),
+                 i -> array_to_string(string_split(text, ' ')[i:i + 7], ' '))) AS span
+        FROM documents WHERE len(string_split(text, ' ')) >= 8)
+      SELECT span, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
+             COUNT(*) AS n_occ
+      FROM w GROUP BY span HAVING COUNT(DISTINCT doc_id) >= 2
+      ORDER BY span""", { (s, dir) =>
+      Dedup.spanDedup(Tables.documents(s, dir), "doc_id", "text", spanLen = 8)
+    }),
+    // J12 gate — the span-dedup APPLY: every document rewritten with
+    // non-first occurrences of cross-doc duplicated 8-token spans cut
+    // out. Row-level gate on the rebuilt text itself, so a defect in
+    // flagging, first-occurrence choice, coverage expansion, or token
+    // reassembly changes a string and the hash fails.
+    Query("q_span_scrub", s"""
+      WITH base AS (
+        SELECT doc_id, string_split(text, ' ') AS a FROM documents),${spanFirstCtes("")},
+      cover AS ($nonFirstCover),$spanRebuildSql""", { (s, dir) =>
+      Dedup.spanScrub(Tables.documents(s, dir), "doc_id", "text", spanLen = 8)
+    }),
+    // J12-var gate — VARIABLE-LENGTH span scrub (the Lee et al.
+    // endpoint a pipeline ships): non-first duplicated-window coverage
+    // cut, first-occurrence coverage protected as contiguous regions.
+    // Row-level gate on the full rebuilt text, so a defect in flagging,
+    // the first-occurrence choice, the protection anti-join, or token
+    // reassembly changes a string and the hash fails.
+    Query("q_span_scrub_var", spanScrubVarOracle, { (s, dir) =>
+      Dedup.spanScrubVar(Tables.documents(s, dir), "doc_id", "text", minLen = 8)
+    }),
+    // J17c gate — per-doc longest duplicated substring from the
+    // suffix-rank ladder (rank-pair-halving LCP, equi-join adjacency).
+    // The oracle recomputes adjacency LCPs DIRECTLY on suffix token
+    // lists (an independent formulation — no halving), so a defect in
+    // any ladder level, the halving advance, the candidate max, or the
+    // deterministic source tie-break changes a row.
+    // independent formulation: suffixes as token LISTS, dense rank by
+    // list order (= the engine's iterated-rank order), adjacency LCP by
+    // direct elementwise prefix comparison — no rank-pair halving
+    // anywhere, so the two sides share no algorithmic structure.
+    // MATERIALIZED on every multiply-referenced CTE: rk feeds four
+    // consumers and pp2 two — inlined, the optimizer replicates the
+    // full suffix-list sort and the list-zip adjacency pipeline per
+    // reference and the replay exhausts memory at sf0.1 (the same
+    // exponential-inlining lesson as the suffix-array oracle)
+    Query("q_longest_dup", longestDupOracle, { (s, dir) =>
+      Dedup.longestDuplicate(Tables.documents(s, dir), "doc_id", "text", rounds = 8)
+    }),
+    Query("q_dedup_embedding", s"""
       SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         ${cosSql("a.embedding", "b.embedding")} AS cosine
       FROM embeddings a JOIN embeddings b
         ON a.label = b.label AND a.vec_id < b.vec_id
-      WHERE cosine > 0.4 ORDER BY id_a, id_b""",
-    // Full fixed-point k-means replay (see the q_kmeans query
-    // comment): final assignment against the post-update codebook,
-    // exact integer inertia, centroid L1/first-coordinate
-    // fingerprints.
-    "q_kmeans" -> s"""
+      WHERE cosine > 0.4 ORDER BY id_a, id_b""", { (s, dir) =>
+      Dedup.embeddingNearDup(
+        Tables.embeddings(s, dir), "vec_id", "embedding", "label", threshold = 0.4)
+    }),
+    // K6 gate — fixed-point k-means, VERBATIM: every step
+    // (√n-derived-stride init — see autoSqrtStride — quantization to
+    // the 2^20 grid, integer-L2 argmin assignment with lowest-ordinal
+    // ties, elementwise mean update with empty-cell carry-over,
+    // reassignment, exact integer inertia) replays in the oracle —
+    // all cross-row arithmetic is integer, so there is no fold-order
+    // rounding to hide behind; a defect in any stage moves points
+    // across cells or shifts a centroid coordinate and the hash fails.
+    Query("q_kmeans", s"""
       WITH $kmCte,
       a2 AS (
         SELECT vec_id, cell, dist FROM (
@@ -1015,18 +691,15 @@ object DedupQueries {
                CAST(list_sum(list_transform(cv, x -> abs(x))) AS BIGINT) AS l1,
                cv[1] AS c0
         FROM $kmCb) cf ON cf.cell = a2.cell
-      GROUP BY a2.cell ORDER BY a2.cell""",
-    // Cluster-balanced sampling replay: the k-means fit + final
-    // assignment, then the q_stratified_sample window recipe with the
-    // learned cells as strata.
-    "q_cluster_sample" -> s"""
-      WITH $kmCte,
-      asg AS (
-        SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              ${qdistSql("e.qv", "c.cv")} ASC, c.cell ASC) AS r
-          FROM emb e CROSS JOIN $kmCb c) WHERE r = 1)
+      GROUP BY a2.cell ORDER BY a2.cell""", { (s, dir) =>
+      val emb = Tables.embeddings(s, dir)
+      Clustering.kmeans(
+        emb, "vec_id", "embedding", stride = autoSqrtStride(emb), iters = 2)
+    }),
+    // K6b gate — cluster-balanced sampling: the k-means replay feeds
+    // the q_stratified_sample window recipe with cells as strata; the
+    // md5 sample order is engine-portable, so rows match verbatim.
+    Query("q_cluster_sample", s"""$kmAssignCtes
       SELECT vec_id, cell, CAST(rn AS INT) AS rn FROM (
         SELECT vec_id, cell,
                ROW_NUMBER() OVER (PARTITION BY cell
@@ -1034,29 +707,76 @@ object DedupQueries {
                COUNT(*) OVER (PARTITION BY cell) AS cnt
         FROM asg) t
       WHERE rn <= GREATEST(1, CAST(CEIL(cnt * 0.25) AS BIGINT))
-      ORDER BY cell, vec_id""",
-    // SemDeDup replay: the same k-means fit, pairs blocked by the
-    // learned cells, cosine with the identical sequential fold.
-    "q_semantic_dedup" -> s"""
-      WITH $kmCte,
-      asg AS (
-        SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-              ${qdistSql("e.qv", "c.cv")} ASC, c.cell ASC) AS r
-          FROM emb e CROSS JOIN $kmCb c) WHERE r = 1)
+      ORDER BY cell, vec_id""", { (s, dir) =>
+      val emb = Tables.embeddings(s, dir)
+      Clustering.clusterSample(
+        emb, "vec_id", "embedding",
+        stride = autoSqrtStride(emb), iters = 2, frac = 0.25)
+    }),
+    // J9 gate — SemDeDup (cluster-blocked embedding near-dup): the
+    // oracle replays the k-means fit, blocks pairs by the SAME cells,
+    // and recomputes cosine with the identical sequential fold — so
+    // both the clustering and the within-cell pair mining sit under
+    // one hash gate. Same pair semantics as q_dedup_embedding, with
+    // the learned cells standing in for the labels.
+    Query("q_semantic_dedup", s"""$kmAssignCtes
       SELECT a.cell AS cell, a.vec_id AS id_a, b.vec_id AS id_b,
              ${cosSql("ea.embedding", "eb.embedding")} AS cosine
       FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id
       JOIN embeddings ea ON ea.vec_id = a.vec_id
       JOIN embeddings eb ON eb.vec_id = b.vec_id
-      WHERE cosine > 0.4 ORDER BY id_a, id_b""",
-    "q_ann_cosine" -> annTopKSql,
-    // K8 — the full scalar-quantization replay: per-dim float min/max,
-    // the identical clamp(floor((x−mn)·255/(mx−mn))) code formula in
-    // double arithmetic, then integer dot-product top-k (exact domain,
-    // no fold-order concerns)
-    "q_ann_int8" -> """
+      WHERE cosine > 0.4 ORDER BY id_a, id_b""", { (s, dir) =>
+      val emb = Tables.embeddings(s, dir)
+      Clustering.semanticDedup(
+        emb, "vec_id", "embedding",
+        stride = autoSqrtStride(emb), iters = 2, threshold = 0.4)
+    }),
+    // J6 — cluster the union of two dedup signals (exact text hash +
+    // sorted-word fingerprint) into connected components; multi-hop
+    // components arise when a doc shares text with one doc and word-set
+    // with another.
+    Query("q_dedup_cluster", s"""
+      WITH RECURSIVE $clusterCteSql
+      SELECT node AS doc_id, MIN(lab) AS component
+      FROM reach GROUP BY node ORDER BY doc_id""", { (s, dir) =>
+      clusterDocs(Tables.documents(s, dir))
+        .select(col("node").as("doc_id"), col("component"))
+        .orderBy("doc_id")
+    }),
+    // J11 gate — the cleaned corpus itself: the J6 clustering applied
+    // (non-canonical members dropped, representatives + singletons
+    // kept); a row-level gate on the SURVIVOR set, so a clustering or
+    // anti-join defect adds/removes whole documents.
+    Query("q_dedup_apply", s"""
+      WITH RECURSIVE $clusterCteSql,
+      cc AS (SELECT node, MIN(lab) AS component FROM reach GROUP BY node)
+      SELECT d.doc_id, d.source, d.n_chars FROM documents d
+      WHERE d.doc_id NOT IN (SELECT node FROM cc WHERE node <> component)
+      ORDER BY d.doc_id""", { (s, dir) =>
+      // one cached 4-column scan feeds BOTH the edge build (doc_id,
+      // text) and the survivor anti-join (doc_id, source, n_chars) —
+      // without it the corpus is scanned twice
+      val docs = Tables.documents(s, dir)
+        .select("doc_id", "text", "source", "n_chars").persist()
+      Dedup.keepCanonical(docs, clusterDocs(docs), "doc_id")
+        .select("doc_id", "source", "n_chars")
+        .orderBy("doc_id")
+    }),
+    Query("q_ann_cosine", annTopKSql, { (s, dir) =>
+      val emb = Tables.embeddings(s, dir)
+      Similarity.bruteForceTopK(
+        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding", k = 10)
+    }),
+    // K8 gate — int8 scalar-quantized retrieval: ONE mergeable
+    // VecMinMax stats pass (exchange = two dim-length arrays), codes
+    // from one IEEE multiply+divide per element (float→double widening
+    // exact on both engines), then the ENTIRE search in the integer
+    // domain — squared-L2 code distances and ranks are exact, so the
+    // oracle replays
+    // the stats, the code formula, and the integer top-k verbatim; a
+    // drift in min/max merging, the clamp, or the quantizer moves a
+    // code and the hash fails.
+    Query("q_ann_int8", """
       WITH stats AS (
         SELECT i, MIN(v) AS mn, MAX(v) AS mx FROM (
           SELECT unnest(embedding) AS v,
@@ -1081,10 +801,19 @@ object DedupQueries {
                 ORDER BY dist ASC, neighbor_id) AS INT) AS rank
             FROM p)
       SELECT query_id, rank, neighbor_id, dist FROM r
-      WHERE rank <= 10 ORDER BY query_id, rank""",
-    // the K1 oracle with the corpus-side WHERE — the filter is the
-    // only delta, so any pushdown/compose defect changes rows
-    "q_ann_filtered" -> s"""
+      WHERE rank <= 10 ORDER BY query_id, rank""", { (s, dir) =>
+      Similarity.int8TopK(
+        Tables.embeddings(s, dir), "vec_id", "embedding",
+        col("vec_id") < 8, k = 10)
+    }),
+    // K7 gate — FILTERED ANN (metadata-constrained retrieval, the
+    // vector-DB "filtered search" pattern): the corpus predicate
+    // composes with the top-k and pushes into the parquet scan
+    // (PlanAuditSpec asserts PushedFilters), so non-matching vectors
+    // never leave the reader — at 100 TB the selectivity multiplies
+    // directly into scan cost. Exact by construction → brute-force
+    // oracle with the same WHERE.
+    Query("q_ann_filtered", s"""
       WITH q AS (SELECT vec_id AS query_id, embedding AS qv
                  FROM embeddings WHERE vec_id < 8),
       p AS (SELECT q.query_id, e.vec_id AS neighbor_id,
@@ -1096,17 +825,25 @@ object DedupQueries {
                 ORDER BY cosine DESC, neighbor_id) AS INT) AS rank
             FROM p)
       SELECT query_id, rank, neighbor_id, cosine FROM r
-      WHERE rank <= 10 ORDER BY query_id, rank""",
-    // IVF at nProbe=8 is exact top-k at the verify scales → brute-force
-    // oracle verbatim (see the q_ann_ivf query comment).
-    "q_ann_ivf" -> annTopKSql,
-    // Full LSH replay: same plane matrix (literals from planeWeights —
-    // the one shared constant), same sequential-fold dots, same
-    // bucket-bit sums, same candidate union + cosine rank. The Spark
-    // result is hash-compared verbatim. NaN embeddings would order
-    // differently (DuckDB sorts NaN high, IEEE says NaN > 0 is false);
-    // the corpus has none and SignBuckets' NaN contract is spec-held.
-    "q_ann_lsh" -> s"""
+      WHERE rank <= 10 ORDER BY query_id, rank""", { (s, dir) =>
+      val emb = Tables.embeddings(s, dir)
+      Similarity.bruteForceTopK(
+        emb.where(col("label") === 3), emb.where(col("vec_id") < 8),
+        "vec_id", "embedding", k = 10)
+    }),
+    // K2 gate — VERBATIM: the multi-table LSH top-k result itself is
+    // hash-compared against a DuckDB oracle that replays the ENTIRE
+    // pipeline — sign-pattern bucketing against the same plane matrix
+    // (emitted as literals from planeWeights, the single shared
+    // constant), any-table candidate union, exact cosine, rank — with
+    // identical IEEE arithmetic. The round-6 recall-flag gate was
+    // self-referential (DuckDB pinned `1`); now a defect anywhere in
+    // SignBuckets, the bucket join or the ranking changes rows.
+    // Recall vs brute force stays spec-asserted (DedupSpec). NaN
+    // embeddings would order differently (DuckDB sorts NaN high, IEEE
+    // says NaN > 0 is false); the corpus has none and SignBuckets' NaN
+    // contract is spec-held.
+    Query("q_ann_lsh", s"""
       WITH planes(t, bit, w) AS (VALUES $lshPlanesValuesSql),
       b AS (
         SELECT e.vec_id, pl.t,
@@ -1131,23 +868,227 @@ object DedupQueries {
                  ORDER BY cosine DESC, neighbor_id) AS INT) AS rank
         FROM scored)
       SELECT query_id, rank, neighbor_id, cosine FROM r
-      WHERE rank <= 10 ORDER BY query_id, rank""",
-    "q_ann_pq" -> annPqSql,
-    "q_ann_ivfpq" -> annIvfPqSql,
-    // Full sub-exhaustive IVF replay (see the q_ann_ivf_probe query
-    // comment): stride sampling + CAST-to-VARCHAR codebook order +
-    // ordinal cells + L2 normalization + argmax-dot assignment with
-    // lowest-ordinal ties + nProbe nearest cells by (−cos, cell) +
-    // exact cosine rank, all in the same IEEE operation order.
-    "q_ann_ivf_probe" -> annIvfProbeSql,
-    // identical pipeline through the persisted partitioned index —
-    // same replay oracle verbatim (see the q_ann_ivf_index query
-    // comment).
-    "q_ann_ivf_index" -> annIvfProbeSql,
-    // K3d — the lifecycle gate: same replay over the post-delete/
-    // post-append corpus CTE (see annIvfForgetSql)
-    "q_ann_ivf_forget" -> annIvfForgetSql,
+      WHERE rank <= 10 ORDER BY query_id, rank""", { (s, dir) =>
+      val emb = Tables.embeddings(s, dir)
+      Similarity.lshTopK(
+        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",
+        k = 10, nPlanes = 4, dim = 64, nTables = 16)
+    }),
+    // K3 gate — the IVF result IS the exact top-k (recall 1.0,
+    // asserted by reusing the brute-force SQL oracle verbatim): the
+    // hardest possible signal — any regression in assignment, probing,
+    // ranking or degenerate-vector handling breaks the row hash.
+    // SCALE-PROOF by construction, not by tuning: the stride is
+    // derived from max(vec_id) so the codebook never exceeds nProbe
+    // cells, making the probe exhaustive — every corpus vector is in
+    // some probed cell, so the candidate set equals the full corpus at
+    // ANY verify scale (stride 97 at sf0.01 was exact only because 11
+    // cells < 8 probes held at that one scale). The production-shaped
+    // config (√N-sized codebook, partial probing) is exercised by
+    // SimilaritySpec's recall assertions instead.
+    Query("q_ann_ivf", annTopKSql, { (s, dir) =>
+      val emb = Tables.embeddings(s, dir)
+      val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
+      val nProbe = 8
+      Similarity.ivfTopK(
+        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",
+        k = 10, centroidStride = maxId / nProbe + 1, nProbe = nProbe)
+    }),
+    // K3b gate — SUB-EXHAUSTIVE probing behind the driver gate (the
+    // round-6 exhaustive-by-construction entry above proves exactness;
+    // this one puts the PARTIAL-probe code path itself under hash
+    // verification): the √n-derived stride keeps ≥ ~20 cells at every
+    // verify scale while nProbe stays 4, and the DuckDB oracle replays the whole
+    // production pipeline — stride sampling, string-ordinal codebook,
+    // L2 normalization, argmax-dot assignment (ties → lowest ordinal),
+    // nProbe nearest-cell selection, exact cosine rank — with
+    // identical IEEE arithmetic, so any probing defect changes rows.
+    Query("q_ann_ivf_probe", annIvfProbeSql, { (s, dir) =>
+      val emb = Tables.embeddings(s, dir)
+      Similarity.ivfTopK(
+        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",
+        k = 10, centroidStride = autoSqrtStride(emb), nProbe = 4)
+    }),
+    // K3c gate — the SAME sub-exhaustive pipeline probed through a
+    // PERSISTED partitionBy(cell) parquet index (write once, prune
+    // unprobed cell partitions on every batch — the index-reuse
+    // shape); identical arithmetic ⇒ the ivf-probe replay oracle
+    // gates it verbatim.
+    Query("q_ann_ivf_index", annIvfProbeSql, { (s, dir) =>
+      val emb = Tables.embeddings(s, dir)
+      Similarity.ivfIndexedTopK(
+        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",
+        k = 10, centroidStride = autoSqrtStride(emb), nProbe = 4,
+        // per-JVM token: concurrent harness runs over the same data
+        // dir must not collide on a shared /tmp path; within one JVM
+        // repeat runs REUSE the index (probe-only — the amortized
+        // shape the operator exists for)
+        indexDir = Query.scratchPath(s"ivf-index-$runToken", dir))
+    }),
+    // K3d gate — the IVF index LIFECYCLE (round-12 verdict ask #6): a
+    // real embedding store takes right-to-be-forgotten deletes and
+    // rolling appends, not just one build. The gate builds the K3c
+    // index fresh, tombstones every vec_id ≡ 3 (mod 17), appends a
+    // disjoint shard of shifted copies (assigned with the STORED
+    // codebook — an ingest never re-trains the coarse quantizer),
+    // COMPACTS (duplicate-collapse + physical purge + rename swap),
+    // and probes. The oracle replays the K3b pipeline semantically —
+    // full-corpus codebook (forget does not un-train centroids),
+    // appended vectors assigned under it, deleted slice excluded — so
+    // a tombstone leak, an append misassignment, or a compaction that
+    // changes verdicts moves a row. Probe-before-compact equality is
+    // spec-held (IvfLifecycleSpec).
+    Query("q_ann_ivf_forget", annIvfForgetSql, { (s, dir) =>
+      val emb = Tables.embeddings(s, dir)
+      val idx = Query.scratchPath(s"ivf-forget-$runToken", dir)
+      // two independent-phase overlaps (guide §2.6); the lifecycle
+      // ORDER the gate verifies is untouched — every overlapped pair
+      // is mutation-disjoint, so results match the sequential runs:
+      //  - maxId (a corpus agg feeding the appended shard's id shift)
+      //    is independent of the index BUILD — it runs alongside it;
+      //  - APPEND (reads stored codebook, appends under cells/) and
+      //    DELETE (writes tombstones/) touch disjoint artifact parts —
+      //    both strictly after build (which clears stale tombstones)
+      //    and strictly before compact.
+      val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+      try {
+        val maxIdFut = pool.submit(
+          new java.util.concurrent.Callable[Long] {
+            def call(): Long = emb.agg(max(col("vec_id"))).head.getLong(0)
+          })
+        graft.Prof.timed("ivf-forget build")(Similarity.buildIvfIndex(
+          emb, "vec_id", "embedding", autoSqrtStride(emb), idx))
+        // appended shard: ids shifted past the corpus, vectors = the
+        // first 16 corpus vectors with every component +0.25 — novel
+        // rows the probe must FIND, deterministic for the oracle
+        val maxId = maxIdFut.get()
+        val delFut = pool.submit(new java.lang.Runnable {
+          def run(): Unit = graft.Prof.timed("ivf-forget delete")(
+            Similarity.ivfIndexDelete(
+              emb.where(col("vec_id") % 17 === 3).select(col("vec_id")),
+              "vec_id", idx))
+        })
+        graft.Prof.timed("ivf-forget append")(Similarity.ivfIndexAppend(
+          emb.where(col("vec_id") < 16).select(
+            (col("vec_id") + maxId + 1).as("vec_id"),
+            transform(col("embedding"), x => x + lit(0.25f)).as("embedding")),
+          "vec_id", "embedding", idx))
+        delFut.get()
+        graft.Prof.timed("ivf-forget compact")(Similarity.ivfIndexCompact(s, idx))
+        graft.Prof.timed("ivf-forget probe")(Similarity.probeIvfIndex(
+          s, emb.where(col("vec_id") < 8), "vec_id", "embedding",
+          k = 10, nProbe = 4, indexDir = idx))
+      } finally pool.shutdown()
+    }),
+    // K4 gate — product-quantization ANN, VERBATIM: the DuckDB oracle
+    // replays the whole compressed-domain pipeline — stride-sampled
+    // subspace codebook, argmin-L2 encode (ties → lowest ordinal),
+    // per-query distance tables, ordered ADC sums — with identical
+    // IEEE arithmetic, so a defect in encode, table build or scoring
+    // changes rows. The stride-1 exactness property (ADC == exact
+    // squared-L2 ranking when quantization error is zero) is
+    // spec-held in PqSpec.
+    Query("q_ann_pq", annPqSql, { (s, dir) =>
+      val emb = Tables.embeddings(s, dir)
+      // size-derived stride: the codebook must stay O(1) as the corpus
+      // grows (a fixed stride samples ∝ n and trips the loud 256-cap —
+      // found by the sf1 scale run). floor 16 keeps sf≤0.1 output
+      // byte-identical; the oracle replays the same GREATEST/CEIL.
+      Similarity.pqTopK(
+        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",
+        k = 10, m = 8, centroidStride = autoStride(emb))
+    }),
+    // K5 gate — IVF-PQ composition, VERBATIM: cells prune (stride-16
+    // coarse codebook, nProbe 4 — a strict subset at every verify
+    // scale), PQ codes score the survivors. The oracle stitches the
+    // q_ann_ivf_probe replay (assignment + probing) to the q_ann_pq
+    // replay (encode + ordered ADC sums), restricted to probed
+    // (query, cell) pairs — the full production pipeline under one
+    // hash gate.
+    Query("q_ann_ivfpq", annIvfPqSql, { (s, dir) =>
+      val emb = Tables.embeddings(s, dir)
+      val stride = autoStride(emb) // same scale posture as q_ann_pq
+      Similarity.ivfPqTopK(
+        emb, emb.where(col("vec_id") < 8), "vec_id", "embedding",
+        k = 10, m = 8, cellStride = stride, pqStride = stride, nProbe = 4)
+    }),
   )
+
+  /** The IVF cell codebook: every `stride`-th vector L2-normalized
+    * (`cb1` → `cbn`, cells in CAST-to-VARCHAR order), the 8 queries
+    * (`q`), each query's 4 nearest cells by cosine (`probe`), and each
+    * `rel` vector's argmax-dot cell (`assign`). */
+  private def ivfProbeCtes(cb1: String, cbn: String, stride: String, rel: String): String =
+    s"""$cb1 AS (
+        SELECT CAST(vec_id AS VARCHAR) AS cid, embedding,
+               SQRT(list_sum(list_transform(embedding,
+                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
+        FROM embeddings WHERE vec_id % $stride = 0),
+      $cbn AS (
+        SELECT CAST(ROW_NUMBER() OVER (ORDER BY cid) - 1 AS INT) AS cell,
+               CASE WHEN nrm > 0
+                    THEN list_transform(embedding, x -> CAST(x AS DOUBLE) / nrm)
+                    ELSE list_transform(embedding, x -> CAST(x AS DOUBLE)) END AS cnorm
+        FROM $cb1),
+      q AS (SELECT vec_id AS query_id, embedding AS qv
+            FROM embeddings WHERE vec_id < 8),
+      probe AS (
+        SELECT query_id, qv, cell FROM (
+          SELECT q.query_id, q.qv, c.cell,
+                 ROW_NUMBER() OVER (PARTITION BY q.query_id
+                   ORDER BY -(${cosSql("q.qv", "c.cnorm")}), c.cell) AS crank
+          FROM q CROSS JOIN $cbn c)
+        WHERE crank <= 4),
+      assign AS (
+        SELECT vec_id, cell FROM (
+          SELECT e.vec_id, c.cell,
+                 ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+                   list_sum(list_transform(list_zip(e.embedding, c.cnorm),
+                     p -> CAST(p[1] AS DOUBLE) * p[2])) DESC, c.cell) AS r
+          FROM $rel e CROSS JOIN $cbn c)
+        WHERE r = 1)"""
+
+  /** The PQ encode: the size-strided codebook `cb`, m=8 subspaces of dsub=8
+    * (`subs`, `cents`), and each vector's argmin-L2 code per subspace
+    * (`enc`). */
+  private def pqEncodeCtes(cb: String): String = s"""$cb AS (
+        SELECT CAST(ROW_NUMBER() OVER (ORDER BY CAST(vec_id AS VARCHAR)) - 1 AS INT) AS cidx,
+               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
+        FROM embeddings WHERE vec_id % $autoStrideSql = 0),
+      subs AS (SELECT CAST(s.range AS INT) AS sub FROM range(8) s),
+      cents AS (
+        SELECT subs.sub, $cb.cidx,
+               $cb.cvec[subs.sub * 8 + 1 : subs.sub * 8 + 8] AS csub
+        FROM $cb, subs),
+      enc AS (
+        SELECT vec_id, sub, cidx FROM (
+          SELECT e.vec_id, c.sub, c.cidx,
+            ROW_NUMBER() OVER (PARTITION BY e.vec_id, c.sub ORDER BY
+              list_sum(list_transform(
+                list_zip(e.embedding[c.sub * 8 + 1 : c.sub * 8 + 8], c.csub),
+                p -> (CAST(p[1] AS DOUBLE) - p[2]) * (CAST(p[1] AS DOUBLE) - p[2]))) ASC,
+              c.cidx ASC) AS r
+          FROM embeddings e, cents c)
+        WHERE r = 1)"""
+
+  /** Per-query distance table for every (subspace, code). */
+  private lazy val pqTableCte: String = """
+      dt AS (
+        SELECT q.query_id, c.sub, c.cidx,
+          list_sum(list_transform(
+            list_zip(q.qv[c.sub * 8 + 1 : c.sub * 8 + 8], c.csub),
+            p -> (CAST(p[1] AS DOUBLE) - p[2]) * (CAST(p[1] AS DOUBLE) - p[2]))) AS d
+        FROM q, cents c)"""
+
+  /** The top 10 neighbors per query by ADC distance over `sc`. */
+  private lazy val adcTop10: String = """
+      r AS (
+        SELECT query_id, neighbor_id, adc_dist,
+               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+                 ORDER BY adc_dist, neighbor_id) AS INT) AS rank
+        FROM sc)
+      SELECT query_id, rank, neighbor_id, adc_dist FROM r
+      WHERE rank <= 10 ORDER BY query_id, rank"""
 
   /** The K3b/K3c/K3d probe replay, parameterized on the MATCH corpus:
     * the codebook (cb1) and the query set always come from the
@@ -1156,34 +1097,7 @@ object DedupQueries {
     * relation probes rank over (the lifecycle gate swaps in a
     * post-delete/post-append corpus CTE). */
   private def annIvfProbeSqlFor(prelude: String, matchRel: String): String = s"""
-      WITH ${prelude}cb1 AS (
-        SELECT CAST(vec_id AS VARCHAR) AS cid, embedding,
-               SQRT(list_sum(list_transform(embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-        FROM embeddings WHERE vec_id % $autoSqrtStrideSql = 0),
-      cbn AS (
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY cid) - 1 AS INT) AS cell,
-               CASE WHEN nrm > 0
-                    THEN list_transform(embedding, x -> CAST(x AS DOUBLE) / nrm)
-                    ELSE list_transform(embedding, x -> CAST(x AS DOUBLE)) END AS cnorm
-        FROM cb1),
-      q AS (SELECT vec_id AS query_id, embedding AS qv
-            FROM embeddings WHERE vec_id < 8),
-      probe AS (
-        SELECT query_id, qv, cell FROM (
-          SELECT q.query_id, q.qv, c.cell,
-                 ROW_NUMBER() OVER (PARTITION BY q.query_id
-                   ORDER BY -(${cosSql("q.qv", "c.cnorm")}), c.cell) AS crank
-          FROM q CROSS JOIN cbn c)
-        WHERE crank <= 4),
-      assign AS (
-        SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-                 ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_sum(list_transform(list_zip(e.embedding, c.cnorm),
-                     p -> CAST(p[1] AS DOUBLE) * p[2])) DESC, c.cell) AS r
-          FROM $matchRel e CROSS JOIN cbn c)
-        WHERE r = 1),
+      WITH ${prelude}${ivfProbeCtes("cb1", "cbn", autoSqrtStrideSql, matchRel)},
       scored AS (
         SELECT p.query_id, a.vec_id AS neighbor_id,
                ${cosSql("p.qv", "e.embedding")} AS cosine
@@ -1222,46 +1136,15 @@ object DedupQueries {
     * list_sum (sequential fold — an unordered SUM() would round
     * differently). */
   private lazy val annPqSql: String = s"""
-      WITH cb AS (
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY CAST(vec_id AS VARCHAR)) - 1 AS INT) AS cidx,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-        FROM embeddings WHERE vec_id % $autoStrideSql = 0),
-      subs AS (SELECT CAST(s.range AS INT) AS sub FROM range(8) s),
-      cents AS (
-        SELECT subs.sub, cb.cidx,
-               cb.cvec[subs.sub * 8 + 1 : subs.sub * 8 + 8] AS csub
-        FROM cb, subs),
-      enc AS (
-        SELECT vec_id, sub, cidx FROM (
-          SELECT e.vec_id, c.sub, c.cidx,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, c.sub ORDER BY
-              list_sum(list_transform(
-                list_zip(e.embedding[c.sub * 8 + 1 : c.sub * 8 + 8], c.csub),
-                p -> (CAST(p[1] AS DOUBLE) - p[2]) * (CAST(p[1] AS DOUBLE) - p[2]))) ASC,
-              c.cidx ASC) AS r
-          FROM embeddings e, cents c)
-        WHERE r = 1),
+      WITH ${pqEncodeCtes("cb")},
       q AS (SELECT vec_id AS query_id, embedding AS qv
-            FROM embeddings WHERE vec_id < 8),
-      dt AS (
-        SELECT q.query_id, c.sub, c.cidx,
-          list_sum(list_transform(
-            list_zip(q.qv[c.sub * 8 + 1 : c.sub * 8 + 8], c.csub),
-            p -> (CAST(p[1] AS DOUBLE) - p[2]) * (CAST(p[1] AS DOUBLE) - p[2]))) AS d
-        FROM q, cents c),
+            FROM embeddings WHERE vec_id < 8),$pqTableCte,
       sc AS (
         SELECT dt.query_id, enc.vec_id AS neighbor_id,
                list_sum(list(dt.d ORDER BY dt.sub)) AS adc_dist
         FROM enc JOIN dt ON dt.sub = enc.sub AND dt.cidx = enc.cidx
         WHERE enc.vec_id <> dt.query_id
-        GROUP BY 1, 2),
-      r AS (
-        SELECT query_id, neighbor_id, adc_dist,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY adc_dist, neighbor_id) AS INT) AS rank
-        FROM sc)
-      SELECT query_id, rank, neighbor_id, adc_dist FROM r
-      WHERE rank <= 10 ORDER BY query_id, rank"""
+        GROUP BY 1, 2),$adcTop10"""
 
   /** IVF-PQ replay: the q_ann_ivf_probe CTEs (normalized cell
     * codebook, argmax-dot assignment, nProbe nearest cells) feeding
@@ -1270,59 +1153,8 @@ object DedupQueries {
     * codebooks happen to share the size-derived stride here, but stay
     * separate CTEs — the operators sample independently. */
   private lazy val annIvfPqSql: String = s"""
-      WITH cellcb1 AS (
-        SELECT CAST(vec_id AS VARCHAR) AS cid, embedding,
-               SQRT(list_sum(list_transform(embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-        FROM embeddings WHERE vec_id % $autoStrideSql = 0),
-      cellcb AS (
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY cid) - 1 AS INT) AS cell,
-               CASE WHEN nrm > 0
-                    THEN list_transform(embedding, x -> CAST(x AS DOUBLE) / nrm)
-                    ELSE list_transform(embedding, x -> CAST(x AS DOUBLE)) END AS cnorm
-        FROM cellcb1),
-      q AS (SELECT vec_id AS query_id, embedding AS qv
-            FROM embeddings WHERE vec_id < 8),
-      probe AS (
-        SELECT query_id, qv, cell FROM (
-          SELECT q.query_id, q.qv, c.cell,
-                 ROW_NUMBER() OVER (PARTITION BY q.query_id
-                   ORDER BY -(${cosSql("q.qv", "c.cnorm")}), c.cell) AS crank
-          FROM q CROSS JOIN cellcb c)
-        WHERE crank <= 4),
-      assign AS (
-        SELECT vec_id, cell FROM (
-          SELECT e.vec_id, c.cell,
-                 ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_sum(list_transform(list_zip(e.embedding, c.cnorm),
-                     p -> CAST(p[1] AS DOUBLE) * p[2])) DESC, c.cell) AS r
-          FROM embeddings e CROSS JOIN cellcb c)
-        WHERE r = 1),
-      pqcb AS (
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY CAST(vec_id AS VARCHAR)) - 1 AS INT) AS cidx,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-        FROM embeddings WHERE vec_id % $autoStrideSql = 0),
-      subs AS (SELECT CAST(s.range AS INT) AS sub FROM range(8) s),
-      cents AS (
-        SELECT subs.sub, pqcb.cidx,
-               pqcb.cvec[subs.sub * 8 + 1 : subs.sub * 8 + 8] AS csub
-        FROM pqcb, subs),
-      enc AS (
-        SELECT vec_id, sub, cidx FROM (
-          SELECT e.vec_id, c.sub, c.cidx,
-            ROW_NUMBER() OVER (PARTITION BY e.vec_id, c.sub ORDER BY
-              list_sum(list_transform(
-                list_zip(e.embedding[c.sub * 8 + 1 : c.sub * 8 + 8], c.csub),
-                p -> (CAST(p[1] AS DOUBLE) - p[2]) * (CAST(p[1] AS DOUBLE) - p[2]))) ASC,
-              c.cidx ASC) AS r
-          FROM embeddings e, cents c)
-        WHERE r = 1),
-      dt AS (
-        SELECT q.query_id, c.sub, c.cidx,
-          list_sum(list_transform(
-            list_zip(q.qv[c.sub * 8 + 1 : c.sub * 8 + 8], c.csub),
-            p -> (CAST(p[1] AS DOUBLE) - p[2]) * (CAST(p[1] AS DOUBLE) - p[2]))) AS d
-        FROM q, cents c),
+      WITH ${ivfProbeCtes("cellcb1", "cellcb", autoStrideSql, "embeddings")},
+      ${pqEncodeCtes("pqcb")},$pqTableCte,
       cand AS (
         SELECT p.query_id, a.vec_id AS neighbor_id
         FROM probe p JOIN assign a ON a.cell = p.cell
@@ -1334,14 +1166,7 @@ object DedupQueries {
         JOIN enc ON enc.vec_id = cand.neighbor_id
         JOIN dt ON dt.query_id = cand.query_id
                 AND dt.sub = enc.sub AND dt.cidx = enc.cidx
-        GROUP BY 1, 2),
-      r AS (
-        SELECT query_id, neighbor_id, adc_dist,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY adc_dist, neighbor_id) AS INT) AS rank
-        FROM sc)
-      SELECT query_id, rank, neighbor_id, adc_dist FROM r
-      WHERE rank <= 10 ORDER BY query_id, rank"""
+        GROUP BY 1, 2),$adcTop10"""
 
   /** The K2 plane matrix as SQL VALUES rows `(table, bit, weights)` —
     * generated from [[Similarity.planeWeights]] at oracle-build time,

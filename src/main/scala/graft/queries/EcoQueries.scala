@@ -83,44 +83,10 @@ object EcoQueries {
   private val forestTypes = Seq("core", "mature", "secondary")
   private val sizeEdges = Seq(0.0, 5.0, 10.0, 15.0, 20.0)
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_elevation_profile" -> { (s, dir) =>
-      Ecology.elevationProfile(
-        ecoCells(s, dir), "zone", "elevation", "forest",
-        nBins = 10, pixelArea = 0.64)
-    },
-    "q_forest_elevation" -> { (s, dir) =>
-      Ecology.forestElevationMatrix(
-        ecoCells(s, dir), "zone", "elevation", "forest_type",
-        elevEdges, forestTypes)
-    },
-    "q_holdridge" -> { (s, dir) =>
-      Ecology.holdridgeFractions(ecoCells(s, dir), "zone", "life_zone", "forest")
-    },
-    "q_fragmentation" -> { (s, dir) =>
-      Ecology.fragmentationMetrics(
-        forestPatches(s, dir), zoneLandscape(s, dir),
-        "zone", "patch_area", "perimeter", "landscape_area")
-    },
-    "q_patch_sizes" -> { (s, dir) =>
-      Ecology.patchSizeClasses(forestPatches(s, dir), "zone", "patch_area", sizeEdges)
-    },
-    "q_diversity" -> { (s, dir) =>
-      Ecology.diversityIndices(ecoCells(s, dir), Seq("zone"), "forest_type")
-    },
-    "q_land_use" -> { (s, dir) =>
-      Ecology.landUse(
-        landUseFeatures(s, dir),
-        landUseFeatures(s, dir).select("zone").distinct()
-          .withColumn("total_area", (col("zone") + 1) * 1000000.0),
-        "zone", "layer", "category", "area", "total_area")
-    },
-  )
-
   import CoreQueries.dsum
 
-  val oracles: Map[String, String] = Map(
-    "q_elevation_profile" -> s"""
+  val queries: Seq[Query] = Seq(
+    Query("q_elevation_profile", s"""
       WITH cells AS ($cellsSql),
       bounds AS (
         SELECT zone,
@@ -140,8 +106,12 @@ object EcoQueries {
              CAST(COUNT(*) AS DOUBLE) * CAST(0.64 AS DOUBLE) AS area,
              COUNT(CASE WHEN forest THEN 1 END) AS forest_pixels,
              COUNT(CASE WHEN forest THEN 1 END) * 100.0 / COUNT(*) AS forest_pct
-      FROM binned GROUP BY zone, bin, min_elev, bin_width ORDER BY zone, bin""",
-    "q_forest_elevation" -> {
+      FROM binned GROUP BY zone, bin, min_elev, bin_width ORDER BY zone, bin""", { (s, dir) =>
+      Ecology.elevationProfile(
+        ecoCells(s, dir), "zone", "elevation", "forest",
+        nBins = 10, pixelArea = 0.64)
+    }),
+    Query("q_forest_elevation", {
       val edgeArr = elevEdges.mkString("[", ",", "]")
       s"""
       WITH cells AS ($cellsSql),
@@ -166,8 +136,12 @@ object EcoQueries {
                s"n_$t * 100.0 / n_pixels AS pct_$t").mkString(", ")},
              n_forest * 100.0 / n_pixels AS pct_forest_total
       FROM g ORDER BY zone, bin"""
-    },
-    "q_holdridge" -> s"""
+    }, { (s, dir) =>
+      Ecology.forestElevationMatrix(
+        ecoCells(s, dir), "zone", "elevation", "forest_type",
+        elevEdges, forestTypes)
+    }),
+    Query("q_holdridge", s"""
       WITH cells AS ($cellsSql),
       g AS (
         SELECT zone, life_zone, COUNT(*) AS n_pixels,
@@ -177,8 +151,10 @@ object EcoQueries {
       SELECT g.zone, g.life_zone,
              CAST(g.n_forest AS DOUBLE) / t.zone_total AS forest_frac,
              CAST(g.n_pixels - g.n_forest AS DOUBLE) / t.zone_total AS non_forest_frac
-      FROM g JOIN t ON g.zone = t.zone ORDER BY g.zone, g.life_zone""",
-    "q_fragmentation" -> s"""
+      FROM g JOIN t ON g.zone = t.zone ORDER BY g.zone, g.life_zone""", { (s, dir) =>
+      Ecology.holdridgeFractions(ecoCells(s, dir), "zone", "life_zone", "forest")
+    }),
+    Query("q_fragmentation", s"""
       WITH p AS ($patchesSql), l AS ($landscapeSql),
       g AS (
         SELECT zone, COUNT(*) AS patch_count,
@@ -192,8 +168,12 @@ object EcoQueries {
              g.largest_patch,
              g.largest_patch * 100.0 / l.landscape_area AS largest_patch_index,
              g.total_edge / l.landscape_area AS edge_density
-      FROM g JOIN l ON g.zone = l.zone ORDER BY g.zone""",
-    "q_patch_sizes" -> s"""
+      FROM g JOIN l ON g.zone = l.zone ORDER BY g.zone""", { (s, dir) =>
+      Ecology.fragmentationMetrics(
+        forestPatches(s, dir), zoneLandscape(s, dir),
+        "zone", "patch_area", "perimeter", "landscape_area")
+    }),
+    Query("q_patch_sizes", s"""
       WITH p AS ($patchesSql),
       cls AS (
         SELECT zone, patch_area,
@@ -212,8 +192,10 @@ object EcoQueries {
             FROM g GROUP BY zone)
       SELECT g.zone, g.size_class, g.n_patches, g.class_area,
              g.class_area * 100.0 / t.zone_area AS pct_of_forest
-      FROM g JOIN t ON g.zone = t.zone ORDER BY g.zone, g.size_class""",
-    "q_diversity" -> s"""
+      FROM g JOIN t ON g.zone = t.zone ORDER BY g.zone, g.size_class""", { (s, dir) =>
+      Ecology.patchSizeClasses(forestPatches(s, dir), "zone", "patch_area", sizeEdges)
+    }),
+    Query("q_diversity", s"""
       WITH cells AS ($cellsSql),
       c AS (
         SELECT zone, forest_type, COUNT(*) AS n
@@ -236,8 +218,10 @@ object EcoQueries {
                       * ln(CAST(x AS DOUBLE) / CAST(total AS DOUBLE))))
                / ln(CAST(richness AS DOUBLE))
              END AS pielou
-      FROM g ORDER BY zone""",
-    "q_land_use" -> s"""
+      FROM g ORDER BY zone""", { (s, dir) =>
+      Ecology.diversityIndices(ecoCells(s, dir), Seq("zone"), "forest_type")
+    }),
+    Query("q_land_use", s"""
       WITH f AS ($featuresSql),
       g AS (
         SELECT zone, layer, category, COUNT(*) AS n_features,
@@ -247,6 +231,12 @@ object EcoQueries {
                    (o_orderkey % 4 + 1) * 1000000.0 AS total_area FROM orders)
       SELECT g.zone, g.layer, g.category, g.n_features, g.area,
              g.area * 100.0 / t.total_area AS pct_of_zone
-      FROM g JOIN t ON g.zone = t.zone ORDER BY g.zone, g.layer, g.category""",
+      FROM g JOIN t ON g.zone = t.zone ORDER BY g.zone, g.layer, g.category""", { (s, dir) =>
+      Ecology.landUse(
+        landUseFeatures(s, dir),
+        landUseFeatures(s, dir).select("zone").distinct()
+          .withColumn("total_area", (col("zone") + 1) * 1000000.0),
+        "zone", "layer", "category", "area", "total_area")
+    }),
   )
 }

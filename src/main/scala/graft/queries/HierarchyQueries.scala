@@ -30,58 +30,25 @@ object HierarchyQueries {
     root.unionByName(regions).unionByName(nations).unionByName(custs)
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_hierarchy_rollup" -> { (s, dir) =>
-      val denorm = Tables.customer(s, dir)
-        .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
-      Hierarchy.rollupAggregate(
-        denorm, Seq("r_name", "n_name"),
-        Seq(count(lit(1)).as("n_customers"), Num.dsum(col("c_acctbal")).as("acctbal_sum")))
-    },
-    "q_nested_set" -> { (s, dir) =>
-      Hierarchy.nestedSet(taxonomyNodes(s, dir))
-    },
-    "q_tree_paths" -> { (s, dir) =>
-      Hierarchy.materializedPaths(taxonomyNodes(s, dir))
-    },
-    "q_subtree_agg" -> { (s, dir) =>
-      val facts = Tables.customer(s, dir).select(
-        concat(lit("C"), col("c_custkey")).as("fact_node"), col("c_acctbal"))
-      Hierarchy.subtreeAggregate(
-        taxonomyNodes(s, dir), facts, "fact_node",
-        Seq(count(lit(1)).as("n_facts"), Num.dsum(col("c_acctbal")).as("acctbal_sum")))
-    },
-    // nested-set subtree select (loaders/nested_set.py) through the
-    // custom interval-stabbing plan: label the tree, stab every node's
-    // lft against the region-level [lft, rght] intervals, count per
-    // subtree. The oracle counts subtree membership relationally —
-    // wrong labels or wrong stabbing both break the match.
-    "q_interval_join" -> { (s, dir) =>
-      // labeled tree feeds BOTH join sides — persist or the whole
-      // labeling plan executes twice (once per side)
-      val ns = Hierarchy.nestedSet(taxonomyNodes(s, dir)).persist()
-      val regions = ns.where(col("level") === 1).select(
-        col("node_id").as("anc_id"),
-        col("lft").as("anc_lft"), col("rght").as("anc_rght"))
-      graft.plans.IntervalJoin.join(ns, regions, "lft", "anc_lft", "anc_rght")
-        .groupBy("anc_id").agg(count(lit(1)).as("n_desc"))
-        .orderBy("anc_id")
-    },
-  )
-
   import CoreQueries.dsum
 
-  val oracles: Map[String, String] = Map(
-    "q_hierarchy_rollup" -> s"""
+  val queries: Seq[Query] = Seq(
+    Query("q_hierarchy_rollup", s"""
       SELECT r_name, n_name, CAST(GROUPING_ID(r_name, n_name) AS INT) AS gid,
              COUNT(*) AS n_customers, ${dsum("c_acctbal")} AS acctbal_sum
       FROM customer
       JOIN nation ON c_nationkey = n_nationkey
       JOIN region ON n_regionkey = r_regionkey
       GROUP BY ROLLUP(r_name, n_name)
-      ORDER BY gid, r_name NULLS FIRST, n_name NULLS FIRST""",
-    "q_nested_set" -> """
+      ORDER BY gid, r_name NULLS FIRST, n_name NULLS FIRST""", { (s, dir) =>
+      val denorm = Tables.customer(s, dir)
+        .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
+        .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
+      Hierarchy.rollupAggregate(
+        denorm, Seq("r_name", "n_name"),
+        Seq(count(lit(1)).as("n_customers"), Num.dsum(col("c_acctbal")).as("acctbal_sum")))
+    }),
+    Query("q_nested_set", """
       WITH nc AS (SELECT c_nationkey AS nk, COUNT(*) AS ncust FROM customer GROUP BY 1),
       nat AS (
         SELECT n_nationkey, n_regionkey, 1 + COALESCE(ncust, 0) AS size
@@ -117,15 +84,10 @@ object HierarchyQueries {
         UNION ALL
         SELECT 'C' || c_custkey, 'N' || c_nationkey, 3, CAST(lft AS BIGINT),
                CAST(lft + 1 AS BIGINT) FROM cust_lft
-      ) ORDER BY lft""",
-    "q_interval_join" -> """
-      SELECT 'R' || r_regionkey AS anc_id,
-             1 + COUNT(DISTINCT n_nationkey) + COUNT(c_custkey) AS n_desc
-      FROM region
-      LEFT JOIN nation ON n_regionkey = r_regionkey
-      LEFT JOIN customer ON c_nationkey = n_nationkey
-      GROUP BY 1 ORDER BY 1""",
-    "q_tree_paths" -> """
+      ) ORDER BY lft""", { (s, dir) =>
+      Hierarchy.nestedSet(taxonomyNodes(s, dir))
+    }),
+    Query("q_tree_paths", """
       WITH RECURSIVE nodes AS (
         SELECT 'ROOT' AS node_id, CAST(NULL AS VARCHAR) AS parent_id
         UNION ALL SELECT 'R' || r_regionkey, 'ROOT' FROM region
@@ -137,8 +99,10 @@ object HierarchyQueries {
         SELECT n.node_id, p.full_path || '|' || n.node_id, p.level + 1
         FROM nodes n JOIN paths p ON n.parent_id = p.node_id)
       SELECT node_id, full_path, CAST(level AS INT) AS level
-      FROM paths ORDER BY full_path""",
-    "q_subtree_agg" -> s"""
+      FROM paths ORDER BY full_path""", { (s, dir) =>
+      Hierarchy.materializedPaths(taxonomyNodes(s, dir))
+    }),
+    Query("q_subtree_agg", s"""
       WITH RECURSIVE nodes AS (
         SELECT 'ROOT' AS node_id, CAST(NULL AS VARCHAR) AS parent_id
         UNION ALL SELECT 'R' || r_regionkey, 'ROOT' FROM region
@@ -153,6 +117,34 @@ object HierarchyQueries {
       facts AS (SELECT 'C' || c_custkey AS node_id, c_acctbal FROM customer)
       SELECT cl.ancestor_id, COUNT(*) AS n_facts, ${dsum("f.c_acctbal")} AS acctbal_sum
       FROM facts f JOIN closure cl ON f.node_id = cl.node_id
-      GROUP BY cl.ancestor_id ORDER BY cl.ancestor_id""",
+      GROUP BY cl.ancestor_id ORDER BY cl.ancestor_id""", { (s, dir) =>
+      val facts = Tables.customer(s, dir).select(
+        concat(lit("C"), col("c_custkey")).as("fact_node"), col("c_acctbal"))
+      Hierarchy.subtreeAggregate(
+        taxonomyNodes(s, dir), facts, "fact_node",
+        Seq(count(lit(1)).as("n_facts"), Num.dsum(col("c_acctbal")).as("acctbal_sum")))
+    }),
+    // nested-set subtree select (loaders/nested_set.py) through the
+    // custom interval-stabbing plan: label the tree, stab every node's
+    // lft against the region-level [lft, rght] intervals, count per
+    // subtree. The oracle counts subtree membership relationally —
+    // wrong labels or wrong stabbing both break the match.
+    Query("q_interval_join", """
+      SELECT 'R' || r_regionkey AS anc_id,
+             1 + COUNT(DISTINCT n_nationkey) + COUNT(c_custkey) AS n_desc
+      FROM region
+      LEFT JOIN nation ON n_regionkey = r_regionkey
+      LEFT JOIN customer ON c_nationkey = n_nationkey
+      GROUP BY 1 ORDER BY 1""", { (s, dir) =>
+      // labeled tree feeds BOTH join sides — persist or the whole
+      // labeling plan executes twice (once per side)
+      val ns = Hierarchy.nestedSet(taxonomyNodes(s, dir)).persist()
+      val regions = ns.where(col("level") === 1).select(
+        col("node_id").as("anc_id"),
+        col("lft").as("anc_lft"), col("rght").as("anc_rght"))
+      graft.plans.IntervalJoin.join(ns, regions, "lft", "anc_lft", "anc_rght")
+        .groupBy("anc_id").agg(count(lit(1)).as("n_desc"))
+        .orderBy("anc_id")
+    }),
   )
 }

@@ -200,52 +200,106 @@ steps:
   private def resolver(s: SparkSession, dir: String): String => DataFrame =
     name => Tables(s, dir, name)
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Seq[Query] = Seq(
     // R1 gate — YAML spec in, one Catalyst plan out: loader relation
     // join + filter + aggregate + select + sort, rows gated against
     // plain SQL. A compiler defect anywhere (wrong join key, lost
     // filter, mis-parsed agg expr) changes rows.
-    "q_pipeline_run" -> { (s, dir) =>
+    Query("q_pipeline_run", """
+      SELECT c_nationkey AS nation_key, COUNT(1) AS n_orders,
+             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+      FROM orders JOIN customer ON o_custkey = c_custkey
+      WHERE o_orderstatus = 'F'
+      GROUP BY 1 ORDER BY 1""", { (s, dir) =>
       Pipeline.result(s, revenueSpec, resolver(s, dir))
-    },
+    }),
     // R2 gate — the EXPORT path: the spec's parquet export executes
     // into a scratch dir and the gate re-reads the exported files;
     // layout or type damage in the exporter changes rows.
-    "q_pipeline_export" -> { (s, dir) =>
-      val out = s"/tmp/graft-pipeline-${java.lang.Math.abs(dir.hashCode)}"
+    Query("q_pipeline_export", """
+      SELECT c_mktsegment, COUNT(1) AS n_orders,
+             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+      FROM orders JOIN customer ON o_custkey = c_custkey
+      GROUP BY 1 ORDER BY 1""", { (s, dir) =>
+      val out = Query.scratchPath("pipeline", dir)
       val paths = Pipeline.run(s, exportSpec, resolver(s, dir), out)
       s.read.parquet(paths.head._2).orderBy("c_mktsegment")
-    },
+    }),
     // R3 gate — chain references: the oracle recomputes every
     // referenced scalar in plain SQL CTEs, so a resolver defect
     // (wrong step, wrong pipe semantics, silent multi-row pickup,
     // broken array indexing) changes a value and fails the hash.
-    "q_pipeline_chain_ref" -> { (s, dir) =>
+    Query("q_pipeline_chain_ref", """
+      WITH szstats AS (SELECT max(p_size) AS max_sz FROM part),
+           brands AS (SELECT list_sort(list(DISTINCT p_brand)) AS blist FROM part),
+           pstats AS (SELECT CAST(count(1) AS BIGINT) AS n_parts,
+                             CAST(sum(p_size) AS BIGINT) AS sz_sum FROM part),
+           tagged AS (SELECT l.* FROM lineitem l, szstats
+                      WHERE l_partkey % 100 < CAST(max_sz AS BIGINT)
+                        AND l_quantity > 25)
+      SELECT l_returnflag, COUNT(1) AS n,
+             CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS qty,
+             (SELECT n_parts FROM pstats) AS n_parts,
+             (SELECT sz_sum FROM pstats) AS sz_sum,
+             (SELECT CAST(len(blist) AS BIGINT) FROM brands) AS n_brands,
+             (SELECT blist[-1] FROM brands) AS top_brand
+      FROM tagged GROUP BY 1 ORDER BY 1""", { (s, dir) =>
       Pipeline.result(s, chainRefSpec, resolver(s, dir))
-    },
+    }),
     // R4 gate — the spec-driven curation chain: every stage (dedup
     // keep-row, quality keep, PII injection+scrub, stratified cut)
     // re-derived by the oracle from the raw table, full text
     // row-hashed.
-    "q_pipeline_curate" -> { (s, dir) =>
+    Query("q_pipeline_curate", """
+      WITH dedup AS (
+        SELECT doc_id, source, text FROM (
+          SELECT doc_id, source, text,
+                 ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS drn
+          FROM documents) t WHERE drn = 1),
+      w AS (
+        SELECT doc_id, len(string_split(text, ' ')) AS n_words,
+               unnest(string_split(text, ' ')) AS word
+        FROM dedup),
+      wc AS (SELECT doc_id, n_words, word, COUNT(*) AS c FROM w GROUP BY 1, 2, 3),
+      sig AS (
+        SELECT doc_id, n_words, CAST(COUNT(*) AS INT) AS n_distinct, MAX(c) AS top
+        FROM wc GROUP BY 1, 2),
+      kept AS (
+        SELECT d.doc_id, d.source, d.text
+        FROM dedup d JOIN sig s USING (doc_id)
+        WHERE s.n_words >= 30
+          AND CAST(s.n_distinct AS DOUBLE) / s.n_words >= 0.35
+          AND CAST(s.top AS DOUBLE) / s.n_words <= 0.12),
+      seeded AS (
+        SELECT doc_id, source,
+               text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com' AS text
+        FROM kept),
+      scrub AS (
+        SELECT doc_id, source,
+               regexp_replace(text,
+                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
+                 '<EMAIL>', 'g') AS text
+        FROM seeded),
+      samp AS (
+        SELECT doc_id, source, text, rn FROM (
+          SELECT doc_id, source, text,
+                 ROW_NUMBER() OVER (PARTITION BY source
+                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn,
+                 COUNT(*) OVER (PARTITION BY source) AS cnt
+          FROM scrub) t
+        WHERE rn <= GREATEST(1, CAST(CEIL(cnt * 0.5) AS BIGINT)))
+      SELECT doc_id, source, text, CAST(rn AS INT) AS rn
+      FROM samp ORDER BY doc_id""", { (s, dir) =>
       Pipeline.result(s, curateSpec, resolver(s, dir))
-    },
+    }),
     // R5 gate — the web-compliance chain as ONE spec: synthesize messy
     // URLs → url_normalize in place (idempotence makes the later
     // re-normalize inside url_filter a no-op, spec-held) → blocklist
     // verdicts in flag mode; the oracle re-derives canon/host/verdict
     // from the raw table, so a step-bridge defect changes rows.
-    "q_pipeline_web" -> { (s, dir) =>
+    Query("q_pipeline_web", TextQueries.urlFilterOracle, { (s, dir) =>
       Pipeline.result(s, webSpec, resolver(s, dir))
-    },
-    // R6 gate — the crawl front end as ONE spec, starting at the
-    // CONTAINER: real multi-member .warc.gz files land on disk, a
-    // `format: warc` source parses them (never touching the table
-    // registry) and html_extract runs in place — container bytes →
-    // training text under one hash. The oracle replays page synthesis
-    // + extraction from `documents` and never sees a WARC byte, so a
-    // source-format defect, a spec-bridge defect, or an extraction
-    // drift moves a row.
+    }),
     // R7 gate — the FULL compliance chain as one spec: per-host
     // robots.txt bodies parse through a robots_rules step, the rule
     // frame feeds a url_filter step via `rulesFrom` (longest-match
@@ -254,7 +308,7 @@ steps:
     // synthesis grid as q_robots_allow, so its oracle (which
     // enumerates expected verdicts semantically, replaying neither
     // parser nor matcher) serves this composition too.
-    "q_pipeline_robots" -> { (s, dir) =>
+    Query("q_pipeline_robots", TextQueries.robotsAllowOracle, { (s, dir) =>
       val spec = """
 entity: robots_compliance
 sources: [{name: urls, table: urls}, {name: hosts, table: hosts}]
@@ -273,7 +327,7 @@ steps:
         case "hosts" => TextQueries.robotsAllowHosts(s, dir)
         case other => throw new IllegalStateException(s"unexpected table $other")
       })
-    },
+    }),
     // R8 gate — the TRAINING-DATA HYGIENE chain as ONE spec (the
     // round-13 verdict's missing config-driven surface): near-dup
     // clustering (LSH candidates, exact verification, components,
@@ -283,112 +337,10 @@ steps:
     // a recursive min-label closure + an exact 5-gram bench join — so
     // a defect in any step bridge, the cluster apply, the benchFrom
     // resolution, or the export layout changes rows.
-    "q_pipeline_dedup" -> { (s, dir) =>
-      val out = s"/tmp/graft-pdedup-${java.lang.Math.abs(dir.hashCode)}"
-      val spec = """
-entity: corpus_hygiene
-sources: [{name: docs, table: documents}]
-steps:
-  - name: bench
-    op: filter
-    input: docs
-    params: {where: "source = 'src0'"}
-  - name: corpus
-    op: filter
-    input: docs
-    params: {where: "source <> 'src0'"}
-  - name: near_dup
-    op: minhash_dedup
-    input: corpus
-    params: {id: doc_id, text: text, minJaccard: 0.5}
-  - name: decon
-    op: decontaminate
-    params: {id: doc_id, text: text, benchFrom: bench, n: 5}
-  - name: cols
-    op: select
-    params: {columns: [doc_id, source, n_chars]}
-exports:
-  - name: clean
-    format: parquet
-    params: {path: clean}
-"""
-      val paths = Pipeline.run(s, spec, resolver(s, dir), out)
-      s.read.parquet(paths.head._2).orderBy("doc_id")
-    },
-    // R9 gate — the variable-length span scrub as a spec step (text
-    // rewritten IN PLACE): chains the q_span_scrub_var oracle verbatim,
-    // so the step bridge (in-place column replacement, id mapping) is
-    // the only new code under the hash.
-    "q_pipeline_scrub" -> { (s, dir) =>
-      val spec = """
-entity: span_hygiene
-sources: [{name: docs, table: documents}]
-steps:
-  - name: scrubbed
-    op: span_scrub
-    params: {id: doc_id, text: text, spanLen: 8, mode: variable}
-  - name: cols
-    op: select
-    params: {columns: [doc_id, text]}
-  - name: ordered
-    op: sort
-    params: {by: [doc_id]}
-"""
-      Pipeline.result(s, spec, resolver(s, dir))
-    },
-    // R10 gate (r15) — the J17c longest-duplicated-substring report
-    // producible from CONFIG (the registry posture): the spec step is
-    // the only new code under the hash; the oracle is the J17c
-    // independent-formulation oracle verbatim. This is the diagnostic
-    // a pipeline author runs to choose span_scrub's spanLen/minDocs.
-    "q_pipeline_longest_dup" -> { (s, dir) =>
-      val spec = """
-entity: dup_diagnostic
-sources: [{name: docs, table: documents}]
-steps:
-  - name: report
-    op: longest_dup
-    params: {id: doc_id, text: text, rounds: 8}
-"""
-      Pipeline.result(s, spec, resolver(s, dir))
-    },
-    "q_pipeline_warc" -> { (s, dir) =>
-      val tag = java.lang.Math.abs(dir.hashCode)
-      val path = s"/tmp/graft-pwarc-$tag"
-      val url = concat(lit("https://site"), (col("doc_id") % 20).cast("string"),
-        lit(".example.com/doc/"), col("doc_id").cast("string"))
-      val pages = Tables.documents(s, dir)
-        .select(col("doc_id"), url.as("url"), TextQueries.synthHtml.as("html"))
-        .repartition(8, pmod(col("doc_id"), lit(8)))
-        .sortWithinPartitions("doc_id")
-      graft.sources.Warc.writeFiles(pages, "url", "html", path)
-      val spec = s"""
-entity: crawl
-sources: [{name: crawl, table: "$path/*.warc.gz", format: warc}]
-steps:
-  - name: wet
-    op: html_extract
-    params: {html: html}
-"""
-      Pipeline.result(s, spec,
-          t => throw new IllegalStateException(s"warc source resolved table $t"))
-        .select(
-          regexp_extract(col("url"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          col("url"), col("http_status"), col("mime"), col("html"))
-        .orderBy("doc_id")
-    },
-  )
-
-  val oracles: Map[String, String] = Map(
-    // exact inverted-index jaccard pairs at the step's threshold, a
-    // recursive min-label closure (the q_dedup_cluster pattern), the
-    // canonical-keep anti-join (q_dedup_apply), then the q_decontaminate
-    // bench-gram join — survivors only
-    "q_pipeline_dedup" -> """
+    Query("q_pipeline_dedup", s"""
       WITH RECURSIVE s AS (
         SELECT doc_id,
-          list_distinct(list_transform(generate_series(1, len(toks) - 2),
-            i -> array_to_string(toks[i:i+2], ' '))) AS sh
+          ${OracleSql.shingles3} AS sh
         FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents
               WHERE source <> 'src0')
         WHERE len(toks) >= 3),
@@ -429,99 +381,113 @@ steps:
         JOIN bg USING (gram))
       SELECT doc_id, source, n_chars FROM surv
       WHERE doc_id NOT IN (SELECT doc_id FROM dirty)
-      ORDER BY doc_id""",
-    // the q_span_scrub_var oracle verbatim, projected to the step's
-    // in-place (doc_id, text) shape
-    "q_pipeline_scrub" -> s"""
+      ORDER BY doc_id""", { (s, dir) =>
+      val out = Query.scratchPath("pdedup", dir)
+      val spec = """
+entity: corpus_hygiene
+sources: [{name: docs, table: documents}]
+steps:
+  - name: bench
+    op: filter
+    input: docs
+    params: {where: "source = 'src0'"}
+  - name: corpus
+    op: filter
+    input: docs
+    params: {where: "source <> 'src0'"}
+  - name: near_dup
+    op: minhash_dedup
+    input: corpus
+    params: {id: doc_id, text: text, minJaccard: 0.5}
+  - name: decon
+    op: decontaminate
+    params: {id: doc_id, text: text, benchFrom: bench, n: 5}
+  - name: cols
+    op: select
+    params: {columns: [doc_id, source, n_chars]}
+exports:
+  - name: clean
+    format: parquet
+    params: {path: clean}
+"""
+      val paths = Pipeline.run(s, spec, resolver(s, dir), out)
+      s.read.parquet(paths.head._2).orderBy("doc_id")
+    }),
+    // R9 gate — the variable-length span scrub as a spec step (text
+    // rewritten IN PLACE): chains the q_span_scrub_var oracle verbatim,
+    // so the step bridge (in-place column replacement, id mapping) is
+    // the only new code under the hash.
+    Query("q_pipeline_scrub", s"""
       SELECT doc_id, text_clean AS text FROM (
-        ${DedupQueries.oracles("q_span_scrub_var")}
-      ) ORDER BY doc_id""",
-    // the J17c oracle verbatim — the spec step returns the report
-    // unchanged, so the step bridge is the only new code under the hash
-    "q_pipeline_longest_dup" -> DedupQueries.oracles("q_longest_dup"),
-    // the spec chains the L11→L14 ops on the q_url_filter synthesis
-    // grid verbatim — one oracle serves both gates
-    "q_pipeline_web" -> TextQueries.oracles("q_url_filter"),
-    // robots_rules → rulesFrom → url_filter chains the q_robots_allow
-    // synthesis verbatim — its semantic-enumeration oracle serves the
-    // composition too
-    "q_pipeline_robots" -> TextQueries.oracles("q_robots_allow"),
-    // the W-family replay CTEs + the html_extract in-place projection:
-    // the engine's rows come from real container bytes through the
-    // spec-compiled plan, the oracle's from page formulas
-    "q_pipeline_warc" -> s"""${TextQueries.warcReplayCtes}
+        ${DedupQueries.spanScrubVarOracle}
+      ) ORDER BY doc_id""", { (s, dir) =>
+      val spec = """
+entity: span_hygiene
+sources: [{name: docs, table: documents}]
+steps:
+  - name: scrubbed
+    op: span_scrub
+    params: {id: doc_id, text: text, spanLen: 8, mode: variable}
+  - name: cols
+    op: select
+    params: {columns: [doc_id, text]}
+  - name: ordered
+    op: sort
+    params: {by: [doc_id]}
+"""
+      Pipeline.result(s, spec, resolver(s, dir))
+    }),
+    // R10 gate (r15) — the J17c longest-duplicated-substring report
+    // producible from CONFIG (the registry posture): the spec step is
+    // the only new code under the hash; the oracle is the J17c
+    // independent-formulation oracle verbatim. This is the diagnostic
+    // a pipeline author runs to choose span_scrub's spanLen/minDocs.
+    Query("q_pipeline_longest_dup", DedupQueries.longestDupOracle, { (s, dir) =>
+      val spec = """
+entity: dup_diagnostic
+sources: [{name: docs, table: documents}]
+steps:
+  - name: report
+    op: longest_dup
+    params: {id: doc_id, text: text, rounds: 8}
+"""
+      Pipeline.result(s, spec, resolver(s, dir))
+    }),
+    // R6 gate — the crawl front end as ONE spec, starting at the
+    // CONTAINER: real multi-member .warc.gz files land on disk, a
+    // `format: warc` source parses them (never touching the table
+    // registry) and html_extract runs in place — container bytes →
+    // training text under one hash. The oracle replays page synthesis
+    // + extraction from `documents` and never sees a WARC byte, so a
+    // source-format defect, a spec-bridge defect, or an extraction
+    // drift moves a row.
+    Query("q_pipeline_warc", s"""${OracleSql.warcReplayCtes}
       SELECT doc_id, url,
         CAST(200 AS INT) AS http_status,
         'text/html; charset=utf-8' AS mime,
-        array_to_string(list_transform(
-          list_filter(ls, s -> s.words >= 3 AND s.links * 2 <= s.words),
-          s -> s.txt), chr(10)) AS html
-      FROM t2 ORDER BY doc_id""",
-    "q_pipeline_run" -> """
-      SELECT c_nationkey AS nation_key, COUNT(1) AS n_orders,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-      FROM orders JOIN customer ON o_custkey = c_custkey
-      WHERE o_orderstatus = 'F'
-      GROUP BY 1 ORDER BY 1""",
-    "q_pipeline_export" -> """
-      SELECT c_mktsegment, COUNT(1) AS n_orders,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-      FROM orders JOIN customer ON o_custkey = c_custkey
-      GROUP BY 1 ORDER BY 1""",
-    "q_pipeline_chain_ref" -> """
-      WITH szstats AS (SELECT max(p_size) AS max_sz FROM part),
-           brands AS (SELECT list_sort(list(DISTINCT p_brand)) AS blist FROM part),
-           pstats AS (SELECT CAST(count(1) AS BIGINT) AS n_parts,
-                             CAST(sum(p_size) AS BIGINT) AS sz_sum FROM part),
-           tagged AS (SELECT l.* FROM lineitem l, szstats
-                      WHERE l_partkey % 100 < CAST(max_sz AS BIGINT)
-                        AND l_quantity > 25)
-      SELECT l_returnflag, COUNT(1) AS n,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS qty,
-             (SELECT n_parts FROM pstats) AS n_parts,
-             (SELECT sz_sum FROM pstats) AS sz_sum,
-             (SELECT CAST(len(blist) AS BIGINT) FROM brands) AS n_brands,
-             (SELECT blist[-1] FROM brands) AS top_brand
-      FROM tagged GROUP BY 1 ORDER BY 1""",
-    "q_pipeline_curate" -> """
-      WITH dedup AS (
-        SELECT doc_id, source, text FROM (
-          SELECT doc_id, source, text,
-                 ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS drn
-          FROM documents) t WHERE drn = 1),
-      w AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS n_words,
-               unnest(string_split(text, ' ')) AS word
-        FROM dedup),
-      wc AS (SELECT doc_id, n_words, word, COUNT(*) AS c FROM w GROUP BY 1, 2, 3),
-      sig AS (
-        SELECT doc_id, n_words, CAST(COUNT(*) AS INT) AS n_distinct, MAX(c) AS top
-        FROM wc GROUP BY 1, 2),
-      kept AS (
-        SELECT d.doc_id, d.source, d.text
-        FROM dedup d JOIN sig s USING (doc_id)
-        WHERE s.n_words >= 30
-          AND CAST(s.n_distinct AS DOUBLE) / s.n_words >= 0.35
-          AND CAST(s.top AS DOUBLE) / s.n_words <= 0.12),
-      seeded AS (
-        SELECT doc_id, source,
-               text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com' AS text
-        FROM kept),
-      scrub AS (
-        SELECT doc_id, source,
-               regexp_replace(text,
-                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                 '<EMAIL>', 'g') AS text
-        FROM seeded),
-      samp AS (
-        SELECT doc_id, source, text, rn FROM (
-          SELECT doc_id, source, text,
-                 ROW_NUMBER() OVER (PARTITION BY source
-                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn,
-                 COUNT(*) OVER (PARTITION BY source) AS cnt
-          FROM scrub) t
-        WHERE rn <= GREATEST(1, CAST(CEIL(cnt * 0.5) AS BIGINT)))
-      SELECT doc_id, source, text, CAST(rn AS INT) AS rn
-      FROM samp ORDER BY doc_id""",
+        ${OracleSql.extractedText} AS html
+      FROM t2 ORDER BY doc_id""", { (s, dir) =>
+      val path = Query.scratchPath("pwarc", dir)
+      val pages = Tables.documents(s, dir)
+        .select(col("doc_id"), TextQueries.crawlUrl.as("url"),
+          TextQueries.synthHtml.as("html"))
+        .repartition(8, pmod(col("doc_id"), lit(8)))
+        .sortWithinPartitions("doc_id")
+      graft.sources.Warc.writeFiles(pages, "url", "html", path)
+      val spec = s"""
+entity: crawl
+sources: [{name: crawl, table: "$path/*.warc.gz", format: warc}]
+steps:
+  - name: wet
+    op: html_extract
+    params: {html: html}
+"""
+      Pipeline.result(s, spec,
+          t => throw new IllegalStateException(s"warc source resolved table $t"))
+        .select(
+          regexp_extract(col("url"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
+          col("url"), col("http_status"), col("mime"), col("html"))
+        .orderBy("doc_id")
+    }),
   )
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.Retrieval
@@ -29,24 +28,6 @@ object RetrievalQueries {
   private val fuseK = 15 // fused head
   private val rrfK = 60 // the standard RRF damping constant
   private val denseQueryId = 5L
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bm25_topk" -> { (s, dir) =>
-      Retrieval.bm25TopK(
-        Tables.documents(s, dir), "doc_id", "text", terms, bmK, k1, b)
-    },
-    // hybrid = RRF(sparse BM25 head, dense cosine head). The dense
-    // list retrieves over `embeddings` (vec_id is the doc key for
-    // embedded docs — only embedded docs are dense-retrievable).
-    "q_hybrid_search" -> { (s, dir) =>
-      val sparse = Retrieval.bm25TopK(
-        Tables.documents(s, dir), "doc_id", "text", terms, fuseN, k1, b)
-      val dense = Retrieval.denseTopN(
-          Tables.embeddings(s, dir), "vec_id", "embedding", denseQueryId, fuseN)
-        .select(col("vec_id").as("doc_id"), col("rank"))
-      Retrieval.rrfFuse(Seq(sparse, dense), "doc_id", "rank", rrfK, fuseK)
-    },
-  )
 
   /** `CAST('<repr>' AS DOUBLE)`: string→double is correctly rounded,
     * so the SQL side gets bit-identically the Scala double. */
@@ -90,9 +71,15 @@ object RetrievalQueries {
        / SQRT(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
             * list_sum(list_transform($bb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"""
 
-  val oracles: Map[String, String] = Map(
-    "q_bm25_topk" -> s"${bm25Sql(bmK)} ORDER BY rank",
-    "q_hybrid_search" -> s"""
+  val queries: Seq[Query] = Seq(
+    Query("q_bm25_topk", s"${bm25Sql(bmK)} ORDER BY rank", { (s, dir) =>
+      Retrieval.bm25TopK(
+        Tables.documents(s, dir), "doc_id", "text", terms, bmK, k1, b)
+    }),
+    // hybrid = RRF(sparse BM25 head, dense cosine head). The dense
+    // list retrieves over `embeddings` (vec_id is the doc key for
+    // embedded docs — only embedded docs are dense-retrievable).
+    Query("q_hybrid_search", s"""
       WITH br AS (${bm25Sql(fuseN)}),
       q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = $denseQueryId),
       dc AS (SELECT e.vec_id AS doc_id, ${cosSql("q.qv", "e.embedding")} AS cosine
@@ -112,6 +99,13 @@ object RetrievalQueries {
              ORDER BY rrf DESC, doc_id LIMIT $fuseK)
       SELECT doc_id, rank_0, rank_1, rrf,
              CAST(ROW_NUMBER() OVER (ORDER BY rrf DESC, doc_id) AS INT) AS rank
-      FROM hd ORDER BY rank""",
+      FROM hd ORDER BY rank""", { (s, dir) =>
+      val sparse = Retrieval.bm25TopK(
+        Tables.documents(s, dir), "doc_id", "text", terms, fuseN, k1, b)
+      val dense = Retrieval.denseTopN(
+          Tables.embeddings(s, dir), "vec_id", "embedding", denseQueryId, fuseN)
+        .select(col("vec_id").as("doc_id"), col("rank"))
+      Retrieval.rrfFuse(Seq(sparse, dense), "doc_id", "rank", rrfK, fuseK)
+    }),
   )
 }

@@ -12,10 +12,12 @@ import graft.operators.{Chain, Html, TextAnalysis}
   */
 object TextQueries {
 
+  import OracleSql._
+
   /** The deterministic doc_id-derived page shared by the L9/L10/W1
     * gates (title/style/script head, nav + footer link bars, headings,
     * entity-laden paragraphs — the Q12 inject pattern); the oracles
-    * replay it in SQL verbatim. */
+    * replay it as [[OracleSql.htmlPage]]. */
   private[queries] def synthHtml: org.apache.spark.sql.Column = {
     val d = col("doc_id").cast("string")
     concat(
@@ -31,6 +33,12 @@ object TextQueries {
         + "<a href=\"/privacy\">Privacy</a> 2026</div></body></html>"))
   }
 
+  /** The crawl URL the W-family gates give each synthesized page
+    * ([[OracleSql.warcUrl]] in the oracles). */
+  private[queries] def crawlUrl: org.apache.spark.sql.Column =
+    concat(lit("https://site"), (col("doc_id") % 20).cast("string"),
+      lit(".example.com/doc/"), col("doc_id").cast("string"))
+
   /** The L18 planted language signal: a fixed function-word phrase per
     * language (what a real multilingual corpus carries naturally; the
     * synthetic one does not — every lang draws one shared vocabulary),
@@ -41,6 +49,19 @@ object TextQueries {
     "de" -> "der die und den von das mit sich des auf",
     "es" -> "el la que de en los se del las por",
     "zh" -> "的 一 是 在 不 了 有 和 人 这")
+
+  /** The L11 messy-URL grid without the planted IDN host and %-escape
+    * cluster: the URLs the L14/L15 filters judge. */
+  private def urlGrid: org.apache.spark.sql.Column = {
+    val d = col("doc_id")
+    concat(
+      when(d % 2 === 0, lit("HTTP")).otherwise(lit("https")), lit("://"),
+      when(d % 3 === 0, lit("WWW.")).otherwise(lit("")),
+      lit("Site"), (d % 20).cast("string"), lit(".Example.COM"),
+      when(d % 2 === 0, lit(":80")).otherwise(lit(":443")),
+      when(d % 4 === 0, lit("")).otherwise(concat(lit("/Path/"), d.cast("string"))),
+      when(d % 5 === 0, concat(lit("#Frag"), d.cast("string"))).otherwise(lit("")))
+  }
 
   /** The L16/q_robots_allow synthesis grid, shared with the
     * q_pipeline_robots composition gate (one oracle serves both):
@@ -76,381 +97,6 @@ object TextQueries {
       lit(".example.com"), path)
     Tables.documents(s, dir).select(d, url.as("url"))
   }
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_text_quality" -> { (s, dir) =>
-      TextAnalysis.quality(Tables.documents(s, dir), "doc_id", "text")
-    },
-    "q_lang_id" -> { (s, dir) =>
-      TextAnalysis.langId(Tables.documents(s, dir), "doc_id", "text")
-    },
-    // L18 — LEARNED language ID (the CCNet front door is a fastText
-    // classifier, not a stopword list): one-vs-rest integer logistic
-    // units over hashed char-trigram features, trained on the even
-    // doc_ids against the corpus's `lang` labels, argmax-served on the
-    // held-out odd side. The corpus's text carries NO language signal
-    // (every lang draws the same vocabulary), so the gate PLANTS one —
-    // a per-language function-word phrase prefixed to each doc (the
-    // Q12/L9 inject pattern; real function words, incl. CJK for zh) —
-    // and the held-out argmax must then actually RECOVER the label
-    // (100% at these hyperparameters — asserted by spec, while the
-    // hash gate pins the arithmetic). ZERO floating point (the Q18
-    // contract); the oracle replays synthesis AND the ENTIRE training
-    // loop — 5 languages × 8 epochs unrolled, every margin/gradient/
-    // clip integer-exact — plus the argmax with its lexicographic
-    // tie-break, so a drift in any weight of any class on any epoch
-    // moves a row.
-    "q_lang_id_learned" -> { (s, dir) =>
-      val phrase = when(col("lang") === "en", lit(langPhrases("en")))
-        .when(col("lang") === "fr", lit(langPhrases("fr")))
-        .when(col("lang") === "de", lit(langPhrases("de")))
-        .when(col("lang") === "es", lit(langPhrases("es")))
-        .otherwise(lit(langPhrases("zh")))
-      // langIdLangs: all 5 classes unless the sf10+ sweep knob
-      // restricts the gate (see langIdLearnedOracleSql's scaladoc)
-      val base =
-        if (langIdLangs.size == 5) Tables.documents(s, dir)
-        else Tables.documents(s, dir).where(col("lang").isin(langIdLangs: _*))
-      graft.operators.Classifier.langIdLearned(
-        base.select(col("doc_id"), col("lang"),
-            concat(phrase, lit(" "), col("text")).as("text")),
-        "doc_id", "text", "lang",
-        col("doc_id") % 2 === 0, buckets = 1024, epochs = 8, lrNum = 8L)
-    },
-    "q_token_count" -> { (s, dir) =>
-      TextAnalysis.tokenStats(Tables.documents(s, dir), "doc_id", "text")
-    },
-    "q_fingerprint" -> { (s, dir) =>
-      TextAnalysis.fingerprintClusters(Tables.documents(s, dir), "doc_id", "text")
-    },
-    // L8 — n-gram LM fluency scoring (CCNet): src1 docs stand in for
-    // the clean reference corpus; every other doc scores under the
-    // smoothed bigram model fit on it. The oracle replays the fit and
-    // the scoring end-to-end (integer counts, one quantized IEEE
-    // division per bigram type, exact sums), so a drift anywhere in
-    // model building, back-off, or the mean moves a row.
-    "q_lm_fluency" -> { (s, dir) =>
-      TextAnalysis.lmFluency(
-        Tables.documents(s, dir), "doc_id", "text",
-        col("source") === "src1")
-    },
-    // L9 — HTML → training-text extraction (the WARC→WET stage): the
-    // corpus is plain text, so the query SYNTHESIZES deterministic
-    // doc_id-derived HTML (title/style/script head, nav + footer link
-    // bars, headings, entity-laden paragraphs — the Q12 inject pattern),
-    // runs the real extraction (block strip, line split, tag strip,
-    // entity decode, integer link-density boilerplate cut), and the
-    // oracle replays BOTH synthesis and extraction — the full extracted
-    // text is row-hashed, so a drift in any regex, the unescape order,
-    // or the keep rule moves a row.
-    "q_html_extract" -> { (s, dir) =>
-      Html.htmlExtract(
-        Tables.documents(s, dir).select(col("doc_id"), synthHtml.as("html")),
-        "doc_id", "html")
-    },
-    // W1 — WARC container round trip (the real CommonCrawl front-end
-    // format): the gate writes the L9 synthesis corpus as ACTUAL
-    // multi-member-gzip .warc.gz crawl files (distributed, one file
-    // per partition, warcinfo + framed HTTP response records), reads
-    // them back through the per-file distributed parser, and runs the
-    // L9 extraction on the recovered pages — url/status/mime from the
-    // WARC+HTTP headers and the FULL extracted text are row-hashed, so
-    // a defect in gzip member handling, Content-Length framing, header
-    // parsing, or HTTP body splitting moves a row. The oracle replays
-    // synthesis + extraction from `documents` and never sees a WARC
-    // byte (the GeoTiff/M1 synthesize-then-decode posture).
-    // W2 — the cdx-style member index + seek read (the record-range
-    // access path for >2 GB crawl files and sparse cdx hit lists):
-    // the gate writes the same corpus as actual .warc.gz, builds the
-    // member-boundary index with the Inflater walk, keeps a SPARSE
-    // subset of index rows (every 9th doc), and fetches exactly those
-    // records by positioned (offset, length) reads — url/status/mime/
-    // full page html row-hashed. The oracle replays the subset's
-    // synthesis from `documents`; it never sees an offset or a byte,
-    // so a member-boundary drift, a header-field miscount, or a
-    // positioned-read bug surfaces as a moved/missing row.
-    "q_warc_index" -> { (s, dir) =>
-      val tag = java.lang.Math.abs(dir.hashCode)
-      val path = s"/tmp/graft-warcidx-$tag"
-      val url = concat(lit("https://site"), (col("doc_id") % 20).cast("string"),
-        lit(".example.com/doc/"), col("doc_id").cast("string"))
-      val pages = Tables.documents(s, dir)
-        .select(col("doc_id"), url.as("url"), synthHtml.as("html"))
-        .repartition(8, pmod(col("doc_id"), lit(8)))
-        .sortWithinPartitions("doc_id")
-      graft.sources.Warc.writeFiles(pages, "url", "html", path)
-      val idx = graft.sources.Warc.index(s, s"$path/*.warc.gz")
-      val wanted = idx.where(col("warc_type") === "response")
-        .where(regexp_extract(col("url"), "/doc/(\\d+)$", 1)
-          .cast("long") % 9 === 0)
-      graft.sources.Warc.readRecords(wanted)
-        .select(
-          regexp_extract(col("url"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          col("url"), col("http_status"), col("mime"),
-          col("body").cast("string").as("html"))
-        .orderBy("doc_id")
-    },
-    // Round 12 grows the corpus with REAL HTTP body transforms (what
-    // live CommonCrawl records carry): chunked Transfer-Encoding on
-    // every 10k+1 doc, gzip Content-Encoding on 10k+2, BOTH (chunked
-    // over gzip, the RFC 9112 sender order) on 10k+7, and an
-    // ISO-8859-1 page (accented content, charset declared in
-    // Content-Type, transcoded to UTF-8 by the reader) on 10k+3. The
-    // oracle sees none of it — identical post-decode text, a mime CASE
-    // for the latin-1 rows — so a de-chunking, decompression, or
-    // charset defect moves a row.
-    "q_warc_extract" -> { (s, dir) =>
-      val tag = java.lang.Math.abs(dir.hashCode)
-      val path = s"/tmp/graft-warc-$tag"
-      val d = col("doc_id")
-      val url = concat(lit("https://site"), (d % 20).cast("string"),
-        lit(".example.com/doc/"), d.cast("string"))
-      val mode = when(d % 10 === 1, lit("chunked"))
-        .when(d % 10 === 2, lit("gzip"))
-        .when(d % 10 === 7, lit("chunked+gzip"))
-        .when(d % 10 === 3, lit("latin1"))
-        .otherwise(lit(""))
-      val latinPage = concat(
-        lit("<html><body><p>Café résumé München doc "), d.cast("string"),
-        lit(" smørrebrød på vägen</p></body></html>"))
-      val pages = Tables.documents(s, dir)
-        .select(d, url.as("url"),
-          when(d % 10 === 3, latinPage).otherwise(synthHtml).as("html"),
-          mode.as("mode"))
-        .repartition(8, pmod(col("doc_id"), lit(8)))
-        .sortWithinPartitions("doc_id")
-      graft.sources.Warc.writeFiles(pages, "url", "html", path, modeCol = "mode")
-      val resp = graft.sources.Warc.responses(s, s"$path/*.warc.gz")
-        .select(
-          regexp_extract(col("url"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          col("url"), col("http_status"), col("mime"), col("html"))
-      resp.select("doc_id", "url", "http_status", "mime")
-        .join(Html.htmlExtract(resp, "doc_id", "html"), "doc_id")
-        .orderBy("doc_id")
-    },
-    // L10 — outbound-link extraction from the SAME synthesized HTML as
-    // L9: one row per anchor in document order, href + cleaned anchor
-    // text — the edge source that feeds the S1 link-graph authority
-    // pass. The oracle replays synthesis and the group-wise
-    // regexp_extract_all verbatim.
-    "q_html_links" -> { (s, dir) =>
-      Html.htmlLinks(
-        Tables.documents(s, dir).select(col("doc_id"), synthHtml.as("html")),
-        "doc_id", "html")
-        .orderBy("doc_id", "link_no")
-    },
-    // L11 — canonical-URL key: messy doc_id-derived URLs (scheme/host
-    // case, www, default ports, fragments, empty paths) normalized to
-    // the key a crawl frontier dedups on, plus the domain key. The
-    // oracle replays synthesis and every normalization stage (the only
-    // dialect delta is \1 vs $1 in the replacement string).
-    "q_url_normalize" -> { (s, dir) =>
-      val d = col("doc_id")
-      // round 11 grows the grid: an IDN host every 11th doc (punycode
-      // folding) and a %-escape cluster every 7th doc (unreserved
-      // decode %41→A/%7e→~, reserved uppercase %2f→%2F, malformed %zz
-      // byte-preserved)
-      val url = concat(
-        when(d % 2 === 0, lit("HTTP")).otherwise(lit("https")), lit("://"),
-        when(d % 3 === 0, lit("WWW.")).otherwise(lit("")),
-        when(d % 11 === 0, lit("MüNCHEN.Example.COM"))
-          .otherwise(concat(lit("Site"), (d % 20).cast("string"), lit(".Example.COM"))),
-        when(d % 2 === 0, lit(":80")).otherwise(lit(":443")),
-        when(d % 4 === 0, lit("")).otherwise(concat(lit("/Path/"), d.cast("string"))),
-        when(d % 7 === 1, lit("/q%41%2f%7e%zz")).otherwise(lit("")),
-        when(d % 5 === 0, concat(lit("#Frag"), d.cast("string"))).otherwise(lit("")))
-      Tables.documents(s, dir).select(
-        col("doc_id"),
-        Html.urlNormalize(url).as("canon"),
-        Html.urlHost(url).as("host"))
-        .orderBy("doc_id")
-    },
-    // L13 — anchor-text aggregation: per-doc pages on 20 hosts emit
-    // two hot static nav anchors, an entity-bearing FAQ anchor on
-    // every third doc, and one varying anchor (the doc's first two
-    // words) pointing at a cross-doc /doc/N page; links resolve
-    // against the doc's host, normalize (fragment strip), and fold to
-    // top-3 anchor terms per target URL. The oracle replays synthesis,
-    // extraction, the anchor cleanup chain, resolution AND the
-    // count/rank argmax — a lost link, a bad entity decode, or a
-    // tie-break inversion moves a row.
-    "q_anchor_text" -> { (s, dir) =>
-      val d = col("doc_id")
-      val firstWords = concat_ws(" ", slice(split(col("text"), " "), 1, 2))
-      val html = concat(
-        lit("<html><body><div><a href=\"/\">Home</a> <a href=\"/About#top\">About Us</a>"),
-        when(d % 3 === 0, lit("<a href=\"/faq\">FAQ &amp; Help</a>")).otherwise(lit("")),
-        lit("</div><p><a href=\"/doc/"), ((d * 13 + 7) % 50).cast("string"),
-        lit("\">"), firstWords, lit("</a> "), col("text"), lit("</p></body></html>"))
-      val links = Html.htmlLinks(
-        Tables.documents(s, dir).select(d, html.as("html")), "doc_id", "html")
-      val host = concat(lit("https://site"), (col("doc_id") % 20).cast("string"),
-        lit(".example.com"))
-      Html.anchorTerms(
-        links.withColumn("target",
-          Html.urlNormalize(Html.urlResolve(host, col("href")))),
-        "target", "anchor", k = 3)
-        .orderBy("target", "rank")
-    },
-    // L17 — RFC 3986 §5 reference resolution: the round-11 verdict's
-    // top gap (real intra-site links are mostly RELATIVE; a link graph
-    // that drops them is blind to the majority of real edges). Per-doc
-    // pages plant one href per resolution class — absolute,
-    // protocol-relative, rooted, relative, dot-up, dot-here, excess
-    // dots past root, query-only, fragment-only, empty — extracted
-    // through the REAL htmlLinks pass, resolved against the page's own
-    // URL, then normalized: the html→links→resolve→normalize chain the
-    // S-family link graph consumes. The oracle states the expected
-    // resolved URL per planted class SEMANTICALLY (it replays neither
-    // the merge nor the dot-segment fold), so a merge-boundary bug, a
-    // pop-past-root, or a query/fragment graft defect moves a row.
-    "q_url_resolve" -> { (s, dir) =>
-      val d = col("doc_id")
-      val ds = d.cast("string")
-      val href = when(d % 10 === 0, concat(lit("https://other.example.org/abs/"), ds))
-        .when(d % 10 === 1, concat(lit("//cdn.example.net/lib"), ds, lit(".js")))
-        .when(d % 10 === 2, concat(lit("/rooted/x"), ds))
-        .when(d % 10 === 3, concat(lit("img/a"), ds, lit(".png")))
-        .when(d % 10 === 4, concat(lit("../up/b"), ds))
-        .when(d % 10 === 5, concat(lit("./here/c"), ds))
-        .when(d % 10 === 6, concat(lit("a/../../../z"), ds))
-        .when(d % 10 === 7, concat(lit("?q="), ds))
-        .when(d % 10 === 8, lit("#frag"))
-        .otherwise(lit(""))
-      val html = concat(lit("<html><body><p><a href=\""), href,
-        lit("\">link</a></p></body></html>"))
-      val base = concat(lit("https://site"), (d % 20).cast("string"),
-        lit(".example.com/dir/sub/page"), ds, lit(".html"))
-      val docs = Tables.documents(s, dir).select(d, html.as("html"))
-      // the base URL is a doc_id formula — rebuild it after link
-      // extraction instead of joining the page frame back (map-only)
-      val baseOf = concat(lit("https://site"), (col("doc_id") % 20).cast("string"),
-        lit(".example.com/dir/sub/page"), col("doc_id").cast("string"), lit(".html"))
-      Html.htmlLinks(docs, "doc_id", "html")
-        .select(col("doc_id"), col("href"),
-          Html.urlNormalize(Html.urlResolve(baseOf, col("href")))
-            .as("resolved"))
-        .orderBy("doc_id")
-    },
-    // L14 — blocklist URL filtering over the L11 synthesis grid: two
-    // domain rules, one never-matching TLD rule, one path-prefix rule;
-    // the engine matches via suffix-explode + equi-join (the
-    // million-rule scale shape), the oracle replays the SEMANTICS
-    // (label-boundary LIKE + starts_with) — equal by construction,
-    // so an explode boundary bug or a prefix-rule leak moves a row.
-    "q_url_filter" -> { (s, dir) =>
-      import s.implicits._
-      val d = col("doc_id")
-      val url = concat(
-        when(d % 2 === 0, lit("HTTP")).otherwise(lit("https")), lit("://"),
-        when(d % 3 === 0, lit("WWW.")).otherwise(lit("")),
-        lit("Site"), (d % 20).cast("string"), lit(".Example.COM"),
-        when(d % 2 === 0, lit(":80")).otherwise(lit(":443")),
-        when(d % 4 === 0, lit("")).otherwise(concat(lit("/Path/"), d.cast("string"))),
-        when(d % 5 === 0, concat(lit("#Frag"), d.cast("string"))).otherwise(lit("")))
-      val rules = Seq(
-        (0L, "site3.example.com", Option.empty[String]),
-        (1L, "site7.example.com", Option.empty[String]),
-        (2L, "example.net", Option.empty[String]),
-        (3L, "site5.example.com", Some("/Path/1")))
-        .toDF("rule_id", "host_suffix", "path_prefix")
-      Html.urlFilter(
-        Tables.documents(s, dir).select(d, url.as("url")), "doc_id", "url", rules)
-    },
-    // L15 — robots.txt compliance end to end: per-host robots bodies
-    // (a decoy Googlebot group that must be IGNORED, a star run
-    // extended by a second UA line on even hosts — shifting the
-    // Disallow line numbers — an empty allow-all Disallow) parse into
-    // rules that filter the L11 URL grid. The oracle does NOT replay
-    // the parser: it enumerates the semantically-expected rule set
-    // from the synthesis structure (including the md5 rule ids at the
-    // KNOWN line numbers), so a parser defect — decoy group leak,
-    // run-extension miss, line-number drift — changes verdicts or
-    // attribution ids and fails the hash.
-    // L16 — FULL RFC 9309 verdict semantics (round 11, closing the
-    // round-10 "Disallow-prefix subset" gap): Allow overrides, `*`
-    // wildcards, `$` end anchors, longest-match precedence with the
-    // Allow-wins tie rule. The oracle enumerates the expected verdict
-    // and DECIDING-rule id per planted path class semantically — it
-    // replays neither the parser nor the matcher, so a wildcard
-    // compile bug, a specificity inversion, or a tie going to
-    // Disallow moves a row.
-    "q_robots_allow" -> { (s, dir) =>
-      Html.urlFilter(
-        robotsAllowUrls(s, dir), "doc_id", "url",
-        Html.robotsRules(robotsAllowHosts(s, dir), "host", "robots"))
-    },
-    "q_robots_filter" -> { (s, dir) =>
-      val d = col("doc_id")
-      val url = concat(
-        when(d % 2 === 0, lit("HTTP")).otherwise(lit("https")), lit("://"),
-        when(d % 3 === 0, lit("WWW.")).otherwise(lit("")),
-        lit("Site"), (d % 20).cast("string"), lit(".Example.COM"),
-        when(d % 2 === 0, lit(":80")).otherwise(lit(":443")),
-        when(d % 4 === 0, lit("")).otherwise(concat(lit("/Path/"), d.cast("string"))),
-        when(d % 5 === 0, concat(lit("#Frag"), d.cast("string"))).otherwise(lit("")))
-      val hosts = Tables.documents(s, dir).select((d % 20).as("hn")).distinct()
-        .select(
-          concat(lit("site"), col("hn").cast("string"), lit(".example.com")).as("host"),
-          concat(
-            lit("# robots\nUser-agent: Googlebot\nDisallow: /\nUser-agent: *\n"),
-            when(col("hn") % 2 === 0, lit("User-agent: HelperBot\n")).otherwise(lit("")),
-            lit("Disallow: /Path/1\n"),
-            when(col("hn") % 3 === 0, lit("Disallow: /Path/2\n")).otherwise(lit("")),
-            lit("Disallow:\n")).as("robots"))
-      Html.urlFilter(
-        Tables.documents(s, dir).select(d, url.as("url")), "doc_id", "url",
-        Html.robotsRules(hosts, "host", "robots"))
-    },
-    // L12 — CCNet head/middle/tail selection over the L8 fluency
-    // scores: boundary VALUES picked at integer ranks ceil(n/3) /
-    // ceil(2n/3) of the descending distinct-fluency histogram, docs
-    // bucketed by a broadcast map-side CASE. The oracle replays the L8
-    // fit AND the histogram/edge/bucket arithmetic — a drift in either
-    // layer relabels a row.
-    "q_fluency_buckets" -> { (s, dir) =>
-      TextAnalysis.fluencyBuckets(
-        Tables.documents(s, dir), "doc_id", "text",
-        col("source") === "src1")
-    },
-    // End-to-end corpus curation — the LLM-pipeline stages composed as
-    // ONE Catalyst plan via Chain: score quality → language-ID → keep
-    // good English docs → exact-dedup (keep min doc_id per text hash)
-    // → per-source yield stats. Aggregates are order-independent
-    // (counts, integer sums, min/max) so the composition stays
-    // bit-deterministic with no decimal ceremony.
-    "q_corpus_curation" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      Chain.run(docs, Seq[(String, Chain.Step)](
-        "scored" -> { ctx =>
-          ctx("input").select(col("doc_id"), col("source"), col("text"))
-            .join(TextAnalysis.quality(ctx("input"), "doc_id", "text")
-              .select("doc_id", "quality_score", "n_tokens"), "doc_id")
-            .join(TextAnalysis.langId(ctx("input"), "doc_id", "text")
-              .select("doc_id", "lang_pred"), "doc_id")
-        },
-        "filtered" -> { ctx =>
-          ctx("scored").where(col("quality_score") >= 0.5 && col("lang_pred") === "en")
-        },
-        "deduped" -> { ctx =>
-          val keep = ctx("filtered")
-            .groupBy(md5(col("text").cast("binary")).as("__h"))
-            .agg(min("doc_id").as("doc_id"))
-            .select("doc_id")
-          ctx("filtered").join(keep, "doc_id")
-        },
-        "stats" -> { ctx =>
-          ctx("deduped")
-            .groupBy("source")
-            .agg(
-              count(lit(1)).as("n_docs"),
-              sum("n_tokens").as("n_tokens"),
-              min("quality_score").as("min_quality"),
-              max("quality_score").as("max_quality"))
-            .orderBy("source")
-        }))
-    },
-  )
 
   private def lst(ws: Seq[String]) = ws.map(w => s"'$w'").mkString("[", ",", "]")
   private def hits(ws: Seq[String]) =
@@ -500,88 +146,108 @@ object TextQueries {
         LEFT JOIN pfloor p USING (w1))
       """
 
-  /** The W-family replay CTEs (synthesis -> lined -> line structs)
-    * shared by the q_warc_extract and q_pipeline_warc oracles. */
-  private[queries] val warcReplayCtes: String = """      WITH h AS (
-        SELECT doc_id,
-          'https://site' || CAST(doc_id % 20 AS VARCHAR)
-            || '.example.com/doc/' || CAST(doc_id AS VARCHAR) AS url,
-          '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR)
-          || '</title><style>body { color: #222; }</style>'
-          || '<script>if (1 < 2 && 3 > 1) { var x = "</p>"; }</script></head><body>'
-          || '<div id="nav"><a href="/">Home</a> <a href="/about">About</a>'
-          || CASE WHEN doc_id % 3 = 0 THEN '<a href="/faq">FAQ</a>' ELSE '' END
-          || '</div><h1>Doc ' || CAST(doc_id AS VARCHAR) || '</h1><p>' || text
-          || ' Tom &amp; Jerry say 1 &lt; 2 &quot;ok&quot; it&#39;s fine A&nbsp;B</p>'
-          || '<p>Figure ' || CAST(doc_id % 7 AS VARCHAR)
-          || '</p><div class="footer"><a href="/terms">Terms</a> <a href="/privacy">Privacy</a> 2026</div></body></html>'
-          AS html
-        FROM documents),
-      lined AS (
-        SELECT doc_id, url, regexp_replace(regexp_replace(html,
-            '(?is)<(?:script|style)[^>]*>.*?</(?:script|style)>', ' ', 'g'),
-            '(?i)</(?:p|div|li|h[1-6]|tr|td|table|ul|ol|title)>|<br[^>]*>', chr(10), 'g') AS s
-        FROM h),
-      t1 AS (
-        SELECT doc_id, url, list_transform(string_split(s, chr(10)), ln -> struct_pack(
-          txt := trim(regexp_replace(
-            replace(replace(replace(replace(replace(replace(
-              regexp_replace(ln, '<[^>]*>', ' ', 'g'),
-              '&lt;','<'),'&gt;','>'),'&quot;','"'),'&#39;',''''),'&nbsp;',' '),'&amp;','&'),
-            '[ \t]+', ' ', 'g')),
-          links := CAST(len(regexp_extract_all(ln, '(?i)<a[ >]')) AS BIGINT))) AS a
-        FROM lined),
-      t2 AS (
-        SELECT doc_id, url, list_transform(a, s -> struct_pack(
-          txt := s.txt, links := s.links,
-          words := CASE WHEN s.txt = '' THEN CAST(0 AS BIGINT)
-                        ELSE CAST(len(string_split(s.txt, ' ')) AS BIGINT) END)) AS ls
-        FROM t1)"""
+  /** The L8 per-doc score: bigram count, quantized score sum, mean. */
+  private val fluencySql: String = """
+      SELECT doc_id, COUNT(*) AS n_bigrams,
+             CAST(SUM(qe) AS BIGINT) AS score_sum,
+             CAST(CAST(SUM(qe) AS BIGINT) AS DOUBLE) /
+               CAST(COUNT(*) AS DOUBLE) AS fluency
+      FROM scored GROUP BY doc_id"""
 
   /** The W1 replay with the round-12 encoding grid: identical to
-    * [[warcReplayCtes]] except the 10k+3 docs are the planted
+    * [[OracleSql.warcReplayCtes]] except the 10k+3 docs are the planted
     * ISO-8859-1 page (the oracle replays the PAGE, never the wire
     * encoding — chunked/gzip rows are byte-identical post-decode by
     * design, so they need no oracle change at all). */
-  private[queries] val warcEncodedReplayCtes: String = """      WITH h AS (
+  private val warcEncodedReplayCtes: String = s"""      WITH h AS (
         SELECT doc_id,
-          'https://site' || CAST(doc_id % 20 AS VARCHAR)
-            || '.example.com/doc/' || CAST(doc_id AS VARCHAR) AS url,
+          $warcUrl AS url,
           CASE WHEN doc_id % 10 = 3 THEN
             '<html><body><p>Café résumé München doc ' || CAST(doc_id AS VARCHAR)
             || ' smørrebrød på vägen</p></body></html>'
           ELSE
-            '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR)
-            || '</title><style>body { color: #222; }</style>'
-            || '<script>if (1 < 2 && 3 > 1) { var x = "</p>"; }</script></head><body>'
-            || '<div id="nav"><a href="/">Home</a> <a href="/about">About</a>'
-            || CASE WHEN doc_id % 3 = 0 THEN '<a href="/faq">FAQ</a>' ELSE '' END
-            || '</div><h1>Doc ' || CAST(doc_id AS VARCHAR) || '</h1><p>' || text
-            || ' Tom &amp; Jerry say 1 &lt; 2 &quot;ok&quot; it&#39;s fine A&nbsp;B</p>'
-            || '<p>Figure ' || CAST(doc_id % 7 AS VARCHAR)
-            || '</p><div class="footer"><a href="/terms">Terms</a> <a href="/privacy">Privacy</a> 2026</div></body></html>'
+            $htmlPage
           END AS html
-        FROM documents),
-      lined AS (
-        SELECT doc_id, url, regexp_replace(regexp_replace(html,
-            '(?is)<(?:script|style)[^>]*>.*?</(?:script|style)>', ' ', 'g'),
-            '(?i)</(?:p|div|li|h[1-6]|tr|td|table|ul|ol|title)>|<br[^>]*>', chr(10), 'g') AS s
+        FROM documents),${lineCtes("doc_id, url")}"""
+
+  /** The L9 page per doc as `h`(doc_id, html). */
+  private val pageCte: String = s"""
+      WITH h AS (
+        SELECT doc_id,
+          $htmlPage
+          AS html
+        FROM documents)"""
+
+  /** Every anchor of `h`'s pages: hrefs `hs` and anchor texts `an`
+    * (group-wise regexp_extract_all), one row per link number `i`. */
+  private val anchorCtes: String = raw"""
+      t AS (
+        SELECT doc_id,
+          regexp_extract_all(html, '(?is)<a\s[^>]*href="([^"]*)"[^>]*>(.*?)</a>', 1) AS hs,
+          regexp_extract_all(html, '(?is)<a\s[^>]*href="([^"]*)"[^>]*>(.*?)</a>', 2) AS an
         FROM h),
-      t1 AS (
-        SELECT doc_id, url, list_transform(string_split(s, chr(10)), ln -> struct_pack(
-          txt := trim(regexp_replace(
-            replace(replace(replace(replace(replace(replace(
-              regexp_replace(ln, '<[^>]*>', ' ', 'g'),
-              '&lt;','<'),'&gt;','>'),'&quot;','"'),'&#39;',''''),'&nbsp;',' '),'&amp;','&'),
-            '[ \t]+', ' ', 'g')),
-          links := CAST(len(regexp_extract_all(ln, '(?i)<a[ >]')) AS BIGINT))) AS a
-        FROM lined),
-      t2 AS (
-        SELECT doc_id, url, list_transform(a, s -> struct_pack(
-          txt := s.txt, links := s.links,
-          words := CASE WHEN s.txt = '' THEN CAST(0 AS BIGINT)
-                        ELSE CAST(len(string_split(s.txt, ' ')) AS BIGINT) END)) AS ls
-        FROM t1)"""
+      u AS (
+        SELECT doc_id, unnest(generate_series(1, len(hs))) AS i, hs, an FROM t)"""
+
+  /** The L11 messy-URL grid as `u`(doc_id, url), then the normalization
+    * stages: fragment strip (`n`), lowered scheme+authority `pre` and
+    * `rest` (`p`), default-port drop (`q`). `planted` adds the IDN host
+    * and the %-escape cluster that only q_url_normalize carries. */
+  private def urlNormCtes(planted: Boolean): String = {
+    val site = "'Site' || CAST(doc_id % 20 AS VARCHAR) || '.Example.COM'"
+    val host =
+      if (planted) s"""CASE WHEN doc_id % 11 = 0 THEN 'MüNCHEN.Example.COM'
+               ELSE $site END"""
+      else site
+    val pct =
+      if (planted) "\n          CASE WHEN doc_id % 7 = 1 THEN '/q%41%2f%7e%zz' ELSE '' END ||"
+      else ""
+    raw"""
+      WITH u AS (
+        SELECT doc_id,
+          CASE WHEN doc_id % 2 = 0 THEN 'HTTP' ELSE 'https' END || '://' ||
+          CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END ||
+          $host ||
+          CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE ':443' END ||
+          CASE WHEN doc_id % 4 = 0 THEN '' ELSE '/Path/' || CAST(doc_id AS VARCHAR) END ||$pct
+          CASE WHEN doc_id % 5 = 0 THEN '#Frag' || CAST(doc_id AS VARCHAR) ELSE '' END
+          AS url
+        FROM documents),
+      n AS (
+        SELECT doc_id, url, regexp_replace(trim(url), '(?s)#.*', '') AS nofrag FROM u),
+      p AS (
+        SELECT doc_id, url,
+          lower(regexp_extract(nofrag, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*).*', 1)) AS pre,
+          regexp_extract(nofrag, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*(.*)', 1) AS rest
+        FROM n),
+      q AS (
+        SELECT doc_id, url, pre, rest,
+          regexp_replace(regexp_replace(pre,
+            '^(http://[^/:]*):80$$', '\1'), '^(https://[^/:]*):443$$', '\1') AS noport
+        FROM p)"""
+  }
+
+  /** The canonical URL over `q`: www dropped, empty path made `/`. */
+  private val canonSql: String = raw"""CASE WHEN pre = '' THEN trim(url)
+               ELSE regexp_replace(noport, '^(https?://)www\.', '\1')
+                    || CASE WHEN rest = '' THEN '/' ELSE rest END END"""
+
+  /** The lowered host of `url`. */
+  private val hostSql: String = """lower(regexp_extract(trim(url),
+            '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]*).*', 1))"""
+
+  /** The L11 grid (no planted IDN/%-cluster) normalized to `h2`(doc_id,
+    * canon, host, path): the input of the L14/L15 rule semantics. */
+  private val canonPathCtes: String = s"""${urlNormCtes(planted = false)},
+      h AS (
+        SELECT doc_id,
+          $canonSql AS canon,
+          $hostSql AS host
+        FROM q),
+      h2 AS (
+        SELECT doc_id, canon, host,
+          regexp_extract(canon, '^[a-z][a-z0-9+.-]*://[^/]*(/.*)$$', 1) AS path
+        FROM h)"""
 
   /** L18 oracle — the full one-vs-rest training replay: per language,
     * the Q18 epoch chain (margins under w_{k-1}, hard-sigmoid errors,
@@ -686,9 +352,57 @@ object TextQueries {
       ORDER BY t.doc_id"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "q_lang_id_learned" -> langIdLearnedOracleSql,
-    "q_text_quality" -> s"""
+  /** The q_url_filter oracle, shared with q_pipeline_web. */
+  private[queries] val urlFilterOracle: String = s"""$canonPathCtes,
+      r AS (
+        SELECT * FROM (VALUES
+          (CAST(0 AS BIGINT), 'site3.example.com', CAST(NULL AS VARCHAR)),
+          (CAST(1 AS BIGINT), 'site7.example.com', CAST(NULL AS VARCHAR)),
+          (CAST(2 AS BIGINT), 'example.net', CAST(NULL AS VARCHAR)),
+          (CAST(3 AS BIGINT), 'site5.example.com', '/Path/1'))
+          AS t(rule_id, host_suffix, path_prefix)),
+      m AS (
+        SELECT doc_id, MIN(rule_id) AS rule_id
+        FROM h2 JOIN r
+          ON (host = host_suffix OR host LIKE '%.' || host_suffix)
+         AND (path_prefix IS NULL OR starts_with(path, path_prefix))
+        GROUP BY doc_id)
+      SELECT h2.doc_id, canon, m.rule_id IS NOT NULL AS blocked, m.rule_id
+      FROM h2 LEFT JOIN m ON h2.doc_id = m.doc_id
+      ORDER BY h2.doc_id"""
+
+  /** The q_robots_allow oracle, shared with q_pipeline_robots. */
+  private[queries] val robotsAllowOracle: String = """
+      WITH u AS (
+        SELECT doc_id, doc_id % 8 AS m, doc_id % 20 AS hn,
+          CASE doc_id % 8
+            WHEN 0 THEN '/private/x' || CAST(doc_id AS VARCHAR)
+            WHEN 1 THEN '/private/public/y' || CAST(doc_id AS VARCHAR)
+            WHEN 2 THEN '/report' || CAST(doc_id AS VARCHAR) || '.pdf'
+            WHEN 3 THEN '/report' || CAST(doc_id AS VARCHAR) || '.pdf?x=1'
+            WHEN 4 THEN '/docs/a' || CAST(doc_id AS VARCHAR) || '/view'
+            WHEN 5 THEN '/docs/a' || CAST(doc_id AS VARCHAR) || '/edit'
+            WHEN 6 THEN '/private/file' || CAST(doc_id AS VARCHAR) || '.pdf'
+            ELSE '/tie/t' || CAST(doc_id AS VARCHAR) END AS path
+        FROM documents),
+      v AS (
+        SELECT doc_id, m,
+          'https://site' || CAST(hn AS VARCHAR) || '.example.com' || path AS canon,
+          'site' || CAST(hn AS VARCHAR) || '.example.com' AS host
+        FROM u)
+      SELECT doc_id, canon,
+        m IN (0, 2, 6) AS blocked,
+        CASE
+          WHEN m IN (0, 6) THEN ('0x' || substr(md5(host || ':3'), 1, 15))::BIGINT
+          WHEN m = 1 THEN ('0x' || substr(md5(host || ':4'), 1, 15))::BIGINT
+          WHEN m = 2 THEN ('0x' || substr(md5(host || ':5'), 1, 15))::BIGINT
+          WHEN m = 4 THEN ('0x' || substr(md5(host || ':6'), 1, 15))::BIGINT
+          WHEN m = 7 THEN ('0x' || substr(md5(host || ':8'), 1, 15))::BIGINT
+          ELSE NULL END AS rule_id
+      FROM v ORDER BY doc_id"""
+
+  val queries: Seq[Query] = Seq(
+    Query("q_text_quality", s"""
       WITH t AS (
         SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
       f AS (
@@ -707,8 +421,10 @@ object TextQueries {
           + CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE) * 0.3
           + LEAST((CAST(n_chars - (n_tokens - 1) AS DOUBLE) / CAST(n_tokens AS DOUBLE)) / 10.0, 1.0) * 0.3
           AS quality_score
-      FROM f ORDER BY doc_id""",
-    "q_lang_id" -> s"""
+      FROM f ORDER BY doc_id""", { (s, dir) =>
+      TextAnalysis.quality(Tables.documents(s, dir), "doc_id", "text")
+    }),
+    Query("q_lang_id", s"""
       WITH t AS (
         SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
       sc AS (
@@ -723,16 +439,468 @@ object TextQueries {
              WHEN score_fr >= score_de AND score_fr >= score_es THEN 'fr'
              WHEN score_de >= score_es THEN 'de'
              ELSE 'es' END AS lang_pred
-      FROM sc ORDER BY doc_id""",
-    "q_token_count" -> """
+      FROM sc ORDER BY doc_id""", { (s, dir) =>
+      TextAnalysis.langId(Tables.documents(s, dir), "doc_id", "text")
+    }),
+    // L18 — LEARNED language ID (the CCNet front door is a fastText
+    // classifier, not a stopword list): one-vs-rest integer logistic
+    // units over hashed char-trigram features, trained on the even
+    // doc_ids against the corpus's `lang` labels, argmax-served on the
+    // held-out odd side. The corpus's text carries NO language signal
+    // (every lang draws the same vocabulary), so the gate PLANTS one —
+    // a per-language function-word phrase prefixed to each doc (the
+    // Q12/L9 inject pattern; real function words, incl. CJK for zh) —
+    // and the held-out argmax must then actually RECOVER the label
+    // (100% at these hyperparameters — asserted by spec, while the
+    // hash gate pins the arithmetic). ZERO floating point (the Q18
+    // contract); the oracle replays synthesis AND the ENTIRE training
+    // loop — 5 languages × 8 epochs unrolled, every margin/gradient/
+    // clip integer-exact — plus the argmax with its lexicographic
+    // tie-break, so a drift in any weight of any class on any epoch
+    // moves a row.
+    Query("q_lang_id_learned", langIdLearnedOracleSql, { (s, dir) =>
+      val phrase = when(col("lang") === "en", lit(langPhrases("en")))
+        .when(col("lang") === "fr", lit(langPhrases("fr")))
+        .when(col("lang") === "de", lit(langPhrases("de")))
+        .when(col("lang") === "es", lit(langPhrases("es")))
+        .otherwise(lit(langPhrases("zh")))
+      // langIdLangs: all 5 classes unless the sf10+ sweep knob
+      // restricts the gate (see langIdLearnedOracleSql's scaladoc)
+      val base =
+        if (langIdLangs.size == 5) Tables.documents(s, dir)
+        else Tables.documents(s, dir).where(col("lang").isin(langIdLangs: _*))
+      graft.operators.Classifier.langIdLearned(
+        base.select(col("doc_id"), col("lang"),
+            concat(phrase, lit(" "), col("text")).as("text")),
+        "doc_id", "text", "lang",
+        col("doc_id") % 2 === 0, buckets = 1024, epochs = 8, lrNum = 8L)
+    }),
+    Query("q_token_count", """
       WITH t AS (
         SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
       SELECT doc_id,
         CAST(len(toks) AS BIGINT) AS n_ws_tokens,
         CAST(len(list_filter(toks, x -> regexp_matches(x, '^[a-z]+$'))) AS BIGINT) AS n_alpha_tokens,
         CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct_tokens
-      FROM t ORDER BY doc_id""",
-    "q_corpus_curation" -> s"""
+      FROM t ORDER BY doc_id""", { (s, dir) =>
+      TextAnalysis.tokenStats(Tables.documents(s, dir), "doc_id", "text")
+    }),
+    Query("q_fingerprint", """
+      SELECT md5(array_to_string(list_sort(list_distinct(string_split(lower(text), ' '))), ' ')) AS fingerprint,
+             COUNT(*) AS n_docs, MIN(doc_id) AS canonical_id
+      FROM documents GROUP BY 1 ORDER BY 1""", { (s, dir) =>
+      TextAnalysis.fingerprintClusters(Tables.documents(s, dir), "doc_id", "text")
+    }),
+    // L8 — n-gram LM fluency scoring (CCNet): src1 docs stand in for
+    // the clean reference corpus; every other doc scores under the
+    // smoothed bigram model fit on it. The oracle replays the fit and
+    // the scoring end-to-end (integer counts, one quantized IEEE
+    // division per bigram type, exact sums), so a drift anywhere in
+    // model building, back-off, or the mean moves a row.
+    Query("q_lm_fluency", s"""$lmFluencyCtes$fluencySql ORDER BY doc_id""", { (s, dir) =>
+      TextAnalysis.lmFluency(
+        Tables.documents(s, dir), "doc_id", "text",
+        col("source") === "src1")
+    }),
+    // L9 — HTML → training-text extraction (the WARC→WET stage): the
+    // corpus is plain text, so the query SYNTHESIZES deterministic
+    // doc_id-derived HTML (title/style/script head, nav + footer link
+    // bars, headings, entity-laden paragraphs — the Q12 inject pattern),
+    // runs the real extraction (block strip, line split, tag strip,
+    // entity decode, integer link-density boilerplate cut), and the
+    // oracle replays BOTH synthesis and extraction — the full extracted
+    // text is row-hashed, so a drift in any regex, the unescape order,
+    // or the keep rule moves a row.
+    // Replays the HTML synthesis and the whole extraction pipeline in
+    // DuckDB's RE2 dialect: identical block-strip / line-break / tag
+    // patterns (held to the RE2 ∩ Java dialect), the same six-entity
+    // chained unescape with &amp; last, and the integer 2·links ≤ words
+    // keep rule — full content string row-hashed.
+    Query("q_html_extract", s"""$pageCte,${lineCtes("doc_id")}
+      SELECT doc_id,$extractCols
+      FROM t2 ORDER BY doc_id""", { (s, dir) =>
+      Html.htmlExtract(
+        Tables.documents(s, dir).select(col("doc_id"), synthHtml.as("html")),
+        "doc_id", "html")
+    }),
+    // W2 — the cdx-style member index + seek read (the record-range
+    // access path for >2 GB crawl files and sparse cdx hit lists):
+    // the gate writes the same corpus as actual .warc.gz, builds the
+    // member-boundary index with the Inflater walk, keeps a SPARSE
+    // subset of index rows (every 9th doc), and fetches exactly those
+    // records by positioned (offset, length) reads — url/status/mime/
+    // full page html row-hashed. The oracle replays the subset's
+    // synthesis from `documents`; it never sees an offset or a byte,
+    // so a member-boundary drift, a header-field miscount, or a
+    // positioned-read bug surfaces as a moved/missing row.
+    Query("q_warc_index", s"""
+      SELECT doc_id,
+        $warcUrl AS url,
+        CAST(200 AS INT) AS http_status,
+        'text/html; charset=utf-8' AS mime,
+        $htmlPage
+        AS html
+      FROM documents WHERE doc_id % 9 = 0 ORDER BY doc_id""", { (s, dir) =>
+      val path = Query.scratchPath("warcidx", dir)
+      val pages = Tables.documents(s, dir)
+        .select(col("doc_id"), crawlUrl.as("url"), synthHtml.as("html"))
+        .repartition(8, pmod(col("doc_id"), lit(8)))
+        .sortWithinPartitions("doc_id")
+      graft.sources.Warc.writeFiles(pages, "url", "html", path)
+      val idx = graft.sources.Warc.index(s, s"$path/*.warc.gz")
+      val wanted = idx.where(col("warc_type") === "response")
+        .where(regexp_extract(col("url"), "/doc/(\\d+)$", 1)
+          .cast("long") % 9 === 0)
+      graft.sources.Warc.readRecords(wanted)
+        .select(
+          regexp_extract(col("url"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
+          col("url"), col("http_status"), col("mime"),
+          col("body").cast("string").as("html"))
+        .orderBy("doc_id")
+    }),
+    // W1 — WARC container round trip (the real CommonCrawl front-end
+    // format): the gate writes the L9 synthesis corpus as ACTUAL
+    // multi-member-gzip .warc.gz crawl files (distributed, one file
+    // per partition, warcinfo + framed HTTP response records), reads
+    // them back through the per-file distributed parser, and runs the
+    // L9 extraction on the recovered pages — url/status/mime from the
+    // WARC+HTTP headers and the FULL extracted text are row-hashed, so
+    // a defect in gzip member handling, Content-Length framing, header
+    // parsing, or HTTP body splitting moves a row. The oracle replays
+    // synthesis + extraction from `documents` and never sees a WARC
+    // byte (the GeoTiff/M1 synthesize-then-decode posture).
+    // Round 12 grows the corpus with REAL HTTP body transforms (what
+    // live CommonCrawl records carry): chunked Transfer-Encoding on
+    // every 10k+1 doc, gzip Content-Encoding on 10k+2, BOTH (chunked
+    // over gzip, the RFC 9112 sender order) on 10k+7, and an
+    // ISO-8859-1 page (accented content, charset declared in
+    // Content-Type, transcoded to UTF-8 by the reader) on 10k+3. The
+    // oracle sees none of it — identical post-decode text, a mime CASE
+    // for the latin-1 rows — so a de-chunking, decompression, or
+    // charset defect moves a row.
+    Query("q_warc_extract", s"""$warcEncodedReplayCtes
+      SELECT doc_id, url,
+        CAST(200 AS INT) AS http_status,
+        CASE WHEN doc_id % 10 = 3 THEN 'text/html; charset=iso-8859-1'
+             ELSE 'text/html; charset=utf-8' END AS mime,$extractCols
+      FROM t2 ORDER BY doc_id""", { (s, dir) =>
+      val path = Query.scratchPath("warc", dir)
+      val d = col("doc_id")
+      val mode = when(d % 10 === 1, lit("chunked"))
+        .when(d % 10 === 2, lit("gzip"))
+        .when(d % 10 === 7, lit("chunked+gzip"))
+        .when(d % 10 === 3, lit("latin1"))
+        .otherwise(lit(""))
+      val latinPage = concat(
+        lit("<html><body><p>Café résumé München doc "), d.cast("string"),
+        lit(" smørrebrød på vägen</p></body></html>"))
+      val pages = Tables.documents(s, dir)
+        .select(d, crawlUrl.as("url"),
+          when(d % 10 === 3, latinPage).otherwise(synthHtml).as("html"),
+          mode.as("mode"))
+        .repartition(8, pmod(col("doc_id"), lit(8)))
+        .sortWithinPartitions("doc_id")
+      graft.sources.Warc.writeFiles(pages, "url", "html", path, modeCol = "mode")
+      val resp = graft.sources.Warc.responses(s, s"$path/*.warc.gz")
+        .select(
+          regexp_extract(col("url"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
+          col("url"), col("http_status"), col("mime"), col("html"))
+      resp.select("doc_id", "url", "http_status", "mime")
+        .join(Html.htmlExtract(resp, "doc_id", "html"), "doc_id")
+        .orderBy("doc_id")
+    }),
+    // L10 — outbound-link extraction from the SAME synthesized HTML as
+    // L9: one row per anchor in document order, href + cleaned anchor
+    // text — the edge source that feeds the S1 link-graph authority
+    // pass. The oracle replays synthesis and the group-wise
+    // regexp_extract_all verbatim.
+    Query("q_html_links", s"""$pageCte,$anchorCtes
+      SELECT doc_id, CAST(i AS INT) AS link_no, hs[i] AS href,
+        trim(${stripTags("an[i]")}) AS anchor
+      FROM u ORDER BY doc_id, link_no""", { (s, dir) =>
+      Html.htmlLinks(
+        Tables.documents(s, dir).select(col("doc_id"), synthHtml.as("html")),
+        "doc_id", "html")
+        .orderBy("doc_id", "link_no")
+    }),
+    // L11 — canonical-URL key: messy doc_id-derived URLs (scheme/host
+    // case, www, default ports, fragments, empty paths) normalized to
+    // the key a crawl frontier dedups on, plus the domain key. The
+    // oracle replays synthesis and every normalization stage (the only
+    // dialect delta is \1 vs $1 in the replacement string).
+    Query("q_url_normalize", s"""${urlNormCtes(planted = true)},
+      c AS (
+        SELECT doc_id, url, pre,
+          $canonSql AS canon0
+        FROM q)
+      -- the %-cluster and the IDN host are PLANTED literals, so the
+      -- oracle states their expected normalized forms directly
+      -- (parser-independent: %41→A, %2f→%2F, %7e→~, %zz preserved;
+      -- münchen → its punycode) instead of replaying the algorithms
+      SELECT doc_id,
+        replace(
+          CASE WHEN doc_id % 11 = 0
+               THEN replace(canon0, 'münchen.example.com', 'xn--mnchen-3ya.example.com')
+               ELSE canon0 END,
+          '/q%41%2f%7e%zz', '/qA%2F~%zz') AS canon,
+        $hostSql AS host
+      FROM c ORDER BY doc_id""", { (s, dir) =>
+      val d = col("doc_id")
+      // round 11 grows the grid: an IDN host every 11th doc (punycode
+      // folding) and a %-escape cluster every 7th doc (unreserved
+      // decode %41→A/%7e→~, reserved uppercase %2f→%2F, malformed %zz
+      // byte-preserved)
+      val url = concat(
+        when(d % 2 === 0, lit("HTTP")).otherwise(lit("https")), lit("://"),
+        when(d % 3 === 0, lit("WWW.")).otherwise(lit("")),
+        when(d % 11 === 0, lit("MüNCHEN.Example.COM"))
+          .otherwise(concat(lit("Site"), (d % 20).cast("string"), lit(".Example.COM"))),
+        when(d % 2 === 0, lit(":80")).otherwise(lit(":443")),
+        when(d % 4 === 0, lit("")).otherwise(concat(lit("/Path/"), d.cast("string"))),
+        when(d % 7 === 1, lit("/q%41%2f%7e%zz")).otherwise(lit("")),
+        when(d % 5 === 0, concat(lit("#Frag"), d.cast("string"))).otherwise(lit("")))
+      Tables.documents(s, dir).select(
+        col("doc_id"),
+        Html.urlNormalize(url).as("canon"),
+        Html.urlHost(url).as("host"))
+        .orderBy("doc_id")
+    }),
+    // L13 — anchor-text aggregation: per-doc pages on 20 hosts emit
+    // two hot static nav anchors, an entity-bearing FAQ anchor on
+    // every third doc, and one varying anchor (the doc's first two
+    // words) pointing at a cross-doc /doc/N page; links resolve
+    // against the doc's host, normalize (fragment strip), and fold to
+    // top-3 anchor terms per target URL. The oracle replays synthesis,
+    // extraction, the anchor cleanup chain, resolution AND the
+    // count/rank argmax — a lost link, a bad entity decode, or a
+    // tie-break inversion moves a row.
+    Query("q_anchor_text", s"""
+      WITH h AS (
+        SELECT doc_id,
+          '<html><body><div><a href="/">Home</a> <a href="/About#top">About Us</a>'
+          || CASE WHEN doc_id % 3 = 0 THEN '<a href="/faq">FAQ &amp; Help</a>' ELSE '' END
+          || '</div><p><a href="/doc/' || CAST((doc_id * 13 + 7) % 50 AS VARCHAR)
+          || '">' || array_to_string(string_split(text, ' ')[1:2], ' ')
+          || '</a> ' || text || '</p></body></html>' AS html,
+          text
+        FROM documents),$anchorCtes,
+      l AS (
+        SELECT
+          'https://site' || CAST(doc_id % 20 AS VARCHAR) || '.example.com'
+            || regexp_replace(hs[i], '(?s)#.*', '') AS target,
+          -- trim(x, ' '): bare trim strips the whole Unicode space
+          -- category (NEL/NBSP — present as clone-tag suffixes at
+          -- sf10) while the engine's trim strips 0x20 only; the
+          -- explicit one-char set keeps tagged words tagged
+          lower(trim(${stripTags("an[i]")}, ' ')) AS anchor
+        FROM u),
+      w AS (SELECT target, unnest(string_split(anchor, ' ')) AS term FROM l),
+      c AS (
+        SELECT target, term, COUNT(*) AS cnt FROM w
+        WHERE term <> '' GROUP BY target, term)
+      SELECT target, term, cnt, CAST(ROW_NUMBER() OVER (
+          PARTITION BY target ORDER BY cnt DESC, term) AS INT) AS rank
+      FROM c QUALIFY rank <= 3 ORDER BY target, rank""", { (s, dir) =>
+      val d = col("doc_id")
+      val firstWords = concat_ws(" ", slice(split(col("text"), " "), 1, 2))
+      val html = concat(
+        lit("<html><body><div><a href=\"/\">Home</a> <a href=\"/About#top\">About Us</a>"),
+        when(d % 3 === 0, lit("<a href=\"/faq\">FAQ &amp; Help</a>")).otherwise(lit("")),
+        lit("</div><p><a href=\"/doc/"), ((d * 13 + 7) % 50).cast("string"),
+        lit("\">"), firstWords, lit("</a> "), col("text"), lit("</p></body></html>"))
+      val links = Html.htmlLinks(
+        Tables.documents(s, dir).select(d, html.as("html")), "doc_id", "html")
+      val host = concat(lit("https://site"), (col("doc_id") % 20).cast("string"),
+        lit(".example.com"))
+      Html.anchorTerms(
+        links.withColumn("target",
+          Html.urlNormalize(Html.urlResolve(host, col("href")))),
+        "target", "anchor", k = 3)
+        .orderBy("target", "rank")
+    }),
+    // L17 — RFC 3986 §5 reference resolution: the round-11 verdict's
+    // top gap (real intra-site links are mostly RELATIVE; a link graph
+    // that drops them is blind to the majority of real edges). Per-doc
+    // pages plant one href per resolution class — absolute,
+    // protocol-relative, rooted, relative, dot-up, dot-here, excess
+    // dots past root, query-only, fragment-only, empty — extracted
+    // through the REAL htmlLinks pass, resolved against the page's own
+    // URL, then normalized: the html→links→resolve→normalize chain the
+    // S-family link graph consumes. The oracle states the expected
+    // resolved URL per planted class SEMANTICALLY (it replays neither
+    // the merge nor the dot-segment fold), so a merge-boundary bug, a
+    // pop-past-root, or a query/fragment graft defect moves a row.
+    Query("q_url_resolve", """
+      WITH u AS (
+        SELECT doc_id, doc_id % 10 AS m,
+          'https://site' || CAST(doc_id % 20 AS VARCHAR)
+            || '.example.com' AS hostp,
+          '/dir/sub/page' || CAST(doc_id AS VARCHAR) || '.html' AS bpath,
+          CAST(doc_id AS VARCHAR) AS ds
+        FROM documents)
+      SELECT doc_id,
+        CASE m
+          WHEN 0 THEN 'https://other.example.org/abs/' || ds
+          WHEN 1 THEN '//cdn.example.net/lib' || ds || '.js'
+          WHEN 2 THEN '/rooted/x' || ds
+          WHEN 3 THEN 'img/a' || ds || '.png'
+          WHEN 4 THEN '../up/b' || ds
+          WHEN 5 THEN './here/c' || ds
+          WHEN 6 THEN 'a/../../../z' || ds
+          WHEN 7 THEN '?q=' || ds
+          WHEN 8 THEN '#frag'
+          ELSE '' END AS href,
+        CASE m
+          WHEN 0 THEN 'https://other.example.org/abs/' || ds
+          WHEN 1 THEN 'https://cdn.example.net/lib' || ds || '.js'
+          WHEN 2 THEN hostp || '/rooted/x' || ds
+          WHEN 3 THEN hostp || '/dir/sub/img/a' || ds || '.png'
+          WHEN 4 THEN hostp || '/dir/up/b' || ds
+          WHEN 5 THEN hostp || '/dir/sub/here/c' || ds
+          WHEN 6 THEN hostp || '/z' || ds
+          WHEN 7 THEN hostp || bpath || '?q=' || ds
+          ELSE hostp || bpath END AS resolved
+      FROM u ORDER BY doc_id""", { (s, dir) =>
+      val d = col("doc_id")
+      val ds = d.cast("string")
+      val href = when(d % 10 === 0, concat(lit("https://other.example.org/abs/"), ds))
+        .when(d % 10 === 1, concat(lit("//cdn.example.net/lib"), ds, lit(".js")))
+        .when(d % 10 === 2, concat(lit("/rooted/x"), ds))
+        .when(d % 10 === 3, concat(lit("img/a"), ds, lit(".png")))
+        .when(d % 10 === 4, concat(lit("../up/b"), ds))
+        .when(d % 10 === 5, concat(lit("./here/c"), ds))
+        .when(d % 10 === 6, concat(lit("a/../../../z"), ds))
+        .when(d % 10 === 7, concat(lit("?q="), ds))
+        .when(d % 10 === 8, lit("#frag"))
+        .otherwise(lit(""))
+      val html = concat(lit("<html><body><p><a href=\""), href,
+        lit("\">link</a></p></body></html>"))
+      val base = concat(lit("https://site"), (d % 20).cast("string"),
+        lit(".example.com/dir/sub/page"), ds, lit(".html"))
+      val docs = Tables.documents(s, dir).select(d, html.as("html"))
+      // the base URL is a doc_id formula — rebuild it after link
+      // extraction instead of joining the page frame back (map-only)
+      val baseOf = concat(lit("https://site"), (col("doc_id") % 20).cast("string"),
+        lit(".example.com/dir/sub/page"), col("doc_id").cast("string"), lit(".html"))
+      Html.htmlLinks(docs, "doc_id", "html")
+        .select(col("doc_id"), col("href"),
+          Html.urlNormalize(Html.urlResolve(baseOf, col("href")))
+            .as("resolved"))
+        .orderBy("doc_id")
+    }),
+    // L14 — blocklist URL filtering over the L11 synthesis grid: two
+    // domain rules, one never-matching TLD rule, one path-prefix rule;
+    // the engine matches via suffix-explode + equi-join (the
+    // million-rule scale shape), the oracle replays the SEMANTICS
+    // (label-boundary LIKE + starts_with) — equal by construction,
+    // so an explode boundary bug or a prefix-rule leak moves a row.
+    Query("q_url_filter", urlFilterOracle, { (s, dir) =>
+      import s.implicits._
+      val d = col("doc_id")
+      val rules = Seq(
+        (0L, "site3.example.com", Option.empty[String]),
+        (1L, "site7.example.com", Option.empty[String]),
+        (2L, "example.net", Option.empty[String]),
+        (3L, "site5.example.com", Some("/Path/1")))
+        .toDF("rule_id", "host_suffix", "path_prefix")
+      Html.urlFilter(
+        Tables.documents(s, dir).select(d, urlGrid.as("url")), "doc_id", "url", rules)
+    }),
+    // L16 — FULL RFC 9309 verdict semantics (round 11, closing the
+    // round-10 "Disallow-prefix subset" gap): Allow overrides, `*`
+    // wildcards, `$` end anchors, longest-match precedence with the
+    // Allow-wins tie rule. The oracle enumerates the expected verdict
+    // and DECIDING-rule id per planted path class semantically — it
+    // replays neither the parser nor the matcher, so a wildcard
+    // compile bug, a specificity inversion, or a tie going to
+    // Disallow moves a row. The deciding-rule line numbers are fixed
+    // (0-based): 3 Disallow /private/, 4 Allow /private/public/,
+    // 5 Disallow /*.pdf$, 6 Allow /docs/*/view, 7 Disallow /tie/,
+    // 8 Allow /tie/.
+    Query("q_robots_allow", robotsAllowOracle, { (s, dir) =>
+      Html.urlFilter(
+        robotsAllowUrls(s, dir), "doc_id", "url",
+        Html.robotsRules(robotsAllowHosts(s, dir), "host", "robots"))
+    }),
+    // L15 — robots.txt compliance end to end: per-host robots bodies
+    // (a decoy Googlebot group that must be IGNORED, a star run
+    // extended by a second UA line on even hosts — shifting the
+    // Disallow line numbers — an empty allow-all Disallow) parse into
+    // rules that filter the L11 URL grid. The oracle does NOT replay
+    // the parser: it enumerates the semantically-expected rule set
+    // from the synthesis structure (including the md5 rule ids at the
+    // KNOWN line numbers), so a parser defect — decoy group leak,
+    // run-extension miss, line-number drift — changes verdicts or
+    // attribution ids and fails the hash.
+    Query("q_robots_filter", s"""$canonPathCtes,
+      hostt AS (SELECT DISTINCT doc_id % 20 AS hn FROM documents),
+      r AS (
+        SELECT ('0x' || substr(md5('site' || CAST(hn AS VARCHAR) || '.example.com:'
+                 || CAST(CASE WHEN hn % 2 = 0 THEN 5 ELSE 4 END AS VARCHAR)), 1, 15))::BIGINT AS rule_id,
+               'site' || CAST(hn AS VARCHAR) || '.example.com' AS host_suffix,
+               '/Path/1' AS path_prefix
+        FROM hostt
+        UNION ALL
+        SELECT ('0x' || substr(md5('site' || CAST(hn AS VARCHAR) || '.example.com:'
+                 || CAST(CASE WHEN hn % 2 = 0 THEN 6 ELSE 5 END AS VARCHAR)), 1, 15))::BIGINT,
+               'site' || CAST(hn AS VARCHAR) || '.example.com',
+               '/Path/2'
+        FROM hostt WHERE hn % 3 = 0),
+      m AS (
+        SELECT doc_id, MIN(rule_id) AS rule_id
+        FROM h2 JOIN r
+          ON (host = host_suffix OR host LIKE '%.' || host_suffix)
+         AND starts_with(path, path_prefix)
+        GROUP BY doc_id)
+      SELECT h2.doc_id, canon, m.rule_id IS NOT NULL AS blocked, m.rule_id
+      FROM h2 LEFT JOIN m ON h2.doc_id = m.doc_id
+      ORDER BY h2.doc_id""", { (s, dir) =>
+      val d = col("doc_id")
+      val hosts = Tables.documents(s, dir).select((d % 20).as("hn")).distinct()
+        .select(
+          concat(lit("site"), col("hn").cast("string"), lit(".example.com")).as("host"),
+          concat(
+            lit("# robots\nUser-agent: Googlebot\nDisallow: /\nUser-agent: *\n"),
+            when(col("hn") % 2 === 0, lit("User-agent: HelperBot\n")).otherwise(lit("")),
+            lit("Disallow: /Path/1\n"),
+            when(col("hn") % 3 === 0, lit("Disallow: /Path/2\n")).otherwise(lit("")),
+            lit("Disallow:\n")).as("robots"))
+      Html.urlFilter(
+        Tables.documents(s, dir).select(d, urlGrid.as("url")), "doc_id", "url",
+        Html.robotsRules(hosts, "host", "robots"))
+    }),
+    // L12 — CCNet head/middle/tail selection over the L8 fluency
+    // scores: boundary VALUES picked at integer ranks ceil(n/3) /
+    // ceil(2n/3) of the descending distinct-fluency histogram, docs
+    // bucketed by a broadcast map-side CASE. The oracle replays the L8
+    // fit AND the histogram/edge/bucket arithmetic — a drift in either
+    // layer relabels a row.
+    Query("q_fluency_buckets", s"""$lmFluencyCtes,
+      fl AS ($fluencySql),
+      h AS (SELECT fluency AS v, COUNT(*) AS c FROM fl GROUP BY fluency),
+      st AS (SELECT v, c,
+               SUM(c) OVER (ORDER BY v DESC) AS cum,
+               SUM(c) OVER () AS n FROM h),
+      e AS (SELECT
+              MAX(CASE WHEN cum >= (n + 2) // 3 THEN v END) AS b1,
+              MAX(CASE WHEN cum >= (2 * n + 2) // 3 THEN v END) AS b2
+            FROM st)
+      SELECT doc_id, n_bigrams, score_sum, fluency,
+             CASE WHEN fluency >= b1 THEN 'head'
+                  WHEN fluency >= b2 THEN 'middle'
+                  ELSE 'tail' END AS bucket
+      FROM fl, e ORDER BY doc_id""", { (s, dir) =>
+      TextAnalysis.fluencyBuckets(
+        Tables.documents(s, dir), "doc_id", "text",
+        col("source") === "src1")
+    }),
+    // End-to-end corpus curation — the LLM-pipeline stages composed as
+    // ONE Catalyst plan via Chain: score quality → language-ID → keep
+    // good English docs → exact-dedup (keep min doc_id per text hash)
+    // → per-source yield stats. Aggregates are order-independent
+    // (counts, integer sums, min/max) so the composition stays
+    // bit-deterministic with no decimal ceremony.
+    Query("q_corpus_curation", s"""
       WITH t AS (
         SELECT doc_id, source, text, string_split(text, ' ') AS toks FROM documents),
       f AS (
@@ -763,430 +931,36 @@ object TextQueries {
         SELECT f.* FROM filtered f JOIN keepers k ON f.doc_id = k.doc_id)
       SELECT source, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
              MIN(quality_score) AS min_quality, MAX(quality_score) AS max_quality
-      FROM deduped GROUP BY source ORDER BY source""",
-    "q_fingerprint" -> """
-      SELECT md5(array_to_string(list_sort(list_distinct(string_split(lower(text), ' '))), ' ')) AS fingerprint,
-             COUNT(*) AS n_docs, MIN(doc_id) AS canonical_id
-      FROM documents GROUP BY 1 ORDER BY 1""",
-    // Replays the HTML synthesis and the whole extraction pipeline in
-    // DuckDB's RE2 dialect: identical block-strip / line-break / tag
-    // patterns (held to the RE2 ∩ Java dialect), the same six-entity
-    // chained unescape with &amp; last, and the integer 2·links ≤ words
-    // keep rule — full content string row-hashed.
-    "q_html_extract" -> """
-      WITH h AS (
-        SELECT doc_id,
-          '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR)
-          || '</title><style>body { color: #222; }</style>'
-          || '<script>if (1 < 2 && 3 > 1) { var x = "</p>"; }</script></head><body>'
-          || '<div id="nav"><a href="/">Home</a> <a href="/about">About</a>'
-          || CASE WHEN doc_id % 3 = 0 THEN '<a href="/faq">FAQ</a>' ELSE '' END
-          || '</div><h1>Doc ' || CAST(doc_id AS VARCHAR) || '</h1><p>' || text
-          || ' Tom &amp; Jerry say 1 &lt; 2 &quot;ok&quot; it&#39;s fine A&nbsp;B</p>'
-          || '<p>Figure ' || CAST(doc_id % 7 AS VARCHAR)
-          || '</p><div class="footer"><a href="/terms">Terms</a> <a href="/privacy">Privacy</a> 2026</div></body></html>'
-          AS html
-        FROM documents),
-      lined AS (
-        SELECT doc_id, regexp_replace(regexp_replace(html,
-            '(?is)<(?:script|style)[^>]*>.*?</(?:script|style)>', ' ', 'g'),
-            '(?i)</(?:p|div|li|h[1-6]|tr|td|table|ul|ol|title)>|<br[^>]*>', chr(10), 'g') AS s
-        FROM h),
-      t1 AS (
-        SELECT doc_id, list_transform(string_split(s, chr(10)), ln -> struct_pack(
-          txt := trim(regexp_replace(
-            replace(replace(replace(replace(replace(replace(
-              regexp_replace(ln, '<[^>]*>', ' ', 'g'),
-              '&lt;','<'),'&gt;','>'),'&quot;','"'),'&#39;',''''),'&nbsp;',' '),'&amp;','&'),
-            '[ \t]+', ' ', 'g')),
-          links := CAST(len(regexp_extract_all(ln, '(?i)<a[ >]')) AS BIGINT))) AS a
-        FROM lined),
-      t2 AS (
-        SELECT doc_id, list_transform(a, s -> struct_pack(
-          txt := s.txt, links := s.links,
-          words := CASE WHEN s.txt = '' THEN CAST(0 AS BIGINT)
-                        ELSE CAST(len(string_split(s.txt, ' ')) AS BIGINT) END)) AS ls
-        FROM t1)
-      SELECT doc_id,
-        array_to_string(list_transform(
-          list_filter(ls, s -> s.words >= 3 AND s.links * 2 <= s.words),
-          s -> s.txt), chr(10)) AS content,
-        CAST(len(list_filter(ls, s -> s.words > 0)) AS BIGINT) AS n_lines,
-        CAST(len(list_filter(ls, s -> s.words >= 3 AND s.links * 2 <= s.words)) AS BIGINT) AS n_kept,
-        CAST(coalesce(list_sum(list_transform(ls, s -> s.links)), 0) AS BIGINT) AS n_links,
-        CAST(coalesce(list_sum(list_transform(
-          list_filter(ls, s -> s.words >= 3 AND s.links * 2 <= s.words),
-          s -> s.words)), 0) AS BIGINT) AS n_words
-      FROM t2 ORDER BY doc_id""",
-    // W2 replays only the SYNTHESIS for the seek-read subset: the
-    // engine's rows come from index-guided positioned reads of real
-    // gzip members, the oracle's from the page formulas — an offset
-    // drift, a length miscount or a positioned-read defect moves or
-    // kills a row
-    "q_warc_index" -> """
-      SELECT doc_id,
-        'https://site' || CAST(doc_id % 20 AS VARCHAR)
-          || '.example.com/doc/' || CAST(doc_id AS VARCHAR) AS url,
-        CAST(200 AS INT) AS http_status,
-        'text/html; charset=utf-8' AS mime,
-        '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR)
-        || '</title><style>body { color: #222; }</style>'
-        || '<script>if (1 < 2 && 3 > 1) { var x = "</p>"; }</script></head><body>'
-        || '<div id="nav"><a href="/">Home</a> <a href="/about">About</a>'
-        || CASE WHEN doc_id % 3 = 0 THEN '<a href="/faq">FAQ</a>' ELSE '' END
-        || '</div><h1>Doc ' || CAST(doc_id AS VARCHAR) || '</h1><p>' || text
-        || ' Tom &amp; Jerry say 1 &lt; 2 &quot;ok&quot; it&#39;s fine A&nbsp;B</p>'
-        || '<p>Figure ' || CAST(doc_id % 7 AS VARCHAR)
-        || '</p><div class="footer"><a href="/terms">Terms</a> <a href="/privacy">Privacy</a> 2026</div></body></html>'
-        AS html
-      FROM documents WHERE doc_id % 9 = 0 ORDER BY doc_id""",
-    // W1 replays the L9 synthesis + extraction and adds the url /
-    // status / mime the engine recovers from actual WARC+HTTP bytes;
-    // the oracle never touches a container byte — nor a chunk frame,
-    // a gzip member, or a Latin-1 octet — so any framing, decoding, or
-    // transcoding defect on the engine side moves a row
-    "q_warc_extract" -> s"""$warcEncodedReplayCtes
-      SELECT doc_id, url,
-        CAST(200 AS INT) AS http_status,
-        CASE WHEN doc_id % 10 = 3 THEN 'text/html; charset=iso-8859-1'
-             ELSE 'text/html; charset=utf-8' END AS mime,
-        array_to_string(list_transform(
-          list_filter(ls, s -> s.words >= 3 AND s.links * 2 <= s.words),
-          s -> s.txt), chr(10)) AS content,
-        CAST(len(list_filter(ls, s -> s.words > 0)) AS BIGINT) AS n_lines,
-        CAST(len(list_filter(ls, s -> s.words >= 3 AND s.links * 2 <= s.words)) AS BIGINT) AS n_kept,
-        CAST(coalesce(list_sum(list_transform(ls, s -> s.links)), 0) AS BIGINT) AS n_links,
-        CAST(coalesce(list_sum(list_transform(
-          list_filter(ls, s -> s.words >= 3 AND s.links * 2 <= s.words),
-          s -> s.words)), 0) AS BIGINT) AS n_words
-      FROM t2 ORDER BY doc_id""",
-    // group-wise regexp_extract_all over the replayed synthesis; the
-    // anchor cleanup chain matches the line cleanup verbatim
-    "q_html_links" -> """
-      WITH h AS (
-        SELECT doc_id,
-          '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR)
-          || '</title><style>body { color: #222; }</style>'
-          || '<script>if (1 < 2 && 3 > 1) { var x = "</p>"; }</script></head><body>'
-          || '<div id="nav"><a href="/">Home</a> <a href="/about">About</a>'
-          || CASE WHEN doc_id % 3 = 0 THEN '<a href="/faq">FAQ</a>' ELSE '' END
-          || '</div><h1>Doc ' || CAST(doc_id AS VARCHAR) || '</h1><p>' || text
-          || ' Tom &amp; Jerry say 1 &lt; 2 &quot;ok&quot; it&#39;s fine A&nbsp;B</p>'
-          || '<p>Figure ' || CAST(doc_id % 7 AS VARCHAR)
-          || '</p><div class="footer"><a href="/terms">Terms</a> <a href="/privacy">Privacy</a> 2026</div></body></html>'
-          AS html
-        FROM documents),
-      t AS (
-        SELECT doc_id,
-          regexp_extract_all(html, '(?is)<a\s[^>]*href="([^"]*)"[^>]*>(.*?)</a>', 1) AS hs,
-          regexp_extract_all(html, '(?is)<a\s[^>]*href="([^"]*)"[^>]*>(.*?)</a>', 2) AS an
-        FROM h),
-      u AS (
-        SELECT doc_id, unnest(generate_series(1, len(hs))) AS i, hs, an FROM t)
-      SELECT doc_id, CAST(i AS INT) AS link_no, hs[i] AS href,
-        trim(regexp_replace(
-          replace(replace(replace(replace(replace(replace(
-            regexp_replace(an[i], '<[^>]*>', ' ', 'g'),
-            '&lt;','<'),'&gt;','>'),'&quot;','"'),'&#39;',''''),'&nbsp;',' '),'&amp;','&'),
-          '[ \t]+', ' ', 'g')) AS anchor
-      FROM u ORDER BY doc_id, link_no""",
-    // synthesis + link extraction + the verbatim anchor cleanup chain,
-    // then resolution and the (cnt DESC, term) rank replayed group-wise
-    "q_anchor_text" -> """
-      WITH h AS (
-        SELECT doc_id,
-          '<html><body><div><a href="/">Home</a> <a href="/About#top">About Us</a>'
-          || CASE WHEN doc_id % 3 = 0 THEN '<a href="/faq">FAQ &amp; Help</a>' ELSE '' END
-          || '</div><p><a href="/doc/' || CAST((doc_id * 13 + 7) % 50 AS VARCHAR)
-          || '">' || array_to_string(string_split(text, ' ')[1:2], ' ')
-          || '</a> ' || text || '</p></body></html>' AS html,
-          text
-        FROM documents),
-      t AS (
-        SELECT doc_id,
-          regexp_extract_all(html, '(?is)<a\s[^>]*href="([^"]*)"[^>]*>(.*?)</a>', 1) AS hs,
-          regexp_extract_all(html, '(?is)<a\s[^>]*href="([^"]*)"[^>]*>(.*?)</a>', 2) AS an
-        FROM h),
-      u AS (
-        SELECT doc_id, unnest(generate_series(1, len(hs))) AS i, hs, an FROM t),
-      l AS (
-        SELECT
-          'https://site' || CAST(doc_id % 20 AS VARCHAR) || '.example.com'
-            || regexp_replace(hs[i], '(?s)#.*', '') AS target,
-          -- trim(x, ' '): bare trim strips the whole Unicode space
-          -- category (NEL/NBSP — present as clone-tag suffixes at
-          -- sf10) while the engine's trim strips 0x20 only; the
-          -- explicit one-char set keeps tagged words tagged
-          lower(trim(regexp_replace(
-            replace(replace(replace(replace(replace(replace(
-              regexp_replace(an[i], '<[^>]*>', ' ', 'g'),
-              '&lt;','<'),'&gt;','>'),'&quot;','"'),'&#39;',''''),'&nbsp;',' '),'&amp;','&'),
-            '[ \t]+', ' ', 'g'), ' ')) AS anchor
-        FROM u),
-      w AS (SELECT target, unnest(string_split(anchor, ' ')) AS term FROM l),
-      c AS (
-        SELECT target, term, COUNT(*) AS cnt FROM w
-        WHERE term <> '' GROUP BY target, term)
-      SELECT target, term, cnt, CAST(ROW_NUMBER() OVER (
-          PARTITION BY target ORDER BY cnt DESC, term) AS INT) AS rank
-      FROM c QUALIFY rank <= 3 ORDER BY target, rank""",
-    // every normalization stage replayed; RE2's \1 replacement is the
-    // Java $1 — the patterns themselves are shared verbatim
-    "q_url_normalize" -> """
-      WITH u AS (
-        SELECT doc_id,
-          CASE WHEN doc_id % 2 = 0 THEN 'HTTP' ELSE 'https' END || '://' ||
-          CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END ||
-          CASE WHEN doc_id % 11 = 0 THEN 'MüNCHEN.Example.COM'
-               ELSE 'Site' || CAST(doc_id % 20 AS VARCHAR) || '.Example.COM' END ||
-          CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE ':443' END ||
-          CASE WHEN doc_id % 4 = 0 THEN '' ELSE '/Path/' || CAST(doc_id AS VARCHAR) END ||
-          CASE WHEN doc_id % 7 = 1 THEN '/q%41%2f%7e%zz' ELSE '' END ||
-          CASE WHEN doc_id % 5 = 0 THEN '#Frag' || CAST(doc_id AS VARCHAR) ELSE '' END
-          AS url
-        FROM documents),
-      n AS (
-        SELECT doc_id, url, regexp_replace(trim(url), '(?s)#.*', '') AS nofrag FROM u),
-      p AS (
-        SELECT doc_id, url,
-          lower(regexp_extract(nofrag, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*).*', 1)) AS pre,
-          regexp_extract(nofrag, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*(.*)', 1) AS rest
-        FROM n),
-      q AS (
-        SELECT doc_id, url, pre, rest,
-          regexp_replace(regexp_replace(pre,
-            '^(http://[^/:]*):80$', '\1'), '^(https://[^/:]*):443$', '\1') AS noport
-        FROM p),
-      c AS (
-        SELECT doc_id, url, pre,
-          CASE WHEN pre = '' THEN trim(url)
-               ELSE regexp_replace(noport, '^(https?://)www\.', '\1')
-                    || CASE WHEN rest = '' THEN '/' ELSE rest END END AS canon0
-        FROM q)
-      -- the %-cluster and the IDN host are PLANTED literals, so the
-      -- oracle states their expected normalized forms directly
-      -- (parser-independent: %41→A, %2f→%2F, %7e→~, %zz preserved;
-      -- münchen → its punycode) instead of replaying the algorithms
-      SELECT doc_id,
-        replace(
-          CASE WHEN doc_id % 11 = 0
-               THEN replace(canon0, 'münchen.example.com', 'xn--mnchen-3ya.example.com')
-               ELSE canon0 END,
-          '/q%41%2f%7e%zz', '/qA%2F~%zz') AS canon,
-        lower(regexp_extract(trim(url),
-          '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]*).*', 1)) AS host
-      FROM c ORDER BY doc_id""",
-    // the expected rule set derived from the robots synthesis
-    // STRUCTURE (not a parser replay — parser defects must surface),
-    // md5 rule ids at the known line numbers, then the L14 semantics
-    // the oracle states the RFC 9309 outcome per planted path class
-    // directly (verdict + deciding-rule line number), independent of
-    // parser and matcher; line numbers are fixed (0-based): 3
-    // Disallow /private/, 4 Allow /private/public/, 5 Disallow
-    // /*.pdf$, 6 Allow /docs/*/view, 7 Disallow /tie/, 8 Allow /tie/
-    "q_robots_allow" -> """
-      WITH u AS (
-        SELECT doc_id, doc_id % 8 AS m, doc_id % 20 AS hn,
-          CASE doc_id % 8
-            WHEN 0 THEN '/private/x' || CAST(doc_id AS VARCHAR)
-            WHEN 1 THEN '/private/public/y' || CAST(doc_id AS VARCHAR)
-            WHEN 2 THEN '/report' || CAST(doc_id AS VARCHAR) || '.pdf'
-            WHEN 3 THEN '/report' || CAST(doc_id AS VARCHAR) || '.pdf?x=1'
-            WHEN 4 THEN '/docs/a' || CAST(doc_id AS VARCHAR) || '/view'
-            WHEN 5 THEN '/docs/a' || CAST(doc_id AS VARCHAR) || '/edit'
-            WHEN 6 THEN '/private/file' || CAST(doc_id AS VARCHAR) || '.pdf'
-            ELSE '/tie/t' || CAST(doc_id AS VARCHAR) END AS path
-        FROM documents),
-      v AS (
-        SELECT doc_id, m,
-          'https://site' || CAST(hn AS VARCHAR) || '.example.com' || path AS canon,
-          'site' || CAST(hn AS VARCHAR) || '.example.com' AS host
-        FROM u)
-      SELECT doc_id, canon,
-        m IN (0, 2, 6) AS blocked,
-        CASE
-          WHEN m IN (0, 6) THEN ('0x' || substr(md5(host || ':3'), 1, 15))::BIGINT
-          WHEN m = 1 THEN ('0x' || substr(md5(host || ':4'), 1, 15))::BIGINT
-          WHEN m = 2 THEN ('0x' || substr(md5(host || ':5'), 1, 15))::BIGINT
-          WHEN m = 4 THEN ('0x' || substr(md5(host || ':6'), 1, 15))::BIGINT
-          WHEN m = 7 THEN ('0x' || substr(md5(host || ':8'), 1, 15))::BIGINT
-          ELSE NULL END AS rule_id
-      FROM v ORDER BY doc_id""",
-    "q_robots_filter" -> """
-      WITH u AS (
-        SELECT doc_id,
-          CASE WHEN doc_id % 2 = 0 THEN 'HTTP' ELSE 'https' END || '://' ||
-          CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END ||
-          'Site' || CAST(doc_id % 20 AS VARCHAR) || '.Example.COM' ||
-          CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE ':443' END ||
-          CASE WHEN doc_id % 4 = 0 THEN '' ELSE '/Path/' || CAST(doc_id AS VARCHAR) END ||
-          CASE WHEN doc_id % 5 = 0 THEN '#Frag' || CAST(doc_id AS VARCHAR) ELSE '' END
-          AS url
-        FROM documents),
-      n AS (
-        SELECT doc_id, url, regexp_replace(trim(url), '(?s)#.*', '') AS nofrag FROM u),
-      p AS (
-        SELECT doc_id, url,
-          lower(regexp_extract(nofrag, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*).*', 1)) AS pre,
-          regexp_extract(nofrag, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*(.*)', 1) AS rest
-        FROM n),
-      q AS (
-        SELECT doc_id, url, pre, rest,
-          regexp_replace(regexp_replace(pre,
-            '^(http://[^/:]*):80$', '\1'), '^(https://[^/:]*):443$', '\1') AS noport
-        FROM p),
-      h AS (
-        SELECT doc_id,
-          CASE WHEN pre = '' THEN trim(url)
-               ELSE regexp_replace(noport, '^(https?://)www\.', '\1')
-                    || CASE WHEN rest = '' THEN '/' ELSE rest END END AS canon,
-          lower(regexp_extract(trim(url),
-            '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]*).*', 1)) AS host
-        FROM q),
-      h2 AS (
-        SELECT doc_id, canon, host,
-          regexp_extract(canon, '^[a-z][a-z0-9+.-]*://[^/]*(/.*)$', 1) AS path
-        FROM h),
-      hostt AS (SELECT DISTINCT doc_id % 20 AS hn FROM documents),
-      r AS (
-        SELECT ('0x' || substr(md5('site' || CAST(hn AS VARCHAR) || '.example.com:'
-                 || CAST(CASE WHEN hn % 2 = 0 THEN 5 ELSE 4 END AS VARCHAR)), 1, 15))::BIGINT AS rule_id,
-               'site' || CAST(hn AS VARCHAR) || '.example.com' AS host_suffix,
-               '/Path/1' AS path_prefix
-        FROM hostt
-        UNION ALL
-        SELECT ('0x' || substr(md5('site' || CAST(hn AS VARCHAR) || '.example.com:'
-                 || CAST(CASE WHEN hn % 2 = 0 THEN 6 ELSE 5 END AS VARCHAR)), 1, 15))::BIGINT,
-               'site' || CAST(hn AS VARCHAR) || '.example.com',
-               '/Path/2'
-        FROM hostt WHERE hn % 3 = 0),
-      m AS (
-        SELECT doc_id, MIN(rule_id) AS rule_id
-        FROM h2 JOIN r
-          ON (host = host_suffix OR host LIKE '%.' || host_suffix)
-         AND starts_with(path, path_prefix)
-        GROUP BY doc_id)
-      SELECT h2.doc_id, canon, m.rule_id IS NOT NULL AS blocked, m.rule_id
-      FROM h2 LEFT JOIN m ON h2.doc_id = m.doc_id
-      ORDER BY h2.doc_id""",
-    // the L11 canon/host replay + the rule semantics as label-boundary
-    // LIKE and starts_with against the same VALUES rule table
-    "q_url_filter" -> """
-      WITH u AS (
-        SELECT doc_id,
-          CASE WHEN doc_id % 2 = 0 THEN 'HTTP' ELSE 'https' END || '://' ||
-          CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END ||
-          'Site' || CAST(doc_id % 20 AS VARCHAR) || '.Example.COM' ||
-          CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE ':443' END ||
-          CASE WHEN doc_id % 4 = 0 THEN '' ELSE '/Path/' || CAST(doc_id AS VARCHAR) END ||
-          CASE WHEN doc_id % 5 = 0 THEN '#Frag' || CAST(doc_id AS VARCHAR) ELSE '' END
-          AS url
-        FROM documents),
-      n AS (
-        SELECT doc_id, url, regexp_replace(trim(url), '(?s)#.*', '') AS nofrag FROM u),
-      p AS (
-        SELECT doc_id, url,
-          lower(regexp_extract(nofrag, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*).*', 1)) AS pre,
-          regexp_extract(nofrag, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*(.*)', 1) AS rest
-        FROM n),
-      q AS (
-        SELECT doc_id, url, pre, rest,
-          regexp_replace(regexp_replace(pre,
-            '^(http://[^/:]*):80$', '\1'), '^(https://[^/:]*):443$', '\1') AS noport
-        FROM p),
-      h AS (
-        SELECT doc_id,
-          CASE WHEN pre = '' THEN trim(url)
-               ELSE regexp_replace(noport, '^(https?://)www\.', '\1')
-                    || CASE WHEN rest = '' THEN '/' ELSE rest END END AS canon,
-          lower(regexp_extract(trim(url),
-            '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]*).*', 1)) AS host
-        FROM q),
-      h2 AS (
-        SELECT doc_id, canon, host,
-          regexp_extract(canon, '^[a-z][a-z0-9+.-]*://[^/]*(/.*)$', 1) AS path
-        FROM h),
-      r AS (
-        SELECT * FROM (VALUES
-          (CAST(0 AS BIGINT), 'site3.example.com', CAST(NULL AS VARCHAR)),
-          (CAST(1 AS BIGINT), 'site7.example.com', CAST(NULL AS VARCHAR)),
-          (CAST(2 AS BIGINT), 'example.net', CAST(NULL AS VARCHAR)),
-          (CAST(3 AS BIGINT), 'site5.example.com', '/Path/1'))
-          AS t(rule_id, host_suffix, path_prefix)),
-      m AS (
-        SELECT doc_id, MIN(rule_id) AS rule_id
-        FROM h2 JOIN r
-          ON (host = host_suffix OR host LIKE '%.' || host_suffix)
-         AND (path_prefix IS NULL OR starts_with(path, path_prefix))
-        GROUP BY doc_id)
-      SELECT h2.doc_id, canon, m.rule_id IS NOT NULL AS blocked, m.rule_id
-      FROM h2 LEFT JOIN m ON h2.doc_id = m.doc_id
-      ORDER BY h2.doc_id""",
-    // the planted href grid and its expected RFC 3986 resolution per
-    // class, stated directly — neither the §5.2.3 merge nor the
-    // §5.2.4 dot-segment fold is replayed
-    "q_url_resolve" -> """
-      WITH u AS (
-        SELECT doc_id, doc_id % 10 AS m,
-          'https://site' || CAST(doc_id % 20 AS VARCHAR)
-            || '.example.com' AS hostp,
-          '/dir/sub/page' || CAST(doc_id AS VARCHAR) || '.html' AS bpath,
-          CAST(doc_id AS VARCHAR) AS ds
-        FROM documents)
-      SELECT doc_id,
-        CASE m
-          WHEN 0 THEN 'https://other.example.org/abs/' || ds
-          WHEN 1 THEN '//cdn.example.net/lib' || ds || '.js'
-          WHEN 2 THEN '/rooted/x' || ds
-          WHEN 3 THEN 'img/a' || ds || '.png'
-          WHEN 4 THEN '../up/b' || ds
-          WHEN 5 THEN './here/c' || ds
-          WHEN 6 THEN 'a/../../../z' || ds
-          WHEN 7 THEN '?q=' || ds
-          WHEN 8 THEN '#frag'
-          ELSE '' END AS href,
-        CASE m
-          WHEN 0 THEN 'https://other.example.org/abs/' || ds
-          WHEN 1 THEN 'https://cdn.example.net/lib' || ds || '.js'
-          WHEN 2 THEN hostp || '/rooted/x' || ds
-          WHEN 3 THEN hostp || '/dir/sub/img/a' || ds || '.png'
-          WHEN 4 THEN hostp || '/dir/up/b' || ds
-          WHEN 5 THEN hostp || '/dir/sub/here/c' || ds
-          WHEN 6 THEN hostp || '/z' || ds
-          WHEN 7 THEN hostp || bpath || '?q=' || ds
-          ELSE hostp || bpath END AS resolved
-      FROM u ORDER BY doc_id""",
-    "q_lm_fluency" -> s"""
-      $lmFluencyCtes
-      SELECT doc_id, COUNT(*) AS n_bigrams,
-             CAST(SUM(qe) AS BIGINT) AS score_sum,
-             CAST(CAST(SUM(qe) AS BIGINT) AS DOUBLE) /
-               CAST(COUNT(*) AS DOUBLE) AS fluency
-      FROM scored GROUP BY doc_id ORDER BY doc_id""",
-    // the L8 replay extended by the histogram/edge/bucket arithmetic:
-    // integer ranks ((n+2)//3), descending cumulative counts over
-    // DISTINCT fluency values, value-threshold CASE
-    "q_fluency_buckets" -> s"""
-      $lmFluencyCtes,
-      fl AS (
-        SELECT doc_id, COUNT(*) AS n_bigrams,
-               CAST(SUM(qe) AS BIGINT) AS score_sum,
-               CAST(CAST(SUM(qe) AS BIGINT) AS DOUBLE) /
-                 CAST(COUNT(*) AS DOUBLE) AS fluency
-        FROM scored GROUP BY doc_id),
-      h AS (SELECT fluency AS v, COUNT(*) AS c FROM fl GROUP BY fluency),
-      st AS (SELECT v, c,
-               SUM(c) OVER (ORDER BY v DESC) AS cum,
-               SUM(c) OVER () AS n FROM h),
-      e AS (SELECT
-              MAX(CASE WHEN cum >= (n + 2) // 3 THEN v END) AS b1,
-              MAX(CASE WHEN cum >= (2 * n + 2) // 3 THEN v END) AS b2
-            FROM st)
-      SELECT doc_id, n_bigrams, score_sum, fluency,
-             CASE WHEN fluency >= b1 THEN 'head'
-                  WHEN fluency >= b2 THEN 'middle'
-                  ELSE 'tail' END AS bucket
-      FROM fl, e ORDER BY doc_id""",
-
+      FROM deduped GROUP BY source ORDER BY source""", { (s, dir) =>
+      val docs = Tables.documents(s, dir)
+      Chain.run(docs, Seq[(String, Chain.Step)](
+        "scored" -> { ctx =>
+          ctx("input").select(col("doc_id"), col("source"), col("text"))
+            .join(TextAnalysis.quality(ctx("input"), "doc_id", "text")
+              .select("doc_id", "quality_score", "n_tokens"), "doc_id")
+            .join(TextAnalysis.langId(ctx("input"), "doc_id", "text")
+              .select("doc_id", "lang_pred"), "doc_id")
+        },
+        "filtered" -> { ctx =>
+          ctx("scored").where(col("quality_score") >= 0.5 && col("lang_pred") === "en")
+        },
+        "deduped" -> { ctx =>
+          val keep = ctx("filtered")
+            .groupBy(md5(col("text").cast("binary")).as("__h"))
+            .agg(min("doc_id").as("doc_id"))
+            .select("doc_id")
+          ctx("filtered").join(keep, "doc_id")
+        },
+        "stats" -> { ctx =>
+          ctx("deduped")
+            .groupBy("source")
+            .agg(
+              count(lit(1)).as("n_docs"),
+              sum("n_tokens").as("n_tokens"),
+              min("quality_score").as("min_quality"),
+              max("quality_score").as("max_quality"))
+            .orderBy("source")
+        }))
+    }),
   )
 }

@@ -1,10 +1,51 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.HashFunctions
 import graft.operators.Curation
 
 class CurationSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The composed column-algebra form of [[Curation.repetitionSignals]]
+    * — the bit-equal reference implementation (HOF folds + sort-based
+    * multiplicities) of its one compiled pass. */
+  def repetitionSignalsHof(
+      df: DataFrame, idCols: Seq[String], textCol: String): DataFrame = {
+    // Materialize the token array FIRST: lambda bodies referencing the
+    // split(...) expression re-evaluate it once per array element
+    // (lambdas don't cache subexpressions) — an O(L²) re-split per doc.
+    // Behind a bound column reference each signal is one O(L log L) pass.
+    val words = col("__words")
+    val n = size(words)
+    // bigram i = zip(words, words[2:]) — no per-element indexed lookup
+    val bigrams = zip_with(words, slice(words, lit(2), n - 1),
+      (a, b) => when(b.isNotNull, concat_ws(" ", a, b)))
+    df.withColumn("__words", split(col(textCol), " "))
+      .select(
+        idCols.map(col) ++ Seq(
+          n.as("n_words"),
+          (size(array_distinct(words)).cast("double") / n).as("distinct_word_frac"),
+          (HashFunctions.max_multiplicity(words).cast("double") / n).as("top_word_share"),
+          when(n >= 2,
+            HashFunctions.max_multiplicity(filter(bigrams, _.isNotNull)).cast("double") / (n - 1))
+            .as("top_bigram_share"),
+          (aggregate(words, lit(0L), (acc, w) => acc + length(w)).cast("double") / n)
+            .as("mean_word_len")): _*)
+      .orderBy(idCols.map(col): _*)
+  }
+
+  /** The composed reference form of the native
+    * [[graft.functions.StringNgrams]]: a CodegenFallback lambda per gram,
+    * each slicing a window copy; `toks` must be a bound column, not a
+    * `split(...)` expression — a lambda body referencing an expression
+    * re-evaluates it per element (O(L²) re-split per doc). Partial on
+    * short inputs (`sequence(0, negative)` descends into a slice(0)
+    * error), so callers pre-filter `size >= n`. */
+  def ngramsFromTokensHof(toks: Column, n: Int): Column =
+    transform(sequence(lit(0), size(toks) - n),
+      i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))
 
   private val docs = Seq(
     (1L, "srcA", "a a a b c"),          // top word a×3/5, top bigram "a a"×2/4
@@ -309,7 +350,7 @@ class CurationSpec extends SparkSpec {
       .toDF("doc_id", "text")
     for (d <- Seq(Tables.documents(spark, "/root/testdata/sf0.001"), edge)) {
       val native = Curation.repetitionSignals(d, Seq("doc_id"), "text").collect()
-      val hof = Curation.repetitionSignalsHof(d, Seq("doc_id"), "text").collect()
+      val hof = repetitionSignalsHof(d, Seq("doc_id"), "text").collect()
       assert(native.length == hof.length)
       native.zip(hof).foreach { case (a, b) =>
         assert(a.getLong(0) == b.getLong(0) || a.get(0) == b.get(0))
@@ -333,7 +374,7 @@ class CurationSpec extends SparkSpec {
       .where(size(col("__toks")) >= 3)
     val rows = d.select(
       graft.functions.HashFunctions.string_ngrams(col("__toks"), 3).as("native"),
-      Curation.ngramsFromTokensHof(col("__toks"), 3).as("hof")).collect()
+      ngramsFromTokensHof(col("__toks"), 3).as("hof")).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
     // short input: native yields an empty array instead of erroring

@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.operators.{Events, Formats, Geo, Joins, Num}
 
@@ -8,6 +9,29 @@ class EventsGeoFormatsSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  /** The ray-cast crossing count as a composed column fold — the
+    * bit-equal REFERENCE implementation of the native codegen'd
+    * [[graft.functions.RayCastCrossings]] (equality asserted below).
+    * The HOF `aggregate` is CodegenFallback — an interpreted lambda per
+    * edge per candidate pair — which is why the Geo operators use the
+    * native expression. */
+  def rayCastCrossingsHof(
+      px: Column, py: Column, xs: Column, ys: Column): Column = {
+    val n = size(xs)
+    aggregate(
+      sequence(lit(0), n - 1), lit(0),
+      (acc, i) => {
+        val xi = element_at(xs, i + 1)
+        val yi = element_at(ys, i + 1)
+        val xj = element_at(xs, pmod(i + 1, n) + 1)
+        val yj = element_at(ys, pmod(i + 1, n) + 1)
+        acc + when(
+          ((yi > py) =!= (yj > py)) &&
+            (px < (xj - xi) * (py - yi) / (yj - yi) + xi),
+          1).otherwise(0)
+      })
+  }
 
   test("scd2FromChangelog compresses runs and labels validity intervals") {
     val log = Seq(
@@ -206,7 +230,7 @@ class EventsGeoFormatsSpec extends SparkSpec {
     val out = df.select(
       graft.functions.GraftFunctions.ray_cast_crossings(
         col("px"), col("py"), col("xs"), col("ys")).as("native"),
-      graft.operators.Geo.rayCastCrossingsHof(
+      rayCastCrossingsHof(
         col("px"), col("py"), col("xs"), col("ys")).as("hof")).collect()
     out.foreach(r => assert(r.getInt(0) == r.getInt(1)))
     // null polygon → null, not a crash

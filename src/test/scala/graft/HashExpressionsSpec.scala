@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.HashFunctions
-import graft.operators.Dedup
+import graft.operators.{Classifier, Dedup}
 
 class HashExpressionsSpec extends SparkSpec {
   import spark.implicits._
@@ -70,6 +70,48 @@ class HashExpressionsSpec extends SparkSpec {
     struct(half(32).as("hi"), half(0).as("lo"))
   }
 
+  /** Sort + longest-run fold: the bit-equal reference of the native
+    * [[graft.functions.MaxMultiplicity]]. */
+  def maxMultiplicityHof(arr: Column): Column =
+    aggregate(
+      sort_array(arr),
+      struct(lit("").as("prev"), lit(0).as("run"), lit(0).as("mx")),
+      (acc, w) => {
+        val run = when(w === acc.getField("prev"), acc.getField("run") + 1)
+          .otherwise(lit(1))
+        struct(w.as("prev"), run.as("run"),
+          greatest(acc.getField("mx"), run).as("mx"))
+      },
+      acc => acc.getField("mx"))
+
+  /** The pure-column-algebra formulation of the feature array fused in
+    * Classifier.featureFrame — the bit-equal reference this spec (and
+    * the DuckDB oracle's SQL) mirror. */
+  def wordBucketsHof(textCol: Column, buckets: Int): Column =
+    concat(
+      array_distinct(transform(
+        split(textCol, " "), t => Classifier.tokenBucket(t, buckets))),
+      array(lit(buckets)))
+
+  /** Σ_{b ∈ barr} w_b as a HOF fold: the bit-equal reference of the
+    * native [[graft.functions.BucketMargin]]. */
+  def marginColHof(barr: Column, w: Array[Long]): Column =
+    aggregate(barr, lit(0L),
+      (acc, b) => acc + element_at(typedlit(w.toSeq), b + lit(1)))
+
+  /** The pure-column-algebra formulation of Classifier.charGramBuckets,
+    * the bit-equal reference this spec (and the DuckDB oracle's SQL)
+    * mirror — the fused kernel must match it window for window,
+    * including first-occurrence distinct order. */
+  def charGramBucketsHof(
+      textCol: Column, buckets: Int, n: Int): Column =
+    concat(
+      array_distinct(transform(
+        when(length(textCol) >= n, sequence(lit(1), length(textCol) - (n - 1)))
+          .otherwise(typedlit(Seq.empty[Int])),
+        i => Classifier.tokenBucket(textCol.substr(i, lit(n)), buckets))),
+      array(lit(buckets)))
+
   /** md5-derived feature bucket — identical in any engine with md5. */
   def hashedBucket(gram: Column, buckets: Int): Column =
     (conv(substring(md5(gram), 1, 8), 16, 10).cast("long") % buckets).cast("int")
@@ -112,7 +154,7 @@ class HashExpressionsSpec extends SparkSpec {
   test("native max_multiplicity equals the HOF reference formulation") {
     val rows = docs.select(
       HashFunctions.max_multiplicity(split(col("text"), " ")).as("native"),
-      graft.operators.Curation.maxMultiplicityHof(split(col("text"), " ")).as("hof"))
+      maxMultiplicityHof(split(col("text"), " ")).as("hof"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getInt(0) == r.getInt(1)))
@@ -252,7 +294,7 @@ class HashExpressionsSpec extends SparkSpec {
          (b, n) <- Seq((1024, 3), (64, 2), (256, 5))) {
       val got = df.select(
         graft.operators.Classifier.charGramBuckets(col("text"), b, n).as("k"),
-        graft.operators.Classifier.charGramBucketsHof(col("text"), b, n).as("ref"))
+        charGramBucketsHof(col("text"), b, n).as("ref"))
         .collect()
       assert(got.nonEmpty)
       got.foreach(r => assert(r.getSeq[Int](0) === r.getSeq[Int](1)))
@@ -270,7 +312,7 @@ class HashExpressionsSpec extends SparkSpec {
          b <- Seq(64, 1024)) {
       val got = df.select(
         graft.functions.CharGramBuckets.word_token_buckets(col("text"), b).as("k"),
-        graft.operators.Classifier.wordBucketsHof(col("text"), b).as("ref"))
+        wordBucketsHof(col("text"), b).as("ref"))
         .collect()
       assert(got.nonEmpty)
       got.foreach { r =>
@@ -329,7 +371,7 @@ class HashExpressionsSpec extends SparkSpec {
         array(lit(64))).as("barr"))
     val got = feat.select(col("doc_id"),
         HashFunctions.bucket_margin(col("barr"), w).as("m"),
-        graft.operators.Classifier.marginColHof(col("barr"), w).as("ref"))
+        marginColHof(col("barr"), w).as("ref"))
       .collect()
     assert(got.nonEmpty)
     got.foreach(r => assert(r.getLong(1) === r.getLong(2)))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Html
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 
 /** Unit coverage for the HTML → training-text extraction operator
@@ -10,6 +10,93 @@ import org.apache.spark.sql.functions._
   */
 class HtmlSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The pure-column-algebra formulation of [[Html.urlNormalize]] — the
+    * bit-equal reference the fuzz test below pins the
+    * [[graft.functions.UrlKernels]] transcription against. */
+  def urlNormalizeHof(url: Column): Column = {
+    val noFrag = regexp_replace(trim(url), "(?s)#.*", "")
+    val prefix = lower(regexp_extract(noFrag, "^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*).*", 1))
+    val rest = Html.pctNormalize(
+      regexp_extract(noFrag, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*(.*)", 1))
+    val noPort = regexp_replace(
+      regexp_replace(prefix, "^(http://[^/:]*):80$", "$1"),
+      "^(https://[^/:]*):443$", "$1")
+    val noWww = regexp_replace(noPort, "^(https?://)www\\.", "$1")
+    // IDN host folding, gated so ASCII hosts stay in pure column
+    // algebra and the expression only runs on the rare non-ASCII row
+    val scheme = regexp_extract(noWww, "^([a-z][a-z0-9+.-]*://)", 1)
+    val hostPart = regexp_extract(noWww, "^[a-z][a-z0-9+.-]*://([^:/]*)", 1)
+    val portPart = regexp_extract(noWww, "^[a-z][a-z0-9+.-]*://[^:/]*(.*)$", 1)
+    val asciiHost = when(hostPart.rlike("^[\\x00-\\x7F]*$"), hostPart)
+      .otherwise(graft.functions.IdnAscii(hostPart))
+    val canonPrefix = concat(scheme, asciiHost, portPart)
+    // a URL with no scheme://host prefix passes through untouched
+    // (relative href — resolution needs the base URL, not a rewrite)
+    when(prefix === "", trim(url))
+      .otherwise(concat(canonPrefix, when(rest === "", lit("/")).otherwise(rest)))
+  }
+
+  /** RFC 3986 §5.2.4 remove_dot_segments for an ABSOLUTE path (the
+    * only shape [[Html.urlResolve]] produces — http(s) base paths always
+    * start at '/'): one `aggregate` fold over the '/'-split segments —
+    * `.` drops, `..` pops (never past the root sentinel, matching the
+    * RFC's silent discard of excess `..`), anything else (empty
+    * double-slash segments included) appends; a trailing `.`/`..`
+    * re-appends the empty segment the RFC leaves behind ('/a/b/..' →
+    * '/a/'). Pure column algebra — map-only, no iteration beyond the
+    * per-row fold. */
+  def removeDotSegments(p: Column): Column = {
+    val segs = split(p, "/", -1)
+    val folded = aggregate(segs, typedLit(Seq.empty[String]),
+      (acc: Column, s: Column) =>
+        when(s === ".", acc)
+          .when(s === "..",
+            when(size(acc) > 1, slice(acc, lit(1), size(acc) - 1)).otherwise(acc))
+          .otherwise(concat(acc, array(s))))
+    val lastSeg = element_at(segs, -1)
+    array_join(
+      when(lastSeg.isin(".", ".."), concat(folded, array(lit(""))))
+        .otherwise(folded), "/")
+  }
+
+  /** The pure-column-algebra formulation of [[Html.urlResolve]] — the
+    * bit-equal reference the fuzz test below pins the
+    * [[graft.functions.UrlKernels]] transcription against. */
+  def urlResolveHof(base: Column, ref: Column): Column = {
+    val b = trim(base)
+    val r = trim(ref)
+    val bScheme = regexp_extract(b, "^([a-zA-Z][a-zA-Z0-9+.-]*)://.*", 1)
+    val bAuth = regexp_extract(b, "^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*).*", 1)
+    val bPath = regexp_extract(b, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*).*", 1)
+    val bQuery = regexp_extract(b, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*[^?#]*(\\?[^#]*)?.*", 1)
+    val prefix = concat(lower(bScheme), lit("://"), bAuth)
+    // ref split: path part vs the ?query#frag tail (dot-segment
+    // removal must never touch the query)
+    val rPath = regexp_extract(r, "^([^?#]*).*", 1)
+    val rTail = regexp_extract(r, "^[^?#]*(.*)$", 1)
+    val hasScheme = r.rlike("^[a-zA-Z][a-zA-Z0-9+.-]*:")
+    // §5.2.3 merge: base path up to and including its last '/' (an
+    // empty base path merges at the root)
+    val baseDir = when(bPath === "", lit("/"))
+      .otherwise(regexp_replace(bPath, "[^/]*$", ""))
+    val rSchemePath = regexp_extract(r, "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*).*", 1)
+    val rSchemePre = regexp_extract(r, "^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*).*", 1)
+    when(bScheme === "", r) // unanchorable base: pass through
+      .when(r === "", concat(prefix, bPath, bQuery))
+      .when(r.startsWith("#"), concat(prefix, bPath, bQuery, r))
+      .when(hasScheme && rSchemePre =!= "",
+        concat(rSchemePre, removeDotSegments(rSchemePath), rTail))
+      .when(hasScheme, r) // non-hierarchical (mailto:, javascript:)
+      .when(r.startsWith("//"),
+        concat(lower(bScheme), lit(":"),
+          regexp_extract(r, "^(//[^/?#]*).*", 1),
+          removeDotSegments(regexp_extract(r, "^//[^/?#]*([^?#]*).*", 1)), rTail))
+      .when(r.startsWith("/"), concat(prefix, removeDotSegments(rPath), rTail))
+      .when(r.startsWith("?"), concat(prefix, bPath, r))
+      .otherwise(concat(prefix,
+        removeDotSegments(concat(baseDir, rPath)), rTail))
+  }
 
   private def extract(html: String): Row =
     Html.htmlExtract(Seq((1L, html)).toDF("id", "html"), "id", "html")
@@ -40,7 +127,7 @@ class HtmlSpec extends SparkSpec {
     val urls = (hand ++ fuzz).toDF("u")
     val normChk = urls.select(col("u"),
       Html.urlNormalize(col("u")).as("k"),
-      Html.urlNormalizeHof(col("u")).as("ref"))
+      urlNormalizeHof(col("u")).as("ref"))
       .collect()
     normChk.foreach { r =>
       assert(Option(r.getString(1)) === Option(r.getString(2)),
@@ -55,7 +142,7 @@ class HtmlSpec extends SparkSpec {
     val pairs = (for (b <- bases; r <- refs) yield (b, r)).toDF("b", "r")
     val resChk = pairs.select(col("b"), col("r"),
       Html.urlResolve(col("b"), col("r")).as("k"),
-      Html.urlResolveHof(col("b"), col("r")).as("ref"))
+      urlResolveHof(col("b"), col("r")).as("ref"))
       .collect()
     resChk.foreach { r =>
       assert(Option(r.getString(2)) === Option(r.getString(3)),
@@ -64,9 +151,9 @@ class HtmlSpec extends SparkSpec {
     val nulls = Seq((null: String, "x"), ("http://h", null: String),
       (null: String, null: String)).toDF("b", "r")
     nulls.select(Html.urlResolve(col("b"), col("r")).as("k"),
-      Html.urlResolveHof(col("b"), col("r")).as("ref"),
+      urlResolveHof(col("b"), col("r")).as("ref"),
       Html.urlNormalize(col("b")).as("nk"),
-      Html.urlNormalizeHof(col("b")).as("nref")).collect().foreach { r =>
+      urlNormalizeHof(col("b")).as("nref")).collect().foreach { r =>
       assert(r.isNullAt(0) === r.isNullAt(1))
       assert(r.isNullAt(2) === r.isNullAt(3))
     }

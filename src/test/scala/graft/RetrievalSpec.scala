@@ -78,7 +78,7 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("hybrid gate wiring returns a non-empty fused head on the corpus") {
-    val out = graft.queries.RetrievalQueries.all("q_hybrid_search")(
+    val out = SparkEntry.queries("q_hybrid_search")(
       spark, "/root/testdata/sf0.001")
     val rows = out.collect()
     assert(rows.nonEmpty && rows.length <= 15)

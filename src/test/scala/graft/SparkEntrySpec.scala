@@ -9,18 +9,19 @@ import graft.queries._
 class SparkEntrySpec extends AnyFunSuite {
 
   test("query names are unique across the module maps") {
-    // `++` keeps only the last entry for a repeated key, so a name
-    // shared by two modules would drop a query with no error
-    val modules = Seq(CoreQueries.all, HierarchyQueries.all, ExtractionQueries.all,
-      TextQueries.all, DedupQueries.all, EventQueries.all, GeoQueries.all,
-      FormatQueries.all, EcoQueries.all, ClassObjectQueries.all,
-      MultimodalQueries.all, CurationQueries.all, PipelineQueries.all,
-      RetrievalQueries.all, BpeQueries.all, GraphQueries.all, GraphQueries.allHits)
-    val shared = modules.flatMap(_.keys).groupBy(identity).collect {
-      case (name, hits) if hits.size > 1 => name
-    }
-    assert(shared.isEmpty)
-    assert(modules.map(_.size).sum == SparkEntry.queries.size)
+    // the map views keep only the last record of a repeated name, so a
+    // name shared by two records would drop a query with no error
+    val modules = Seq(CoreQueries.queries, HierarchyQueries.queries,
+      ExtractionQueries.queries, TextQueries.queries, DedupQueries.queries,
+      EventQueries.queries, GeoQueries.queries, FormatQueries.queries,
+      EcoQueries.queries, ClassObjectQueries.queries, MultimodalQueries.queries,
+      CurationQueries.queries, PipelineQueries.queries, RetrievalQueries.queries,
+      BpeQueries.queries, GraphQueries.queries)
+    val names = modules.flatten.map(_.name)
+    assert(names.diff(names.distinct).isEmpty, "repeated query names")
+    assert(SparkEntry.records.map(_.name) == names)
+    assert(names.size == 165)
+    assert(SparkEntry.queries.size == names.size)
   }
 
   test("every query has an oracle and every oracle a query") {
@@ -28,6 +29,7 @@ class SparkEntrySpec extends AnyFunSuite {
     val oracles = SparkEntry.oracleSql.keySet
     assert((queries -- oracles).isEmpty, "queries without an oracle")
     assert((oracles -- queries).isEmpty, "oracles without a query")
+    assert(SparkEntry.records.filter(_.oracle.trim.isEmpty).isEmpty, "blank oracles")
   }
 
   test("selected keeps name order and the asked subset") {
