@@ -1,8 +1,6 @@
 package graft.operators
 
-import java.io.ByteArrayOutputStream
-
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -206,12 +204,18 @@ object Dedup {
     * ([[dedupShardAgainstIndex]]) reads these files and NEVER touches
     * the corpus text again (at lake scale, bucket both tables by
     * doc_id so the verify join co-locates). Grow the index with
-    * [[minhashIndexAppend]] as novel shards are accepted. */
+    * [[minhashIndexAppend]] as novel shards are accepted. Tombstones,
+    * crash recovery, compaction and reuse are [[IndexStore]]'s. */
   def minhashIndexWrite(
       corpus: DataFrame, idCol: String, textCol: String, path: String,
-      shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16): Unit =
+      shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16): Unit = {
+    minhashStore(corpus.sparkSession, path).reset()
     writeIndexSegment(corpus, idCol, textCol, path, shingleN, numHashes,
-      bands, overwrite = true)
+      bands, SaveMode.Overwrite)
+  }
+
+  private def minhashStore(spark: SparkSession, path: String): IndexStore =
+    new IndexStore(spark, path, Seq("bands", "shingles"))
 
   /** [[minhashIndexWrite]] iff `path` does not already hold the index
     * of exactly this corpus — the production artifact posture: an
@@ -220,20 +224,17 @@ object Dedup {
     * (a per-window benchmark, a restarted probe job) reuses the
     * persisted artifact instead. Identity is a corpus fingerprint
     * (row count + an order-free XOR fold of per-id hashes, plus the
-    * index parameters) written as a marker INSIDE the artifact after
-    * a successful build — DELIBERATELY ids-only and one column-pruned
-    * agg to check, never a text scan (at 100 TB the text column IS
-    * the corpus): a caller whose TEXT can change under a fixed id set
-    * must own that invalidation by deleting the path — the
-    * fingerprint cannot see it. A fingerprint mismatch or missing
-    * marker rebuilds from scratch; probes against a reused artifact
-    * are byte-equivalent to a fresh build (the marker is written only
-    * after both tables land). */
+    * index parameters) held in [[IndexStore.ensure]]'s marker —
+    * DELIBERATELY ids-only and one column-pruned agg to check, never a
+    * text scan (at 100 TB the text column IS the corpus): a caller
+    * whose TEXT can change under a fixed id set must own that
+    * invalidation by deleting the path — the fingerprint cannot see
+    * it. A fingerprint mismatch or missing marker rebuilds from
+    * scratch; probes against a reused artifact are byte-equivalent to
+    * a fresh build. */
   def minhashIndexEnsure(
       corpus: DataFrame, idCol: String, textCol: String, path: String,
       shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = corpus.sparkSession
     // order-free id-set fold: XOR of per-id hashes — never overflows
     // (ANSI mode makes a sum of full-range xxhash64 values throw),
     // order-insensitive, and any single id change flips the fold
@@ -244,30 +245,8 @@ object Dedup {
       coalesce(expr(s"bit_xor(xxhash64(`$idCol`))"), lit(0L))).head()
     val fp = s"${row.getLong(0)}:${row.getLong(1)}:" +
       s"$shingleN:$numHashes:$bands"
-    val marker = new Path(s"$path/_fingerprint")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh = fs.exists(marker) && {
-      val in = fs.open(marker)
-      try {
-        // read to EOF — a single read() may legally short-read on
-        // remote filesystems, and a truncated string would force a
-        // spurious full rebuild every run
-        val buf = new ByteArrayOutputStream(256)
-        val b = new Array[Byte](256)
-        var n = in.read(b)
-        while (n > 0) { buf.write(b, 0, n); n = in.read(b) }
-        buf.toString("UTF-8") == fp
-      } finally in.close()
-    }
-    if (!fresh) {
-      // marker drops FIRST so a crash mid-rebuild can never leave a
-      // stale fingerprint vouching for half-written tables
-      fs.delete(marker, false)
-      writeIndexSegment(corpus, idCol, textCol, path, shingleN, numHashes,
-        bands, overwrite = true)
-      val out = fs.create(marker, true)
-      try out.write(fp.getBytes("UTF-8")) finally out.close()
-    }
+    minhashStore(corpus.sparkSession, path).ensure(fp)(
+      minhashIndexWrite(corpus, idCol, textCol, path, shingleN, numHashes, bands))
   }
 
   /** J14 — grow a [[minhashIndexWrite]] artifact with a newly accepted
@@ -283,45 +262,22 @@ object Dedup {
   def minhashIndexAppend(
       shard: DataFrame, idCol: String, textCol: String, path: String,
       shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16): Unit =
-    writeIndexSegment(shard, idCol, textCol, path, shingleN, numHashes,
-      bands, overwrite = false)
+    minhashStore(shard.sparkSession, path).append(
+      writeIndexSegment(shard, idCol, textCol, path, shingleN, numHashes,
+        bands, SaveMode.Append))
 
   /** J16 — forget documents from a [[minhashIndexWrite]] artifact (the
     * right-to-be-forgotten path a 100 TB ingest lake must serve):
-    * appends the ids to a `tombstones` table — cost ∝ the delete set,
-    * the index segments are NEVER touched on the ingest path. Probes
-    * ([[dedupShardAgainstIndex]]) anti-join candidates against the
-    * tombstones (ids-only, broadcast-sized between compactions), so a
-    * deleted document stops matching IMMEDIATELY; the next
-    * [[minhashIndexCompact]] purges its rows physically and clears the
-    * tombstone table. Stored segment-local occupancy stays stale until
-    * compaction — counts can only be too HIGH, so the pre-exchange hot
-    * drop is conservative (the same at-least-once contract as retried
-    * appends: over-dropping a hot bucket, never a wrong match). */
+    * [[IndexStore.tombstone]]s the ids, so they stop matching on the
+    * next [[dedupShardAgainstIndex]] and leave physically at the next
+    * [[minhashIndexCompact]]. Stored segment-local occupancy stays
+    * stale until compaction — counts can only be too HIGH, so the
+    * pre-exchange hot drop is conservative (the same at-least-once
+    * contract as retried appends: over-dropping a hot bucket, never a
+    * wrong match). */
   def minhashIndexDelete(ids: DataFrame, idCol: String, path: String): Unit =
-    ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$path/tombstones")
-
-  /** Live tombstone set of an index, empty frame if none recorded. */
-  private def indexTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  /** Drop tombstoned docs from an index-side frame (no-op without
-    * tombstones). The delete set is ids-only and bounded by the
-    * compaction cadence — Spark broadcasts it. */
-  private def dropTombstoned(
-      frame: DataFrame, docCol: String, path: String): DataFrame =
-    indexTombstones(frame.sparkSession, path) match {
-      case Some(tomb) => frame.join(
-        broadcast(tomb.select(col("doc_id").as(docCol))), Seq(docCol), "left_anti")
-      case None => frame
-    }
+    minhashStore(ids.sparkSession, path)
+      .tombstone(ids.select(col(idCol).cast("long").as("doc_id")))
 
   /** J14 — fold an appended index back into ONE segment: rewrite
     * `bands` with GLOBAL occupancy (so every hot bucket is again
@@ -330,11 +286,11 @@ object Dedup {
     * band rows and hashed-shingle arrays, a small fraction of corpus
     * text — so this is the periodic maintenance job between cheap
     * per-shard appends, not part of the ingest path. The rewrite goes
-    * through a sibling temp dir + FileSystem rename (never reads and
-    * overwrites the same files in one plan, and never materializes the
-    * index in executor memory). Probe results are unchanged by
-    * compaction (spec-asserted) — only WHERE the hot-drop happens
-    * moves. Compaction is ALSO the repair path for at-least-once
+    * through [[IndexStore.compactPrepare]]'s crash-safe swap (never
+    * reads and overwrites the same files in one plan, and never
+    * materializes the index in executor memory). Probe results are
+    * unchanged by compaction (spec-asserted) — only WHERE the hot-drop
+    * happens moves. Compaction is ALSO the repair path for at-least-once
     * appends: a retried streaming micro-batch
     * ([[graft.streaming.StreamOps.rollingIngestStream]]) can append
     * the same shard twice, inflating occupancy counts (duplicates can
@@ -342,93 +298,28 @@ object Dedup {
     * collapses duplicate rows per doc before rebuilding counts, so
     * post-compact verdicts equal a cleanly built index
     * (spec-asserted). */
-  def minhashIndexCompact(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+  def minhashIndexCompact(spark: SparkSession, path: String): Unit =
     minhashIndexCompactPrepare(spark, path)()
 
-  /** [[minhashIndexCompact]] split at its natural barrier (guide §2.6):
-    * everything returned-thunk-ward MUTATES the live tables (renames +
-    * tombstone clear, a handful of namenode calls); everything before
-    * it only READS them (the rewrite jobs land in sibling tmp dirs).
-    * A maintenance pipeline can therefore run tombstones-live probes
-    * CONCURRENTLY with the rewrite and commit once they finish —
-    * probe-before-compact results are unchanged by construction (the
-    * probed files are immutable until the thunk runs). The returned
-    * commit must run with no reader in flight and no intervening
-    * recover() (IndexSwap contract). */
-  def minhashIndexCompactPrepare(
-      spark: org.apache.spark.sql.SparkSession, path: String): () => Unit = {
-    import org.apache.spark.sql.SaveMode
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash-safe: write-aside + two renames with forward/back recovery
-    // (IndexSwap) — the table is readable at every intermediate state
-    def prep(table: String, rewrite: DataFrame => DataFrame): () => Unit = {
-      val cur = new Path(s"$path/$table")
-      IndexSwap.prepare(fs, cur) { tmp =>
-        rewrite(spark.read.parquet(cur.toString))
-          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      }
-    }
-    val commitBands = prep("bands", { bands =>
-      val ids = dropTombstoned(
-        bands.select(col("doc_id"), col("band"), col("bucket")).distinct(),
-        "doc_id", path)
-      ids.join(
-        ids.groupBy(col("band"), col("bucket"))
-          .agg(count(lit(1)).as("n_bucket")),
-        Seq("band", "bucket"))
-    })
-    val commitShingles = prep("shingles", sh =>
-      dropTombstoned(sh.dropDuplicates("doc_id"), "doc_id", path))
-    () => {
-      commitBands()
-      commitShingles()
-      // tombstones are now physically applied — clear them so future
-      // probes stop paying the anti-join
-      fs.delete(new Path(s"$path/tombstones"), true)
-    }
-  }
-
-  /** Roll forward/back any compaction a crash interrupted, so probes
-    * and appends see a readable table (never a fresh empty one beside
-    * the orphaned real one). */
-  private def recoverIndexTables(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexSwap.recover(fs, new Path(s"$path/bands"))
-    IndexSwap.recover(fs, new Path(s"$path/shingles"))
+  /** [[minhashIndexCompact]] split at its natural barrier (guide §2.6;
+    * the split and its commit contract are [[IndexStore.compactPrepare]]'s). */
+  def minhashIndexCompactPrepare(spark: SparkSession, path: String): () => Unit = {
+    val store = minhashStore(spark, path)
+    store.compactPrepare(
+      "bands" -> { bands =>
+        val ids = store.live(
+          bands.select(col("doc_id"), col("band"), col("bucket")).distinct(), "doc_id")
+        ids.join(
+          ids.groupBy(col("band"), col("bucket"))
+            .agg(count(lit(1)).as("n_bucket")),
+          Seq("band", "bucket")).write
+      },
+      "shingles" -> (sh => store.live(sh.dropDuplicates("doc_id"), "doc_id").write))
   }
 
   private def writeIndexSegment(
       df: DataFrame, idCol: String, textCol: String, path: String,
-      shingleN: Int, numHashes: Int, bands: Int, overwrite: Boolean): Unit = {
-    import org.apache.spark.sql.SaveMode
-    val mode = if (overwrite) SaveMode.Overwrite else SaveMode.Append
-    // an append after a mid-compaction crash must land in the RECOVERED
-    // table, not start a new one at the vacated path
-    if (!overwrite) recoverIndexTables(df.sparkSession, path)
-    if (overwrite) {
-      // a rebuilt index starts clean: a tombstone table left by a
-      // prior generation (e.g. a crash between delete and compact)
-      // must not phantom-delete docs from the NEW index — and a stale
-      // [[minhashIndexEnsure]] fingerprint must not vouch for tables
-      // another builder is about to replace
-      import org.apache.hadoop.fs.Path
-      val t = new Path(s"$path/tombstones")
-      t.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-        .delete(t, true)
-    }
-    // any segment write (re-build OR append) changes what the index
-    // matches — the [[minhashIndexEnsure]] fingerprint must not keep
-    // vouching for the previous contents
-    locally {
-      import org.apache.hadoop.fs.Path
-      val m = new Path(s"$path/_fingerprint")
-      m.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-        .delete(m, false)
-    }
+      shingleN: Int, numHashes: Int, bands: Int, mode: SaveMode): Unit = {
     val shf = shingleFrame(df, idCol, textCol, shingleN).localCheckpoint(true)
     val bb = bandedBuckets(
       shf.select(col("doc_id"), minhashSignature(col("sh"), numHashes).as("sig")),
@@ -467,7 +358,8 @@ object Dedup {
       maxBucket: Int = 1000, minJaccard: Double = 0.5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = shard.sparkSession
-    recoverIndexTables(spark, path) // a crashed compaction rolls here
+    val store = minhashStore(spark, path)
+    store.recover() // a crashed compaction rolls here
     val shf = shingleFrame(shard, idCol, textCol, shingleN).localCheckpoint(true)
     // the band-bucket frame feeds TWO consumers (the sliver's semi
     // join and the candidate join); without materialization the
@@ -485,9 +377,9 @@ object Dedup {
     // before the sliver window, so n_glob counts live rows only; the
     // stored n_bucket pre-drop can only be conservatively high until
     // the next compaction purges the rows physically
-    val idx = dropTombstoned(
+    val idx = store.live(
       spark.read.parquet(s"$path/bands").where(col("n_bucket") <= maxBucket),
-      "doc_id", path)
+      "doc_id")
     val sliver = idx
       .select(col("doc_id").as("match_id"), col("band"), col("bucket"))
       .join(bb.select(col("band"), col("bucket")).distinct(),
@@ -500,8 +392,7 @@ object Dedup {
         Seq("band", "bucket"))
       .select(col("doc_id"), col("match_id"))
       .distinct()
-    val corpusSh = dropTombstoned(spark.read.parquet(s"$path/shingles"),
-        "doc_id", path)
+    val corpusSh = store.live(spark.read.parquet(s"$path/shingles"), "doc_id")
       .select(col("doc_id").as("match_id"), col("sh").as("sh_b"), col("n_sh").as("nb"))
     cand
       .join(shf.select(col("doc_id"), col("sh"), col("n_sh")), "doc_id")
@@ -767,17 +658,8 @@ object Dedup {
       spanLen: Int, minDocs: Int = 2): DataFrame = {
     require(spanLen >= 1, "spanDedup: spanLen must be >= 1")
     require(minDocs >= 2, "spanDedup: minDocs must be >= 2 (cross-doc duplicates)")
-    // fused window hashing: token byte slices stream into one XXH64
-    // pass per window — bit-equal to the string_ngrams + xxhash64
-    // chain (spec-held parity), no window-string materialization
-    val occ = df
-      .select(col(idCol).as("__id"), split(col(textCol), " ").as("__toks"))
-      .where(size(col("__toks")) >= spanLen)
-      .select(col("__id"), posexplode(
-        graft.functions.SpanWindowHashes.span_window_hashes(col("__toks"), spanLen)))
-      .toDF("__id", "__pos", "__hs")
-      .select(col("__id"), col("__pos"),
-        col("__hs.h1").as("__h1"), col("__hs.h2").as("__h2"))
+    val base = spanBase(df, idCol, textCol)
+    val occ = spanOccurrences(base, spanLen).toDF("__id", "__pos", "__h1", "__h2")
     // doc count, occurrence count AND the first occurrence in one
     // two-level partial agg; the struct-min is the corpus-wide first
     // occurrence (lexicographic order resolves by doc first; (id, mp)
@@ -795,19 +677,57 @@ object Dedup {
         min_by(struct(col("__id"), col("__mp")),
           struct(col("__id"), col("__mp"))).as("__f"))
       .where(col("n_docs") >= minDocs)
-      .select(col("__f.__id").as("__fid"), col("__f.__mp").as("__fpos"),
+      .select(col("__f.__id").as("doc_id"), col("__f.__mp").as("__fpos"),
         col("n_docs"), col("n_occ"))
     // survivors only: slice the span text out of its first-occurrence
     // doc (AQE broadcasts the survivor side when it is small; at scale
     // this joins flagged spans ≪ corpus, never the window mass)
-    df.select(col(idCol).as("__fid"), split(col(textCol), " ").as("__toks"))
-      .join(survivors, "__fid")
+    base.join(survivors, "doc_id")
       .select(
         concat_ws(" ",
-          slice(col("__toks"), col("__fpos") + lit(1), lit(spanLen))).as("span"),
+          slice(col("toks"), col("__fpos") + lit(1), lit(spanLen))).as("span"),
         col("n_docs"), col("n_occ"))
       .orderBy(col("span"))
   }
+
+  /** `(doc_id, toks)`: the token frame the span family windows over. */
+  private def spanBase(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("toks"))
+
+  /** `(doc_id, pos, h1, h2)`: one row per `len`-token window of every
+    * doc of a [[spanBase]] frame with at least `len` tokens. The span
+    * string is hashed to (h1, h2) and never materialized, so every
+    * downstream key is fixed-width. */
+  private def spanOccurrences(base: DataFrame, len: Int): DataFrame =
+    base.where(size(col("toks")) >= len)
+      // fused window hashing: token byte slices stream into one XXH64
+      // pass per window — bit-equal to the string_ngrams + xxhash64
+      // chain (spec-held parity), no window-string materialization
+      .select(col("doc_id"), posexplode(
+        graft.functions.SpanWindowHashes.span_window_hashes(col("toks"), len)))
+      .toDF("doc_id", "pos", "hs")
+      .select(col("doc_id"), col("pos"),
+        col("hs.h1").as("h1"), col("hs.h2").as("h2"))
+
+  /** `(h1, h2, fdoc, fpos)`: every window of `occ` found in ≥ `minDocs`
+    * docs, with its corpus-wide first occurrence. Dup decision AND
+    * first occurrence in ONE two-level partial agg: per (span, doc)
+    * keep the doc's min pos, then per span count docs + take the
+    * struct-min (= the global min, since lexicographic struct order
+    * resolves by doc first). The round-14 shape joined occ against the
+    * dup set and re-aggregated the flagged mass for the first
+    * occurrence — two more flagged-mass exchanges and a join for the
+    * same rows (guide §2.4). */
+  private def firstOccurrences(occ: DataFrame, minDocs: Int): DataFrame =
+    occ
+      .groupBy(col("h1"), col("h2"), col("doc_id"))
+      .agg(min(col("pos")).as("__mp"))
+      .groupBy(col("h1"), col("h2"))
+      .agg(count(lit(1)).as("n_docs"),
+        min(struct(col("doc_id"), col("__mp"))).as("f"))
+      .where(col("n_docs") >= minDocs)
+      .select(col("h1"), col("h2"),
+        col("f.doc_id").as("fdoc"), col("f.__mp").as("fpos"))
 
   /** J12 — span-level dedup APPLIED: rewrite every document with its
     * duplicated-span occurrences REMOVED, keeping only the corpus-wide
@@ -847,36 +767,9 @@ object Dedup {
       spanLen: Int, minDocs: Int = 2): DataFrame = {
     require(spanLen >= 1, "spanScrub: spanLen must be >= 1")
     require(minDocs >= 2, "spanScrub: minDocs must be >= 2 (cross-doc duplicates)")
-    val base = df.select(
-      col(idCol).as("doc_id"), split(col(textCol), " ").as("toks"))
-    // the span string is hashed to (h1, h2) and dropped before any
-    // exchange — every downstream key is fixed-width
-    val occ = base
-      .where(size(col("toks")) >= spanLen)
-      // fused window hashing: token byte slices stream into one XXH64
-      // pass per window — bit-equal to the string_ngrams + xxhash64
-      // chain (spec-held parity), no window-string materialization
-      .select(col("doc_id"), posexplode(
-        graft.functions.SpanWindowHashes.span_window_hashes(col("toks"), spanLen)))
-      .toDF("doc_id", "pos", "hs")
-      .select(col("doc_id"), col("pos"),
-        col("hs.h1").as("h1"), col("hs.h2").as("h2"))
-    // dup decision AND corpus-wide first occurrence in ONE two-level
-    // partial agg: per (span, doc) keep the doc's min pos, then per
-    // span count docs + take the struct-min (= the global min, since
-    // lexicographic struct order resolves by doc first). The round-14
-    // shape joined occ against the dup set and re-aggregated the
-    // flagged mass for the first occurrence — two more flagged-mass
-    // exchanges and a join for the same rows (guide §2.4).
-    val grp = occ
-      .groupBy(col("h1"), col("h2"), col("doc_id"))
-      .agg(min(col("pos")).as("__mp"))
-      .groupBy(col("h1"), col("h2"))
-      .agg(count(lit(1)).as("n_docs"),
-        min(struct(col("doc_id"), col("__mp"))).as("f"))
-      .where(col("n_docs") >= minDocs)
-      .select(col("h1"), col("h2"),
-        col("f.doc_id").as("fdoc"), col("f.__mp").as("fpos"))
+    val base = spanBase(df, idCol, textCol)
+    val occ = spanOccurrences(base, spanLen)
+    val grp = firstOccurrences(occ, minDocs)
     val cover = occ.join(grp, Seq("h1", "h2"))
       .where(!(col("doc_id") === col("fdoc") && col("pos") === col("fpos")))
       .select(col("doc_id"),
@@ -946,30 +839,9 @@ object Dedup {
       minLen: Int, minDocs: Int = 2): DataFrame = {
     require(minLen >= 2, "spanScrubVar: minLen must be >= 2")
     require(minDocs >= 2, "spanScrubVar: minDocs must be >= 2 (cross-doc duplicates)")
-    val base = df.select(
-      col(idCol).as("doc_id"), split(col(textCol), " ").as("toks"))
-    val occ = base
-      .where(size(col("toks")) >= minLen)
-      // fused window hashing: token byte slices stream into one XXH64
-      // pass per window — bit-equal to the string_ngrams + xxhash64
-      // chain (spec-held parity), no window-string materialization
-      .select(col("doc_id"), posexplode(
-        graft.functions.SpanWindowHashes.span_window_hashes(col("toks"), minLen)))
-      .toDF("doc_id", "pos", "hs")
-      .select(col("doc_id"), col("pos"),
-        col("hs.h1").as("h1"), col("hs.h2").as("h2"))
-    // fused dup decision + first occurrence (the spanScrub shape —
-    // one two-level agg instead of dup join + flagged re-agg)
-    val grp = occ
-      .groupBy(col("h1"), col("h2"), col("doc_id"))
-      .agg(min(col("pos")).as("__mp"))
-      .groupBy(col("h1"), col("h2"))
-      .agg(count(lit(1)).as("n_docs"),
-        min(struct(col("doc_id"), col("__mp"))).as("f"))
-      .where(col("n_docs") >= minDocs)
-      .select(col("h1"), col("h2"),
-        col("f.doc_id").as("fdoc"), col("f.__mp").as("fpos"))
-    val tagged = occ.join(grp, Seq("h1", "h2"))
+    val base = spanBase(df, idCol, textCol)
+    val occ = spanOccurrences(base, minLen)
+    val tagged = occ.join(firstOccurrences(occ, minDocs), Seq("h1", "h2"))
     val isFirst = col("doc_id") === col("fdoc") && col("pos") === col("fpos")
     // ONE coverage pass: explode every flagged occurrence with its
     // first/non-first tag, then a single (doc_id, tpos) partial agg
@@ -1583,18 +1455,9 @@ object Dedup {
     require(minLen >= 2, "spanDedupVar: minLen must be >= 2")
     require(minDocs >= 2, "spanDedupVar: minDocs must be >= 2 (cross-doc duplicates)")
     import org.apache.spark.sql.expressions.Window
-    val base = df.select(
-      col(idCol).as("doc_id"), split(col(textCol), " ").as("toks"))
-    val occ = base
-      .where(size(col("toks")) >= minLen)
-      // fused window hashing: token byte slices stream into one XXH64
-      // pass per window — bit-equal to the string_ngrams + xxhash64
-      // chain (spec-held parity), no window-string materialization
-      .select(col("doc_id"), posexplode(
-        graft.functions.SpanWindowHashes.span_window_hashes(col("toks"), minLen)))
-      .toDF("doc_id", "pos", "hs")
-      .select(col("doc_id"), col("pos").cast("long").as("pos"),
-        col("hs.h1").as("h1"), col("hs.h2").as("h2"))
+    val base = spanBase(df, idCol, textCol)
+    val occ = spanOccurrences(base, minLen)
+      .withColumn("pos", col("pos").cast("long"))
     val dup = occ
       .groupBy(col("h1"), col("h2"), col("doc_id")).agg(count(lit(1)).as("__o"))
       .groupBy(col("h1"), col("h2")).agg(count(lit(1)).as("n_docs"))

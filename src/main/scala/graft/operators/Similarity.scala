@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -162,39 +162,34 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       centroidStride: Long, nProbe: Int, indexDir: String,
-      maxCentroids: Int = 4096, reuseExisting: Boolean = true): DataFrame = {
+      maxCentroids: Int = 4096): DataFrame = {
     val spark = corpus.sparkSession
-    // probe-only when an index with MATCHING build params already sits
-    // at indexDir — this is what makes "the write amortizes across
-    // query batches" real instead of aspirational. The params marker
+    // probe-only when an index built with the SAME parameters sits at
+    // indexDir and nothing has been appended since. The identity
     // cannot see corpus content: reuse assumes the corpus at this
     // indexDir is immutable for the index's lifetime (callers indexing
-    // a changing corpus pass reuseExisting = false or a fresh dir).
-    val reusable = reuseExisting && {
-      import org.apache.hadoop.fs.Path
-      val p = new Path(s"$indexDir/params")
-      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p) && {
-        val r = spark.read.parquet(s"$indexDir/params").collect()
-        r.length == 1 && r(0).getLong(0) == centroidStride &&
-          r(0).getInt(1) == maxCentroids
-      }
-    }
-    if (!reusable)
-      buildIvfIndex(corpus, idCol, vecCol, centroidStride, indexDir, maxCentroids)
+    // a changing corpus pass a fresh dir).
+    ivfStore(spark, indexDir).ensure(s"$centroidStride:$maxCentroids")(
+      buildIvfIndex(corpus, idCol, vecCol, centroidStride, indexDir, maxCentroids))
     probeIvfIndex(spark, queries, idCol, vecCol, k, nProbe, indexDir)
   }
+
+  private def ivfStore(spark: SparkSession, indexDir: String): IndexStore =
+    new IndexStore(spark, indexDir, Seq("cells"))
 
   /** Build half of [[ivfIndexedTopK]]: stride-sampled codebook
     * (bounded ≤ `maxCentroids`-row driver collect, loud overflow) +
     * ONE map-only assignment pass over the corpus written
     * `partitionBy(cell)`, with the codebook and build params persisted
     * beside the cells — so any later session can probe the index
-    * without touching the corpus. */
+    * without touching the corpus. Tombstones, crash recovery,
+    * compaction and reuse are [[IndexStore]]'s. */
   def buildIvfIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       centroidStride: Long, indexDir: String,
       maxCentroids: Int = 4096): Unit = {
     val spark = corpus.sparkSession
+    ivfStore(spark, indexDir).reset()
     val sampled = corpus
       .where(pmod(col(idCol), lit(centroidStride)) === 0)
       .select(col(idCol).cast("string").as("cid"),
@@ -222,15 +217,6 @@ object Similarity {
     Seq((centroidStride, maxCentroids)).toDF("centroid_stride", "max_centroids")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$indexDir/params")
-    // a rebuilt index starts clean: a tombstone table left by a prior
-    // generation (e.g. a crash between delete and compact) must not
-    // phantom-delete vectors from the NEW index (the Dedup
-    // writeIndexSegment posture)
-    locally {
-      import org.apache.hadoop.fs.Path
-      val t = new Path(s"$indexDir/tombstones")
-      t.getFileSystem(spark.sessionState.newHadoopConf()).delete(t, true)
-    }
   }
 
   /** The stored (normalized) codebook of a persisted IVF index, as the
@@ -238,8 +224,7 @@ object Similarity {
     * build's persisted `max_centroids` (loud overflow, the
     * codebook-collect house style). */
   private def readStoredCodebook(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Array[Array[Double]] = {
+      spark: SparkSession, indexDir: String): Array[Array[Double]] = {
     val params = spark.read.parquet(s"$indexDir/params").collect()
     require(params.length == 1, s"ivf index at $indexDir: corrupt params")
     val maxCentroids = params(0).getInt(1)
@@ -251,10 +236,9 @@ object Similarity {
   }
 
   /** K3d — grow a persisted IVF index with a new vector shard (the
-    * rolling-ingest half of an embedding store's lifecycle, mirroring
-    * [[graft.operators.Dedup.minhashIndexAppend]]): the shard assigns
-    * against the STORED codebook (an index does not re-train its
-    * coarse quantizer on ingest — recall for novel regions is a
+    * rolling-ingest half of an embedding store's lifecycle): the shard
+    * assigns against the STORED codebook (an index does not re-train
+    * its coarse quantizer on ingest — recall for novel regions is a
     * rebuild decision, not an append side effect) and appends as new
     * parquet files under the same cell partitioning. Cost ∝ shard;
     * existing cells are never read or rewritten. At-least-once
@@ -264,71 +248,36 @@ object Similarity {
     * vector under an existing id is undefined until a compact. */
   def ivfIndexAppend(
       shard: DataFrame, idCol: String, vecCol: String,
-      indexDir: String): Unit = {
-    // an append after a mid-compaction crash must land in the RECOVERED
-    // cells table, not start a new one at the vacated path
-    recoverCells(shard.sparkSession, indexDir)
-    val codebook = readStoredCodebook(shard.sparkSession, indexDir)
-    shard.select(
-        col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        graft.functions.GraftFunctions.nearest_centroid(col(vecCol), codebook).as("cell"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("cell").parquet(s"$indexDir/cells")
-  }
+      indexDir: String): Unit =
+    ivfStore(shard.sparkSession, indexDir).append {
+      val codebook = readStoredCodebook(shard.sparkSession, indexDir)
+      shard.select(
+          col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+          graft.functions.GraftFunctions.nearest_centroid(col(vecCol), codebook).as("cell"))
+        .write.mode(SaveMode.Append)
+        .partitionBy("cell").parquet(s"$indexDir/cells")
+    }
 
   /** K3d — forget vectors from a persisted IVF index (the
-    * right-to-be-forgotten path an embedding store must serve,
-    * mirroring [[graft.operators.Dedup.minhashIndexDelete]]): appends
-    * ids to a `tombstones` table — cost ∝ the delete set, the cell
-    * partitions are NEVER touched on this path. [[probeIvfIndex]]
-    * anti-joins candidates against the tombstones (ids-only,
-    * broadcast-sized between compactions), so a deleted vector stops
-    * matching IMMEDIATELY; the next [[ivfIndexCompact]] purges its
-    * rows physically and clears the table. */
+    * right-to-be-forgotten path an embedding store must serve):
+    * [[IndexStore.tombstone]]s the ids, so they stop matching on the
+    * next [[probeIvfIndex]] and leave physically at the next
+    * [[ivfIndexCompact]]. */
   def ivfIndexDelete(ids: DataFrame, idCol: String, indexDir: String): Unit =
-    ids.select(col(idCol).as("neighbor_id")).distinct()
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$indexDir/tombstones")
+    ivfStore(ids.sparkSession, indexDir).tombstone(ids.select(col(idCol).as("neighbor_id")))
 
-  /** Live tombstone set of an index, None if never deleted from. */
-  private def ivfTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(s"$indexDir/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  /** K3d — fold appends and tombstones back into a clean artifact
-    * (mirroring [[graft.operators.Dedup.minhashIndexCompact]]): one
-    * rewrite of the cells table that collapses duplicate rows from
-    * at-least-once appends and physically purges tombstoned vectors,
-    * through a sibling temp dir + FileSystem rename (never reads and
-    * overwrites the same files in one plan); the tombstone table then
-    * clears so probes stop paying the anti-join. Cost ∝ the index —
-    * the periodic maintenance job between cheap per-shard appends.
-    * Probe results are unchanged by compaction (spec-asserted). */
-  def ivfIndexCompact(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.SaveMode
-    val fs = new Path(indexDir).getFileSystem(spark.sessionState.newHadoopConf())
-    val cur = new Path(s"$indexDir/cells")
-    // crash-safe: write-aside + two renames with forward/back recovery
-    // (IndexSwap) — the cells table is readable at every intermediate
-    // state, so a killed compaction never strands the store
-    IndexSwap.swap(fs, cur) { tmp =>
-      val cells = spark.read.parquet(cur.toString).dropDuplicates("neighbor_id")
-      val purged = ivfTombstones(spark, indexDir) match {
-        case Some(t) => cells.join(
-          broadcast(t.select(col("neighbor_id"))), Seq("neighbor_id"), "left_anti")
-        case None => cells
-      }
-      purged.write.mode(SaveMode.Overwrite).partitionBy("cell")
-        .parquet(tmp.toString)
-    }
-    fs.delete(new Path(s"$indexDir/tombstones"), true)
+  /** K3d — fold appends and tombstones back into a clean artifact: one
+    * rewrite of the cells table, through [[IndexStore.compactPrepare]]'s
+    * crash-safe swap, that collapses duplicate rows from at-least-once
+    * appends and physically purges tombstoned vectors. Cost ∝ the
+    * index — the periodic maintenance job between cheap per-shard
+    * appends. Probe results are unchanged by compaction
+    * (spec-asserted). */
+  def ivfIndexCompact(spark: SparkSession, indexDir: String): Unit = {
+    val store = ivfStore(spark, indexDir)
+    store.compactPrepare("cells" -> (cells =>
+      store.live(cells.dropDuplicates("neighbor_id"), "neighbor_id")
+        .write.partitionBy("cell")))()
   }
 
   /** Probe half of [[ivfIndexedTopK]]: ranks the stored (normalized)
@@ -336,19 +285,12 @@ object Similarity {
     * cell partitions of the on-disk layout — dynamic partition pruning
     * skips every unprobed cell directory (plan-asserted). Codebook
     * read is bounded by the build's `maxCentroids`. */
-  /** Roll forward/back any cells compaction a crash interrupted. */
-  private def recoverCells(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(indexDir).getFileSystem(spark.sessionState.newHadoopConf())
-    IndexSwap.recover(fs, new Path(s"$indexDir/cells"))
-  }
-
   def probeIvfIndex(
-      spark: org.apache.spark.sql.SparkSession, queries: DataFrame,
+      spark: SparkSession, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int,
       indexDir: String): DataFrame = {
-    recoverCells(spark, indexDir) // a crashed compaction rolls here
+    val store = ivfStore(spark, indexDir)
+    store.recover() // a crashed compaction rolls here
     val cos = graft.functions.GraftFunctions.cosine_sim _
     val centroidDf = spark.read.parquet(s"$indexDir/codebook")
     val index = spark.read.parquet(s"$indexDir/cells")
@@ -367,14 +309,10 @@ object Similarity {
     // tombstoned vectors anti-join away (a delete takes effect on the
     // very next probe, before any compaction) and duplicate rows from
     // retried at-least-once appends collapse before ranking.
-    val cand = index.join(broadcast(probed), "cell")
-      .where(col("neighbor_id") =!= col("query_id"))
-    val live = ivfTombstones(spark, indexDir) match {
-      case Some(t) => cand.join(
-        broadcast(t.select(col("neighbor_id"))), Seq("neighbor_id"), "left_anti")
-      case None => cand
-    }
-    live
+    store.live(
+        index.join(broadcast(probed), "cell")
+          .where(col("neighbor_id") =!= col("query_id")),
+        "neighbor_id")
       .select(
         col("query_id"), col("neighbor_id"),
         cos(col("qv"), col("cv")).as("cosine"))

@@ -363,6 +363,37 @@ class IncrementalDedupSpec extends SparkSpec {
       "fresh index inherited phantom tombstones")
   }
 
+  test("a session that routes /tmp through viewfs sees the tombstones it wrote") {
+    // the session conf (not the context's Hadoop conf) maps /tmp into
+    // a private dir, as a deployment does with fs.defaultFS = viewfs
+    val mount = java.nio.file.Files.createTempDirectory("graft-viewfs-spec").toFile
+    val table = s"graftspec${System.nanoTime()}"
+    val s = spark.newSession()
+    s.conf.set("fs.defaultFS", s"viewfs://$table/")
+    s.conf.set(s"fs.viewfs.mounttable.$table.link./tmp", mount.toURI.toString)
+    s.conf.set(s"fs.viewfs.mounttable.$table.linkFallback", "file:///")
+    val idx = s"/tmp/graft-spec-mhviewfs-${System.nanoTime()}"
+    try {
+      graft.operators.Dedup.minhashIndexWrite(
+        s.createDataFrame(corpusRows).toDF("doc_id", "text"), "doc_id", "text", idx)
+      graft.operators.Dedup.minhashIndexDelete(
+        s.createDataFrame(Seq(Tuple1(10L))).toDF("doc_id"), "doc_id", idx)
+      // every file landed under the mount, none at the unmapped path
+      assert(new java.io.File(mount, s"${idx.stripPrefix("/tmp/")}/tombstones").isDirectory)
+      assert(!new java.io.File(idx).exists())
+      val got = graft.operators.Dedup
+        .dedupShardAgainstIndex(
+          s.createDataFrame(shardRows).toDF("doc_id", "text"), "doc_id", "text", idx)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == Set((2L, 11L)), s"deleted doc 10 still matched: $got")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
+      }
+      rm(mount)
+    }
+  }
+
   test("compaction crash windows: the index stays readable, verdicts unchanged") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path

@@ -111,6 +111,43 @@ class IvfLifecycleSpec extends SparkSpec {
     rm(dir)
   }
 
+  test("ivfIndexedTopK reuses a same-parameter index, rebuilds on a change or after an append") {
+    val dir = freshDir()
+    val df = corpus(60)
+    def cellFiles = {
+      def go(f: java.io.File): Seq[java.io.File] =
+        Option(f.listFiles).toSeq.flatten.flatMap(c => if (c.isDirectory) go(c) else Seq(c))
+      go(new java.io.File(s"$dir/cells")).filter(_.getName.endsWith(".parquet"))
+        .map(f => (f.getPath, f.lastModified)).toSet
+    }
+    def topK(queries: org.apache.spark.sql.DataFrame, stride: Long) =
+      Similarity.ivfIndexedTopK(df, queries, "vec_id", "embedding",
+        k = 5, centroidStride = stride, nProbe = 3, indexDir = dir)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+    val queries = df.where(col("vec_id") < 3)
+    val first = topK(queries, 9)
+    val built = cellFiles
+    assert(built.nonEmpty)
+    // same parameters → probe-only: no cells file is rewritten
+    assert(topK(queries, 9) === first)
+    assert(cellFiles === built, "same parameters must reuse the index")
+    // a changed centroidStride rebuilds
+    topK(queries, 7)
+    val rebuilt = cellFiles
+    assert(rebuilt !== built, "a changed centroidStride must rebuild")
+    // an append makes the index differ from the corpus the caller
+    // passes: the next call rebuilds from that corpus, so the appended
+    // vector (not in `df`) can no longer match
+    val novel = Array.tabulate(8)(j => j * 1.5f + 0.3f)
+    Similarity.ivfIndexAppend(
+      Seq((1000L, novel)).toDF("vec_id", "embedding"), "vec_id", "embedding", dir)
+    val got = topK(Seq((1L, novel)).toDF("vec_id", "embedding"), 7)
+    assert(got.nonEmpty && !got.exists(_._3 == 1000L),
+      s"probed a vector appended after the build: ${got.mkString(",")}")
+    assert(cellFiles !== rebuilt, "ensure must rebuild after an append")
+    rm(dir)
+  }
+
   test("a killed compaction leaves cells readable; probes roll forward or back") {
     import org.apache.hadoop.fs.Path
     val dir = freshDir()

@@ -148,7 +148,13 @@ def main(sf_dir: str, out_dir: str, timeout_s: float = 0.0,
     return len(oracles) - n_ok - n_timed - n_exhaust
 
 if __name__ == "__main__":
-    n_fail = main(sys.argv[1], sys.argv[2],
-                  float(sys.argv[3]) if len(sys.argv) > 3 else 0.0,
-                  set(sys.argv[4].split(",")) if len(sys.argv) > 4 else None)
+    try:
+        args = (sys.argv[1], sys.argv[2],
+                float(sys.argv[3]) if len(sys.argv) > 3 else 0.0,
+                set(sys.argv[4].split(",")) if len(sys.argv) > 4 else None)
+    except (IndexError, ValueError):
+        print(next(l for l in __doc__.splitlines() if l.startswith("Usage:")),
+              file=sys.stderr)
+        sys.exit(2)
+    n_fail = main(*args)
     sys.exit(1 if n_fail else 0)
