@@ -18,8 +18,9 @@ import Verify.q
   * was noisy and a total-time delta vs a previous round is NOT a code
   * regression signal.
   *
-  * Output: TWO lines. Line 1 carries every query's min + median and
-  * the spread; line 2 is capped to fit (with sbt's trailing
+  * Output: TWO lines. Line 1 carries every query's min + median, the
+  * spread, and the run's box (`procs`, `parallelism`), Spark version
+  * and git SHA; line 2 is capped to fit (with sbt's trailing
   * "[success]" line) inside a 2000-char log tail, keeping only the
   * slowest queries. A tail-window harvester sees an intact line 2; a
   * full-stdout parser can take either.
@@ -138,6 +139,11 @@ object Bench {
     val totalMed = results.map(r => math.max(r._3, 0.0)).sum
     val spreads = results.map(_._4).sorted
     val spreadPct = if (spreads.isEmpty) 0.0 else spreads(spreads.size / 2) * 100
+    // the commit the run measured; "unknown" outside a git checkout
+    val gitSha =
+      try scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+        .!!(scala.sys.process.ProcessLogger(_ => ())).trim
+      catch { case _: Exception => "unknown" }
     // Calib-normalized per-query medians: THE cross-round comparison
     // column (per-query median ÷ this run's calib). Three rounds of
     // phantom swings came from comparing raw seconds across windows;
@@ -153,6 +159,9 @@ object Bench {
         (r._1, if (r._3 >= 0 && calib > 0) r._3 / calib else -1.0)))},""" +
       s""""failed":${failed.toSeq.sorted.map { case (k, v) => q(k) + ":" + q(v) }
         .mkString("{", ",", "}")},""" +
+      s""""procs":${Runtime.getRuntime.availableProcessors},""" +
+      s""""parallelism":${spark.sparkContext.defaultParallelism},""" +
+      s""""spark_version":${q(spark.version)},"git_sha":${q(gitSha)},""" +
       s""""sf":"$sfDir"}"""
     println(fullLine)
     // The driver's committed BENCH_r{N}.json harvests a tail-capped

@@ -270,7 +270,8 @@ object Dedup {
     * right-to-be-forgotten path a 100 TB ingest lake must serve):
     * [[IndexStore.tombstone]]s the ids, so they stop matching on the
     * next [[dedupShardAgainstIndex]] and leave physically at the next
-    * [[minhashIndexCompact]]. Stored segment-local occupancy stays
+    * [[minhashIndexCompact]]; a later [[minhashIndexEnsure]] rebuilds
+    * from the corpus it is given. Stored segment-local occupancy stays
     * stale until compaction — counts can only be too HIGH, so the
     * pre-exchange hot drop is conservative (the same at-least-once
     * contract as retried appends: over-dropping a hot bucket, never a
@@ -544,7 +545,6 @@ object Dedup {
     val s = df
       .select(col(idCol).as("doc_id"), col(blockCol).as("block"), col(textCol).as("__text"))
       .repartition(df.sparkSession.sparkContext.defaultParallelism) // CPU-bound kernel: don't inherit the scan's few partitions
-      .where(size(split(col("__text"), " ")) >= n)
       .select(
         col("doc_id"), col("block"),
         graft.functions.HashFunctions
@@ -589,14 +589,15 @@ object Dedup {
     * itself (strict `<`, as in the DuckDB oracle). */
   private[graft] def ngramJaccardFromShingles(
       s: DataFrame, minJaccard: Double): DataFrame = {
-    // explode_outer, not explode: every caller's `sh` is non-empty (docs
-    // of >= n tokens), so both emit the same rows, but a plain explode
-    // makes the optimizer infer `size(sh) > 0 AND isnotnull(sh)` and push
-    // it below the projection that computes `sh` — re-running the
-    // shingle kernel in the scan stage, under the repartition that
-    // spreads it
+    // explode_outer, then drop the rows with no shingle (a doc of fewer
+    // than n tokens): a plain explode, or a token-count filter on the
+    // text, is a predicate the optimizer pushes below the repartition
+    // that spreads the shingle kernel — re-running split or the kernel
+    // serially in the scan stage. A filter on the generator's output
+    // cannot move below the Generate.
     val ex = s.select(
-      col("doc_id"), col("block"), col("n_sh"), explode_outer(col("sh")).as("shingle"))
+        col("doc_id"), col("block"), col("n_sh"), explode_outer(col("sh")).as("shingle"))
+      .where(col("shingle").isNotNull)
     ex.as("a")
       .join(ex.as("b").hint("shuffle_hash"),
         col("a.block") === col("b.block") && col("a.shingle") === col("b.shingle") &&

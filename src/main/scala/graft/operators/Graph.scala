@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Link-graph authority scoring (SURVEY.md §2 S) — the URL/domain
@@ -28,19 +28,77 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  /** When one of the loops below stops. */
+  private sealed trait Stop
+
+  /** After exactly `n` rounds — the gate/oracle contract (an
+    * unrolled-CTE oracle needs a static round count). */
+  private final case class Rounds(n: Int) extends Stop { require(n >= 1) }
+
+  /** At the first round whose move (the algorithm's measure of how far
+    * a round moved its frame, in `unit`) is ≤ `tol`. LOUD once
+    * `maxIters` rounds have not got there: an operator that silently
+    * returns an unconverged answer is a wrong-answer machine, and
+    * `hint` says which failure mode to suspect. A converged result
+    * equals the fixed-round form run for the same number of rounds
+    * (spec-asserted): both run the same loop body. */
+  private final case class Converged(
+      tol: Long, maxIters: Int, op: String, unit: String, hint: String) extends Stop {
+    require(tol >= 0 && maxIters >= 1)
+  }
+
+  /** The one loop: `step` maps a round's frame to the next,
+    * materialized. Under [[Converged]], `move` aggregates over each
+    * node's row of the next frame joined to its previous-round columns
+    * (renamed `prev_<col>`) — one node-keyed join of two checkpointed
+    * ∝nodes frames plus a 1-row aggregate, noise next to the round's
+    * own exchanges. */
+  private def run(init: DataFrame, stop: Stop)(
+      step: DataFrame => DataFrame, move: Column): DataFrame = stop match {
+    case Rounds(n) => (1 to n).foldLeft(init)((cur, _) => step(cur))
+    case Converged(tol, maxIters, op, unit, hint) =>
+      var cur = init
+      var t = 0
+      var delta = Long.MaxValue
+      while (delta > tol) {
+        require(t < maxIters,
+          s"$op: a round still moved $delta $unit (tol $tol) after $maxIters rounds — $hint")
+        val next = step(cur)
+        val prev = cur.select(cur.columns.toSeq.map(c =>
+          if (c == "node") col(c) else col(c).as(s"prev_$c")): _*)
+        delta = next.join(prev, "node").agg(coalesce(move, lit(0L))).head().getLong(0)
+        cur = next
+        t += 1
+      }
+      cur
+  }
+
+  /** The (src, dst) long edge list every algorithm iterates over,
+    * checkpointed by default: it is re-joined every round, so the
+    * source is scanned once. */
+  private def edgeList(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      checkpoint: Boolean = true): DataFrame = {
+    val e = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+    if (checkpoint) e.localCheckpoint() else e
+  }
+
+  /** Every node that an edge touches, checkpointed: the left side of
+    * every round's rebuild. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node")))
+      .distinct()
+      .localCheckpoint()
+
   /** Power-iteration PageRank over an edge list. Returns one row per
     * node: (node, rank) with rank on the `scale` fixed-point grid
     * (a node with no in-links holds the `(1−d)·scale` base). */
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3, scale: Long = 1L << 20,
-      dampNum: Long = 17, dampDen: Long = 20): DataFrame = {
-    require(iters >= 1 && dampNum > 0 && dampNum < dampDen && scale > 0)
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .localCheckpoint() // re-joined every iteration: pay the source scan once
-    pageRankLoop(e, iters, scale, dampNum, dampDen)
-  }
+      dampNum: Long = 17, dampDen: Long = 20): DataFrame =
+    pageRankRun(Rounds(iters), scale, dampNum, dampDen)(edgeList(edges, srcCol, dstCol))
 
   /** [[pageRank]] over a `src`-BUCKETED edge table
     * ([[graft.sources.Writers.bucketedTable]]) — the cluster-scale
@@ -58,82 +116,40 @@ object Graph {
       spark: org.apache.spark.sql.SparkSession, edgeTable: String,
       srcCol: String, dstCol: String,
       iters: Int = 3, scale: Long = 1L << 20,
-      dampNum: Long = 17, dampDen: Long = 20): DataFrame = {
-    require(iters >= 1 && dampNum > 0 && dampNum < dampDen && scale > 0)
-    val e = spark.table(edgeTable)
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    pageRankLoop(e, iters, scale, dampNum, dampDen)
-  }
-
-  private def pageRankLoop(
-      e: DataFrame, iters: Int, scale: Long,
-      dampNum: Long, dampDen: Long): DataFrame = {
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint() // left side of every iteration's rank rebuild
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("out_c"))
-      .localCheckpoint()
-    val base = Math.floorDiv((dampDen - dampNum) * scale, dampDen)
-
-    var ranks = nodes.withColumn("rank", lit(scale))
-    var t = 0
-    while (t < iters) {
-      ranks = iterate(e, nodes, outDeg, ranks, base, dampNum, dampDen)
-        .localCheckpoint() // truncate the per-iteration lineage (§7.1)
-      t += 1
-    }
-    ranks.orderBy("node")
-  }
+      dampNum: Long = 17, dampDen: Long = 20): DataFrame =
+    pageRankRun(Rounds(iters), scale, dampNum, dampDen)(
+      edgeList(spark.table(edgeTable), srcCol, dstCol, checkpoint = false))
 
   /** [[pageRank]] run to a FIXED POINT instead of a fixed round count
     * — what a production link-graph job actually does (Page 1999 §2.6
     * iterates to tolerance). Stops when the largest per-node rank
-    * move of a round is ≤ `tol` grid units; the per-round convergence
-    * check is one node-keyed join of two checkpointed ∝nodes frames
-    * + a 1-row max — noise next to the round's own exchanges. LOUD
-    * at `maxIters` (the ancestorClosure posture: an operator that
-    * silently returns an unconverged answer is a wrong-answer
-    * machine); damping < 1 contracts the iteration, so divergence
-    * only means tol/maxIters were mis-sized — say so. The fixed-iter
-    * [[pageRank]] remains the gate/oracle contract (an unrolled-CTE
-    * oracle needs a static round count); ranks from this variant are
-    * identical to [[pageRank]] run for the same number of rounds
-    * (spec-asserted). */
+    * move of a round is ≤ `tol` grid units, loudly at `maxIters`;
+    * damping < 1 contracts the iteration, so failing there only means
+    * tol/maxIters were mis-sized. */
   def pageRankConverged(
       edges: DataFrame, srcCol: String, dstCol: String,
       tol: Long = 1L << 8, maxIters: Int = 50, scale: Long = 1L << 20,
-      dampNum: Long = 17, dampDen: Long = 20): DataFrame = {
-    require(tol >= 0 && maxIters >= 1 && dampNum > 0 && dampNum < dampDen && scale > 0)
+      dampNum: Long = 17, dampDen: Long = 20): DataFrame =
+    pageRankRun(
+      Converged(tol, maxIters, "pageRankConverged", "grid units",
+        "raise maxIters or tol (damping contracts, so this is a sizing problem, not divergence)"),
+      scale, dampNum, dampDen)(edgeList(edges, srcCol, dstCol))
+
+  // `edges` by name: the parameters are checked before the edge
+  // checkpoint runs a job
+  private def pageRankRun(stop: Stop, scale: Long, dampNum: Long, dampDen: Long)(
+      edges: => DataFrame): DataFrame = {
+    require(dampNum > 0 && dampNum < dampDen && scale > 0)
     val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
+    val nodes = nodesOf(e)
     val outDeg = e.groupBy("src").agg(count(lit(1)).as("out_c"))
       .localCheckpoint()
     val base = Math.floorDiv((dampDen - dampNum) * scale, dampDen)
-
-    var ranks = nodes.withColumn("rank", lit(scale)).localCheckpoint()
-    var t = 0
-    var delta = Long.MaxValue
-    while (delta > tol) {
-      require(t < maxIters,
-        s"pageRankConverged: still moving $delta > tol=$tol grid units after " +
-          s"$maxIters rounds — raise maxIters or tol (damping contracts, so " +
-          "this is a sizing problem, not divergence)")
-      val next = iterate(e, nodes, outDeg, ranks, base, dampNum, dampDen)
-        .localCheckpoint()
-      delta = next
-        .join(ranks.select(col("node"), col("rank").as("__prev")), "node")
-        .agg(coalesce(max(abs(col("rank") - col("__prev"))), lit(0L)))
-        .head().getLong(0)
-      ranks = next
-      t += 1
-    }
-    ranks.orderBy("node")
+    run(nodes.withColumn("rank", lit(scale)), stop)(
+      // checkpoint: truncate the per-iteration lineage (§7.1)
+      iterate(e, nodes, outDeg, _, base, dampNum, dampDen).localCheckpoint(),
+      max(abs(col("rank") - col("prev_rank"))))
+      .orderBy("node")
   }
 
   /** S2 — HITS hubs & authorities (Kleinberg 1999): the link-graph
@@ -150,23 +166,35 @@ object Graph {
     * edges/nodes checkpointed once; score frames ∝ nodes. */
   def hits(
       edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 3, scale: Long = 1L << 20): DataFrame = {
-    require(iters >= 1 && scale > 0)
+      iters: Int = 3, scale: Long = 1L << 20): DataFrame =
+    hitsRun(Rounds(iters), scale)(edgeList(edges, srcCol, dstCol))
+
+  /** [[hits]] run to a fixed point: stops when the largest hub AND
+    * auth move of a round is ≤ `tol` grid units, loudly at `maxIters`.
+    * The failure mode it names is REAL: the integer floor
+    * normalization can fall into a small limit cycle instead of a
+    * fixed point (the LPA-oscillation analogue — e.g. a hub whose
+    * in-sum hovers between g·scale and g·scale + g − 1 flips a grid
+    * unit forever). */
+  def hitsConverged(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      tol: Long = 1L << 8, maxIters: Int = 50,
+      scale: Long = 1L << 20): DataFrame =
+    hitsRun(
+      Converged(tol, maxIters, "hitsConverged", "grid units",
+        "the integer floor normalization can limit-cycle (oscillate by a few grid " +
+          "units forever): raise tol past the cycle amplitude, or use the fixed-iter " +
+          "hits and pick a round parity"),
+      scale)(edgeList(edges, srcCol, dstCol))
+
+  private def hitsRun(stop: Stop, scale: Long)(edges: => DataFrame): DataFrame = {
+    require(scale > 0)
     val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
-    var scores = nodes.select(
-      col("node"), lit(scale).as("hub"), lit(scale).as("auth"))
-    var t = 0
-    while (t < iters) {
-      scores = hitsRound(e, nodes, scores, scale)
-      t += 1
-    }
-    scores.select(col("node"), col("hub"), col("auth")).orderBy("node")
+    val nodes = nodesOf(e)
+    run(nodes.select(col("node"), lit(scale).as("hub"), lit(scale).as("auth")), stop)(
+      hitsRound(e, nodes, _, scale),
+      max(greatest(abs(col("hub") - col("prev_hub")), abs(col("auth") - col("prev_auth")))))
+      .orderBy("node")
   }
 
   /** One full HITS round (authority half then hub half, each with the
@@ -201,56 +229,6 @@ object Graph {
     nodes.join(hub, "node").join(auth, "node").localCheckpoint()
   }
 
-  /** [[hits]] run to a fixed point — the S2 member of the round-11
-    * convergence family ([[pageRankConverged]] /
-    * [[labelPropagationConverged]]): stops when the largest hub AND
-    * auth move of a round is ≤ `tol` grid units. LOUD at `maxIters`,
-    * and the failure mode it names is REAL: the integer floor
-    * normalization can fall into a small limit cycle instead of a
-    * fixed point (the LPA-oscillation analogue — e.g. a hub whose
-    * in-sum hovers between g·scale and g·scale + g − 1 flips a grid
-    * unit forever), so an unconverged run means either raise tol past
-    * the cycle amplitude or keep the fixed-iter [[hits]] and pick a
-    * round parity. The fixed-iter [[hits]] remains the gate/oracle
-    * contract; scores from this variant equal [[hits]] run the same
-    * number of rounds (spec-asserted). */
-  def hitsConverged(
-      edges: DataFrame, srcCol: String, dstCol: String,
-      tol: Long = 1L << 8, maxIters: Int = 50,
-      scale: Long = 1L << 20): DataFrame = {
-    require(tol >= 0 && maxIters >= 1 && scale > 0)
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
-    var scores = nodes.select(
-      col("node"), lit(scale).as("hub"), lit(scale).as("auth"))
-      .localCheckpoint()
-    var t = 0
-    var delta = Long.MaxValue
-    while (delta > tol) {
-      require(t < maxIters,
-        s"hitsConverged: scores still moving $delta > tol=$tol grid units after " +
-          s"$maxIters rounds — the integer floor normalization can limit-cycle " +
-          "(oscillate by a few grid units forever): raise tol past the cycle " +
-          "amplitude, or use the fixed-iter hits and pick a round parity")
-      val next = hitsRound(e, nodes, scores, scale)
-      delta = next
-        .join(scores.select(col("node"),
-          col("hub").as("__ph"), col("auth").as("__pa")), "node")
-        .agg(coalesce(max(greatest(
-          abs(col("hub") - col("__ph")),
-          abs(col("auth") - col("__pa")))), lit(0L)))
-        .head().getLong(0)
-      scores = next
-      t += 1
-    }
-    scores.select(col("node"), col("hub"), col("auth")).orderBy("node")
-  }
-
   /** S3 — synchronous label-propagation community detection (Raghavan
     * et al. 2007): the clustering twin of [[pageRank]]/[[hits]], used
     * to group a link graph into site/topic communities (mirror farms,
@@ -274,63 +252,31 @@ object Graph {
     * every round disappears (the [[pageRank]] posture). */
   def labelPropagation(
       edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 3): DataFrame = {
-    require(iters >= 1)
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .localCheckpoint()
-    val nbrs = e.select(col("src").as("node"), col("dst").as("nbr"))
-      .union(e.select(col("dst").as("node"), col("src").as("nbr")))
-      .localCheckpoint()
-    val nodes = nbrs.select("node").distinct().localCheckpoint()
-
-    var labels = nodes.withColumn("lbl", col("node"))
-    var t = 0
-    while (t < iters) {
-      labels = propagateOnce(nbrs, nodes, labels).localCheckpoint()
-      t += 1
-    }
-    labels.orderBy("node")
-  }
+      iters: Int = 3): DataFrame =
+    labelPropagationRun(Rounds(iters))(edgeList(edges, srcCol, dstCol))
 
   /** [[labelPropagation]] run until NO label changes (the natural LPA
     * fixed point — Raghavan 2007 §3 stops when every node already
-    * holds a majority label). The per-round check is a node-keyed
-    * join of two checkpointed ∝nodes frames + a count. LOUD at
-    * `maxIters`: synchronous LPA can 2-cycle on bipartite structure
-    * (the known oscillation), and an operator that silently returns a
-    * mid-oscillation labeling is a wrong-answer machine — the error
-    * message says which failure mode to suspect. Fixed-iter
-    * [[labelPropagation]] remains the gate/oracle contract. */
+    * holds a majority label), loudly at `maxIters`: synchronous LPA can
+    * 2-cycle on bipartite structure (the known oscillation). */
   def labelPropagationConverged(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 50): DataFrame = {
-    require(maxIters >= 1)
-    val e = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .localCheckpoint()
+      maxIters: Int = 50): DataFrame =
+    labelPropagationRun(
+      Converged(0L, maxIters, "labelPropagationConverged", "labels",
+        "either raise maxIters or the graph oscillates (synchronous LPA 2-cycles on " +
+          "bipartite structure; use the fixed-iter labelPropagation and pick a round parity)"))(
+      edgeList(edges, srcCol, dstCol))
+
+  private def labelPropagationRun(stop: Stop)(e: DataFrame): DataFrame = {
     val nbrs = e.select(col("src").as("node"), col("dst").as("nbr"))
       .union(e.select(col("dst").as("node"), col("src").as("nbr")))
       .localCheckpoint()
-    val nodes = nbrs.select("node").distinct().localCheckpoint()
-
-    var labels = nodes.withColumn("lbl", col("node")).localCheckpoint()
-    var t = 0
-    var changed = Long.MaxValue
-    while (changed > 0) {
-      require(t < maxIters,
-        s"labelPropagationConverged: $changed labels still changing after " +
-          s"$maxIters rounds — either raise maxIters or the graph oscillates " +
-          "(synchronous LPA 2-cycles on bipartite structure; use the " +
-          "fixed-iter labelPropagation and pick a round parity)")
-      val next = propagateOnce(nbrs, nodes, labels).localCheckpoint()
-      changed = next
-        .join(labels.select(col("node"), col("lbl").as("__prev")), "node")
-        .where(col("lbl") =!= col("__prev")).count()
-      labels = next
-      t += 1
-    }
-    labels.orderBy("node")
+    val nodes = nodesOf(e)
+    run(nodes.withColumn("lbl", col("node")), stop)(
+      propagateOnce(nbrs, nodes, _).localCheckpoint(),
+      count(when(col("lbl") =!= col("prev_lbl"), true)))
+      .orderBy("node")
   }
 
   /** One synchronous LPA round, un-materialized (the PlanAuditSpec

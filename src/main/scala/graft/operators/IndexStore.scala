@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions.{broadcast, col}
   *    the conf Spark's own parquet reader and writer resolve the same
   *    paths with — so an existence check sees exactly the files a
   *    write through the session made.
-  *  - Deletes (`tombstones`): ids append to a tombstone table — cost ∝
-  *    the delete set, the index tables are NEVER touched on this path.
+  *  - Deletes ([[tombstone]]): ids append to a tombstone table — cost ∝
+  *    the delete set, the index tables are NEVER touched on this path —
+  *    and the marker drops, as on an append.
   *    Probes anti-join candidates against it ([[live]]; ids-only,
   *    broadcast-sized between compactions), so a deleted row stops
   *    matching on the very next probe; the next compaction purges the
@@ -143,9 +144,12 @@ private[graft] final class IndexStore(
     }
   }
 
-  /** Append one-column `ids` to the tombstone table. */
-  def tombstone(ids: DataFrame): Unit =
+  /** Append one-column `ids` to the tombstone table and drop the
+    * marker: like an append, a delete changes what the index matches. */
+  def tombstone(ids: DataFrame): Unit = {
+    fs.delete(marker, false)
     ids.distinct().write.mode(SaveMode.Append).parquet(tombstones.toString)
+  }
 
   /** `frame` without its tombstoned rows (no-op without tombstones).
     * The delete set is ids-only and bounded by the compaction cadence —

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY.md §2 K). Two paths:
   *
@@ -42,6 +44,110 @@ object Similarity {
           .otherwise(lit(0L))
       }.reduce(_ + _)
 
+  /** The per-query top-k contract every search here ends with: rank
+    * each query's `scored` candidates by `score` (descending when
+    * `descending`), ties to the smaller neighbor_id, keep ranks ≤ `k`,
+    * and return (query_id, rank, neighbor_id, score) ordered by query
+    * and rank. The rank window partitions by query, so its shuffle is
+    * the only one a broadcast-query search pays. */
+  private def topKPerQuery(
+      scored: DataFrame, score: String, descending: Boolean, k: Int): DataFrame = {
+    val order = if (descending) col(score).desc else col(score).asc
+    scored
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(order, col("neighbor_id"))))
+      .where(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col(score))
+      .orderBy("query_id", "rank")
+  }
+
+  /** A codebook sample: the vectors of ids ≡ 0 mod `stride`, in
+    * id-string order (no RNG — stable across runs), pulled to the
+    * driver as a bounded `double[][]`: a hard `maxCentroids` cap, loud
+    * past it. A codebook is ~√N ≤ tens of thousands of rows whatever
+    * the corpus size — the driver-side codebook shape MLlib KMeans
+    * uses, NOT a data collect. */
+  private def strideSample(
+      corpus: DataFrame, idCol: String, vecCol: String,
+      stride: Long, maxCentroids: Int, op: String): Array[Array[Double]] = {
+    val rows = corpus
+      .where(pmod(col(idCol), lit(stride)) === 0)
+      .select(col(idCol).cast("string").as("cid"),
+        col(vecCol).cast("array<double>").as("cvec"))
+      .orderBy("cid")
+      .limit(maxCentroids + 1)
+      .collect()
+    require(rows.nonEmpty, s"$op: stride sampled zero centroids")
+    require(rows.length <= maxCentroids,
+      s"$op: > $maxCentroids centroids sampled — raise the stride " +
+        "(the codebook must stay driver/broadcast sized)")
+    rows.map(_.getSeq[Double](1).toArray)
+  }
+
+  /** `v` scaled to unit L2 norm, so cell assignment is a pure
+    * dot-argmax (see [[graft.functions.NearestCentroidIndex]]); a
+    * zero-norm centroid stays all-zero (dot 0 against everything). */
+  private def l2Normalized(v: Array[Double]): Array[Double] = {
+    val n = math.sqrt(v.map(x => x * x).sum)
+    if (n > 0) v.map(_ / n) else v
+  }
+
+  /** The normalized IVF codebook as a (cell, cnorm) frame, cell = the
+    * centroid's ordinal. */
+  private def centroidFrame(spark: SparkSession, codebook: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    codebook.zipWithIndex.map { case (v, i) => (i, v) }.toSeq.toDF("cell", "cnorm")
+  }
+
+  /** Map-only cell assignment: (neighbor_id, cv, cell), through the
+    * codegen'd [[graft.functions.NearestCentroidIndex]]. */
+  private def assignCells(
+      df: DataFrame, idCol: String, vecCol: String,
+      codebook: Array[Array[Double]]): DataFrame =
+    df.select(
+      col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+      GraftFunctions.nearest_centroid(col(vecCol), codebook).as("cell"))
+
+  /** Each query's `nProbe` nearest cells: `q`'s rows (query_id, qv, …)
+    * times the broadcast (cell, cnorm) codebook, ranked by cosine to
+    * the normalized centroid — cos(q, c) = cos(q, c/|c|), so probe
+    * order matches the corpus-side assignment order, ties broken by
+    * ordinal exactly like its argmax. Returns `q`'s columns plus
+    * `cell`. */
+  private def nearestCells(q: DataFrame, centroids: DataFrame, nProbe: Int): DataFrame =
+    q.crossJoin(broadcast(centroids))
+      .withColumn("crank", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(-GraftFunctions.cosine_sim(col("qv"), col("cnorm")), col("cell"))))
+      .where(col("crank") <= nProbe)
+      .drop("cnorm", "crank")
+
+  /** PQ codebook from a stride sample: `book(j)(c)` is subvector j of
+    * sampled vector c, over `m` equal subspaces of the sample's
+    * dimension (enforced). */
+  private def pqCodebook(
+      sample: Array[Array[Double]], m: Int, op: String): Array[Array[Array[Double]]] = {
+    val dim = sample.head.length
+    require(dim % m == 0, s"$op: dim $dim not divisible into $m subspaces")
+    val dsub = dim / m
+    Array.tabulate(m)(j => sample.map(_.slice(j * dsub, (j + 1) * dsub)))
+  }
+
+  /** Per-query ADC distance table: `dtab[j][c]` = squared L2 between
+    * subvector j of `vecCol` and centroid c of subspace j. An
+    * interpreted HOF fold, but over the SMALL query side only (the
+    * corpus-side hot path stays codegen'd). */
+  private def adcTable(vecCol: String, book: Array[Array[Array[Double]]]): Column = {
+    val dsub = book.head.head.length
+    val qv = col(vecCol).cast("array<double>")
+    transform(typedLit(book.map(_.map(_.toSeq).toSeq).toSeq), (subCents, j) =>
+      transform(subCents, cent =>
+        aggregate(sequence(lit(0), lit(dsub - 1)), lit(0.0), (acc, i) => {
+          val x = element_at(qv, j * dsub + i + 1)
+          val c = element_at(cent, i + 1)
+          acc + (x - c) * (x - c)
+        })))
+  }
+
   /** K1 — exact cosine top-k: every query against the full corpus.
     * `queries` must be small (it is broadcast); the corpus side stays
     * a partition-parallel scan with no shuffle before the top-k. */
@@ -54,14 +160,8 @@ object Similarity {
       .where(col("neighbor_id") =!= col("query_id"))
       .select(
         col("query_id"), col("neighbor_id"),
-        graft.functions.GraftFunctions.cosine_sim(col("qv"), col("cv")).as("cosine"))
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-      .orderBy("query_id", "rank")
+        GraftFunctions.cosine_sim(col("qv"), col("cv")).as("cosine"))
+    topKPerQuery(scored, "cosine", descending = true, k)
   }
 
   /** K2b — IVF (inverted-file) ANN: a coarse quantizer built from
@@ -71,11 +171,8 @@ object Similarity {
     * cells.
     *
     * Codebook plumbing: the sampled centroids are pulled to the driver
-    * ONCE as a bounded `double[][]` (hard `maxCentroids` cap, loud
-    * failure past it — an IVF codebook is ~√N ≤ tens of thousands of
-    * rows regardless of corpus size; this is the same driver-side
-    * codebook shape MLlib KMeans uses, NOT a data collect), then rides
-    * into the corpus scan inside the codegen'd
+    * ONCE ([[strideSample]]'s bounded collect), then ride into the
+    * corpus scan inside the codegen'd
     * [[graft.functions.NearestCentroidIndex]] expression. Corpus-side
     * assignment is therefore a map-only stage: no crossJoin expansion,
     * no single-row `collect_list` bottleneck, no interpreted fold —
@@ -97,54 +194,18 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       centroidStride: Long, nProbe: Int, maxCentroids: Int = 4096): DataFrame = {
-    val spark = corpus.sparkSession
-    val cos = graft.functions.GraftFunctions.cosine_sim _
-    val sampled = corpus
-      .where(pmod(col(idCol), lit(centroidStride)) === 0)
-      .select(col(idCol).cast("string").as("cid"),
-        col(vecCol).cast("array<double>").as("cvec"))
-      .orderBy("cid")
-      .limit(maxCentroids + 1)
-      .collect()
-    require(sampled.nonEmpty, "ivfTopK: stride sampled zero centroids")
-    require(sampled.length <= maxCentroids,
-      s"ivfTopK: > $maxCentroids centroids sampled — raise centroidStride " +
-        "(codebook must stay driver/broadcast sized)")
-    // L2-normalize so assignment is a pure dot-argmax (see expression doc);
-    // zero-norm centroids stay all-zero (dot 0 against everything).
-    val codebook: Array[Array[Double]] = sampled.map { r =>
-      val v = r.getSeq[Double](1).toArray
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n > 0) v.map(_ / n) else v
-    }
-    val cells = corpus.select(
-      col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      graft.functions.GraftFunctions.nearest_centroid(col(vecCol), codebook).as("cell"))
-    import spark.implicits._
-    val centroidDf = codebook.zipWithIndex
-      .map { case (v, i) => (i, v) }.toSeq.toDF("cell", "cnorm")
-    // query-side probe ranking uses the same normalized codebook:
-    // cos(q, c) = cos(q, c/|c|), so probe order matches assignment order,
-    // ties broken by ordinal exactly like the corpus-side argmax.
-    val probed = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .crossJoin(broadcast(centroidDf))
-      .withColumn("cdist", -cos(col("qv"), col("cnorm")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cdist"), col("cell"))))
-      .where(col("crank") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cell"))
-    cells.join(broadcast(probed), "cell")
+    val codebook = strideSample(
+      corpus, idCol, vecCol, centroidStride, maxCentroids, "ivfTopK").map(l2Normalized)
+    val probed = nearestCells(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
+      centroidFrame(corpus.sparkSession, codebook), nProbe)
+    val scored = assignCells(corpus, idCol, vecCol, codebook)
+      .join(broadcast(probed), "cell")
       .where(col("neighbor_id") =!= col("query_id"))
       .select(
         col("query_id"), col("neighbor_id"),
-        cos(col("qv"), col("cv")).as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-      .orderBy("query_id", "rank")
+        GraftFunctions.cosine_sim(col("qv"), col("cv")).as("cosine"))
+    topKPerQuery(scored, "cosine", descending = true, k)
   }
 
   /** K3c — IVF against a PERSISTED index: [[ivfTopK]]'s assignment
@@ -165,7 +226,7 @@ object Similarity {
       maxCentroids: Int = 4096): DataFrame = {
     val spark = corpus.sparkSession
     // probe-only when an index built with the SAME parameters sits at
-    // indexDir and nothing has been appended since. The identity
+    // indexDir and nothing has been appended or deleted since. The identity
     // cannot see corpus content: reuse assumes the corpus at this
     // indexDir is immutable for the index's lifetime (callers indexing
     // a changing corpus pass a fresh dir).
@@ -190,30 +251,14 @@ object Similarity {
       maxCentroids: Int = 4096): Unit = {
     val spark = corpus.sparkSession
     ivfStore(spark, indexDir).reset()
-    val sampled = corpus
-      .where(pmod(col(idCol), lit(centroidStride)) === 0)
-      .select(col(idCol).cast("string").as("cid"),
-        col(vecCol).cast("array<double>").as("cvec"))
-      .orderBy("cid")
-      .limit(maxCentroids + 1)
-      .collect()
-    require(sampled.nonEmpty, "buildIvfIndex: stride sampled zero centroids")
-    require(sampled.length <= maxCentroids,
-      s"buildIvfIndex: > $maxCentroids centroids sampled — raise centroidStride")
-    val codebook: Array[Array[Double]] = sampled.map { r =>
-      val v = r.getSeq[Double](1).toArray
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n > 0) v.map(_ / n) else v
-    }
-    corpus.select(
-        col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        graft.functions.GraftFunctions.nearest_centroid(col(vecCol), codebook).as("cell"))
+    val codebook = strideSample(
+      corpus, idCol, vecCol, centroidStride, maxCentroids, "buildIvfIndex").map(l2Normalized)
+    assignCells(corpus, idCol, vecCol, codebook)
       .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/cells")
-    import spark.implicits._
-    codebook.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
-      .toDF("cell", "cnorm")
+    centroidFrame(spark, codebook)
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$indexDir/codebook")
+    import spark.implicits._
     Seq((centroidStride, maxCentroids)).toDF("centroid_stride", "max_centroids")
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$indexDir/params")
@@ -250,10 +295,7 @@ object Similarity {
       shard: DataFrame, idCol: String, vecCol: String,
       indexDir: String): Unit =
     ivfStore(shard.sparkSession, indexDir).append {
-      val codebook = readStoredCodebook(shard.sparkSession, indexDir)
-      shard.select(
-          col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-          graft.functions.GraftFunctions.nearest_centroid(col(vecCol), codebook).as("cell"))
+      assignCells(shard, idCol, vecCol, readStoredCodebook(shard.sparkSession, indexDir))
         .write.mode(SaveMode.Append)
         .partitionBy("cell").parquet(s"$indexDir/cells")
     }
@@ -291,17 +333,10 @@ object Similarity {
       indexDir: String): DataFrame = {
     val store = ivfStore(spark, indexDir)
     store.recover() // a crashed compaction rolls here
-    val cos = graft.functions.GraftFunctions.cosine_sim _
-    val centroidDf = spark.read.parquet(s"$indexDir/codebook")
     val index = spark.read.parquet(s"$indexDir/cells")
-    val probed = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .crossJoin(broadcast(centroidDf))
-      .withColumn("cdist", -cos(col("qv"), col("cnorm")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cdist"), col("cell"))))
-      .where(col("crank") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cell"))
+    val probed = nearestCells(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
+      spark.read.parquet(s"$indexDir/codebook"), nProbe)
     // partition column comes back as the scan's partition key: the
     // broadcast join on `cell` lets dynamic partition pruning skip
     // every unprobed cell directory. Lifecycle hygiene rides the
@@ -309,20 +344,15 @@ object Similarity {
     // tombstoned vectors anti-join away (a delete takes effect on the
     // very next probe, before any compaction) and duplicate rows from
     // retried at-least-once appends collapse before ranking.
-    store.live(
+    val scored = store.live(
         index.join(broadcast(probed), "cell")
           .where(col("neighbor_id") =!= col("query_id")),
         "neighbor_id")
       .select(
         col("query_id"), col("neighbor_id"),
-        cos(col("qv"), col("cv")).as("cosine"))
+        GraftFunctions.cosine_sim(col("qv"), col("cv")).as("cosine"))
       .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-      .orderBy("query_id", "rank")
+    topKPerQuery(scored, "cosine", descending = true, k)
   }
 
   /** K4 — product-quantization ANN (Jégou et al. 2011): compress the
@@ -356,50 +386,18 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, m: Int,
       centroidStride: Long, maxCentroids: Int = 256): DataFrame = {
-    val sampled = corpus
-      .where(pmod(col(idCol), lit(centroidStride)) === 0)
-      .select(col(idCol).cast("string").as("cid"),
-        col(vecCol).cast("array<double>").as("cvec"))
-      .orderBy("cid")
-      .limit(maxCentroids + 1)
-      .collect()
-    require(sampled.nonEmpty, "pqTopK: stride sampled zero centroids")
-    require(sampled.length <= maxCentroids,
-      s"pqTopK: > $maxCentroids centroids sampled — raise centroidStride")
-    val dim = sampled.head.getSeq[Double](1).length
-    require(dim % m == 0, s"pqTopK: dim $dim not divisible into $m subspaces")
-    val dsub = dim / m
-    // codebook[j][c] = subvector j of sampled vector c
-    val codebook: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-      sampled.map(_.getSeq[Double](1).slice(j * dsub, (j + 1) * dsub).toArray)
-    }
+    val codebook = pqCodebook(
+      strideSample(corpus, idCol, vecCol, centroidStride, maxCentroids, "pqTopK"), m, "pqTopK")
     val codes = corpus.select(
       col(idCol).as("neighbor_id"),
-      graft.functions.GraftFunctions.pq_encode(col(vecCol), codebook).as("codes"))
-    // per-query distance table: interpreted HOF fold, but over the
-    // SMALL query side only (the corpus-side hot path stays codegen'd)
-    val cbLit = typedLit(codebook.map(_.map(_.toSeq).toSeq).toSeq)
-    val qv = col(vecCol).cast("array<double>")
-    val dtab = transform(cbLit, (subCents, j) =>
-      transform(subCents, cent =>
-        aggregate(sequence(lit(0), lit(dsub - 1)), lit(0.0), (acc, i) => {
-          val x = element_at(qv, j * dsub + i + 1)
-          val c = element_at(cent, i + 1)
-          acc + (x - c) * (x - c)
-        })))
-    val q = queries.select(col(idCol).as("query_id"), dtab.as("dtab"))
-    codes.crossJoin(broadcast(q))
+      GraftFunctions.pq_encode(col(vecCol), codebook).as("codes"))
+    val q = queries.select(col(idCol).as("query_id"), adcTable(vecCol, codebook).as("dtab"))
+    val scored = codes.crossJoin(broadcast(q))
       .where(col("neighbor_id") =!= col("query_id"))
       .select(
         col("query_id"), col("neighbor_id"),
-        graft.functions.GraftFunctions.pq_adc_score(col("codes"), col("dtab"))
-          .as("adc_dist"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("adc_dist"), col("neighbor_id"))))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc_dist"))
-      .orderBy("query_id", "rank")
+        GraftFunctions.pq_adc_score(col("codes"), col("dtab")).as("adc_dist"))
+    topKPerQuery(scored, "adc_dist", descending = false, k)
   }
 
   /** K5 — IVF-PQ: the canonical billion-scale ANN architecture
@@ -424,71 +422,25 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, m: Int,
       cellStride: Long, pqStride: Long, nProbe: Int,
       maxCentroids: Int = 4096): DataFrame = {
-    val spark = corpus.sparkSession
-    val cos = graft.functions.GraftFunctions.cosine_sim _
-    def sample(stride: Long): Array[org.apache.spark.sql.Row] = {
-      val s = corpus
-        .where(pmod(col(idCol), lit(stride)) === 0)
-        .select(col(idCol).cast("string").as("cid"),
-          col(vecCol).cast("array<double>").as("cvec"))
-        .orderBy("cid")
-        .limit(maxCentroids + 1)
-        .collect()
-      require(s.nonEmpty, "ivfPqTopK: stride sampled zero centroids")
-      require(s.length <= maxCentroids,
-        s"ivfPqTopK: > $maxCentroids centroids sampled — raise the stride")
-      s
-    }
-    val cellSample = sample(cellStride)
-    val cellBook: Array[Array[Double]] = cellSample.map { r =>
-      val v = r.getSeq[Double](1).toArray
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n > 0) v.map(_ / n) else v
-    }
-    val pqSample = sample(pqStride)
-    val dim = pqSample.head.getSeq[Double](1).length
-    require(dim % m == 0, s"ivfPqTopK: dim $dim not divisible into $m subspaces")
-    val dsub = dim / m
-    val pqBook: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-      pqSample.map(_.getSeq[Double](1).slice(j * dsub, (j + 1) * dsub).toArray)
-    }
+    def sample(stride: Long) =
+      strideSample(corpus, idCol, vecCol, stride, maxCentroids, "ivfPqTopK")
+    val cellBook = sample(cellStride).map(l2Normalized)
+    val pqBook = pqCodebook(sample(pqStride), m, "ivfPqTopK")
     // ONE corpus pass: cell + codes, both codegen'd, map-only
     val indexed = corpus.select(
       col(idCol).as("neighbor_id"),
-      graft.functions.GraftFunctions.nearest_centroid(col(vecCol), cellBook).as("cell"),
-      graft.functions.GraftFunctions.pq_encode(col(vecCol), pqBook).as("codes"))
-    import spark.implicits._
-    val centroidDf = cellBook.zipWithIndex
-      .map { case (v, i) => (i, v) }.toSeq.toDF("cell", "cnorm")
-    val qv = col(vecCol).cast("array<double>")
-    val cbLit = typedLit(pqBook.map(_.map(_.toSeq).toSeq).toSeq)
-    val dtab = transform(cbLit, (subCents, j) =>
-      transform(subCents, cent =>
-        aggregate(sequence(lit(0), lit(dsub - 1)), lit(0.0), (acc, i) => {
-          val x = element_at(qv, j * dsub + i + 1)
-          val c = element_at(cent, i + 1)
-          acc + (x - c) * (x - c)
-        })))
-    val probed = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv0"), dtab.as("dtab"))
-      .crossJoin(broadcast(centroidDf))
-      .withColumn("cdist", -cos(col("qv0"), col("cnorm")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cdist"), col("cell"))))
-      .where(col("crank") <= nProbe)
-      .select(col("query_id"), col("dtab"), col("cell"))
-    indexed.join(broadcast(probed), "cell")
+      GraftFunctions.nearest_centroid(col(vecCol), cellBook).as("cell"),
+      GraftFunctions.pq_encode(col(vecCol), pqBook).as("codes"))
+    val probed = nearestCells(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+        adcTable(vecCol, pqBook).as("dtab")),
+      centroidFrame(corpus.sparkSession, cellBook), nProbe)
+    val scored = indexed.join(broadcast(probed), "cell")
       .where(col("neighbor_id") =!= col("query_id"))
       .select(
         col("query_id"), col("neighbor_id"),
-        graft.functions.GraftFunctions.pq_adc_score(col("codes"), col("dtab"))
-          .as("adc_dist"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("adc_dist"), col("neighbor_id"))))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc_dist"))
-      .orderBy("query_id", "rank")
+        GraftFunctions.pq_adc_score(col("codes"), col("dtab")).as("adc_dist"))
+    topKPerQuery(scored, "adc_dist", descending = false, k)
   }
 
   /** K2 — LSH-bucketed ANN, MULTI-TABLE: `nTables` independent plane
@@ -516,8 +468,7 @@ object Similarity {
       nTables: Int = 8): DataFrame = {
     val planes: Array[Array[Double]] =
       planeWeights(nTables * nPlanes, dim).map(_.toArray).toArray
-    val sb = (v: Column) =>
-      graft.functions.GraftFunctions.sign_buckets(v, planes, nPlanes)
+    val sb = (v: Column) => GraftFunctions.sign_buckets(v, planes, nPlanes)
     val c = corpus.select(
       col(idCol).as("neighbor_id"),
       posexplode(sb(col(vecCol))).as(Seq("table", "bucket")))
@@ -531,19 +482,14 @@ object Similarity {
       .where(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id")
       .distinct()
-    cands
+    val scored = cands
       .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
         "neighbor_id")
       .join(broadcast(qVecs), "query_id")
       .select(
         col("query_id"), col("neighbor_id"),
-        graft.functions.GraftFunctions.cosine_sim(col("qv"), col("cv")).as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id"))))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-      .orderBy("query_id", "rank")
+        GraftFunctions.cosine_sim(col("qv"), col("cv")).as("cosine"))
+    topKPerQuery(scored, "cosine", descending = true, k)
   }
 
   /** K8 — int8 SCALAR quantization of an embedding column (the
@@ -559,7 +505,7 @@ object Similarity {
     * query batch reads codes only. */
   def int8Quantize(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val stats = df.agg(
-      graft.functions.GraftFunctions.vec_min_max(col(vecCol)).as("s"))
+      GraftFunctions.vec_min_max(col(vecCol)).as("s"))
       .select(col("s.mins").as("__mins"), col("s.maxs").as("__maxs"))
     df.crossJoin(broadcast(stats))
       .select(
@@ -592,18 +538,13 @@ object Similarity {
     // plan, never re-fit stats on the query slice)
     val qc = codes.where(queryPred)
       .select(col(idCol).as("query_id"), col("code").as("qc"))
-    codes.select(col(idCol).as("neighbor_id"), col("code").as("cc"))
+    val scored = codes.select(col(idCol).as("neighbor_id"), col("code").as("cc"))
       .crossJoin(broadcast(qc))
       .where(col("neighbor_id") =!= col("query_id"))
       .select(
         col("query_id"), col("neighbor_id"),
         aggregate(zip_with(col("qc"), col("cc"), (a, b) => (a - b) * (a - b)),
           lit(0L), (acc, x) => acc + x).as("dist"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("dist").asc, col("neighbor_id"))))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("dist"))
-      .orderBy("query_id", "rank")
+    topKPerQuery(scored, "dist", descending = false, k)
   }
 }

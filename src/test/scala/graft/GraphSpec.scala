@@ -213,6 +213,19 @@ class GraphSpec extends SparkSpec {
     assert(ex.getMessage.contains("maxIters") || ex.getMessage.contains("tol"))
   }
 
+  test("converged hits fails LOUDLY at maxIters, and converges at the round after") {
+    // the star settles in 2 rounds: round 2 moves nothing
+    val edges = (1L to 9L).map(i => (i, 0L))
+    val ex = intercept[IllegalArgumentException] {
+      Graph.hitsConverged(edges.toDF("s", "d"), "s", "d", tol = 0L, maxIters = 1)
+    }
+    assert(ex.getMessage.contains("hitsConverged") && ex.getMessage.contains("after 1 rounds"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(rows(Graph.hitsConverged(edges.toDF("s", "d"), "s", "d", tol = 0L, maxIters = 2)) ===
+      rows(Graph.hits(edges.toDF("s", "d"), "s", "d", iters = 2)))
+  }
+
   test("converged lpa stops when labels stabilize; oscillation fails loudly") {
     // two triangles + bridge: stabilizes quickly
     val tri = Seq((0L, 1L), (1L, 2L), (2L, 0L), (10L, 11L), (11L, 12L), (12L, 10L), (2L, 10L))

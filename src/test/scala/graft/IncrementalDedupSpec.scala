@@ -92,6 +92,17 @@ class IncrementalDedupSpec extends SparkSpec {
     graft.operators.Dedup.minhashIndexEnsure(
       corpus.where(col("doc_id") =!= 11L), "doc_id", "text", idx)
     assert(bandFiles !== appended, "ensure must rebuild after an append")
+    // so does a delete: ensure afterwards rebuilds from the corpus it is
+    // given, and the deleted doc matches again, as in a fresh build
+    graft.operators.Dedup.minhashIndexDelete(Seq(10L).toDF("doc_id"), "doc_id", idx)
+    val deleted = bandFiles
+    graft.operators.Dedup.minhashIndexEnsure(
+      corpus.where(col("doc_id") =!= 11L), "doc_id", "text", idx)
+    assert(bandFiles !== deleted, "ensure must rebuild after a delete")
+    assert(graft.operators.Dedup
+      .dedupShardAgainstIndex(shard, "doc_id", "text", idx)
+      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      probe2.toSeq)
   }
 
   test("streaming shard probe equals per-shard batch probes (micro-batch = shard)") {

@@ -145,6 +145,13 @@ class IvfLifecycleSpec extends SparkSpec {
     assert(got.nonEmpty && !got.exists(_._3 == 1000L),
       s"probed a vector appended after the build: ${got.mkString(",")}")
     assert(cellFiles !== rebuilt, "ensure must rebuild after an append")
+    // so does a delete: the next call rebuilds from `df`, and the
+    // deleted vectors match again, as against a fresh build
+    val fresh = topK(queries, 7)
+    val beforeDelete = cellFiles
+    Similarity.ivfIndexDelete(fresh.map(_._3).distinct.toDF("vec_id"), "vec_id", dir)
+    assert(topK(queries, 7) === fresh, "reused the index with its tombstones live")
+    assert(cellFiles !== beforeDelete, "ensure must rebuild after a delete")
     rm(dir)
   }
 

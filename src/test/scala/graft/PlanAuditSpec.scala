@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.StringSplit
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.catalyst.plans.physical.{
   HashPartitioning, RangePartitioning, RoundRobinPartitioning}
@@ -229,6 +230,19 @@ class PlanAuditSpec extends SparkSpec {
       s"${l.nodeName} / ${r.nodeName}:\n$shown")
     // and the shingle kernel runs in one node
     assert(plan.count(_.simpleString(100).contains("shingle_hashes(")) == 1, shown)
+  }
+
+  test("ngram jaccard tokenizes once: the scan stage below the round-robin exchange runs no split") {
+    val plan = executed(SparkEntry.queries("q_ngram_jaccard")(spark, dir))
+    val spreads = plan.collect {
+      case e: ShuffleExchangeLike if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+    }
+    assert(spreads.nonEmpty, "q_ngram_jaccard: no round-robin exchange")
+    def subtree(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap(subtree)
+    val splitting = spreads.flatMap(e => subtree(e.child))
+      .filter(_.expressions.exists(_.exists(_.isInstanceOf[StringSplit])))
+    assert(splitting.isEmpty,
+      s"split runs in the one-task scan stage: ${splitting.map(_.simpleString(100))}")
   }
 
   test("ngram top-k is TakeOrdered, not a global window over the corpus") {
